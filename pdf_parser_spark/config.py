@@ -9,7 +9,21 @@ so the oracle fixtures reproduce reference behavior bit-for-bit.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+# --- span-kind vocabulary (SURVEY.md §1.4) ---
+# Read by span validation (operators/pages.error_kind_expr, oracle/
+# refsem.split_valid_spans) and by the page-major W2/page assembly.
+TEXT_KINDS = ("text", "heading")
+TABLE_KIND = "table"
+IMAGE_KINDS = ("image", "figure")
+LAYOUT_KIND = "layout_line"
+ANNOTATION_KIND = "annotation"
+PAGE_BREAK_KIND = "page_break"
+KNOWN_KINDS = (
+    TEXT_KINDS + (TABLE_KIND,) + IMAGE_KINDS
+    + (LAYOUT_KIND, ANNOTATION_KIND, PAGE_BREAK_KIND)
+)
 
 
 @dataclass(frozen=True)
@@ -40,35 +54,10 @@ class PipelineConfig:
     paragraph_min_len: int = 50
 
     # --- scale knobs (no reference analog; Spark-side) ---
-    #: shuffle partitions for local testing; production uses AQE + larger.
-    shuffle_partitions: int = 32
     #: spans above this count per doc are salted for two-phase reassembly.
     mega_doc_span_threshold: int = 100_000
     #: number of salt buckets for mega-doc two-phase reassembly.
     salt_buckets: int = 16
-    #: apply the two-phase mega-doc W2 path in run_pipeline (operators/
-    #: pages.span_sequence_skew_df); False keeps the bare single-window
-    #: plan (no mega-detection pass) for corpora known to be bounded.
-    mega_doc_salting: bool = True
-
-    # --- span-kind vocabulary (SURVEY.md §1.4) ---
-    text_kinds: tuple = ("text", "heading")
-    table_kinds: tuple = ("table",)
-    image_kinds: tuple = ("image", "figure")
-    layout_kinds: tuple = ("layout_line",)
-    annotation_kinds: tuple = ("annotation",)
-    structural_kinds: tuple = ("page_break",)
-
-    @property
-    def known_kinds(self) -> tuple:
-        return (
-            self.text_kinds
-            + self.table_kinds
-            + self.image_kinds
-            + self.layout_kinds
-            + self.annotation_kinds
-            + self.structural_kinds
-        )
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -1373,8 +1373,7 @@ def w2_mega_salted(spark, sf_dir):
         DEFAULT_CONFIG, mega_doc_span_threshold=500, salt_buckets=8
     )
     # docs= : mega detection via the zero-shuffle size(spans) filter on
-    # the pre-explode table (run_pipeline's default); the unit suite
-    # keeps the valid-count fallback covered
+    # the pre-explode table, as in run_pipeline
     return pages_op.span_sequence_skew_df(
         pages_op.valid_spans(flat), cfg, docs=spans
     )
@@ -3389,7 +3388,7 @@ def skew_salted_join(spark, sf_dir):
 @m(
     "skew_salted_agg",
     f"""WITH {_HOT_MEDIA_CTE}
-SELECT media_ref, count(*) AS n, sum(v) AS total
+SELECT media_ref, count(*) AS n, CAST(sum(v) AS BIGINT) AS total
 FROM big GROUP BY media_ref""",
 )
 def skew_salted_agg(spark, sf_dir):

@@ -48,10 +48,6 @@ def _t(text: str) -> Dict[str, Any]:
     return {"kind": "text", "text": text, "media_ref": None}
 
 
-def _heading(text: str) -> Dict[str, Any]:
-    return {"kind": "heading", "text": text, "media_ref": None}
-
-
 def _table(rows: List[List[str]]) -> Dict[str, Any]:
     # table span text carries the reference's text_representation
     # (extractor.py:400-413: cells joined " | ", blank rows dropped).
@@ -472,26 +468,6 @@ def write_parquet(spark, docs: List[Dict[str, Any]], path: str, n_files: int = 8
     # range-partition by doc_id: mirrors doc_id-range bucketing the prod
     # layout uses for shuffle-free reassembly (SURVEY.md §4).
     df.repartitionByRange(n_files, "doc_id").write.mode("overwrite").parquet(path)
-    return path
-
-
-def write_parquet_chunked(
-    spark,
-    docs: List[Dict[str, Any]],
-    path: str,
-    chunk: int = 2000,
-    files_per_chunk: int = 8,
-):
-    """Large corpora: append in chunks so the driver→JVM ship of the
-    python row list stays bounded (one big createDataFrame OOMs the heap
-    at ~30k span-heavy docs)."""
-    mode = "overwrite"
-    for i in range(0, len(docs), chunk):
-        df = to_spark_df(spark, docs[i : i + chunk])
-        df.repartitionByRange(files_per_chunk, "doc_id").write.mode(
-            mode
-        ).parquet(path)
-        mode = "append"
     return path
 
 

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_parser_spark.session import cache_stage
+
 BLOCK_TAGS = {
     "p", "div", "section", "article", "aside", "nav", "footer", "header",
     "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th", "ul", "ol",
@@ -390,8 +392,7 @@ def strip_html_spans(docs: DataFrame, html_kind: str = "html") -> DataFrame:
 def normalize_html_flat(
     flat: DataFrame,
     html_kind: str = "html",
-    cache_html: bool = True,
-    cache_registry: list | None = None,
+    cache: list | None = None,
 ) -> DataFrame:
     """Inline per-invocation variant of ``strip_html_spans`` over the
     ALREADY-EXPLODED span table (pages.explode_spans_raw output):
@@ -405,10 +406,10 @@ def normalize_html_flat(
     The added work is proportional to the html subset only — one Arrow
     tokenizer crossing over html rows, one (doc_id, seq) block fold,
     one co-partitioned equi-join back to the html rows' slots — and
-    with ``cache_html`` the (tiny) rewritten-rows table is persisted
-    eagerly so the pipeline's several downstream consumers re-scan
-    ONLY the parquet ``rest`` branch they would scan anyway, never the
-    Python stage.
+    with a ``cache`` list the (tiny) rewritten-rows table is
+    materialized into it (``session.cache_stage``) so the pipeline's
+    several downstream consumers re-scan ONLY the parquet ``rest``
+    branch they would scan anyway, never the Python stage.
 
     Semantic divergence from ``strip_html_spans`` (documented, tested):
     spans that strip to pure boilerplate are dropped from the FLAT
@@ -478,13 +479,4 @@ def normalize_html_flat(
         # documented divergence).
         .filter(F.col("text") != "")
     )
-    if cache_html:
-        from pyspark.storagelevel import StorageLevel
-
-        rewritten = rewritten.persist(StorageLevel.MEMORY_AND_DISK)
-        rewritten.count()
-        if cache_registry is not None:
-            # hand the persist handle to the caller (PipelineResult
-            # unpersists it with the other stage tables — no cache leak)
-            cache_registry.append(rewritten)
-    return rest.unionByName(rewritten)
+    return rest.unionByName(cache_stage(rewritten, cache))

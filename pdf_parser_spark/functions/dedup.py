@@ -229,7 +229,6 @@ def lsh_candidate_pairs(
     ``_materialize`` for the fault-tolerance trade-off and the
     production alternative).
     """
-    rows = n_hashes // n_bands
     # materialize signatures BEFORE banding and self-joining: downstream
     # references would otherwise inline (CollapseProject) and re-run the
     # md5 fold once per band and once per join side — in production this
@@ -237,11 +236,20 @@ def lsh_candidate_pairs(
     sigs = (materializer or _materialize)(
         minhash_df(df, id_col, text_col, n_hashes, k)
     )
+    return lsh_band_pairs(sigs, n_bands, n_hashes // n_bands)
+
+
+def lsh_band_pairs(
+    sigs: DataFrame, n_bands: int, rows_per_band: int
+) -> DataFrame:
+    """The band self-join over a materialized ``(id, sig)`` signatures
+    table: distinct pairs (id_a < id_b) that share >=1 band key.  Shuffles
+    on (band_idx, band_key) only — never an all-pairs comparison."""
     banded = sigs.select(
         "id",
-        F.posexplode(lsh_bands(F.col("sig"), n_bands, rows)).alias(
-            "band_idx", "band_key"
-        ),
+        F.posexplode(
+            lsh_bands(F.col("sig"), n_bands, rows_per_band)
+        ).alias("band_idx", "band_key"),
     )
     left = banded.alias("l")
     right = banded.alias("r")
@@ -305,21 +313,6 @@ def ngram_jaccard_pairs(
         )
     )
     return out
-
-
-def simhash32(text: Column, k: int = 1) -> Column:
-    """32-bit SimHash: per shingle take md5's first 8 hex chars as a 32-bit
-    int; bit b of the output is 1 iff more shingle-hashes have bit b set
-    than unset.  Pure expression (``_fold_bits32`` over a let-bound hash
-    array — referencing the transform EXPRESSION directly re-ran the
-    md5-per-shingle pass once per bit, 32×; see exprs.let_bound).
-    Prefer :func:`simhash64` for corpus-scale pair search — 32 bits go
-    quadratic past ~10^6 docs per shard."""
-    sh = F.array_distinct(shingles(text, k))
-    hashes = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
-    return let_bound(hashes, _fold_bits32)
 
 
 def _fold_bits32(hashes: Column) -> Column:
@@ -421,28 +414,6 @@ def simhash64_block_values(fp: Column, max_hamming: int = 3) -> Column:
             parts.append(hpart)
         blocks.append(parts[0] if len(parts) == 1 else parts[0] + parts[1])
         start = end
-    return F.array(*blocks)
-
-
-def simhash_block_values(
-    fp: Column, max_hamming: int = 3, n_bits: int = 32
-) -> Column:
-    """array<long> of the fingerprint's bit-block values for the
-    pigeonhole candidate search: the ``n_bits`` bits split into
-    ``max_hamming + 1`` contiguous blocks (remainder bits spread over the
-    leading blocks).  Two fingerprints within Hamming distance
-    ``max_hamming`` differ in at most ``max_hamming`` blocks, so they
-    agree EXACTLY on at least one block — an equal-block bucket join is
-    a complete candidate generator within the radius."""
-    n_blocks = max_hamming + 1
-    base, rem = divmod(n_bits, n_blocks)
-    blocks, lo = [], 0
-    for i in range(n_blocks):
-        w = base + (1 if i < rem else 0)
-        blocks.append(
-            F.shiftright(fp, lo).bitwiseAND(F.lit((1 << w) - 1))
-        )
-        lo += w
     return F.array(*blocks)
 
 

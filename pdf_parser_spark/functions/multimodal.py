@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_parser_spark.config import IMAGE_KINDS
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), nullable=False),
@@ -682,7 +684,7 @@ def link_media(
     media_dim = media.select("media_ref", "media_type", "width", "height")
     if broadcast:
         media_dim = F.broadcast(media_dim)
-    image_spans = spans_out.filter(F.col("kind").isin("image", "figure"))
+    image_spans = spans_out.filter(F.col("kind").isin(*IMAGE_KINDS))
     return image_spans.join(media_dim, "media_ref", "left")
 
 
@@ -691,7 +693,7 @@ def synthesize_media(spark, docs: DataFrame) -> DataFrame:
     carry no real payloads): payload bytes = utf-8 of the ref string."""
     refs = (
         docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind").isin("image", "figure"))
+        .filter(F.col("s.kind").isin(*IMAGE_KINDS))
         .select(
             F.col("s.media_ref").alias("media_ref"),
             F.col("s.kind").alias("kind"),
@@ -718,7 +720,7 @@ def synthesize_media(spark, docs: DataFrame) -> DataFrame:
 def _image_refs(docs: DataFrame) -> DataFrame:
     return (
         docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind").isin("image", "figure"))
+        .filter(F.col("s.kind").isin(*IMAGE_KINDS))
         .select(F.col("s.media_ref").alias("media_ref"))
         .filter(F.col("media_ref").isNotNull())
         .distinct()
@@ -795,7 +797,7 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
     decoder, which is fine: ``decode_png_dims`` reads only the IHDR."""
     refs = (
         docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind").isin("image", "figure"))
+        .filter(F.col("s.kind").isin(*IMAGE_KINDS))
         .select(F.col("s.media_ref").alias("media_ref"))
         .filter(F.col("media_ref").isNotNull())
         .distinct()
@@ -840,7 +842,7 @@ def synthesize_gif_media(docs: DataFrame) -> DataFrame:
     fixture needs no LZW encoder."""
     refs = (
         docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind").isin("image", "figure"))
+        .filter(F.col("s.kind").isin(*IMAGE_KINDS))
         .select(F.col("s.media_ref").alias("media_ref"))
         .filter(F.col("media_ref").isNotNull())
         .distinct()

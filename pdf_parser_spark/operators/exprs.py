@@ -34,10 +34,6 @@ def py_rstrip(col: Column) -> Column:
     return F.regexp_replace(col, f"{_WS}+$", "")
 
 
-def py_lstrip(col: Column) -> Column:
-    return F.regexp_replace(col, f"^{_WS}+", "")
-
-
 def is_blank(col: Column) -> Column:
     """Python ``not (s or '').strip()`` — as a containment test (no char
     outside the whitespace class), not a regex-replace-and-compare; see
@@ -82,11 +78,6 @@ def strip_s(col: Column) -> Column:
 def digit_count(col: Column) -> Column:
     """#ASCII digits (fixtures use ASCII digits; Python isdigit parity)."""
     return F.length(col) - F.length(F.regexp_replace(col, r"[0-9]", ""))
-
-
-def is_all_digits(col: Column) -> Column:
-    """Python ``s.isdigit()`` for non-empty ASCII strings."""
-    return col.rlike(r"^[0-9]+$")
 
 
 def word_count(col: Column) -> Column:

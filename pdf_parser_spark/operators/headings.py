@@ -141,41 +141,6 @@ def detect_heading_expr(
     return let_bound(py_strip(F.coalesce(line, F.lit(""))), detect)
 
 
-def best_strategy_expr(
-    line: Column, registry: HeadingRegistry | None = None
-) -> Column:
-    """First-wins argmax over strategy names (A8/A9 strategy stats —
-    HeadingDetector.get_strategy_stats, heading_strategies.py:236-243):
-    NULL when nothing matches."""
-    registry = registry or DEFAULT_REGISTRY
-    strategies = registry.strategies
-    names = F.array(*[F.lit(s.name) for s in strategies])
-
-    def pick(clean: Column) -> Column:
-        # struct-max argmax: max over (confidence, -index) is the
-        # highest confidence with FIRST-wins ties (max -index = min
-        # index) — each builder evaluated once, vs the chained
-        # when(c > best, ...).otherwise(...) form that duplicated every
-        # prior subtree twice per step (see detect_heading_expr).
-        pairs = F.array(
-            *[
-                F.struct(
-                    s.builder(clean).alias("c"), F.lit(-i).alias("ni")
-                )
-                for i, s in enumerate(strategies)
-            ]
-        )
-
-        def choose(m: Column) -> Column:
-            return F.when(
-                m["c"] > 0, F.element_at(names, -m["ni"] + 1)
-            )
-
-        return let_bound(F.array_max(pairs), choose)
-
-    return let_bound(py_strip(F.coalesce(line, F.lit(""))), pick)
-
-
 def strategy_stats_df(
     lines: DataFrame,
     line_col: str = "line",

@@ -21,15 +21,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pdf_parser_spark.config import (
+    ANNOTATION_KIND,
+    DEFAULT_CONFIG,
+    IMAGE_KINDS,
+    KNOWN_KINDS,
+    LAYOUT_KIND,
+    PAGE_BREAK_KIND,
+    TABLE_KIND,
+    TEXT_KINDS,
+    PipelineConfig,
+)
 from pdf_parser_spark.operators.exprs import (
     is_blank,
     non_blank,
     strip_s,
 )
 
-TEXTISH = ("text", "heading")
-IMAGEISH = ("image", "figure")
+#: most mega ids the split filters on as an ``isin`` literal list; past
+#: this the split is a broadcast tag join.
+MAX_LITERAL_MEGA_IDS = 1000
 
 
 def explode_spans_raw(docs: DataFrame) -> DataFrame:
@@ -63,7 +74,6 @@ def error_kind_expr(cfg: PipelineConfig = DEFAULT_CONFIG) -> F.Column:
     """The span-validation when-chain over flat span columns — shared by
     the batch explode path above and the streaming fragment-assembly
     path (streaming/assembly.py), so both quarantine identically."""
-    known = list(cfg.known_kinds)
     return (
         F.when(F.col("seq").isNull(), F.lit("empty_spans"))
         # NULL kind must not slip through three-valued logic: NOT(NULL
@@ -71,7 +81,7 @@ def error_kind_expr(cfg: PipelineConfig = DEFAULT_CONFIG) -> F.Column:
         # explicitly (found by tests/test_properties.py's minimal
         # counterexample (kind=None, offset=0)).
         .when(
-            F.col("kind").isNull() | ~F.col("kind").isin(known),
+            F.col("kind").isNull() | ~F.col("kind").isin(*KNOWN_KINDS),
             F.lit("unknown_kind"),
         )
         .when(
@@ -114,7 +124,7 @@ def with_page(valid: DataFrame) -> DataFrame:
     order (oracle derive_pages).  Inclusive running sum works because
     non-break rows contribute 0."""
     w = Window.partitionBy("doc_id").orderBy("offset", "seq")
-    is_break = F.when(F.col("kind") == "page_break", 1).otherwise(0)
+    is_break = F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)
     return valid.withColumn("page", (F.sum(is_break).over(w) + 1).cast("int"))
 
 
@@ -128,19 +138,21 @@ def _with_ids(spans: DataFrame) -> DataFrame:
     )
     return spans.withColumn(
         "image_id",
-        F.sum(F.when(F.col("kind").isin(*IMAGEISH), 1).otherwise(0)).over(wp),
+        F.sum(
+            F.when(F.col("kind").isin(*IMAGE_KINDS), 1).otherwise(0)
+        ).over(wp),
     ).withColumn(
         "table_id",
-        F.sum(F.when(F.col("kind") == "table", 1).otherwise(0)).over(wp),
+        F.sum(F.when(F.col("kind") == TABLE_KIND, 1).otherwise(0)).over(wp),
     )
 
 
 def _kind_rank() -> F.Column:
     return (
-        F.when(F.col("kind").isin(*TEXTISH), 0)
-        .when(F.col("kind") == "table", 1)
-        .when(F.col("kind").isin(*IMAGEISH), 2)
-        .when(F.col("kind") == "layout_line", 3)
+        F.when(F.col("kind").isin(*TEXT_KINDS), 0)
+        .when(F.col("kind") == TABLE_KIND, 1)
+        .when(F.col("kind").isin(*IMAGE_KINDS), 2)
+        .when(F.col("kind") == LAYOUT_KIND, 3)
         .otherwise(4)
     )
 
@@ -203,28 +215,16 @@ def span_sequence_df(valid: DataFrame) -> DataFrame:
 def _kept_with_out_text(spans: DataFrame) -> DataFrame:
     """Shared W2 row selection + formatting: drop page breaks and blank
     text spans, format image/annotation summaries, attach kind_rank."""
-    content = spans.filter(F.col("kind") != "page_break")
-    keep = F.col("kind").isin(*IMAGEISH) | ~is_blank(F.col("text"))
+    content = spans.filter(F.col("kind") != PAGE_BREAK_KIND)
+    keep = F.col("kind").isin(*IMAGE_KINDS) | ~is_blank(F.col("text"))
     kept = content.filter(keep)
     out_text = (
-        F.when(F.col("kind").isin(*IMAGEISH), _image_summary())
-        .when(F.col("kind") == "annotation", _annotation_summary())
+        F.when(F.col("kind").isin(*IMAGE_KINDS), _image_summary())
+        .when(F.col("kind") == ANNOTATION_KIND, _annotation_summary())
         .otherwise(F.col("text"))
     )
     return kept.withColumn("out_text", out_text).withColumn(
         "kind_rank", _kind_rank()
-    )
-
-
-def mega_doc_ids(valid: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """doc_ids whose span count exceeds cfg.mega_doc_span_threshold —
-    one map-side-combined count pass; the result is tiny (pathological
-    docs are rare by definition) and broadcastable."""
-    return (
-        valid.groupBy("doc_id")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > cfg.mega_doc_span_threshold)
-        .select("doc_id")
     )
 
 
@@ -261,7 +261,7 @@ def _with_page_two_phase(spans: DataFrame) -> DataFrame:
     (each task bounded by ~1/N of the doc) plus a per-chunk break-total
     carry, computed by a separate aggregate and folded back with a
     broadcast join.  Exact for any order-aligned chunking."""
-    is_break = F.when(F.col("kind") == "page_break", 1).otherwise(0)
+    is_break = F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)
     w_local = Window.partitionBy("doc_id", "_obucket").orderBy(
         "offset", "seq"
     )
@@ -295,8 +295,8 @@ def _with_ids_two_phase(spans: DataFrame) -> DataFrame:
     doc has few or no page breaks (the canonical pathological case: one
     giant page would otherwise funnel every span into one window task).
     Exact because ``_obucket`` is order-aligned with (offset, seq)."""
-    is_img = F.when(F.col("kind").isin(*IMAGEISH), 1).otherwise(0)
-    is_tbl = F.when(F.col("kind") == "table", 1).otherwise(0)
+    is_img = F.when(F.col("kind").isin(*IMAGE_KINDS), 1).otherwise(0)
+    is_tbl = F.when(F.col("kind") == TABLE_KIND, 1).otherwise(0)
     ck = ["doc_id", "page", "_obucket"]
     w_local = Window.partitionBy(*ck).orderBy("offset", "seq")
     local = spans.withColumn(
@@ -372,7 +372,8 @@ def _span_sequence_two_phase(
 def span_sequence_skew_df(
     valid: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    docs: DataFrame | None = None,
+    *,
+    docs: DataFrame,
 ) -> DataFrame:
     """W2 with mega-doc spreading (SURVEY §4 P6): documents above
     cfg.mega_doc_span_threshold spans take the two-phase chunked path —
@@ -380,35 +381,37 @@ def span_sequence_skew_df(
     the rest keep the single-exchange single-window plan; the union is
     bit-identical to ``span_sequence_df`` on the whole input.
 
-    Mega detection is evaluated eagerly at plan-construction time (a
-    tiny collect — pathological docs are rare by definition).  Pass the
-    PRE-explode ``docs`` table to make it a map-only
-    ``size(spans) > threshold`` filter with ZERO shuffle; without it the
-    fallback is a map-side-combined count over ``valid``, whose exchange
-    still carries one row per doc_id — a corpus-sized shuffle at
-    10^12 docs.  ``size(spans)`` counts quarantined spans too, so it can
-    only over-route a borderline doc to the two-phase path — routing is
-    physical only, the output is bit-identical either way.
+    Mega detection is a map-only ``size(spans) > threshold`` filter on
+    the PRE-explode ``docs`` table (ZERO shuffle), probed eagerly at
+    plan-construction time in one job that returns at most
+    ``MAX_LITERAL_MEGA_IDS + 1`` ids — driver memory stays bounded
+    however many mega docs the corpus holds.  ``size(spans)`` counts
+    quarantined spans too, so it can only over-route a borderline doc
+    to the two-phase path — routing is physical only, the output is
+    bit-identical either way.
 
     With no mega docs the single-window plan is returned UNCHANGED — no
     tag join, no empty union branch re-scanning the corpus per
     downstream consumer.  With mega docs, the split is a codegen'd isin
-    filter on the literal id list (broadcast-tag-join fallback past
-    1000 ids)."""
+    filter on the literal id list, or a broadcast tag join past
+    ``MAX_LITERAL_MEGA_IDS`` ids."""
     if cfg.salt_buckets <= 1:
         # one chunk = the single-window plan; _with_obucket's percentile
         # list would be empty (analysis error), so degrade explicitly.
         return span_sequence_df(valid)
-    if docs is not None:
-        mega_src = docs.filter(
-            F.size("spans") > cfg.mega_doc_span_threshold
-        ).select("doc_id")
-    else:
-        mega_src = mega_doc_ids(valid, cfg)
-    ids = [r.doc_id for r in mega_src.collect()]
+    mega_src = docs.filter(
+        F.size("spans") > cfg.mega_doc_span_threshold
+    ).select("doc_id")
+    # one job: collect_list over the limit; a bare limit().collect()
+    # runs the limit incrementally over several jobs
+    ids = (
+        mega_src.limit(MAX_LITERAL_MEGA_IDS + 1)
+        .agg(F.collect_list("doc_id"))
+        .collect()[0][0]
+    )
     if not ids:
         return span_sequence_df(valid)
-    if len(ids) <= 1000:
+    if len(ids) <= MAX_LITERAL_MEGA_IDS:
         # NULL doc_id must stay in the normal branch: ~isin(NULL) is
         # NULL (three-valued logic), which filter() drops — test isNull
         # explicitly so the bit-identical contract holds on that edge.
@@ -465,13 +468,13 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
     doc_id, page, total_pages, text, content.
     """
     spans = _with_ids(with_page(valid))
-    content_spans = spans.filter(F.col("kind") != "page_break")
+    content_spans = spans.filter(F.col("kind") != PAGE_BREAK_KIND)
 
-    is_textish = F.col("kind").isin(*TEXTISH)
-    is_table = F.col("kind") == "table"
-    is_image = F.col("kind").isin(*IMAGEISH)
-    is_layout = F.col("kind") == "layout_line"
-    is_annot = F.col("kind") == "annotation"
+    is_textish = F.col("kind").isin(*TEXT_KINDS)
+    is_table = F.col("kind") == TABLE_KIND
+    is_image = F.col("kind").isin(*IMAGE_KINDS)
+    is_layout = F.col("kind") == LAYOUT_KIND
+    is_annot = F.col("kind") == ANNOTATION_KIND
     txt = F.coalesce(F.col("text"), F.lit(""))
 
     # Per-family formatted string, computed ROW-SIDE (whole-stage
@@ -540,7 +543,7 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
     # page skeleton 1..total_pages per doc (empty pages exist)
     totals = valid.groupBy("doc_id").agg(
         (
-            F.sum(F.when(F.col("kind") == "page_break", 1).otherwise(0)) + 1
+            F.sum(F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)) + 1
         ).cast("int").alias("total_pages")
     )
     skeleton = totals.select(

@@ -33,6 +33,7 @@ from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import headings
 from pdf_parser_spark.operators.exprs import non_blank, py_strip
 from pdf_parser_spark.oracle import refsem
+from pdf_parser_spark.session import cache_stage
 
 PAGE_BREAK = "\n\n=== PAGE BREAK ===\n\n"
 
@@ -92,14 +93,14 @@ def sections_df(
     toc: DataFrame,
     metadata: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    persist: bool = True,
+    cache: list | None = None,
     heading_registry=None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Full section assembly; returns SECTIONS_OUT + ``order`` per doc.
 
-    ``persist`` caches the page-section pass: it is consumed twice (the
-    final union and the J5 anti-join).
+    With a ``cache`` list the page-section pass is materialized into it
+    (``session.cache_stage``): it is consumed twice (the final union and
+    the J5 anti-join); so is the pre-order union, see below.
 
     ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
     confidence builders (default: the reference's three strategies) —
@@ -224,15 +225,7 @@ def sections_df(
         )
     )
 
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        page_sections = page_sections.persist(StorageLevel.MEMORY_AND_DISK)
-        page_sections.count()
-        if cache_registry is not None:
-            cache_registry.append(page_sections)
-
-    page_sections = page_sections.withColumn(
+    page_sections = cache_stage(page_sections, cache).withColumn(
         "full_path",
         F.concat(
             F.lit("Page-"), F.col("page"), F.lit(" "), F.col("title")
@@ -292,7 +285,7 @@ def sections_df(
         "pass_rank",
         "intra_order",
     )
-    if not persist:
+    if cache is None:
         # uncached flow: one window over the full rows.  The skinny
         # split below would evaluate the un-materialized section
         # lineage twice (the content-split Arrow stage and the TOC
@@ -315,12 +308,7 @@ def sections_df(
     # the win straight back.  Both join branches read the CACHE, so the
     # heavy lineage runs once (in production this is the Iceberg
     # sections stage table).
-    from pyspark.storagelevel import StorageLevel
-
-    unioned = unioned.persist(StorageLevel.MEMORY_AND_DISK)
-    unioned.count()
-    if cache_registry is not None:
-        cache_registry.append(unioned)
+    unioned = cache_stage(unioned, cache)
     key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
     skinny = unioned.select(*key).withColumn(
         "order", F.row_number().over(w_order)

@@ -51,6 +51,7 @@ from pdf_parser_spark.operators.exprs import (
     word_count,
 )
 from pdf_parser_spark.oracle import refsem
+from pdf_parser_spark.session import cache_stage
 
 # 'table of contents'|'contents' word-bounded, case-insensitive
 # (text_utils.py:27-33).  'contents' subsumes the longer term for line
@@ -212,30 +213,22 @@ def toc_entries_df(
     pages: DataFrame,
     metadata: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    persist: bool = True,
-    cache_registry: list | None = None,
+    cache: list | None = None,
 ) -> DataFrame:
     """Full three-pass TOC extraction + dedup (toc_parser.py:141-691).
 
     Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
     per doc — consumed by the section stage's lead() boundaries W1).
 
-    ``persist`` caches the pandas-UDF feature stage and the primary pass:
-    three accept passes + two anti-joins consume them, and without a cache
+    With a ``cache`` list the pandas-UDF feature stage and the primary
+    pass are materialized into it (``session.cache_stage``): three
+    accept passes + two anti-joins consume them, and without a cache
     Catalyst re-executes the Arrow UDF once per consumer (SURVEY.md §4d —
     "keep pandas-UDF stages few and fused").
     """
-    feats = _line_features_df(toc_candidate_lines(pages, cfg))
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        # eager materialization: the three passes fan out from feats in
-        # ONE downstream job; a lazy cache would run the Arrow UDF once
-        # per branch before any partition is cached
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-        feats.count()
-        if cache_registry is not None:
-            cache_registry.append(feats)
+    feats = cache_stage(
+        _line_features_df(toc_candidate_lines(pages, cfg)), cache
+    )
 
     accepted_primary = (
         F.col("prim_matched")
@@ -258,13 +251,7 @@ def toc_entries_df(
         F.col("stripped").alias("full_path"),
         F.lit(0).alias("pass_rank"),
     )
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        primary = primary.persist(StorageLevel.MEMORY_AND_DISK)
-        primary.count()
-        if cache_registry is not None:
-            cache_registry.append(primary)
+    primary = cache_stage(primary, cache)
 
     # ---- enhanced pass (toc_parser.py:381-470) -------------------------
     enh = feats.filter(

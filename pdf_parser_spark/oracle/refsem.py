@@ -17,7 +17,11 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List, Optional, Tuple
 
-from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pdf_parser_spark.config import (
+    DEFAULT_CONFIG,
+    KNOWN_KINDS,
+    PipelineConfig,
+)
 
 # ---------------------------------------------------------------------------
 # span validation / quarantine  (helpers.py:29,93-95; metadata_validator.py)
@@ -53,7 +57,7 @@ def split_valid_spans(
         kind = s.get("kind")
         text = s.get("text")
         offset = s.get("offset")
-        if kind not in cfg.known_kinds:
+        if kind not in KNOWN_KINDS:
             quarantine.append(
                 {
                     "span_seq": seq,

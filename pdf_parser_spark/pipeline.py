@@ -23,7 +23,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import metadata as metadata_op
@@ -32,6 +31,7 @@ from pdf_parser_spark.operators import pages as pages_op
 from pdf_parser_spark.operators import sections as sections_op
 from pdf_parser_spark.operators import toc as toc_op
 from pdf_parser_spark.schemas import DOCUMENTS_SPANS
+from pdf_parser_spark.session import cache_stage
 
 
 @dataclass
@@ -43,15 +43,13 @@ class PipelineResult:
     toc: DataFrame
     sections: DataFrame
     metrics: DataFrame
-    extra_cached: tuple = ()
+    #: every DataFrame the run persisted, stage tables and operator
+    #: internals alike, in materialization order
+    cached: tuple = ()
 
     def unpersist(self) -> None:
-        for df in (self.pages, self.metadata, self.toc,
-                   self.sections, *self.extra_cached):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        for df in self.cached:
+            df.unpersist()
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -70,7 +68,10 @@ def run_pipeline(
     cache: bool = True,
     normalize_html: bool = False,
 ) -> PipelineResult:
-    extra_cached: list = []
+    """With ``cache`` every stage boundary is materialized through
+    ``session.cache_stage`` and the result's ``unpersist()`` releases
+    all of it; without it every table is a lazy plan."""
+    cached: list | None = [] if cache else None
     if normalize_html:
         # north rule: the corpus interleaves raw-HTML payload spans with
         # text + media — strip boilerplate and rewrite them to text spans
@@ -87,51 +88,29 @@ def run_pipeline(
         )
 
         flat = normalize_html_flat(
-            pages_op.explode_spans_raw(docs),
-            cache_html=cache,
-            cache_registry=extra_cached,
+            pages_op.explode_spans_raw(docs), cache=cached
         ).withColumn("error_kind", pages_op.error_kind_expr(cfg))
     else:
         flat = pages_op.explode_spans(docs, cfg)
     quarantine = pages_op.quarantine_df(flat)
     valid = pages_op.valid_spans(flat)
-    # W2 reassembly: mega-doc salting on by default (SURVEY §4 P6) —
-    # docs past cfg.mega_doc_span_threshold take the two-phase chunked
-    # path so no single task sorts a pathological doc alone; output is
+    # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
+    # cfg.mega_doc_span_threshold take the two-phase chunked path so no
+    # single task sorts a pathological doc alone; output is
     # bit-identical either way.
-    spans_out = (
-        pages_op.span_sequence_skew_df(valid, cfg, docs=docs)
-        if cfg.mega_doc_salting
-        else pages_op.span_sequence_df(valid)
-    )
+    spans_out = pages_op.span_sequence_skew_df(valid, cfg, docs=docs)
 
-    pages = pages_op.pages_df(valid, cfg)
-    if cache:
-        # steps 2-5 all read pages; one materialization instead of the
-        # reference's three JSONL re-reads (S7).  Eager count: every stage
-        # fans out to several consumers inside single downstream jobs, and
-        # a lazy cache would recompute the lineage once per branch before
-        # any partition lands in the cache.  In production these stage
-        # boundaries are Iceberg tables (write = the materialization).
-        pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-        pages.count()
-
-    metadata = metadata_op.metadata_df(docs, pages, cfg)
-    if cache:
-        metadata = metadata.persist(StorageLevel.MEMORY_AND_DISK)
-        metadata.count()
-    toc = toc_op.toc_entries_df(
-        pages, metadata, cfg, persist=cache, cache_registry=extra_cached
+    # steps 2-5 all read pages; one materialization instead of the
+    # reference's three JSONL re-reads (S7)
+    pages = cache_stage(pages_op.pages_df(valid, cfg), cached)
+    metadata = cache_stage(metadata_op.metadata_df(docs, pages, cfg), cached)
+    toc = cache_stage(
+        toc_op.toc_entries_df(pages, metadata, cfg, cache=cached), cached
     )
-    if cache:
-        toc = toc.persist(StorageLevel.MEMORY_AND_DISK)
-        toc.count()
-    sections = sections_op.sections_df(
-        pages, toc, metadata, cfg, persist=cache, cache_registry=extra_cached
+    sections = cache_stage(
+        sections_op.sections_df(pages, toc, metadata, cfg, cache=cached),
+        cached,
     )
-    if cache:
-        sections = sections.persist(StorageLevel.MEMORY_AND_DISK)
-        sections.count()
     metrics = metrics_op.metrics_df(docs, pages, toc, sections, metadata)
 
     return PipelineResult(
@@ -142,16 +121,5 @@ def run_pipeline(
         toc=toc,
         sections=sections,
         metrics=metrics,
-        extra_cached=tuple(extra_cached),
+        cached=tuple(cached or ()),
     )
-
-
-def write_outputs(result: PipelineResult, out_dir: str) -> None:
-    """Persist every stage table through the table seam (the reference's
-    JSONL sinks S3; ``out_dir`` may be an ``iceberg:`` ref — V2
-    createOrReplace — or a filesystem path — parquet overwrite)."""
-    from pdf_parser_spark.sources.tables import sub_ref, write_table
-
-    for name in ("quarantine", "spans_out", "metadata", "toc",
-                 "sections", "metrics"):
-        write_table(getattr(result, name), sub_ref(out_dir, name))

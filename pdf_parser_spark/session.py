@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def get_spark(
@@ -104,3 +105,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def cache_stage(df: DataFrame, cache: list | None) -> DataFrame:
+    """The stage-materialization policy shared by every operator.
+
+    ``cache`` a list: persist ``df`` at MEMORY_AND_DISK, count it
+    eagerly and append it to ``cache`` so the caller can release it.
+    ``cache`` None: return ``df`` unchanged (a lazy plan).
+
+    The count is eager because each stage fans out to several consumers
+    inside single downstream jobs, and a lazy cache would recompute the
+    lineage once per branch before any partition lands in the cache.
+    In production these stage boundaries are Iceberg tables (the write
+    is the materialization)."""
+    if cache is None:
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    cache.append(df)
+    return df

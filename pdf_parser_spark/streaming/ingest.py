@@ -51,7 +51,7 @@ def spans_out_stream(docs: DataFrame,
         )
 
         flat = normalize_html_flat(
-            pages_op.explode_spans_raw(docs), cache_html=False
+            pages_op.explode_spans_raw(docs)
         ).withColumn("error_kind", pages_op.error_kind_expr(cfg))
     else:
         flat = pages_op.explode_spans(docs, cfg)

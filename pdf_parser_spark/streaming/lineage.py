@@ -22,6 +22,7 @@ wave_size) metadata operations, never per-document work.
 
 from __future__ import annotations
 
+import datetime as _dt
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -40,6 +41,8 @@ LINEAGE_SUBDIR = "_lineage"
 # The dedup runner records STAGE ordinals, not bucket ids, as
 # partition_id; its lineage lives in its own namespace so pointing both
 # runners at one out_dir can never alias stage rows with bucket rows.
+# Dedup stage rows that older runs appended under LINEAGE_SUBDIR are not
+# read back: such a job does not resume, it recomputes every stage.
 DEDUP_LINEAGE_SUBDIR = "_lineage_dedup"
 
 
@@ -68,6 +71,26 @@ def completed_buckets(
         .collect()
     )
     return {r.partition_id for r in rows}
+
+
+def _utc(ts: float) -> _dt.datetime:
+    return _dt.datetime.fromtimestamp(ts, _dt.timezone.utc).replace(
+        tzinfo=None
+    )
+
+
+def _lineage_row(
+    run_id: str,
+    partition_id: int,
+    n_docs: int,
+    n_spans: int,
+    started: float,
+    finished: float,
+    metrics: dict,
+) -> tuple:
+    """One ``schemas.LINEAGE`` row with status 'done'."""
+    return (run_id, partition_id, "done", n_docs, n_spans,
+            _utc(started), _utc(finished), metrics)
 
 
 def _append_lineage(
@@ -151,19 +174,10 @@ def run_resumable(
         # 2) lineage append AFTER the output commit
         got = obs.get
         finished = time.time()
-        import datetime as _dt
-
         rows = [
-            (
-                run_id,
-                int(b),
-                "done",
-                int(got.get("docs") or 0),
-                int(got.get("spans") or 0),
-                _dt.datetime.fromtimestamp(started, _dt.timezone.utc)
-                .replace(tzinfo=None),
-                _dt.datetime.fromtimestamp(finished, _dt.timezone.utc)
-                .replace(tzinfo=None),
+            _lineage_row(
+                run_id, int(b), int(got.get("docs") or 0),
+                int(got.get("spans") or 0), started, finished,
                 {"wave": float(wi)},
             )
             for b in wave
@@ -201,27 +215,19 @@ def run_resumable_dedup(
     ``fail_after_stages`` injects a crash after k committed stages,
     exactly as a mid-job kill would.  Returns a summary dict; the
     candidate pairs land in ``<out_dir>/pairs``.
-    """
-    import datetime as _dt
 
+    Resume reads only ``DEDUP_LINEAGE_SUBDIR``: stage rows that older
+    runs wrote under ``LINEAGE_SUBDIR`` are ignored, so such a job
+    recomputes both stages once.
+    """
     from pdf_parser_spark.functions import dedup as dd
 
     sig_ref = sub_ref(out_dir, "signatures")
     done = completed_buckets(spark, out_dir, DEDUP_LINEAGE_SUBDIR)
 
     def _stage_row(stage: int, n_rows: int, t0: float) -> tuple:
-        return (
-            run_id,
-            stage,
-            "done",
-            n_rows,
-            0,
-            _dt.datetime.fromtimestamp(t0, _dt.timezone.utc)
-            .replace(tzinfo=None),
-            _dt.datetime.fromtimestamp(time.time(), _dt.timezone.utc)
-            .replace(tzinfo=None),
-            {"stage": float(stage)},
-        )
+        return _lineage_row(run_id, stage, n_rows, 0, t0, time.time(),
+                            {"stage": float(stage)})
 
     skipped = []
     # --- stage 0: signatures (the md5 fold — never recompute) --------
@@ -247,27 +253,7 @@ def run_resumable_dedup(
         if fail_after_stages is not None and fail_after_stages < 2:
             raise RuntimeError("injected failure before stage 1")
         t0 = time.time()
-        rows = n_hashes // n_bands
-        banded = sigs.select(
-            "id",
-            F.posexplode(
-                dd.lsh_bands(F.col("sig"), n_bands, rows)
-            ).alias("band_idx", "band_key"),
-        )
-        pairs = (
-            banded.alias("l")
-            .join(
-                banded.alias("r"),
-                (F.col("l.band_idx") == F.col("r.band_idx"))
-                & (F.col("l.band_key") == F.col("r.band_key"))
-                & (F.col("l.id") < F.col("r.id")),
-            )
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-            )
-            .distinct()
-        )
+        pairs = dd.lsh_band_pairs(sigs, n_bands, n_hashes // n_bands)
         write_table(pairs, sub_ref(out_dir, "pairs"), mode="overwrite")
         n_pairs = read_table(spark, sub_ref(out_dir, "pairs")).count()
         _append_lineage(

@@ -304,14 +304,14 @@ def test_inline_normalize_matches_ingest_strip(spark):
 
 def test_normalize_html_flat_plan_shape(spark):
     """Inline normalization plan: exactly one Arrow stage, and with
-    cache_html the rewritten-rows leg reads the (tiny) in-memory table
+    a cache list the rewritten-rows leg reads the (tiny) in-memory table
     — downstream consumers re-execute only the rest-branch scan."""
     from pdf_parser_spark.operators import pages as P
 
     docs = _interleaved(spark)
     reg = []
     out = bp.normalize_html_flat(
-        P.explode_spans_raw(docs), cache_html=True, cache_registry=reg
+        P.explode_spans_raw(docs), cache=reg
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     # prune the InMemoryRelation subtree (the printed build lineage of
@@ -334,8 +334,6 @@ def test_normalize_html_flat_plan_shape(spark):
     # release the cache BEFORE the uncached variant, or the cache
     # manager substitutes its identical subtree into the new plan
     reg[0].unpersist()
-    uncached = bp.normalize_html_flat(
-        P.explode_spans_raw(docs), cache_html=False
-    )
+    uncached = bp.normalize_html_flat(P.explode_spans_raw(docs))
     uplan = uncached._jdf.queryExecution().executedPlan().toString()
     assert uplan.count("MapInPandas") == 1

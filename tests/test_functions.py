@@ -159,16 +159,16 @@ def test_ngram_jaccard(texts_df, spark):
 
 def test_simhash_properties(texts_df):
     out = {
-        r.doc_id: r.sh
+        r.doc_id: (r.sh.hi, r.sh.lo)
         for r in texts_df.select(
-            "doc_id", dd.simhash32(F.col("text")).alias("sh")
+            "doc_id", dd.simhash64(F.col("text")).alias("sh")
         ).collect()
     }
     assert out[1] == out[4]                    # identical text → same hash
-    assert 0 <= out[1] < 2**32
+    assert all(0 <= half < 2**32 for half in out[1])
 
     def hamming(a, b):
-        return bin(a ^ b).count("1")
+        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
     # near-dup differs in few bits; disjoint docs differ in many
     assert hamming(out[1], out[2]) < hamming(out[1], out[3])
@@ -680,28 +680,6 @@ def test_embedding_near_dup_pairs_planted(spark):
     assert (3, 103) in got and got[(3, 103)] == 1.0
     assert (7, 107) in got and got[(7, 107)] >= 0.99
     assert len(got) == 2  # nothing else crosses the threshold
-
-
-def test_simhash_block_split_covers_all_bits(spark):
-    """Block values must partition all 32 bits: reassembling the blocks
-    reproduces the fingerprint."""
-    df = spark.createDataFrame(
-        [("d1", "alpha beta gamma delta epsilon zeta")],
-        ["doc_id", "text"],
-    )
-    row = df.select(
-        dd.simhash32(F.col("text"), 1).alias("fp"),
-        dd.simhash_block_values(
-            dd.simhash32(F.col("text"), 1), max_hamming=3
-        ).alias("blocks"),
-    ).head()
-    widths = [8, 8, 8, 8]
-    acc, lo = 0, 0
-    for v, w in zip(row.blocks, widths):
-        assert 0 <= v < (1 << w)
-        acc |= v << lo
-        lo += w
-    assert acc == row.fp
 
 
 def _ivf_fixture(spark, n=80, dim=16, seed=7):

@@ -101,7 +101,7 @@ def test_spark_toc_stage_replays_golden_exactly(
         [("usb_pd", doc_title)], ["doc_id", "doc_title"]
     )
     toc = (
-        T.toc_entries_df(pages_df, meta_df, persist=True)
+        T.toc_entries_df(pages_df, meta_df, cache=[])
         .orderBy("entry_order")
         .collect()
     )

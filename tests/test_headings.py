@@ -174,7 +174,7 @@ def test_custom_registry_changes_section_titles(spark):
 
     def title_with(reg):
         rows = S.sections_df(
-            pages, toc, meta, persist=False, heading_registry=reg
+            pages, toc, meta, heading_registry=reg
         ).collect()
         assert len(rows) == 1
         return rows[0].title

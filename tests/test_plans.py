@@ -113,11 +113,11 @@ def test_w5_ordering_window_is_content_free(spark, docs_df):
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid, cfg)
     metadata = MD.metadata_df(docs_df, pages, cfg)
-    toc = T.toc_entries_df(pages, metadata, cfg, persist=False)
-    # persist=True: the skinny W5 split applies only to the cached flow
+    toc = T.toc_entries_df(pages, metadata, cfg)
+    # a cache list: the skinny W5 split applies only to the cached flow
     # (the uncached flow keeps the single window — the split would
     # double-evaluate the un-materialized lineage)
-    out = S.sections_df(pages, toc, metadata, cfg, persist=True)
+    out = S.sections_df(pages, toc, metadata, cfg, cache=[])
     plan = _plan(out)
     # the re-attach join (keyed by the 5-col section identity — only it
     # references intra_order) must be a hash join, never sort-merge

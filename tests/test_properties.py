@@ -212,7 +212,7 @@ def test_normalize_html_flat_invariants(spark, docs):
     rows = [(f"d{i}", spans) for i, spans in enumerate(docs)]
     df = spark.createDataFrame(rows, DOCUMENTS_SPANS)
     flat = P.explode_spans_raw(df)
-    out = normalize_html_flat(flat, cache_html=False)
+    out = normalize_html_flat(flat)
 
     src = {(r.doc_id, r.seq): r for r in flat.collect()}
     got = {(r.doc_id, r.seq): r for r in out.collect()}
@@ -231,7 +231,7 @@ def test_normalize_html_flat_invariants(spark, docs):
             )
     again = {
         (r.doc_id, r.seq): r
-        for r in normalize_html_flat(out, cache_html=False).collect()
+        for r in normalize_html_flat(out).collect()
     }
     assert {
         k: (v.kind, v.text, v.media_ref, v.offset)

@@ -1,6 +1,8 @@
 """Spark ↔ oracle parity for full section assembly (J2/J3/J5, W1/W5,
 F7/F8, X21-X25) — the end-to-end tail of the pipeline."""
 
+import pytest
+
 from pdf_parser_spark.operators import metadata as M
 from pdf_parser_spark.operators import pages as P
 from pdf_parser_spark.operators import sections as S
@@ -12,8 +14,11 @@ def test_sections_parity(docs_df, oracle_results):
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid)
     meta = M.metadata_df(docs_df, pages)
-    toc = T.toc_entries_df(pages, meta)
-    rows = S.sections_df(pages, toc, meta).collect()
+    cached = []
+    toc = T.toc_entries_df(pages, meta, cache=cached)
+    rows = S.sections_df(pages, toc, meta, cache=cached).collect()
+    for df in cached:
+        df.unpersist()
 
     got = {}
     for r in rows:
@@ -60,20 +65,26 @@ def test_sections_parity(docs_df, oracle_results):
     assert n_sections > 60
 
 
-def test_pipeline_unpersist_releases_all_internal_caches(spark, docs_df):
-    """Every persist() taken inside run_pipeline's operators (toc feats/
-    primary, page_sections, the W5 pre-order union) must be registered in
-    PipelineResult.extra_cached so unpersist() returns the executor
-    storage to its prior state — a long-lived cluster job running many
-    pipeline slices must not accumulate stage caches (MEMORY_AND_DISK
-    evicts from memory but pins disk until unpersist)."""
+@pytest.mark.parametrize("normalize_html", [False, True])
+def test_pipeline_unpersist_releases_all_internal_caches(
+    spark, docs_df, normalize_html
+):
+    """Every persist() taken inside run_pipeline — the stage tables and
+    the operators' internal caches (html rewrite, toc feats/primary,
+    page_sections, the W5 pre-order union) — must be registered in
+    PipelineResult.cached so unpersist() returns the executor storage
+    to its prior state — a long-lived cluster job running many pipeline
+    slices must not accumulate stage caches (MEMORY_AND_DISK evicts
+    from memory but pins disk until unpersist)."""
     from pdf_parser_spark.pipeline import run_pipeline
 
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     before = {int(k) for k in jmap.keySet().toArray()}
-    res = run_pipeline(docs_df, cache=True)
+    res = run_pipeline(docs_df, cache=True, normalize_html=normalize_html)
     res.sections.count()  # drive the W5 cached flow
-    assert len(res.extra_cached) >= 4  # feats, primary, page_sections, union
+    # pages, metadata, toc, sections + feats, primary, page_sections,
+    # union (+ the html rewrite)
+    assert len(res.cached) == 8 + normalize_html
     res.unpersist()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     after = {int(k) for k in jmap.keySet().toArray()}

@@ -1,6 +1,8 @@
 """Salted join / aggregation: same results as the unsalted equivalents,
 with the hot key spread across tasks."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import skew as K
@@ -88,6 +90,20 @@ def _skewed_spans(spark, mega_spans=3000, normal_docs=6):
     )
 
 
+def _docs(valid):
+    """The pre-explode (doc_id, spans) table of flat spans — what
+    run_pipeline hands span_sequence_skew_df for mega detection."""
+    return valid.groupBy("doc_id").agg(
+        F.collect_list(
+            F.struct("kind", "text", "media_ref", "offset")
+        ).alias("spans")
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
 def _low_threshold_cfg(threshold=500, buckets=8):
     from dataclasses import replace
 
@@ -109,13 +125,13 @@ def test_mega_doc_w2_bit_identical(spark):
     valid = _skewed_spans(spark)
     cfg = _low_threshold_cfg()
     plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
-    salted = sorted(
-        map(tuple, P.span_sequence_skew_df(valid, cfg).collect())
-    )
-    assert plain == salted
-    # the mega doc really took the two-phase path
-    mega_ids = {r.doc_id for r in P.mega_doc_ids(valid, cfg).collect()}
-    assert mega_ids == {"mega"}
+    skew = P.span_sequence_skew_df(valid, cfg, docs=_docs(valid))
+    assert plain == sorted(map(tuple, skew.collect()))
+    # the mega doc really took the two-phase path, split by the literal
+    # id list
+    plan = _plan(skew)
+    assert "_obucket" in plan
+    assert re.search(r"doc_id#\d+ IN \(mega\)", plan)
 
 
 def test_mega_doc_w2_bounds_task_sizes(spark):
@@ -171,7 +187,10 @@ def test_breakless_mega_doc_bit_identical_and_chunk_bounded(spark):
     valid = _breakless_mega_spans(spark)
     plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
     salted = sorted(
-        map(tuple, P.span_sequence_skew_df(valid, cfg).collect())
+        map(
+            tuple,
+            P.span_sequence_skew_df(valid, cfg, docs=_docs(valid)).collect(),
+        )
     )
     assert plain == salted
     chunked = P._with_obucket(
@@ -207,7 +226,10 @@ def test_skew_path_keeps_null_doc_id_rows(spark):
         key=lambda t: (t[0] or "", t[1]),
     )
     salted = sorted(
-        map(tuple, P.span_sequence_skew_df(valid, cfg).collect()),
+        map(
+            tuple,
+            P.span_sequence_skew_df(valid, cfg, docs=_docs(valid)).collect(),
+        ),
         key=lambda t: (t[0] or "", t[1]),
     )
     assert plain == salted
@@ -224,7 +246,10 @@ def test_salt_buckets_one_degrades_to_single_window(spark):
     valid = _skewed_spans(spark)
     plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
     salted = sorted(
-        map(tuple, P.span_sequence_skew_df(valid, cfg).collect())
+        map(
+            tuple,
+            P.span_sequence_skew_df(valid, cfg, docs=_docs(valid)).collect(),
+        )
     )
     assert plain == salted
 
@@ -236,12 +261,10 @@ def test_mega_doc_w2_empty_branch_on_healthy_corpus(spark):
 
     valid = _skewed_spans(spark, mega_spans=30)
     cfg = _low_threshold_cfg(threshold=500)
-    assert P.mega_doc_ids(valid, cfg).count() == 0
     plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
-    salted = sorted(
-        map(tuple, P.span_sequence_skew_df(valid, cfg).collect())
-    )
-    assert plain == salted
+    skew = P.span_sequence_skew_df(valid, cfg, docs=_docs(valid))
+    assert plain == sorted(map(tuple, skew.collect()))
+    assert "_obucket" not in _plan(skew)
 
 
 def test_salted_join_rejects_outer_and_semi(spark):
@@ -262,16 +285,10 @@ def test_mega_doc_detection_from_pre_explode_docs(spark):
     bit-identical to the single-window plan, and the detection must
     route the mega doc even when some of its spans would be
     quarantined (size counts them — over-routing is physical only)."""
-    from pyspark.sql import functions as F
-
     from pdf_parser_spark.operators import pages as P
 
     valid = _skewed_spans(spark)
-    docs = valid.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct("kind", "text", "media_ref", "offset")
-        ).alias("spans")
-    )
+    docs = _docs(valid)
     cfg = _low_threshold_cfg()
     plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
     salted = sorted(
@@ -281,3 +298,29 @@ def test_mega_doc_detection_from_pre_explode_docs(spark):
         )
     )
     assert plain == salted
+
+
+def test_mega_split_past_literal_limit_uses_tag_join(spark):
+    """More mega docs than MAX_LITERAL_MEGA_IDS: the bounded probe stops
+    at limit + 1 ids and the split goes through the broadcast tag join;
+    the output still equals the single-window plan."""
+    from pdf_parser_spark.operators import pages as P
+
+    n_mega = P.MAX_LITERAL_MEGA_IDS + 1
+    rows = [
+        (f"m{d:05d}", s, "text", f"mega {d} span {s}", None, s)
+        for d in range(n_mega)
+        for s in range(2)
+    ] + [("small", 0, "text", "one span", None, 0)]
+    valid = spark.createDataFrame(
+        rows,
+        "doc_id string, seq int, kind string, text string,"
+        " media_ref string, offset int",
+    )
+    cfg = _low_threshold_cfg(threshold=1, buckets=2)
+    plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
+    skew = P.span_sequence_skew_df(valid, cfg, docs=_docs(valid))
+    assert plain == sorted(map(tuple, skew.collect()))
+    plan = _plan(skew)
+    assert "_mega" in plan
+    assert not re.search(r"doc_id#\d+ IN \(", plan)

@@ -28,8 +28,11 @@ def test_toc_parity(docs_df, oracle_results):
     pages = _pages(docs_df)
     meta = M.metadata_df(docs_df, pages)
     got = {}
-    for r in T.toc_entries_df(pages, meta).collect():
+    cached = []
+    for r in T.toc_entries_df(pages, meta, cache=cached).collect():
         got.setdefault(r.doc_id, []).append(r)
+    for df in cached:
+        df.unpersist()
 
     n_entries = 0
     for doc_id, res in oracle_results.items():

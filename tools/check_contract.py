@@ -2,11 +2,17 @@
 driver_queries entry on Spark AND its DuckDB oracle, compare row count,
 column names, and order-insensitive values.
 
+Prints one ``md5 <key> <digest>`` line per key: the md5 of the key's
+normalized Spark rows, so two checkouts give identical output exactly
+when ``grep ^md5`` of their runs do not ``diff``.
+
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import sys
 import traceback
 from pathlib import Path
@@ -46,14 +52,25 @@ def normalize(rows, cols):
     return sorted(out)
 
 
+def rows_md5(rows) -> str:
+    return hashlib.md5(repr(rows).encode("utf-8")).hexdigest()
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if not os.path.isdir(sf_dir):
+        sys.exit(__doc__.strip() + f"\n\nnot a directory: {sf_dir}")
     only = set(sys.argv[2:])
 
     from pdf_parser_spark import driver_queries as dq
     from pdf_parser_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    # no console progress bars: they would split the md5 lines
+    spark = get_spark(
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -68,6 +85,8 @@ def main():
             sdf = fn(spark, sf_dir)
             s_cols = [c.lower() for c in sdf.columns]
             s_rows = [tuple(r) for r in sdf.collect()]
+            ns = normalize(s_rows, s_cols)
+            print(f"md5 {name} {rows_md5(ns)}")
             if sql is None:
                 print(f"  {name}: rows-only ({len(s_rows)} rows) OK")
                 n_pass += 1
@@ -86,7 +105,6 @@ def main():
                 )
                 ok = False
             else:
-                ns = normalize(s_rows, s_cols)
                 nd = normalize(d_rows, d_cols)
                 if ns != nd:
                     diffs = [

@@ -19,7 +19,7 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 from pdf_parser_spark import driver_queries as dq  # noqa: E402
-from pdf_parser_spark.session import get_spark  # noqa: E402
+from pdf_parser_spark.session import cache_stage, get_spark  # noqa: E402
 
 
 def _executed_tree(plan: str) -> str:
@@ -123,24 +123,22 @@ def main() -> None:
     summarize("stage:pages", pages)
     summarize("stage:metadata", meta)
     # audit the stages the way the pipeline actually runs them: each
-    # stage boundary materialized (persist=True ≙ the production Iceberg
-    # stage table), so downstream plans read InMemoryTableScan instead of
-    # re-inlining the upstream lineage — the un-persisted plan string
-    # duplicates every consumer branch and inflates exchange/py counts
-    # ~30x beyond anything that executes
-    pages = pages.persist()
-    pages.count()
-    meta = meta.persist()
-    meta.count()
-    toc = T.toc_entries_df(pages, meta, persist=True).persist()
-    toc.count()
+    # stage boundary materialized (session.cache_stage ≙ the production
+    # Iceberg stage table), so downstream plans read InMemoryTableScan
+    # instead of re-inlining the upstream lineage — the un-persisted
+    # plan string duplicates every consumer branch and inflates
+    # exchange/py counts ~30x beyond anything that executes
+    cached: list = []
+    pages = cache_stage(pages, cached)
+    meta = cache_stage(meta, cached)
+    toc = cache_stage(T.toc_entries_df(pages, meta, cache=cached), cached)
     # with toc itself cached this row reads ~all-zeros (a bare cache
     # scan) — the authoritative per-stage plan assertions live in
     # tests/test_plans.py (single Arrow stage, single exchange, etc.);
     # the un-persisted printout here duplicates shared lazy subtrees
     # hundreds of times and measures the PRINTER, not the job
     summarize("stage:toc(cached-in)", toc)
-    sec = S.sections_df(pages, toc, meta, persist=True)
+    sec = S.sections_df(pages, toc, meta, cache=cached)
     summarize("stage:sections(cached-in)", sec)
     print(
         "note: stage counts are PLAN-STRING occurrences.  The sections "
@@ -151,9 +149,8 @@ def main() -> None:
         "~15 shuffle stages (see the Spark UI / bench stage counts), "
         "not the printed number."
     )
-    for df in (pages, meta, toc):
+    for df in cached:
         df.unpersist()
-
 
 if __name__ == "__main__":
     main()
