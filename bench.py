@@ -119,11 +119,15 @@ def main() -> None:
     # flight at once, so per-stage barrier latency overlaps with other
     # waves' compute instead of serializing the whole cluster.
     conc = int(os.environ.get("SPARK_GRAFT_BENCH_CONCURRENCY", "4"))
+    # console progress bars off: the JSON line must be the output's tail
+    extra_conf = {"spark.ui.showConsoleProgress": "false"}
+    if conc > 1:
+        extra_conf["spark.scheduler.mode"] = "FAIR"
     spark = get_spark(
         app_name="pdf_parser_spark-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=sp,
-        extra_conf={"spark.scheduler.mode": "FAIR"} if conc > 1 else None,
+        extra_conf=extra_conf,
     )
 
     corpus_path = ensure_corpus(spark, n_docs, mega_spans)
@@ -132,10 +136,14 @@ def main() -> None:
 
     times: dict = {}
 
-    def timed(name, fn):
-        t0 = time.perf_counter()
-        out = fn()
-        times[name] = round(time.perf_counter() - t0, 3)
+    def timed(name, fn, reps=1):
+        """Run ``fn`` ``reps`` times; record the fastest run's seconds."""
+        best = float("inf")
+        for _ in range(max(1, reps)):
+            t0 = time.perf_counter()
+            out = fn()
+            best = min(best, time.perf_counter() - t0)
+        times[name] = round(best, 3)
         return out
 
     # --- end-to-end extraction pipeline (the BASELINE.json metric) -------
@@ -199,14 +207,11 @@ def main() -> None:
         # module attributes, not dq.queries(): some benched queries are
         # suite members rather than registered composites
         for name in RELATIONAL:
-            fn = lambda n=name: getattr(dq, n)(spark, sf_dir).count()  # noqa: E731
-            best = None
-            for _ in range(max(1, micro_reps)):
-                t0 = time.perf_counter()
-                fn()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            times[name] = round(best, 3)
+            timed(
+                name,
+                lambda n=name: getattr(dq, n)(spark, sf_dir).count(),
+                reps=micro_reps,
+            )
 
     # --- physical-layout A/B: the W2 reassembly over the ad-hoc parquet
     # corpus (one doc_id exchange) vs the doc_id-bucketed table (zero

@@ -24,6 +24,10 @@ KNOWN_KINDS = (
     TEXT_KINDS + (TABLE_KIND,) + IMAGE_KINDS
     + (LAYOUT_KIND, ANNOTATION_KIND, PAGE_BREAK_KIND)
 )
+#: raw-HTML payload spans: not a known kind — functions/boilerplate
+#: rewrites them to "text", and validation quarantines any left over as
+#: unknown_kind.
+HTML_KIND = "html"
 
 
 @dataclass(frozen=True)

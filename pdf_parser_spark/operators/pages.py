@@ -45,9 +45,8 @@ MAX_LITERAL_MEGA_IDS = 1000
 
 def explode_spans_raw(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) → flat (doc_id, seq, kind, text, media_ref,
-    offset), no validation column yet — the hook for inline span
-    rewrites (boilerplate.normalize_html_flat) that must run BEFORE
-    kind validation."""
+    offset), no validation column yet — the table span rewrites
+    (boilerplate.normalize_html_flat) run on."""
     return docs.select(
         "doc_id",
         F.posexplode_outer("spans").alias("seq", "span"),
@@ -61,13 +60,26 @@ def explode_spans_raw(docs: DataFrame) -> DataFrame:
     )
 
 
-def explode_spans(docs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+def explode_spans(
+    docs: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    normalize_html: bool = False,
+    cache: list | None = None,
+) -> DataFrame:
     """(doc_id, spans) → flat (doc_id, seq, kind, text, media_ref, offset,
     error_kind).  ``error_kind`` null ⇒ valid span; 'empty_spans' rows mark
-    documents whose array is null/empty (posexplode_outer keeps them)."""
-    return explode_spans_raw(docs).withColumn(
-        "error_kind", error_kind_expr(cfg)
-    )
+    documents whose array is null/empty (posexplode_outer keeps them).
+
+    ``normalize_html`` rewrites raw-HTML payload spans to their main
+    content first (boilerplate.normalize_html_flat, which materializes
+    its rewritten rows into ``cache``), so validation runs after the
+    rewrite and normalized html never hits unknown_kind."""
+    flat = explode_spans_raw(docs)
+    if normalize_html:
+        from pdf_parser_spark.functions import boilerplate
+
+        flat = boilerplate.normalize_html_flat(flat, cache=cache)
+    return flat.withColumn("error_kind", error_kind_expr(cfg))
 
 
 def error_kind_expr(cfg: PipelineConfig = DEFAULT_CONFIG) -> F.Column:

@@ -72,26 +72,16 @@ def run_pipeline(
     ``session.cache_stage`` and the result's ``unpersist()`` releases
     all of it; without it every table is a lazy plan."""
     cached: list | None = [] if cache else None
-    if normalize_html:
-        # north rule: the corpus interleaves raw-HTML payload spans with
-        # text + media — strip boilerplate and rewrite them to text spans
-        # in place before extraction (kind validation runs AFTER the
-        # rewrite, so normalized html never hits unknown_kind).  Off by
-        # default: production runs normalize once at ingest
-        # (functions/boilerplate.strip_html_spans); this inline variant
-        # is for un-normalized corpora, and its extra work + cache are
-        # proportional to the html-bearing rows only — ``docs`` for the
-        # doc_id-universe consumers (metadata/metrics) stays the raw
-        # scan.
-        from pdf_parser_spark.functions.boilerplate import (
-            normalize_html_flat,
-        )
-
-        flat = normalize_html_flat(
-            pages_op.explode_spans_raw(docs), cache=cached
-        ).withColumn("error_kind", pages_op.error_kind_expr(cfg))
-    else:
-        flat = pages_op.explode_spans(docs, cfg)
+    # north rule: with ``normalize_html`` the corpus's raw-HTML payload
+    # spans are stripped to text spans in place before validation.  Off
+    # by default: production runs normalize once at ingest
+    # (functions/boilerplate.strip_html_spans); the inline path is for
+    # un-normalized corpora, and its extra work + cache are proportional
+    # to the html rows only — ``docs`` for the doc_id-universe consumers
+    # (metadata/metrics) stays the raw scan.
+    flat = pages_op.explode_spans(
+        docs, cfg, normalize_html=normalize_html, cache=cached
+    )
     quarantine = pages_op.quarantine_df(flat)
     valid = pages_op.valid_spans(flat)
     # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past

@@ -41,20 +41,11 @@ def spans_out_stream(docs: DataFrame,
     whole documents.
 
     ``normalize_html`` strips raw-HTML payload spans in place first
-    (boilerplate.normalize_html_flat) — use it from ``foreachBatch``
-    (batch DataFrames), where the fold+join it needs are unrestricted;
-    arriving documents then land already normalized, the streaming twin
-    of ingest-time ``strip_html_spans``."""
-    if normalize_html:
-        from pdf_parser_spark.functions.boilerplate import (
-            normalize_html_flat,
-        )
-
-        flat = normalize_html_flat(
-            pages_op.explode_spans_raw(docs)
-        ).withColumn("error_kind", pages_op.error_kind_expr(cfg))
-    else:
-        flat = pages_op.explode_spans(docs, cfg)
+    (``pages.explode_spans``, as in ``run_pipeline``) — use it from
+    ``foreachBatch`` (batch DataFrames), where the aggregation it needs
+    is unrestricted; arriving documents then land already normalized,
+    the streaming twin of ingest-time ``strip_html_spans``."""
+    flat = pages_op.explode_spans(docs, cfg, normalize_html=normalize_html)
     return pages_op.span_sequence_df(pages_op.valid_spans(flat))
 
 

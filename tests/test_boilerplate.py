@@ -17,9 +17,18 @@ PAGE = f"""<html><head><title>My Site</title></head><body>
 </body></html>"""
 
 
+def _span(spark, html):
+    """One flat html span, the tokenizer's input shape."""
+    return spark.createDataFrame(
+        [("d1", 0, html, None, 0)],
+        "doc_id string, seq int, text string, media_ref string, offset int",
+    )
+
+
 def _blocks(spark, html):
-    df = spark.createDataFrame([("d1", html)], ["doc_id", "html"])
-    return bp.parse_html_blocks(df).orderBy("block_id").collect()
+    return bp.parse_span_blocks(_span(spark, html)).orderBy(
+        "block_id"
+    ).collect()
 
 
 def test_tokenizer_innermost_ownership_and_order(spark):
@@ -45,9 +54,8 @@ def test_tokenizer_tolerates_misnesting(spark):
 
 
 def test_classification_rules(spark):
-    df = spark.createDataFrame([("d1", PAGE)], ["doc_id", "html"])
     cls = bp.classify_blocks(
-        bp.score_blocks(bp.parse_html_blocks(df))
+        bp.score_blocks(bp.parse_span_blocks(_span(spark, PAGE)))
     ).orderBy("block_id")
     got = {r.tag + ":" + r.text[:10]: r.is_content for r in cls.collect()}
     assert got["title:My Site"] is False        # chrome tag
@@ -125,6 +133,12 @@ def _interleaved(spark):
                 Row(kind="html", text=f"<p>{LONG}</p>", media_ref=None,
                     offset=1),
             ]),
+            # html with a NULL offset: normalized like any other span,
+            # then quarantined as bad_offset
+            Row(doc_id="d5", spans=[
+                Row(kind="html", text=f"<p>{LONG}</p>", media_ref=None,
+                    offset=None),
+            ]),
         ]
     )
 
@@ -160,9 +174,11 @@ def test_strip_html_spans_pure_boilerplate_drops_span_not_doc(spark):
     span — but the DOCUMENT survives (empty spans array → the
     empty_spans quarantine records it instead of it silently vanishing),
     and non-html spans (even invalid ones awaiting quarantine) are
-    preserved."""
+    preserved.  An html span with a NULL offset is normalized, then
+    quarantined as bad_offset, on the ingest and the inline path."""
     from pdf_parser_spark.functions import boilerplate as bp
     from pdf_parser_spark.operators import pages as P
+    from pdf_parser_spark.pipeline import run_pipeline
 
     out = {r.doc_id: r.spans
            for r in bp.strip_html_spans(_interleaved(spark)).collect()}
@@ -176,6 +192,15 @@ def test_strip_html_spans_pure_boilerplate_drops_span_not_doc(spark):
     kinds = {(r.doc_id, r.error_kind) for r in quar.collect()}
     assert ("d3", "empty_spans") in kinds
     assert ("d4", "unknown_kind") in kinds
+    assert [(s.kind, s.text, s.offset) for s in out["d5"]] == [
+        ("text", LONG, None)
+    ]
+    assert ("d5", "bad_offset") in kinds
+    inline = run_pipeline(_interleaved(spark), cache=False,
+                          normalize_html=True).quarantine
+    assert ("d5", "bad_offset") in {
+        (r.doc_id, r.error_kind) for r in inline.collect()
+    }
 
 
 def test_strip_html_spans_single_python_stage(spark):
@@ -248,9 +273,8 @@ def test_inline_normalize_matches_ingest_strip(spark):
     spans_out on (doc_id, page, kind, text, media_ref, order) — seq is
     provenance (original slot vs rebuilt array position) and may
     differ — AND identical pages/metrics stage tables, including for a
-    doc whose html span strips to PURE boilerplate (the inline path
-    rewrites it to a NULL-text span, which every blob consumer drops
-    exactly like the ingest path's array removal; ADVICE r3)."""
+    doc whose html span strips to PURE boilerplate (both paths drop
+    that span; ADVICE r3)."""
     import random
 
     from pdf_parser_spark.fixtures.gen import (
@@ -337,3 +361,47 @@ def test_normalize_html_flat_plan_shape(spark):
     uncached = bp.normalize_html_flat(P.explode_spans_raw(docs))
     uplan = uncached._jdf.queryExecution().executedPlan().toString()
     assert uplan.count("MapInPandas") == 1
+    # the fold's grouping keys carry the span slot: no join back
+    assert "Join" not in uplan
+
+
+def test_null_doc_id_html_doc_keeps_its_id(spark):
+    """A NULL doc_id html doc keeps its NULL id and its stripped html
+    content on both entry points: strip_html_spans re-collects it into
+    ONE NULL doc (no phantom 'None' doc), and the inline pipeline emits
+    its html content under the NULL id."""
+    from pyspark.sql import Row
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pdf_parser_spark.pipeline import run_pipeline
+    from pdf_parser_spark.schemas import DOCUMENTS_SPANS
+
+    schema = StructType([
+        StructField("doc_id", StringType(), True),
+        DOCUMENTS_SPANS["spans"],
+    ])
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=None, spans=[
+                Row(kind="text", text="intro", media_ref=None, offset=0),
+                Row(kind="html", text=f"<p>{LONG}</p>", media_ref=None,
+                    offset=1),
+            ]),
+            Row(doc_id="d1", spans=[
+                Row(kind="html", text=f"<p>{LONG}</p>", media_ref=None,
+                    offset=0),
+            ]),
+        ],
+        schema,
+    )
+    out = bp.strip_html_spans(docs).collect()
+    assert sorted(r.doc_id or "" for r in out) == ["", "d1"]
+    null_doc = next(r for r in out if r.doc_id is None)
+    assert [(s.kind, s.text, s.offset) for s in null_doc.spans] == [
+        ("text", "intro", 0), ("text", LONG, 1)
+    ]
+    spans_out = run_pipeline(docs, cache=False,
+                             normalize_html=True).spans_out
+    assert sorted(
+        r.text for r in spans_out.collect() if r.doc_id is None
+    ) == sorted(["intro", LONG])

@@ -10,7 +10,7 @@ example runs a small Spark job.
 """
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import exprs as E
@@ -199,15 +199,22 @@ html_span_tuples = st.tuples(
 @settings(max_examples=8, **SETTINGS)
 @given(st.lists(st.lists(html_span_tuples, max_size=8), min_size=1,
                 max_size=3))
+# an html span with a NULL offset (must pass through as NULL)
+@example([[("html", "<p>" + " ".join(["ab"] * 12) + "</p>", None, None)]])
 def test_normalize_html_flat_invariants(spark, docs):
     """For ARBITRARY spans — malformed/truncated markup, null text,
-    null kinds — inline normalization (a) never invents a span slot,
-    and only ever drops HTML slots whose strip is pure boilerplate
-    (matching the ingest path's array removal — ADVICE r3); (b) passes
-    every non-html row through byte-identical; (c) rewrites every
-    surviving html row to kind='text' with NON-EMPTY text at the same
-    (media_ref, offset); and (d) is idempotent."""
-    from pdf_parser_spark.functions.boilerplate import normalize_html_flat
+    null kinds, null offsets — inline normalization (a) never invents a
+    span slot, and only ever drops HTML slots whose strip is pure
+    boilerplate (matching the ingest path's array removal — ADVICE r3);
+    (b) passes every non-html row through byte-identical; (c) rewrites
+    every surviving html row to kind='text' with NON-EMPTY text at the
+    same (media_ref, offset); (d) is idempotent; and (e) for every doc
+    that keeps a span, ingest-time strip_html_spans re-exploded holds
+    the same spans in the same order."""
+    from pdf_parser_spark.functions.boilerplate import (
+        normalize_html_flat,
+        strip_html_spans,
+    )
 
     rows = [(f"d{i}", spans) for i, spans in enumerate(docs)]
     df = spark.createDataFrame(rows, DOCUMENTS_SPANS)
@@ -240,3 +247,15 @@ def test_normalize_html_flat_invariants(spark, docs):
         k: (v.kind, v.text, v.media_ref, v.offset)
         for k, v in got.items()
     }
+
+    def by_doc(rows):
+        per_doc: dict = {}
+        for r in sorted(rows, key=lambda r: (r.doc_id, r.seq)):
+            per_doc.setdefault(r.doc_id, []).append(
+                (r.kind, r.text, r.media_ref, r.offset)
+            )
+        return per_doc
+
+    kept = by_doc(got.values())
+    ingest = by_doc(P.explode_spans_raw(strip_html_spans(df)).collect())
+    assert {d: ingest[d] for d in kept} == kept
