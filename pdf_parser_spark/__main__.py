@@ -16,7 +16,11 @@ executors (the scaling criterion's two cluster sizes).
 
 Modes:
 - ``pipeline``  one-shot batch: full 5-stage extraction, parquet outputs
-  (spans_out, quarantine, pages, metadata, toc, sections, metrics).
+  (spans_out, quarantine, pages, metadata, toc, sections, metrics); the
+  summary is the rows written per table.  Each table lands under
+  --output as its stage completes (pages, metadata, toc and sections are
+  then read back for the later stages), so a run that fails part-way
+  leaves the earlier stages' tables there; a re-run overwrites them.
 - ``resume``    lineage-bucketed batch: per-partition progress recorded
   in a lineage table; re-invoking after a kill processes ONLY pending
   buckets (streaming/lineage.py).
@@ -82,23 +86,13 @@ def main(argv=None, spark=None) -> dict:
     if args.mode == "pipeline":
         from pdf_parser_spark import pipeline as P
 
-        from pdf_parser_spark.sources.tables import (
-            read_table, sub_ref, write_table,
-        )
-
         res = P.run_pipeline(
             P.read_documents(spark, args.input),
             normalize_html=args.normalize_html,
+            output=args.output,
         )
-        counts = {}
-        for name in ("spans_out", "quarantine", "pages", "metadata",
-                     "toc", "sections", "metrics"):
-            df = getattr(res, name)
-            ref = sub_ref(args.output, name)
-            write_table(df, ref, mode="overwrite")
-            counts[name] = read_table(spark, ref).count()
         res.unpersist()
-        return counts
+        return res.counts
 
     if args.mode == "bucketize":
         from pdf_parser_spark import pipeline as P

@@ -65,15 +65,9 @@ def stage_table_materializer(out_dir: str, name: str) -> Materializer:
     without recomputing the signatures fold."""
 
     def mat(df: DataFrame) -> DataFrame:
-        from pdf_parser_spark.sources.tables import (
-            read_table,
-            sub_ref,
-            write_table,
-        )
+        from pdf_parser_spark.sources import tables
 
-        ref = sub_ref(out_dir, name)
-        write_table(df, ref, mode="overwrite")
-        return read_table(df.sparkSession, ref)
+        return tables.write_and_read(df, tables.sub_ref(out_dir, name))[0]
 
     return mat
 

@@ -9,7 +9,12 @@ orchestrator (main.py:96-116):
 
 Where the reference re-reads JSONL files between steps
 (main.py:194-202, section_parser.py:94-107 — SURVEY.md §2 S7), this build
-holds ONE cached pages DataFrame reused by steps 2-5 (SURVEY.md §4 P9).
+materializes each of pages, metadata, toc and sections once and reuses it
+downstream (SURVEY.md §4 P9).  Given an ``output`` table ref (the CLI's
+``--output``) the materialization IS the output table: each stage is
+written once and read back with its schema pinned, so later stages plan
+from file scans instead of from every upstream cached plan.  Without one,
+the four stages are persisted in memory (``session.cache_stage``).
 
 Scale: the input is read with its on-disk doc_id-range layout
 (fixtures/gen.write_parquet mirrors the production Iceberg bucketing);
@@ -20,7 +25,7 @@ inside pages.span_sequence_df (SURVEY.md §4 P6).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,6 +37,7 @@ from pdf_parser_spark.operators import sections as sections_op
 from pdf_parser_spark.operators import toc as toc_op
 from pdf_parser_spark.schemas import DOCUMENTS_SPANS
 from pdf_parser_spark.session import cache_stage
+from pdf_parser_spark.sources import tables
 
 
 @dataclass
@@ -43,9 +49,12 @@ class PipelineResult:
     toc: DataFrame
     sections: DataFrame
     metrics: DataFrame
-    #: every DataFrame the run persisted, stage tables and operator
-    #: internals alike, in materialization order
+    #: every DataFrame the run persisted, in materialization order: the
+    #: operator internals, plus the four stage tables when there is no
+    #: ``output`` ref to write them to
     cached: tuple = ()
+    #: rows written per output table (empty without an ``output`` ref)
+    counts: dict = field(default_factory=dict)
 
     def unpersist(self) -> None:
         for df in self.cached:
@@ -57,9 +66,7 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     shape): ``iceberg:<catalog.db.table>`` refs go through the Iceberg
     catalog (sources/tables.py gate), parquet paths read with the schema
     pinned — no inference pass."""
-    from pdf_parser_spark.sources.tables import read_table
-
-    return read_table(spark, path, schema=DOCUMENTS_SPANS)
+    return tables.read_table(spark, path, schema=DOCUMENTS_SPANS)
 
 
 def run_pipeline(
@@ -67,11 +74,27 @@ def run_pipeline(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     cache: bool = True,
     normalize_html: bool = False,
+    output: str | None = None,
 ) -> PipelineResult:
-    """With ``cache`` every stage boundary is materialized through
-    ``session.cache_stage`` and the result's ``unpersist()`` releases
-    all of it; without it every table is a lazy plan."""
+    """With an ``output`` table ref each of the seven result tables is
+    written once under it (``sources.tables.write_and_read``), pages,
+    metadata, toc and sections as soon as they are planned, and the
+    result holds the tables read back; ``counts`` holds the rows
+    written.  Without one, ``cache`` materializes the four stages
+    through ``session.cache_stage``, and without either every table is a
+    lazy plan.  ``cache`` also governs the operators' internal caches;
+    the result's ``unpersist()`` releases all that was persisted."""
     cached: list | None = [] if cache else None
+    counts: dict = {}
+
+    def stage(name: str, df: DataFrame) -> DataFrame:
+        if output is None:
+            return cache_stage(df, cached)
+        df, counts[name] = tables.write_and_read(
+            df, tables.sub_ref(output, name)
+        )
+        return df
+
     # north rule: with ``normalize_html`` the corpus's raw-HTML payload
     # spans are stripped to text spans in place before validation.  Off
     # by default: production runs normalize once at ingest
@@ -92,16 +115,20 @@ def run_pipeline(
 
     # steps 2-5 all read pages; one materialization instead of the
     # reference's three JSONL re-reads (S7)
-    pages = cache_stage(pages_op.pages_df(valid, cfg), cached)
-    metadata = cache_stage(metadata_op.metadata_df(docs, pages, cfg), cached)
-    toc = cache_stage(
-        toc_op.toc_entries_df(pages, metadata, cfg, cache=cached), cached
+    pages = stage("pages", pages_op.pages_df(valid, cfg))
+    metadata = stage("metadata", metadata_op.metadata_df(docs, pages, cfg))
+    toc = stage(
+        "toc", toc_op.toc_entries_df(pages, metadata, cfg, cache=cached)
     )
-    sections = cache_stage(
+    sections = stage(
+        "sections",
         sections_op.sections_df(pages, toc, metadata, cfg, cache=cached),
-        cached,
     )
     metrics = metrics_op.metrics_df(docs, pages, toc, sections, metadata)
+    if output is not None:
+        spans_out = stage("spans_out", spans_out)
+        quarantine = stage("quarantine", quarantine)
+        metrics = stage("metrics", metrics)
 
     return PipelineResult(
         quarantine=quarantine,
@@ -112,4 +139,5 @@ def run_pipeline(
         sections=sections,
         metrics=metrics,
         cached=tuple(cached or ()),
+        counts=counts,
     )

@@ -117,8 +117,10 @@ def cache_stage(df: DataFrame, cache: list | None) -> DataFrame:
     The count is eager because each stage fans out to several consumers
     inside single downstream jobs, and a lazy cache would recompute the
     lineage once per branch before any partition lands in the cache.
-    In production these stage boundaries are Iceberg tables (the write
-    is the materialization)."""
+    Given an output table ref, ``pipeline.run_pipeline`` writes its four
+    stage boundaries to their tables instead (the write is the
+    materialization); the operators' internal caches, and runs with
+    nowhere durable to write, come here."""
     if cache is None:
         return df
     df = df.persist(StorageLevel.MEMORY_AND_DISK)

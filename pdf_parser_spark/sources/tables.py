@@ -15,7 +15,8 @@ not — no silent parquet fallback for an explicit ``iceberg:`` ask.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 ICEBERG_PREFIX = "iceberg:"
 TABLE_PREFIX = "table:"
@@ -133,6 +134,22 @@ def write_table(
     writer.parquet(ref)
 
 
+def write_and_read(df: DataFrame, ref: str) -> tuple[DataFrame, int]:
+    """The durable stage boundary: overwrite ``ref`` with ``df`` once and
+    return the table read back with ``df``'s schema pinned (no inference
+    job) plus the rows written, counted by an ``Observation`` on the
+    write itself (no second job).  Downstream plans start from the file
+    scan, not from ``df``'s lineage."""
+    obs = Observation()
+    write_table(
+        df.observe(obs, F.count(F.lit(1)).alias("rows")), ref,
+        mode="overwrite",
+    )
+    return read_table(df.sparkSession, ref, schema=df.schema), int(
+        obs.get["rows"]
+    )
+
+
 def write_bucketed_table(
     df: DataFrame,
     ref: str,
@@ -166,8 +183,6 @@ def write_bucketed_table(
     ``sort_cols`` orders rows inside each bucket file; with one file
     per bucket Spark also elides the window sort on those columns.
     """
-    from pyspark.sql import functions as F
-
     if is_iceberg_ref(ref):
         name = _require_iceberg(df.sparkSession, ref)
         writer = df.writeTo(name).partitionedBy(

@@ -1,37 +1,77 @@
 """spark-submit driver script (pdf_parser_spark/__main__.py)."""
 
+import random
 import shutil
 import tempfile
+from pathlib import Path
+
+from pyspark.sql import Row
 
 from pdf_parser_spark.__main__ import main
-from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
+from pdf_parser_spark.fixtures.gen import (
+    _doc_to_spans, fixture_corpus, html_doc, to_spark_df,
+)
+from pdf_parser_spark.pipeline import read_documents, run_pipeline
+
+ROOT = str(Path(__file__).resolve().parents[1])
+TABLES = ("spans_out", "quarantine", "pages", "metadata", "toc",
+          "sections", "metrics")
+
+
+def _rows(df):
+    """Order-insensitive, hashable rows: arrays become tuples, so an
+    empty array and a NULL stay distinct."""
+    def freeze(v):
+        return tuple(map(freeze, v)) if isinstance(v, (Row, list)) else v
+
+    return sorted((freeze(r) for r in df.collect()), key=repr)
 
 
 def test_main_pipeline_mode_writes_all_outputs(spark):
-    tmp = tempfile.mkdtemp(prefix="main_", dir="/root/repo")
+    """The CLI writes each of the seven tables once, and what it wrote
+    equals the in-memory ``run_pipeline`` result row for row — with and
+    without --normalize-html, over malformed (NULL-text), whitespace-only,
+    span-less and raw-html docs: the parquet round trip keeps empty
+    arrays apart from NULLs."""
+    rng = random.Random(5)
+    docs = fixture_corpus(n_docs=8) + [
+        _doc_to_spans(html_doc(rng, f"html-{i}"), rng) for i in range(2)
+    ]
+    assert any(s["text"] is None and s["kind"] == "text"
+               for d in docs for s in d["spans"])
+    tmp = tempfile.mkdtemp(prefix="main_", dir=ROOT)
     try:
-        to_spark_df(spark, fixture_corpus(n_docs=8)).write.parquet(
-            f"{tmp}/in"
-        )
-        counts = main(
-            ["--mode", "pipeline", "--input", f"{tmp}/in",
-             "--output", f"{tmp}/out"],
-            spark=spark,
-        )
-        assert set(counts) == {
-            "spans_out", "quarantine", "pages", "metadata", "toc",
-            "sections", "metrics",
-        }
-        assert counts["spans_out"] > 0 and counts["metrics"] > 0
-        # outputs are re-readable parquet with the expected key column
-        df = spark.read.parquet(f"{tmp}/out/spans_out")
-        assert "doc_id" in df.columns and "order" in df.columns
+        to_spark_df(spark, docs).write.parquet(f"{tmp}/in")
+        for normalize_html in (False, True):
+            out = f"{tmp}/out_{normalize_html}"
+            counts = main(
+                ["--mode", "pipeline", "--input", f"{tmp}/in",
+                 "--output", out]
+                + ["--normalize-html"] * normalize_html,
+                spark=spark,
+            )
+            assert set(counts) == set(TABLES)
+            assert counts["spans_out"] > 0 and counts["metrics"] > 0
+            want = run_pipeline(read_documents(spark, f"{tmp}/in"),
+                                cache=True, normalize_html=normalize_html)
+            try:
+                for name in TABLES:
+                    got = spark.read.parquet(f"{out}/{name}")
+                    exp = getattr(want, name)
+                    assert got.columns == exp.columns, name
+                    rows = _rows(got)
+                    assert len(rows) == counts[name], name
+                    assert rows == _rows(exp), name
+                tags = [r.tags for r in want.sections.collect()]
+                assert [] in tags and None not in tags
+            finally:
+                want.unpersist()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_main_resume_mode_summary(spark):
-    tmp = tempfile.mkdtemp(prefix="main_", dir="/root/repo")
+    tmp = tempfile.mkdtemp(prefix="main_", dir=ROOT)
     try:
         to_spark_df(spark, fixture_corpus(n_docs=6)).write.parquet(
             f"{tmp}/in"
@@ -50,7 +90,7 @@ def test_main_bucketize_then_pipeline_from_table(spark):
     """bucketize writes the doc_id-bucketed catalog table; pipeline mode
     reads it back via the table: ref and produces the same spans_out
     count as the parquet path."""
-    tmp = tempfile.mkdtemp(prefix="main_", dir="/root/repo")
+    tmp = tempfile.mkdtemp(prefix="main_", dir=ROOT)
     try:
         to_spark_df(spark, fixture_corpus(n_docs=8)).write.parquet(
             f"{tmp}/in"
@@ -86,13 +126,9 @@ def test_main_bucketize_normalize_html(spark):
     one-time re-layout: the bucketed table holds pre-normalized docs, so
     a plain (no-flag) pipeline over it quarantines nothing as
     unknown_kind and emits the stripped content."""
-    import random
-
-    from pdf_parser_spark.fixtures.gen import _doc_to_spans, html_doc
-
     rng = random.Random(31)
     docs = [_doc_to_spans(html_doc(rng, f"bh-{i}"), rng) for i in range(3)]
-    tmp = tempfile.mkdtemp(prefix="main_nh_", dir="/root/repo")
+    tmp = tempfile.mkdtemp(prefix="main_nh_", dir=ROOT)
     try:
         to_spark_df(spark, docs).write.parquet(f"{tmp}/in")
         summary = main(

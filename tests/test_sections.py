@@ -1,6 +1,10 @@
 """Spark ↔ oracle parity for full section assembly (J2/J3/J5, W1/W5,
 F7/F8, X21-X25) — the end-to-end tail of the pipeline."""
 
+import shutil
+import tempfile
+from pathlib import Path
+
 import pytest
 
 from pdf_parser_spark.operators import metadata as M
@@ -65,9 +69,13 @@ def test_sections_parity(docs_df, oracle_results):
     assert n_sections > 60
 
 
-@pytest.mark.parametrize("normalize_html", [False, True])
+@pytest.mark.parametrize(
+    "normalize_html,to_tables",
+    [(False, False), (True, False), (False, True), (True, True)],
+    ids=["False", "True", "False-output", "True-output"],
+)
 def test_pipeline_unpersist_releases_all_internal_caches(
-    spark, docs_df, normalize_html
+    spark, docs_df, normalize_html, to_tables
 ):
     """Every persist() taken inside run_pipeline — the stage tables and
     the operators' internal caches (html rewrite, toc feats/primary,
@@ -75,21 +83,34 @@ def test_pipeline_unpersist_releases_all_internal_caches(
     PipelineResult.cached so unpersist() returns the executor storage
     to its prior state — a long-lived cluster job running many pipeline
     slices must not accumulate stage caches (MEMORY_AND_DISK evicts
-    from memory but pins disk until unpersist)."""
+    from memory but pins disk until unpersist).
+
+    With an output ref the four stage tables are written and read back
+    instead: only the operator internals are persisted, and the frames
+    metrics is built from plan as file scans, not cached relations."""
     from pdf_parser_spark.pipeline import run_pipeline
 
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    before = {int(k) for k in jmap.keySet().toArray()}
-    res = run_pipeline(docs_df, cache=True, normalize_html=normalize_html)
-    res.sections.count()  # drive the W5 cached flow
-    # pages, metadata, toc, sections + feats, primary, page_sections,
-    # union (+ the html rewrite)
-    assert len(res.cached) == 8 + normalize_html
-    res.unpersist()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    after = {int(k) for k in jmap.keySet().toArray()}
-    # subset, not equality: the JVM ContextCleaner may asynchronously
-    # drop GC'd caches from EARLIER tests between the two snapshots —
-    # the property under test is only that nothing run_pipeline created
-    # survives its unpersist()
-    assert after <= before, f"leaked cache ids: {sorted(after - before)}"
+    tmp = tempfile.mkdtemp(prefix="main_",
+                           dir=Path(__file__).resolve().parents[1])
+    try:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        before = {int(k) for k in jmap.keySet().toArray()}
+        res = run_pipeline(docs_df, cache=True, normalize_html=normalize_html,
+                           output=f"{tmp}/out" if to_tables else None)
+        res.sections.count()  # drive the W5 cached flow
+        # feats, primary, page_sections, union (+ the html rewrite), and
+        # without an output ref pages, metadata, toc, sections
+        assert len(res.cached) == 4 + normalize_html + 4 * (not to_tables)
+        for df in (res.pages, res.metadata, res.toc, res.sections):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert ("InMemoryRelation" in plan) != to_tables, plan[:500]
+        res.unpersist()
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        after = {int(k) for k in jmap.keySet().toArray()}
+        # subset, not equality: the JVM ContextCleaner may asynchronously
+        # drop GC'd caches from EARLIER tests between the two snapshots —
+        # the property under test is only that nothing run_pipeline
+        # created survives its unpersist()
+        assert after <= before, f"leaked cache ids: {sorted(after - before)}"
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
