@@ -22,6 +22,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -150,19 +151,19 @@ def main() -> None:
     def run_one(docs_df):
         # normalize_html inside the timed path: the corpus interleaves
         # raw-HTML payload spans (1/13 of docs), and the north-star
-        # metric is END-TO-END extraction — boilerplate strip included
-        r = run_pipeline(docs_df, normalize_html=True)
-        # force every output table (spans_out is the flagship; toc/
-        # sections/metrics are the remaining reference steps)
-        n = (
-            r.spans_out.count()
-            + r.toc.count()
-            + r.sections.count()
-            + r.metrics.count()
-            + r.quarantine.count()
-        )
-        r.unpersist()
-        return n
+        # metric is END-TO-END extraction — boilerplate strip included.
+        # Each call (the concurrent slices too) stages into its own dir.
+        with tempfile.TemporaryDirectory(prefix="bench_stage_") as stage:
+            r = run_pipeline(docs_df, stage, normalize_html=True)
+            # force every output table (spans_out is the flagship; toc/
+            # sections/metrics are the remaining reference steps)
+            return (
+                r.spans_out.count()
+                + r.toc.count()
+                + r.sections.count()
+                + r.metrics.count()
+                + r.quarantine.count()
+            )
 
     def pipe():
         if conc <= 1:

@@ -19,8 +19,10 @@ Modes:
   (spans_out, quarantine, pages, metadata, toc, sections, metrics); the
   summary is the rows written per table.  Each table lands under
   --output as its stage completes (pages, metadata, toc and sections are
-  then read back for the later stages), so a run that fails part-way
-  leaves the earlier stages' tables there; a re-run overwrites them.
+  then read back for the later stages), and the operators' internal
+  stage tables land next to them under ``--output/_*``; a run that
+  fails part-way leaves the earlier stages' tables there, and a re-run
+  overwrites them.
 - ``resume``    lineage-bucketed batch: per-partition progress recorded
   in a lineage table; re-invoking after a kill processes ONLY pending
   buckets (streaming/lineage.py).
@@ -85,13 +87,16 @@ def main(argv=None, spark=None) -> dict:
 
     if args.mode == "pipeline":
         from pdf_parser_spark import pipeline as P
+        from pdf_parser_spark.sources import tables as T
 
         res = P.run_pipeline(
-            P.read_documents(spark, args.input),
+            P.read_documents(spark, args.input), args.output,
             normalize_html=args.normalize_html,
-            output=args.output,
         )
-        res.unpersist()
+        for name in ("spans_out", "quarantine", "metrics"):
+            res.counts[name] = T.write_and_read(
+                getattr(res, name), T.sub_ref(args.output, name)
+            )[1]
         return res.counts
 
     if args.mode == "bucketize":

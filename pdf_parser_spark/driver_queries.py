@@ -14,6 +14,10 @@ Names reference the SURVEY §2 operator ids they exercise.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,6 +39,15 @@ MEMBERS: dict = {}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _stage_dir() -> str:
+    """A fresh directory for one query's stage tables.  The frame a query
+    returns reads them after the query returns, so the directory lives
+    until the process exits."""
+    path = tempfile.mkdtemp(prefix="pdf_parser_spark_stage_")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def q(name: str, sql: str | None):
@@ -960,6 +973,7 @@ def dedup_lsh_pairs(spark, sf_dir):
     recover."""
     return dd.lsh_candidate_pairs(
         _planted_corpus(spark, sf_dir),
+        _stage_dir(),
         n_hashes=_N_MINHASH,
         k=3,
         n_bands=4,
@@ -1004,7 +1018,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     Jaccard lands near 0.99)."""
     corpus = _planted_corpus(spark, sf_dir)
     pairs = dd.lsh_candidate_pairs(
-        corpus, n_hashes=_N_MINHASH, k=3, n_bands=4
+        corpus, _stage_dir(), n_hashes=_N_MINHASH, k=3, n_bands=4
     )
     return dd.ngram_jaccard_pairs(corpus, pairs, k=3)
 
@@ -1647,7 +1661,7 @@ def pipeline_sections(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_spans(_t(spark, sf_dir, "documents"))
-    sections = run_pipeline(docs, cache=True).sections
+    sections = run_pipeline(docs, _stage_dir()).sections
     return sections.withColumn("tags", F.to_json("tags"))
 
 
@@ -1739,7 +1753,7 @@ def pipeline_metrics(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_spans(_t(spark, sf_dir, "documents"))
-    return run_pipeline(docs, cache=True).metrics
+    return run_pipeline(docs, _stage_dir()).metrics
 
 
 @q(
@@ -2120,7 +2134,7 @@ def pipeline_inline_html(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_interleaved(_t(spark, sf_dir, "documents"))
-    return run_pipeline(docs, cache=False, normalize_html=True).spans_out
+    return run_pipeline(docs, _stage_dir(), normalize_html=True).spans_out
 
 
 _MEDIA_LINK_SQL = f"""
@@ -2389,7 +2403,9 @@ def dedup_simhash_pairs(spark, sf_dir):
     green hash proves the 16-bit pigeonhole block join is a COMPLETE
     candidate generator within the radius, not just self-consistent."""
     corpus = _planted_corpus(spark, sf_dir)
-    return dd.simhash_candidate_pairs(corpus, k=1, max_hamming=3).select(
+    return dd.simhash_candidate_pairs(
+        corpus, _stage_dir(), k=1, max_hamming=3
+    ).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 
@@ -2651,7 +2667,7 @@ def corpus_metrics(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_spans(_t(spark, sf_dir, "documents"))
-    metrics = run_pipeline(docs, cache=True).metrics
+    metrics = run_pipeline(docs, _stage_dir()).metrics
     return metrics_op.corpus_metrics_df(metrics)
 
 
@@ -3112,7 +3128,7 @@ def pipeline_toc(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_toc_spans(_t(spark, sf_dir, "documents"))
-    toc = run_pipeline(docs, cache=True).toc
+    toc = run_pipeline(docs, _stage_dir()).toc
     return toc.select(
         "doc_id",
         "doc_title",
@@ -3203,7 +3219,7 @@ def pipeline_toc_sections(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_toc_spans(_t(spark, sf_dir, "documents"))
-    sections = run_pipeline(docs, cache=True).sections
+    sections = run_pipeline(docs, _stage_dir()).sections
     return sections.withColumn("tags", F.to_json("tags"))
 
 
@@ -3284,7 +3300,7 @@ def pipeline_toc_metrics(spark, sf_dir):
     from pdf_parser_spark.pipeline import run_pipeline
 
     docs = synthesize_toc_spans(_t(spark, sf_dir, "documents"))
-    return run_pipeline(docs, cache=True).metrics
+    return run_pipeline(docs, _stage_dir()).metrics
 
 
 # ---------------------------------------------------------------------------

@@ -60,7 +60,7 @@ from pyspark.sql.types import (
 
 from pdf_parser_spark.config import HTML_KIND
 from pdf_parser_spark.operators import pages as pages_op
-from pdf_parser_spark.session import cache_stage
+from pdf_parser_spark.sources import tables
 
 BLOCK_TAGS = {
     "p", "div", "section", "article", "aside", "nav", "footer", "header",
@@ -206,7 +206,7 @@ def classify_blocks(scored: DataFrame) -> DataFrame:
 
 
 def normalize_html_flat(
-    flat: DataFrame, cache: list | None = None
+    flat: DataFrame, stage_ref: str | None = None
 ) -> DataFrame:
     """The HTML normalizer, over the exploded span table
     (``pages.explode_spans_raw`` output): every ``kind == HTML_KIND`` row
@@ -219,11 +219,12 @@ def normalize_html_flat(
 
     The added work is proportional to the html rows only: one Arrow
     tokenizer crossing, then the classifier window and the fold over a
-    single (doc_id, seq) exchange — no join.  With a ``cache`` list the
-    (tiny) rewritten-rows table is materialized into it
-    (``session.cache_stage``) so the pipeline's several downstream
-    consumers re-scan ONLY the ``rest`` branch they would scan anyway,
-    never the Python stage.
+    single (doc_id, seq) exchange — no join.  With a ``stage_ref`` the
+    (tiny) rewritten-rows table is written once under it
+    (``sources.tables.write_and_read``) so the pipeline's several
+    downstream consumers re-scan ONLY the ``rest`` branch they would
+    scan anyway, never the Python stage; without one it stays a plan
+    (one consumer, as in ``strip_html_spans``).
 
     The one difference from ingest-time ``strip_html_spans``: a doc
     whose every span strips to boilerplate vanishes from this table
@@ -257,7 +258,11 @@ def normalize_html_flat(
             "offset",
         )
     )
-    return flat.filter(~is_html).unionByName(cache_stage(rewritten, cache))
+    if stage_ref is not None:
+        rewritten = tables.write_and_read(
+            rewritten, tables.sub_ref(stage_ref, "_html_rewrite")
+        )[0]
+    return flat.filter(~is_html).unionByName(rewritten)
 
 
 def strip_html_spans(docs: DataFrame) -> DataFrame:

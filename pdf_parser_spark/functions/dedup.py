@@ -24,52 +24,11 @@ same-bucket pairs.
 
 from __future__ import annotations
 
-from typing import Callable, Optional
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.exprs import let_bound
-
-Materializer = Callable[[DataFrame], DataFrame]
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Default stage-table stand-in: eager ``localCheckpoint``.
-
-    Truncates the lineage so downstream self-joins don't re-run the md5
-    fold per branch (CollapseProject re-inlining), and its blocks are
-    released by the ContextCleaner when the DataFrame is dropped —
-    ``persist()`` here leaked one MEMORY_AND_DISK entry per invocation
-    for the session lifetime (nobody could unpersist it).
-
-    Fault-tolerance trade-off (ADVICE r2): localCheckpoint stores
-    executor-LOCAL blocks, so losing an executor fails the job instead
-    of recomputing.  Fine for interactive/driver-contract runs; a
-    long-lived production job at 10^12 docs should pass its own
-    ``materializer`` — ``stage_table_materializer`` below (write-then-
-    read of the signatures stage table, the Iceberg stage-boundary
-    pattern; resumable via streaming/lineage.run_resumable_dedup) or
-    ``lambda df: df.checkpoint(eager=True)`` with a reliable checkpoint
-    dir — so recovery replays from durable storage."""
-    return df.localCheckpoint(eager=True)
-
-
-def stage_table_materializer(out_dir: str, name: str) -> Materializer:
-    """DURABLE materializer: write the stage to a table (``iceberg:``
-    ref or parquet dir via the sources/tables seam) and hand back the
-    read — the production alternative to the executor-local default
-    (``_materialize``), whose blocks die with an executor.  Recovery
-    replays from storage; combined with the lineage runner
-    (streaming/lineage.run_resumable_dedup) a killed job resumes
-    without recomputing the signatures fold."""
-
-    def mat(df: DataFrame) -> DataFrame:
-        from pdf_parser_spark.sources import tables
-
-        return tables.write_and_read(df, tables.sub_ref(out_dir, name))[0]
-
-    return mat
+from pdf_parser_spark.sources import tables
 
 
 def normalized_text(text: Column) -> Column:
@@ -202,12 +161,12 @@ def lsh_bands(sig: Column, n_bands: int, rows_per_band: int) -> Column:
 
 def lsh_candidate_pairs(
     df: DataFrame,
+    stage_ref: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_hashes: int = 64,
     k: int = 3,
     n_bands: int = 4,
-    materializer: Optional[Materializer] = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) sharing >=1 LSH band.
 
@@ -218,18 +177,16 @@ def lsh_candidate_pairs(
     regime — vs ~44% for the old 2×2 default, which went near-quadratic
     on a real web corpus.
 
-    ``materializer`` controls how the signatures stage is pinned before
-    the self-join fan-out (default: executor-local checkpoint — see
-    ``_materialize`` for the fault-tolerance trade-off and the
-    production alternative).
+    The signatures are written once under ``stage_ref``
+    (``sources.tables.write_and_read``) before banding and self-joining:
+    downstream references would otherwise inline (CollapseProject) and
+    re-run the md5 fold once per band and once per join side.  The
+    table is durable, so a lost executor recomputes from storage.
     """
-    # materialize signatures BEFORE banding and self-joining: downstream
-    # references would otherwise inline (CollapseProject) and re-run the
-    # md5 fold once per band and once per join side — in production this
-    # is the signatures stage table.
-    sigs = (materializer or _materialize)(
-        minhash_df(df, id_col, text_col, n_hashes, k)
-    )
+    sigs = tables.write_and_read(
+        minhash_df(df, id_col, text_col, n_hashes, k),
+        tables.sub_ref(stage_ref, "_signatures"),
+    )[0]
     return lsh_band_pairs(sigs, n_bands, n_hashes // n_bands)
 
 
@@ -413,11 +370,11 @@ def simhash64_block_values(fp: Column, max_hamming: int = 3) -> Column:
 
 def simhash_candidate_pairs(
     df: DataFrame,
+    stage_ref: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 1,
     max_hamming: int = 3,
-    materializer: Optional[Materializer] = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, hamming) within the Hamming
     radius, via the standard bit-block trick — the SimHash analog of
@@ -432,13 +389,16 @@ def simhash_candidate_pairs(
 
     Scale path: fingerprints shuffle once on (block_idx, block_val); the
     exact two-half ``bit_count`` filter after the bucket join is a cheap
-    integer op per candidate.  Never an all-pairs comparison.
-    ``materializer`` as in ``lsh_candidate_pairs``."""
-    fps = df.select(
-        F.col(id_col).alias("id"),
-        simhash64(F.col(text_col), k).alias("fp"),
-    )
-    fps = (materializer or _materialize)(fps)
+    integer op per candidate.  Never an all-pairs comparison.  The
+    fingerprints are written once under ``stage_ref``, as the signatures
+    are in ``lsh_candidate_pairs``."""
+    fps = tables.write_and_read(
+        df.select(
+            F.col(id_col).alias("id"),
+            simhash64(F.col(text_col), k).alias("fp"),
+        ),
+        tables.sub_ref(stage_ref, "_fingerprints"),
+    )[0]
     banded = fps.select(
         "id",
         "fp",

@@ -64,21 +64,21 @@ def explode_spans(
     docs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     normalize_html: bool = False,
-    cache: list | None = None,
+    stage_ref: str | None = None,
 ) -> DataFrame:
     """(doc_id, spans) → flat (doc_id, seq, kind, text, media_ref, offset,
     error_kind).  ``error_kind`` null ⇒ valid span; 'empty_spans' rows mark
     documents whose array is null/empty (posexplode_outer keeps them).
 
     ``normalize_html`` rewrites raw-HTML payload spans to their main
-    content first (boilerplate.normalize_html_flat, which materializes
-    its rewritten rows into ``cache``), so validation runs after the
+    content first (boilerplate.normalize_html_flat, which writes its
+    rewritten rows under ``stage_ref``), so validation runs after the
     rewrite and normalized html never hits unknown_kind."""
     flat = explode_spans_raw(docs)
     if normalize_html:
         from pdf_parser_spark.functions import boilerplate
 
-        flat = boilerplate.normalize_html_flat(flat, cache=cache)
+        flat = boilerplate.normalize_html_flat(flat, stage_ref=stage_ref)
     return flat.withColumn("error_kind", error_kind_expr(cfg))
 
 
@@ -506,27 +506,13 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
                             F.col("text")),
         ).alias("f_table"),
         # images: always summarized
-        F.when(
-            is_image,
-            F.format_string(
-                "Image %d: %s (%s)",
-                F.col("image_id"),
-                F.coalesce(F.col("media_ref"), F.lit("unnamed")),
-                F.coalesce(F.nullif(strip_s(F.col("text")), F.lit("")),
-                           F.lit("0x0")),
-            ),
-        ).alias("f_image"),
+        F.when(is_image, _image_summary()).alias("f_image"),
         # layout: non-blank lines only
         F.when(is_layout & non_blank(txt), F.col("text")).alias("f_layout"),
         # annotations: non-blank contents only
-        F.when(
-            is_annot & non_blank(txt),
-            F.format_string(
-                "Annotation (%s): %s",
-                F.coalesce(F.col("media_ref"), F.lit("unknown")),
-                txt,
-            ),
-        ).alias("f_annot"),
+        F.when(is_annot & non_blank(txt), _annotation_summary()).alias(
+            "f_annot"
+        ),
         is_table.cast("long").alias("w_is_table"),
         is_image.cast("long").alias("w_is_image"),
         is_layout.cast("long").alias("w_is_layout"),

@@ -33,7 +33,7 @@ from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import headings
 from pdf_parser_spark.operators.exprs import non_blank, py_strip
 from pdf_parser_spark.oracle import refsem
-from pdf_parser_spark.session import cache_stage
+from pdf_parser_spark.sources import tables
 
 PAGE_BREAK = "\n\n=== PAGE BREAK ===\n\n"
 
@@ -92,15 +92,15 @@ def sections_df(
     pages: DataFrame,
     toc: DataFrame,
     metadata: DataFrame,
+    stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    cache: list | None = None,
     heading_registry=None,
 ) -> DataFrame:
     """Full section assembly; returns SECTIONS_OUT + ``order`` per doc.
 
-    With a ``cache`` list the page-section pass is materialized into it
-    (``session.cache_stage``): it is consumed twice (the final union and
-    the J5 anti-join); so is the pre-order union, see below.
+    The page-section pass is written once under ``stage_ref``
+    (``sources.tables.write_and_read``): it is consumed twice (the final
+    union and the J5 anti-join); so is the pre-order union, see below.
 
     ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
     confidence builders (default: the reference's three strategies) —
@@ -198,10 +198,10 @@ def sections_df(
         & pages["page"].between(intervals["iv_start"], intervals["iv_end"]),
         "left_anti",
     ).filter(non_blank(F.coalesce("content", F.lit(""))))
-    # full_path is derived AFTER the persist barrier below: referencing
-    # `title` twice in one projection makes CollapseProject inline the
-    # (regex-heavy) detection expression twice — post-cache it is a
-    # cheap concat over the materialized column
+    # full_path is derived AFTER the stage-table barrier below:
+    # referencing `title` twice in one projection makes CollapseProject
+    # inline the (regex-heavy) detection expression twice — read back it
+    # is a cheap concat over the materialized column
     page_sections = (
         uncovered.withColumn(
             "title",
@@ -225,7 +225,9 @@ def sections_df(
         )
     )
 
-    page_sections = cache_stage(page_sections, cache).withColumn(
+    page_sections = tables.write_and_read(
+        page_sections, tables.sub_ref(stage_ref, "_page_sections")
+    )[0].withColumn(
         "full_path",
         F.concat(
             F.lit("Page-"), F.col("page"), F.lit(" "), F.col("title")
@@ -234,7 +236,7 @@ def sections_df(
 
     # ---- J5 + F7/F8: content-based sections on remaining pages ----------
     # toc-section pages == valid TOC entry pages, so read them from the
-    # (cached) toc table instead of recomputing the content-assembly join
+    # (written) toc table instead of recomputing the content-assembly join
     existing = (
         valid_toc.select("doc_id", "page")
         .unionByName(page_sections.select("doc_id", "page"))
@@ -285,16 +287,6 @@ def sections_df(
         "pass_rank",
         "intra_order",
     )
-    if cache is None:
-        # uncached flow: one window over the full rows.  The skinny
-        # split below would evaluate the un-materialized section
-        # lineage twice (the content-split Arrow stage and the TOC
-        # content assembly on BOTH sides of the self-join — measured
-        # far worse than the string sort it saves).
-        return unioned.withColumn(
-            "order", F.row_number().over(w_order)
-        ).drop("pass_rank", "intra_order")
-
     # W5 DRAM fix (scaling): the ordering window needs only the sort
     # key, but windowing over the full rows shuffled AND sorted the
     # assembled `content` strings — the 4→16 core scaling pair was
@@ -305,10 +297,11 @@ def sections_df(
     # unique entry_order, page rows unique page, content rows unique
     # (page, intra_order)); the SHUFFLE_HASH hint keeps the big side a
     # hash probe — a sort-merge join would re-sort the strings and give
-    # the win straight back.  Both join branches read the CACHE, so the
-    # heavy lineage runs once (in production this is the Iceberg
-    # sections stage table).
-    unioned = cache_stage(unioned, cache)
+    # the win straight back.  Both join branches read the written
+    # table, so the heavy lineage runs once.
+    unioned = tables.write_and_read(
+        unioned, tables.sub_ref(stage_ref, "_sections_preorder")
+    )[0]
     key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
     skinny = unioned.select(*key).withColumn(
         "order", F.row_number().over(w_order)

@@ -51,7 +51,7 @@ from pdf_parser_spark.operators.exprs import (
     word_count,
 )
 from pdf_parser_spark.oracle import refsem
-from pdf_parser_spark.session import cache_stage
+from pdf_parser_spark.sources import tables
 
 # 'table of contents'|'contents' word-bounded, case-insensitive
 # (text_utils.py:27-33).  'contents' subsumes the longer term for line
@@ -212,23 +212,24 @@ def _line_features_df(lines: DataFrame) -> DataFrame:
 def toc_entries_df(
     pages: DataFrame,
     metadata: DataFrame,
+    stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    cache: list | None = None,
 ) -> DataFrame:
     """Full three-pass TOC extraction + dedup (toc_parser.py:141-691).
 
     Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
     per doc — consumed by the section stage's lead() boundaries W1).
 
-    With a ``cache`` list the pandas-UDF feature stage and the primary
-    pass are materialized into it (``session.cache_stage``): three
-    accept passes + two anti-joins consume them, and without a cache
-    Catalyst re-executes the Arrow UDF once per consumer (SURVEY.md §4d —
+    The pandas-UDF feature stage and the primary pass are each written
+    once under ``stage_ref`` (``sources.tables.write_and_read``): three
+    accept passes + two anti-joins consume them, and as plans Catalyst
+    would re-execute the Arrow UDF once per consumer (SURVEY.md §4d —
     "keep pandas-UDF stages few and fused").
     """
-    feats = cache_stage(
-        _line_features_df(toc_candidate_lines(pages, cfg)), cache
-    )
+    feats = tables.write_and_read(
+        _line_features_df(toc_candidate_lines(pages, cfg)),
+        tables.sub_ref(stage_ref, "_toc_feats"),
+    )[0]
 
     accepted_primary = (
         F.col("prim_matched")
@@ -251,7 +252,9 @@ def toc_entries_df(
         F.col("stripped").alias("full_path"),
         F.lit(0).alias("pass_rank"),
     )
-    primary = cache_stage(primary, cache)
+    primary = tables.write_and_read(
+        primary, tables.sub_ref(stage_ref, "_toc_primary")
+    )[0]
 
     # ---- enhanced pass (toc_parser.py:381-470) -------------------------
     enh = feats.filter(

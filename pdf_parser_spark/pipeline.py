@@ -10,11 +10,12 @@ orchestrator (main.py:96-116):
 Where the reference re-reads JSONL files between steps
 (main.py:194-202, section_parser.py:94-107 — SURVEY.md §2 S7), this build
 materializes each of pages, metadata, toc and sections once and reuses it
-downstream (SURVEY.md §4 P9).  Given an ``output`` table ref (the CLI's
-``--output``) the materialization IS the output table: each stage is
-written once and read back with its schema pinned, so later stages plan
-from file scans instead of from every upstream cached plan.  Without one,
-the four stages are persisted in memory (``session.cache_stage``).
+downstream (SURVEY.md §4 P9).  Every materialization is the same durable
+boundary, ``sources.tables.write_and_read`` under the run's ``stage_ref``:
+each stage table is written once and read back with its schema pinned, so
+later stages plan from file scans instead of from the upstream lineage.
+The operators' internal materializations land next to them under
+``_``-prefixed names (the CLI's ``--output/_*``).
 
 Scale: the input is read with its on-disk doc_id-range layout
 (fixtures/gen.write_parquet mirrors the production Iceberg bucketing);
@@ -36,7 +37,6 @@ from pdf_parser_spark.operators import pages as pages_op
 from pdf_parser_spark.operators import sections as sections_op
 from pdf_parser_spark.operators import toc as toc_op
 from pdf_parser_spark.schemas import DOCUMENTS_SPANS
-from pdf_parser_spark.session import cache_stage
 from pdf_parser_spark.sources import tables
 
 
@@ -49,16 +49,8 @@ class PipelineResult:
     toc: DataFrame
     sections: DataFrame
     metrics: DataFrame
-    #: every DataFrame the run persisted, in materialization order: the
-    #: operator internals, plus the four stage tables when there is no
-    #: ``output`` ref to write them to
-    cached: tuple = ()
-    #: rows written per output table (empty without an ``output`` ref)
+    #: rows written per stage table
     counts: dict = field(default_factory=dict)
-
-    def unpersist(self) -> None:
-        for df in self.cached:
-            df.unpersist()
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -71,27 +63,21 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
 
 def run_pipeline(
     docs: DataFrame,
+    stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    cache: bool = True,
     normalize_html: bool = False,
-    output: str | None = None,
 ) -> PipelineResult:
-    """With an ``output`` table ref each of the seven result tables is
-    written once under it (``sources.tables.write_and_read``), pages,
-    metadata, toc and sections as soon as they are planned, and the
-    result holds the tables read back; ``counts`` holds the rows
-    written.  Without one, ``cache`` materializes the four stages
-    through ``session.cache_stage``, and without either every table is a
-    lazy plan.  ``cache`` also governs the operators' internal caches;
-    the result's ``unpersist()`` releases all that was persisted."""
-    cached: list | None = [] if cache else None
+    """Pages, metadata, toc and sections are each written once under
+    ``stage_ref`` (``sources.tables.write_and_read``) as soon as they are
+    planned, and the result holds the tables read back; ``counts`` holds
+    the rows written.  spans_out, quarantine and metrics come back as
+    plans over those tables: only a caller that wants one writes it.
+    The stage tables must outlive every read of the result."""
     counts: dict = {}
 
     def stage(name: str, df: DataFrame) -> DataFrame:
-        if output is None:
-            return cache_stage(df, cached)
         df, counts[name] = tables.write_and_read(
-            df, tables.sub_ref(output, name)
+            df, tables.sub_ref(stage_ref, name)
         )
         return df
 
@@ -99,11 +85,11 @@ def run_pipeline(
     # spans are stripped to text spans in place before validation.  Off
     # by default: production runs normalize once at ingest
     # (functions/boilerplate.strip_html_spans); the inline path is for
-    # un-normalized corpora, and its extra work + cache are proportional
-    # to the html rows only — ``docs`` for the doc_id-universe consumers
-    # (metadata/metrics) stays the raw scan.
+    # un-normalized corpora, and its extra work + stage table are
+    # proportional to the html rows only — ``docs`` for the doc_id-universe
+    # consumers (metadata/metrics) stays the raw scan.
     flat = pages_op.explode_spans(
-        docs, cfg, normalize_html=normalize_html, cache=cached
+        docs, cfg, normalize_html=normalize_html, stage_ref=stage_ref
     )
     quarantine = pages_op.quarantine_df(flat)
     valid = pages_op.valid_spans(flat)
@@ -118,17 +104,13 @@ def run_pipeline(
     pages = stage("pages", pages_op.pages_df(valid, cfg))
     metadata = stage("metadata", metadata_op.metadata_df(docs, pages, cfg))
     toc = stage(
-        "toc", toc_op.toc_entries_df(pages, metadata, cfg, cache=cached)
+        "toc", toc_op.toc_entries_df(pages, metadata, stage_ref, cfg)
     )
     sections = stage(
         "sections",
-        sections_op.sections_df(pages, toc, metadata, cfg, cache=cached),
+        sections_op.sections_df(pages, toc, metadata, stage_ref, cfg),
     )
     metrics = metrics_op.metrics_df(docs, pages, toc, sections, metadata)
-    if output is not None:
-        spans_out = stage("spans_out", spans_out)
-        quarantine = stage("quarantine", quarantine)
-        metrics = stage("metrics", metrics)
 
     return PipelineResult(
         quarantine=quarantine,
@@ -138,6 +120,5 @@ def run_pipeline(
         toc=toc,
         sections=sections,
         metrics=metrics,
-        cached=tuple(cached or ()),
         counts=counts,
     )

@@ -14,8 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import SparkSession
 
 
 def get_spark(
@@ -106,24 +105,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def cache_stage(df: DataFrame, cache: list | None) -> DataFrame:
-    """The stage-materialization policy shared by every operator.
-
-    ``cache`` a list: persist ``df`` at MEMORY_AND_DISK, count it
-    eagerly and append it to ``cache`` so the caller can release it.
-    ``cache`` None: return ``df`` unchanged (a lazy plan).
-
-    The count is eager because each stage fans out to several consumers
-    inside single downstream jobs, and a lazy cache would recompute the
-    lineage once per branch before any partition lands in the cache.
-    Given an output table ref, ``pipeline.run_pipeline`` writes its four
-    stage boundaries to their tables instead (the write is the
-    materialization); the operators' internal caches, and runs with
-    nowhere durable to write, come here."""
-    if cache is None:
-        return df
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    cache.append(df)
-    return df

@@ -2,9 +2,9 @@
 otherwise.
 
 The north rule's input is "an Iceberg table of interleaved text + media
-documents"; this sandbox has no Iceberg runtime jars, so every operator
-documents its Iceberg mapping (identity partitioning ≙ ``partitionBy``,
-stage tables ≙ cached boundaries) and runs on parquet.  This module is
+documents"; without the Iceberg runtime jars every operator documents
+its Iceberg mapping (identity partitioning ≙ ``partitionBy``, stage
+tables ≙ ``write_and_read`` boundaries) and runs on parquet.  This module is
 the concrete seam: a table reference of the form ``iceberg:<catalog.db
 .table>`` routes to the Iceberg catalog (``spark.table`` /
 ``DataFrameWriterV2`` — the V2 path Iceberg requires), anything else is
@@ -135,7 +135,7 @@ def write_table(
 
 
 def write_and_read(df: DataFrame, ref: str) -> tuple[DataFrame, int]:
-    """The durable stage boundary: overwrite ``ref`` with ``df`` once and
+    """The one stage boundary: overwrite ``ref`` with ``df`` once and
     return the table read back with ``df``'s schema pinned (no inference
     job) plus the rows written, counted by an ``Observation`` on the
     write itself (no second job).  Downstream plans start from the file

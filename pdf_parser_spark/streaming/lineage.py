@@ -34,6 +34,7 @@ from pdf_parser_spark.sources.tables import (
     read_table,
     sub_ref,
     table_exists,
+    write_and_read,
     write_table,
 )
 
@@ -124,6 +125,8 @@ def run_resumable(
     raises after k completed waves, exactly as a mid-job kill would.
     """
     bucketed = with_bucket(docs, n_buckets)
+    # each wave's stage tables overwrite the previous wave's
+    stage_ref = sub_ref(out_dir, "_stage")
     done = completed_buckets(spark, out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     waves = [
@@ -147,29 +150,22 @@ def run_resumable(
         )
 
         result = run_pipeline(
-            wave_docs.drop("bucket"), cfg, normalize_html=normalize_html
-        )
-        out = result.spans_out.join(
-            bucketed.select("doc_id", "bucket"), "doc_id"
+            wave_docs.drop("bucket"), stage_ref, cfg,
+            normalize_html=normalize_html,
         )
         # 1) idempotent output write (re-running a bucket overwrites only
         # that bucket's partitions: Iceberg overwritePartitions / parquet
-        # dynamic partition overwrite, via the sources/tables seam)
-        write_table(
-            out,
-            sub_ref(out_dir, "spans_out"),
-            mode="overwrite_partitions",
-            partition_by=("bucket",),
-        )
-        write_table(
-            result.sections.join(
-                bucketed.select("doc_id", "bucket"), "doc_id"
-            ),
-            sub_ref(out_dir, "sections"),
-            mode="overwrite_partitions",
-            partition_by=("bucket",),
-        )
-        result.unpersist()
+        # dynamic partition overwrite, via the sources/tables seam).
+        # bucket is a pure function of doc_id, so it is re-derived on
+        # each output row, never joined back from the corpus.
+        for name, df in (("spans_out", result.spans_out),
+                         ("sections", result.sections)):
+            write_table(
+                with_bucket(df, n_buckets),
+                sub_ref(out_dir, name),
+                mode="overwrite_partitions",
+                partition_by=("bucket",),
+            )
 
         # 2) lineage append AFTER the output commit
         got = obs.get
@@ -207,9 +203,9 @@ def run_resumable_dedup(
 ) -> dict:
     """Resumable MinHash-LSH near-dup job: the expensive signatures
     fold and the band-bucket pair join are separate DURABLE stages —
-    each writes its stage table (the ``dedup.stage_table_materializer``
-    seam) and then appends a lineage row (partition_id = stage
-    ordinal), so a job killed between the two resumes WITHOUT
+    each writes its stage table (``sources.tables.write_and_read``) and
+    then appends a lineage row (partition_id = stage ordinal, the rows
+    written), so a job killed between the two resumes WITHOUT
     recomputing the ceil(n_hashes/4)-md5-per-shingle signature pass.
 
     ``fail_after_stages`` injects a crash after k committed stages,
@@ -238,11 +234,11 @@ def run_resumable_dedup(
         if fail_after_stages is not None and fail_after_stages < 1:
             raise RuntimeError("injected failure before stage 0")
         t0 = time.time()
-        sigs = dd.stage_table_materializer(out_dir, "signatures")(
-            dd.minhash_df(docs, id_col, text_col, n_hashes, k)
+        sigs, n_sigs = write_and_read(
+            dd.minhash_df(docs, id_col, text_col, n_hashes, k), sig_ref
         )
         _append_lineage(
-            spark, out_dir, [_stage_row(0, sigs.count(), t0)],
+            spark, out_dir, [_stage_row(0, n_sigs, t0)],
             DEDUP_LINEAGE_SUBDIR,
         )
 
@@ -253,9 +249,10 @@ def run_resumable_dedup(
         if fail_after_stages is not None and fail_after_stages < 2:
             raise RuntimeError("injected failure before stage 1")
         t0 = time.time()
-        pairs = dd.lsh_band_pairs(sigs, n_bands, n_hashes // n_bands)
-        write_table(pairs, sub_ref(out_dir, "pairs"), mode="overwrite")
-        n_pairs = read_table(spark, sub_ref(out_dir, "pairs")).count()
+        _, n_pairs = write_and_read(
+            dd.lsh_band_pairs(sigs, n_bands, n_hashes // n_bands),
+            sub_ref(out_dir, "pairs"),
+        )
         _append_lineage(
             spark, out_dir, [_stage_row(1, n_pairs, t0)],
             DEDUP_LINEAGE_SUBDIR,

@@ -27,3 +27,20 @@ def docs_df(spark, corpus):
 @pytest.fixture(scope="session")
 def oracle_results(corpus):
     return {d["doc_id"]: refsem.run_document(d) for d in corpus}
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long checks, collected only under `-m slow`"
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    """Deselect ``slow`` tests unless the mark expression names them, so
+    the default run's set and runtime do not change."""
+    if "slow" in (config.getoption("markexpr") or ""):
+        return
+    slow = [i for i in items if i.get_closest_marker("slow")]
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        items[:] = [i for i in items if not i.get_closest_marker("slow")]

@@ -169,7 +169,7 @@ def test_strip_html_spans_passthrough_is_identical(spark):
     assert out["d2"] == src["d2"]
 
 
-def test_strip_html_spans_pure_boilerplate_drops_span_not_doc(spark):
+def test_strip_html_spans_pure_boilerplate_drops_span_not_doc(spark, tmp_path):
     """An html span that strips to nothing is dropped like a blank text
     span — but the DOCUMENT survives (empty spans array → the
     empty_spans quarantine records it instead of it silently vanishing),
@@ -196,7 +196,7 @@ def test_strip_html_spans_pure_boilerplate_drops_span_not_doc(spark):
         ("text", LONG, None)
     ]
     assert ("d5", "bad_offset") in kinds
-    inline = run_pipeline(_interleaved(spark), cache=False,
+    inline = run_pipeline(_interleaved(spark), str(tmp_path),
                           normalize_html=True).quarantine
     assert ("d5", "bad_offset") in {
         (r.doc_id, r.error_kind) for r in inline.collect()
@@ -236,7 +236,7 @@ def test_strip_html_spans_matches_page_level_strip(spark):
     assert [(s.kind, s.text) for s in got] == [("text", expected)]
 
 
-def test_run_pipeline_normalize_html_end_to_end(spark):
+def test_run_pipeline_normalize_html_end_to_end(spark, tmp_path):
     """The north-rule composition in ONE call: run_pipeline(
     normalize_html=True) over a corpus with raw-HTML payload spans
     extracts the stripped main content as ordinary text spans — no
@@ -252,7 +252,7 @@ def test_run_pipeline_normalize_html_end_to_end(spark):
     docs = to_spark_df(
         spark, [_doc_to_spans(html_doc(rng, "hdoc-1"), rng)]
     )
-    res = run_pipeline(docs, cache=False, normalize_html=True)
+    res = run_pipeline(docs, str(tmp_path / "a"), normalize_html=True)
     quar = [r.error_kind for r in res.quarantine.collect()]
     assert "unknown_kind" not in quar
     texts = "\n".join(
@@ -261,13 +261,13 @@ def test_run_pipeline_normalize_html_end_to_end(spark):
     assert "Home" not in texts and "/privacy" not in texts
     assert "see also" in texts  # smoothing kept the short middle block
     # without normalization the html span is quarantined instead
-    res2 = run_pipeline(docs, cache=False, normalize_html=False)
+    res2 = run_pipeline(docs, str(tmp_path / "b"), normalize_html=False)
     assert [r.error_kind for r in res2.quarantine.collect()].count(
         "unknown_kind"
     ) == 1
 
 
-def test_inline_normalize_matches_ingest_strip(spark):
+def test_inline_normalize_matches_ingest_strip(spark, tmp_path):
     """run_pipeline(normalize_html=True) over a raw corpus produces the
     same extraction output as strip-at-ingest → run_pipeline: identical
     spans_out on (doc_id, page, kind, text, media_ref, order) — seq is
@@ -309,9 +309,11 @@ def test_inline_normalize_matches_ingest_strip(spark):
         boiler_doc,  # already span-shaped — no _doc_to_spans
     ])
     cols = ["doc_id", "page", "kind", "text", "media_ref", "order"]
-    inline = run_pipeline(docs, cache=False, normalize_html=True)
+    inline = run_pipeline(docs, str(tmp_path / "inline"),
+                          normalize_html=True)
     ingest = run_pipeline(
-        bp.strip_html_spans(docs), cache=False, normalize_html=False
+        bp.strip_html_spans(docs), str(tmp_path / "ingest"),
+        normalize_html=False,
     )
     a = sorted(map(tuple, inline.spans_out.select(*cols).collect()))
     b = sorted(map(tuple, ingest.spans_out.select(*cols).collect()))
@@ -326,46 +328,28 @@ def test_inline_normalize_matches_ingest_strip(spark):
     assert ma == mb
 
 
-def test_normalize_html_flat_plan_shape(spark):
+def test_normalize_html_flat_plan_shape(spark, tmp_path):
     """Inline normalization plan: exactly one Arrow stage, and with
-    a cache list the rewritten-rows leg reads the (tiny) in-memory table
+    a stage_ref the rewritten-rows leg reads the (tiny) written table
     — downstream consumers re-execute only the rest-branch scan."""
     from pdf_parser_spark.operators import pages as P
 
     docs = _interleaved(spark)
-    reg = []
     out = bp.normalize_html_flat(
-        P.explode_spans_raw(docs), cache=reg
+        P.explode_spans_raw(docs), stage_ref=str(tmp_path)
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # prune the InMemoryRelation subtree (the printed build lineage of
-    # the cache, not what this query executes — tools/explain_audit.py)
-    lines, keep, prune_at = plan.splitlines(), [], None
-    for ln in lines:
-        ind = len(ln) - len(ln.lstrip(" :+-*"))
-        if prune_at is not None:
-            if ind > prune_at:
-                continue
-            prune_at = None
-        if "InMemoryRelation" in ln:
-            prune_at = ind
-            continue
-        keep.append(ln)
-    executed = "\n".join(keep)
-    assert executed.count("MapInPandas") == 0  # Python stage ran once
-    assert "InMemoryTableScan" in executed
-    assert "BatchEvalPython" not in executed
-    # release the cache BEFORE the uncached variant, or the cache
-    # manager substitutes its identical subtree into the new plan
-    reg[0].unpersist()
-    uncached = bp.normalize_html_flat(P.explode_spans_raw(docs))
-    uplan = uncached._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 0  # Python stage ran once
+    assert "FileScan parquet" in plan  # the written rewrite
+    assert "BatchEvalPython" not in plan
+    lazy = bp.normalize_html_flat(P.explode_spans_raw(docs))
+    uplan = lazy._jdf.queryExecution().executedPlan().toString()
     assert uplan.count("MapInPandas") == 1
     # the fold's grouping keys carry the span slot: no join back
     assert "Join" not in uplan
 
 
-def test_null_doc_id_html_doc_keeps_its_id(spark):
+def test_null_doc_id_html_doc_keeps_its_id(spark, tmp_path):
     """A NULL doc_id html doc keeps its NULL id and its stripped html
     content on both entry points: strip_html_spans re-collects it into
     ONE NULL doc (no phantom 'None' doc), and the inline pipeline emits
@@ -400,7 +384,7 @@ def test_null_doc_id_html_doc_keeps_its_id(spark):
     assert [(s.kind, s.text, s.offset) for s in null_doc.spans] == [
         ("text", "intro", 0), ("text", LONG, 1)
     ]
-    spans_out = run_pipeline(docs, cache=False,
+    spans_out = run_pipeline(docs, str(tmp_path),
                              normalize_html=True).spans_out
     assert sorted(
         r.text for r in spans_out.collect() if r.doc_id is None

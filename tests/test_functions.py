@@ -88,7 +88,7 @@ def test_wide_minhash_matches_python(texts_df):
     assert got[1][:4] == _py_minhash(text, 4)
 
 
-def test_wide_lsh_candidate_rate(spark):
+def test_wide_lsh_candidate_rate(spark, tmp_path):
     """The 100-TB default banding (64 hashes, 4 bands × 16 rows) must
     keep the false-candidate rate at Jaccard ~0.5 under 1% — the old
     2×2 banding admitted ~44% of such pairs, going near-quadratic on a
@@ -120,7 +120,7 @@ def test_wide_lsh_candidate_rate(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     pairs = {
         (r.id_a, r.id_b)
-        for r in dd.lsh_candidate_pairs(df).collect()
+        for r in dd.lsh_candidate_pairs(df, str(tmp_path)).collect()
     }
     assert ("dupA", "x0") in pairs
     assert ("dupB", "x1") in pairs
@@ -132,11 +132,11 @@ def test_wide_lsh_candidate_rate(spark):
     assert len(half_overlap_hits) <= 2  # <=1.4% of 150 planted pairs
 
 
-def test_lsh_finds_near_dups(texts_df):
+def test_lsh_finds_near_dups(texts_df, tmp_path):
     pairs = {
         (r.id_a, r.id_b)
         for r in dd.lsh_candidate_pairs(
-            texts_df, n_hashes=4, k=3, n_bands=2
+            texts_df, str(tmp_path), n_hashes=4, k=3, n_bands=2
         ).collect()
     }
     assert (1, 4) in pairs        # exact dup always collides
@@ -567,7 +567,7 @@ def _long_text(seed: str, n_words: int = 120) -> str:
     return " ".join(words)
 
 
-def test_simhash_candidate_pairs_planted(spark):
+def test_simhash_candidate_pairs_planted(spark, tmp_path):
     """Pigeonhole completeness + precision on 64-bit fingerprints:
     planted near-dups (one appended word on a long doc) are found
     within Hamming<=3; unrelated docs are not paired."""
@@ -583,7 +583,9 @@ def test_simhash_candidate_pairs_planted(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in dd.simhash_candidate_pairs(df, max_hamming=3).collect()
+        for r in dd.simhash_candidate_pairs(
+            df, str(tmp_path), max_hamming=3
+        ).collect()
     }
     assert ("a1", "a2") in pairs and pairs[("a1", "a2")] <= 3
     assert ("b1", "b2") in pairs and pairs[("b1", "b2")] <= 3

@@ -96,7 +96,7 @@ def test_resumable_dedup_skips_signature_recompute(spark):
         want = {
             (r.id_a, r.id_b)
             for r in dd.lsh_candidate_pairs(
-                docs, n_hashes=8, k=3, n_bands=2
+                docs, f"{out_dir}/unkilled", n_hashes=8, k=3, n_bands=2
             ).select("id_a", "id_b").collect()
         }
         assert got == want and len(want) > 0
@@ -151,3 +151,33 @@ def test_dedup_lineage_namespaced_from_pipeline_lineage(spark, docs_df):
         assert L.completed_buckets(spark, out_dir) == {0, 1, 2, 3}
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_resume_rows_equal_pipeline_rows_with_duplicate_doc_id(
+    spark, tmp_path
+):
+    """bucket is re-derived from each output row's doc_id, never joined
+    back from the corpus: a doc_id that appears twice must not multiply
+    its rows, so the resumable run writes exactly the spans_out and
+    sections rows ``run_pipeline`` returns for the same corpus."""
+    from pyspark.sql import Row
+
+    from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
+    from pdf_parser_spark.pipeline import run_pipeline
+
+    corpus = fixture_corpus(4)
+    docs = to_spark_df(spark, corpus + [corpus[0]])
+    want = run_pipeline(docs, str(tmp_path / "want"))
+    out_dir = str(tmp_path / "out")
+    L.run_resumable(spark, docs, out_dir, n_buckets=4, wave_size=4)
+
+    def rows(df):
+        def freeze(v):
+            return tuple(map(freeze, v)) if isinstance(v, (Row, list)) else v
+
+        return sorted((freeze(r) for r in df.collect()), key=repr)
+
+    for name in ("spans_out", "sections"):
+        exp = getattr(want, name)
+        got = spark.read.parquet(f"{out_dir}/{name}").select(*exp.columns)
+        assert rows(got) == rows(exp), name

@@ -28,11 +28,12 @@ def _rows(df):
 
 
 def test_main_pipeline_mode_writes_all_outputs(spark):
-    """The CLI writes each of the seven tables once, and what it wrote
-    equals the in-memory ``run_pipeline`` result row for row — with and
-    without --normalize-html, over malformed (NULL-text), whitespace-only,
-    span-less and raw-html docs: the parquet round trip keeps empty
-    arrays apart from NULLs."""
+    """The CLI writes each of the seven tables once, with the operators'
+    internal stage tables beside them under ``_`` names, and what it
+    wrote equals a ``run_pipeline`` result staged elsewhere row for row
+    — with and without --normalize-html, over malformed (NULL-text),
+    whitespace-only, span-less and raw-html docs: the parquet round trip
+    keeps empty arrays apart from NULLs."""
     rng = random.Random(5)
     docs = fixture_corpus(n_docs=8) + [
         _doc_to_spans(html_doc(rng, f"html-{i}"), rng) for i in range(2)
@@ -52,20 +53,22 @@ def test_main_pipeline_mode_writes_all_outputs(spark):
             )
             assert set(counts) == set(TABLES)
             assert counts["spans_out"] > 0 and counts["metrics"] > 0
+            assert {p.name for p in Path(out).iterdir()} == set(TABLES) | {
+                "_toc_feats", "_toc_primary", "_page_sections",
+                "_sections_preorder",
+            } | ({"_html_rewrite"} if normalize_html else set())
             want = run_pipeline(read_documents(spark, f"{tmp}/in"),
-                                cache=True, normalize_html=normalize_html)
-            try:
-                for name in TABLES:
-                    got = spark.read.parquet(f"{out}/{name}")
-                    exp = getattr(want, name)
-                    assert got.columns == exp.columns, name
-                    rows = _rows(got)
-                    assert len(rows) == counts[name], name
-                    assert rows == _rows(exp), name
-                tags = [r.tags for r in want.sections.collect()]
-                assert [] in tags and None not in tags
-            finally:
-                want.unpersist()
+                                f"{tmp}/want_{normalize_html}",
+                                normalize_html=normalize_html)
+            for name in TABLES:
+                got = spark.read.parquet(f"{out}/{name}")
+                exp = getattr(want, name)
+                assert got.columns == exp.columns, name
+                rows = _rows(got)
+                assert len(rows) == counts[name], name
+                assert rows == _rows(exp), name
+            tags = [r.tags for r in want.sections.collect()]
+            assert [] in tags and None not in tags
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

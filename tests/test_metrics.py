@@ -33,8 +33,8 @@ FIELDS = [
 ]
 
 
-def test_metrics_parity(docs_df, oracle_results):
-    result = run_pipeline(docs_df)
+def test_metrics_parity(docs_df, oracle_results, tmp_path):
+    result = run_pipeline(docs_df, str(tmp_path))
     rows = {r.doc_id: r for r in result.metrics.collect()}
     assert set(rows) == set(oracle_results)
     mismatches = []
@@ -50,4 +50,3 @@ def test_metrics_parity(docs_df, oracle_results):
             if not ok:
                 mismatches.append((doc_id, f, g, w))
     assert not mismatches, mismatches[:15]
-    result.unpersist()

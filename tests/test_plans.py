@@ -97,7 +97,7 @@ def test_span_sequence_single_exchange_no_python(spark, docs_df):
     assert ", broadcast" not in optimized
 
 
-def test_w5_ordering_window_is_content_free(spark, docs_df):
+def test_w5_ordering_window_is_content_free(spark, docs_df, tmp_path):
     """The final sections ordering (W5) must window over a SKINNY
     projection — the assembled `content` strings stay out of the
     row_number exchange/sort (they made the core-scaling pair DRAM-
@@ -113,11 +113,8 @@ def test_w5_ordering_window_is_content_free(spark, docs_df):
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid, cfg)
     metadata = MD.metadata_df(docs_df, pages, cfg)
-    toc = T.toc_entries_df(pages, metadata, cfg)
-    # a cache list: the skinny W5 split applies only to the cached flow
-    # (the uncached flow keeps the single window — the split would
-    # double-evaluate the un-materialized lineage)
-    out = S.sections_df(pages, toc, metadata, cfg, cache=[])
+    toc = T.toc_entries_df(pages, metadata, str(tmp_path), cfg)
+    out = S.sections_df(pages, toc, metadata, str(tmp_path), cfg)
     plan = _plan(out)
     # the re-attach join (keyed by the 5-col section identity — only it
     # references intra_order) must be a hash join, never sort-merge

@@ -9,6 +9,8 @@ never flakes on a fresh random seed; deadlines are off because each
 example runs a small Spark job.
 """
 
+import tempfile
+
 import pandas as pd
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -112,10 +114,13 @@ def test_simhash_pairs_complete_within_radius(spark, docs):
     df = spark.createDataFrame(
         [(f"d{i}", t) for i, t in enumerate(docs)], "doc_id STRING, text STRING"
     )
-    got = {
-        (r.id_a, r.id_b)
-        for r in D.simhash_candidate_pairs(df, max_hamming=3).collect()
-    }
+    with tempfile.TemporaryDirectory() as stage_ref:
+        got = {
+            (r.id_a, r.id_b)
+            for r in D.simhash_candidate_pairs(
+                df, stage_ref, max_hamming=3
+            ).collect()
+        }
     fps = {
         r.doc_id: (r.fp.hi, r.fp.lo)
         for r in df.select(

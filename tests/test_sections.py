@@ -1,10 +1,6 @@
 """Spark ↔ oracle parity for full section assembly (J2/J3/J5, W1/W5,
 F7/F8, X21-X25) — the end-to-end tail of the pipeline."""
 
-import shutil
-import tempfile
-from pathlib import Path
-
 import pytest
 
 from pdf_parser_spark.operators import metadata as M
@@ -13,16 +9,13 @@ from pdf_parser_spark.operators import sections as S
 from pdf_parser_spark.operators import toc as T
 
 
-def test_sections_parity(docs_df, oracle_results):
+def test_sections_parity(docs_df, oracle_results, tmp_path):
     flat = P.explode_spans(docs_df)
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid)
     meta = M.metadata_df(docs_df, pages)
-    cached = []
-    toc = T.toc_entries_df(pages, meta, cache=cached)
-    rows = S.sections_df(pages, toc, meta, cache=cached).collect()
-    for df in cached:
-        df.unpersist()
+    toc = T.toc_entries_df(pages, meta, str(tmp_path))
+    rows = S.sections_df(pages, toc, meta, str(tmp_path)).collect()
 
     got = {}
     for r in rows:
@@ -70,47 +63,59 @@ def test_sections_parity(docs_df, oracle_results):
 
 
 @pytest.mark.parametrize(
-    "normalize_html,to_tables",
+    "normalize_html,to_output",
     [(False, False), (True, False), (False, True), (True, True)],
     ids=["False", "True", "False-output", "True-output"],
 )
 def test_pipeline_unpersist_releases_all_internal_caches(
-    spark, docs_df, normalize_html, to_tables
+    spark, docs_df, normalize_html, to_output, tmp_path
 ):
-    """Every persist() taken inside run_pipeline — the stage tables and
-    the operators' internal caches (html rewrite, toc feats/primary,
-    page_sections, the W5 pre-order union) — must be registered in
-    PipelineResult.cached so unpersist() returns the executor storage
-    to its prior state — a long-lived cluster job running many pipeline
-    slices must not accumulate stage caches (MEMORY_AND_DISK evicts
-    from memory but pins disk until unpersist).
+    """run_pipeline has one stage boundary, the durable write-then-read
+    (sources.tables.write_and_read): it persists nothing, so a
+    long-lived job running many pipeline slices has no executor storage
+    to release, and none of its seven tables plans from an in-memory
+    relation.  The stage tables and the operators' internal ones (toc
+    feats/primary, page_sections, the W5 pre-order union, plus the html
+    rewrite) are the only things it leaves, all under ``stage_ref``.
 
-    With an output ref the four stage tables are written and read back
-    instead: only the operator internals are persisted, and the frames
-    metrics is built from plan as file scans, not cached relations."""
-    from pdf_parser_spark.pipeline import run_pipeline
+    The ``-output`` cases drive the CLI's ``--output`` path instead, which
+    passes its output as the ``stage_ref`` and writes spans_out,
+    quarantine and metrics beside the stage tables."""
+    from pdf_parser_spark.__main__ import main
+    from pdf_parser_spark.pipeline import read_documents, run_pipeline
 
-    tmp = tempfile.mkdtemp(prefix="main_",
-                           dir=Path(__file__).resolve().parents[1])
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        before = {int(k) for k in jmap.keySet().toArray()}
-        res = run_pipeline(docs_df, cache=True, normalize_html=normalize_html,
-                           output=f"{tmp}/out" if to_tables else None)
-        res.sections.count()  # drive the W5 cached flow
-        # feats, primary, page_sections, union (+ the html rewrite), and
-        # without an output ref pages, metadata, toc, sections
-        assert len(res.cached) == 4 + normalize_html + 4 * (not to_tables)
-        for df in (res.pages, res.metadata, res.toc, res.sections):
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            assert ("InMemoryRelation" in plan) != to_tables, plan[:500]
-        res.unpersist()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        after = {int(k) for k in jmap.keySet().toArray()}
-        # subset, not equality: the JVM ContextCleaner may asynchronously
-        # drop GC'd caches from EARLIER tests between the two snapshots —
-        # the property under test is only that nothing run_pipeline
-        # created survives its unpersist()
-        assert after <= before, f"leaked cache ids: {sorted(after - before)}"
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # an uncached scan of the corpus: the session fixture is cached
+    docs_df.write.parquet(str(tmp_path / "in"))
+    stage_ref = tmp_path / "stage"
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    before = {int(k) for k in jmap.keySet().toArray()}
+    tables = ("spans_out", "quarantine", "pages", "metadata", "toc",
+              "sections", "metrics")
+    if to_output:
+        counts = main(
+            ["--mode", "pipeline", "--input", str(tmp_path / "in"),
+             "--output", str(stage_ref)]
+            + (["--normalize-html"] if normalize_html else []),
+            spark=spark,
+        )
+        assert set(counts) == set(tables)
+        frames = {n: spark.read.parquet(str(stage_ref / n)) for n in tables}
+    else:
+        res = run_pipeline(read_documents(spark, str(tmp_path / "in")),
+                           str(stage_ref), normalize_html=normalize_html)
+        res.metrics.count()
+        frames = {n: getattr(res, n) for n in tables}
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    after = {int(k) for k in jmap.keySet().toArray()}
+    # subset, not equality: the JVM ContextCleaner may asynchronously
+    # drop GC'd caches from EARLIER tests between the two snapshots
+    assert after <= before, f"persisted: {sorted(after - before)}"
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert "InMemoryRelation" not in plan.toString(), name
+    assert {p.name for p in stage_ref.iterdir()} == {
+        "pages", "metadata", "toc", "sections", "_toc_feats",
+        "_toc_primary", "_page_sections", "_sections_preorder",
+    } | ({"_html_rewrite"} if normalize_html else set()) | (
+        {"spans_out", "quarantine", "metrics"} if to_output else set()
+    )

@@ -24,15 +24,12 @@ def test_metadata_parity(docs_df, oracle_results):
     assert not mismatches, mismatches[:10]
 
 
-def test_toc_parity(docs_df, oracle_results):
+def test_toc_parity(docs_df, oracle_results, tmp_path):
     pages = _pages(docs_df)
     meta = M.metadata_df(docs_df, pages)
     got = {}
-    cached = []
-    for r in T.toc_entries_df(pages, meta, cache=cached).collect():
+    for r in T.toc_entries_df(pages, meta, str(tmp_path)).collect():
         got.setdefault(r.doc_id, []).append(r)
-    for df in cached:
-        df.unpersist()
 
     n_entries = 0
     for doc_id, res in oracle_results.items():

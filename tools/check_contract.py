@@ -56,6 +56,46 @@ def rows_md5(rows) -> str:
     return hashlib.md5(repr(rows).encode("utf-8")).hexdigest()
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per testdata table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def check_key(spark, con, sf_dir: str, name: str) -> tuple[bool, str, str]:
+    """Run registry key ``name`` on Spark and, when it has one, its
+    DuckDB oracle.  Returns (ok, md5 of the normalized Spark rows, one
+    line of detail)."""
+    from pdf_parser_spark import driver_queries as dq
+
+    fn, sql = dq.QUERIES[name]
+    sdf = fn(spark, sf_dir)
+    s_cols = [c.lower() for c in sdf.columns]
+    s_rows = [tuple(r) for r in sdf.collect()]
+    ns = normalize(s_rows, s_cols)
+    digest = rows_md5(ns)
+    if sql is None:
+        return True, digest, f"rows-only ({len(s_rows)} rows) OK"
+    res = con.execute(sql)
+    d_cols = [c[0].lower() for c in res.description]
+    d_rows = res.fetchall()
+    if sorted(s_cols) != sorted(d_cols):
+        return False, digest, f"cols spark={s_cols} duck={d_cols}"
+    if len(s_rows) != len(d_rows):
+        return False, digest, (
+            f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
+        )
+    nd = normalize(d_rows, d_cols)
+    if ns != nd:
+        diffs = [(a, b) for a, b in zip(ns, nd) if a != b][:3]
+        return False, digest, f"value mismatch, e.g. {diffs}"
+    return True, digest, f"OK ({len(s_rows)} rows)"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     if not os.path.isdir(sf_dir):
@@ -71,55 +111,25 @@ def main():
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(sf_dir)
 
     n_pass = n_fail = 0
-    for name, (fn, sql) in dq.QUERIES.items():
+    for name in dq.QUERIES:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = [c.lower() for c in sdf.columns]
-            s_rows = [tuple(r) for r in sdf.collect()]
-            ns = normalize(s_rows, s_cols)
-            print(f"md5 {name} {rows_md5(ns)}")
-            if sql is None:
-                print(f"  {name}: rows-only ({len(s_rows)} rows) OK")
-                n_pass += 1
-                continue
-            res = con.execute(sql)
-            d_cols = [c[0].lower() for c in res.description]
-            d_rows = res.fetchall()
-            ok = True
-            if sorted(s_cols) != sorted(d_cols):
-                print(f"FAIL {name}: cols spark={s_cols} duck={d_cols}")
-                ok = False
-            elif len(s_rows) != len(d_rows):
-                print(
-                    f"FAIL {name}: rowcount spark={len(s_rows)} "
-                    f"duck={len(d_rows)}"
-                )
-                ok = False
-            else:
-                nd = normalize(d_rows, d_cols)
-                if ns != nd:
-                    diffs = [
-                        (a, b) for a, b in zip(ns, nd) if a != b
-                    ][:3]
-                    print(f"FAIL {name}: value mismatch, e.g. {diffs}")
-                    ok = False
-            if ok:
-                print(f"  {name}: OK ({len(s_rows)} rows)")
-                n_pass += 1
-            else:
-                n_fail += 1
+            ok, digest, detail = check_key(spark, con, sf_dir, name)
         except Exception as e:
             print(f"ERROR {name}: {e}")
             traceback.print_exc(limit=3)
+            n_fail += 1
+            continue
+        print(f"md5 {name} {digest}")
+        if ok:
+            print(f"  {name}: {detail}")
+            n_pass += 1
+        else:
+            print(f"FAIL {name}: {detail}")
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)

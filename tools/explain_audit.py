@@ -13,43 +13,23 @@ from __future__ import annotations
 
 import re
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 from pdf_parser_spark import driver_queries as dq  # noqa: E402
-from pdf_parser_spark.session import cache_stage, get_spark  # noqa: E402
-
-
-def _executed_tree(plan: str) -> str:
-    """The physical-plan tree with cached-relation subtrees pruned:
-    everything nested under an ``InMemoryRelation`` is the plan that
-    built the cache, not what this query executes — counting it inflates
-    shuffle/py-stage numbers by one full copy per cache reference."""
-    out = []
-    prune_indent = None
-    for line in plan.splitlines():
-        stripped = line.lstrip(" :+-*")
-        indent = len(line) - len(stripped)
-        if prune_indent is not None:
-            if indent > prune_indent:
-                continue
-            prune_indent = None
-        if "InMemoryRelation" in line:
-            prune_indent = indent
-            continue
-        out.append(line)
-    return "\n".join(out)
+from pdf_parser_spark.session import get_spark  # noqa: E402
+from pdf_parser_spark.sources import tables  # noqa: E402
 
 
 def summarize(name: str, df) -> None:
-    raw = df._jdf.queryExecution().explainString(
+    plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
-    plan = _executed_tree(raw)
 
     # formatted mode prints every node twice — once in the tree
     # ("+- * BroadcastHashJoin Inner BuildRight (4)") and once as a
@@ -79,7 +59,7 @@ def summarize(name: str, df) -> None:
         f"pushed={'Y' if pushed else '-'}"
     )
     if "-v" in sys.argv:
-        print(raw)
+        print(plan)
 
 
 def main() -> None:
@@ -122,35 +102,24 @@ def main() -> None:
     summarize("stage:span_sequence", P.span_sequence_df(valid))
     summarize("stage:pages", pages)
     summarize("stage:metadata", meta)
-    # audit the stages the way the pipeline actually runs them: each
-    # stage boundary materialized (session.cache_stage ≙ the production
-    # Iceberg stage table), so downstream plans read InMemoryTableScan
-    # instead of re-inlining the upstream lineage — the un-persisted
-    # plan string duplicates every consumer branch and inflates
-    # exchange/py counts ~30x beyond anything that executes
-    cached: list = []
-    pages = cache_stage(pages, cached)
-    meta = cache_stage(meta, cached)
-    toc = cache_stage(T.toc_entries_df(pages, meta, cache=cached), cached)
-    # with toc itself cached this row reads ~all-zeros (a bare cache
-    # scan) — the authoritative per-stage plan assertions live in
-    # tests/test_plans.py (single Arrow stage, single exchange, etc.);
-    # the un-persisted printout here duplicates shared lazy subtrees
-    # hundreds of times and measures the PRINTER, not the job
-    summarize("stage:toc(cached-in)", toc)
-    sec = S.sections_df(pages, toc, meta, cache=cached)
-    summarize("stage:sections(cached-in)", sec)
-    print(
-        "note: stage counts are PLAN-STRING occurrences.  The sections "
-        "plan references its cached inputs ~hundreds of times because "
-        "the union/anti-join branches repeat shared lazy subtrees in "
-        "the printout; at runtime each reference is one cache read and "
-        "ReuseExchange/AQE dedupe the rest — the executed job runs "
-        "~15 shuffle stages (see the Spark UI / bench stage counts), "
-        "not the printed number."
-    )
-    for df in cached:
-        df.unpersist()
+    # audit the stages the way the pipeline runs them: each stage
+    # boundary written and read back (sources.tables.write_and_read, as
+    # in run_pipeline), so downstream plans start from file scans instead
+    # of re-inlining the upstream lineage; the authoritative per-stage
+    # plan assertions live in tests/test_plans.py
+    with tempfile.TemporaryDirectory(prefix="explain_audit_") as stage_ref:
+        def staged(name, df):
+            return tables.write_and_read(
+                df, tables.sub_ref(stage_ref, name)
+            )[0]
+
+        pages = staged("pages", pages)
+        meta = staged("metadata", meta)
+        toc = T.toc_entries_df(pages, meta, stage_ref)
+        summarize("stage:toc", toc)
+        sec = S.sections_df(pages, staged("toc", toc), meta, stage_ref)
+        summarize("stage:sections", sec)
+
 
 if __name__ == "__main__":
     main()
