@@ -17,12 +17,12 @@ executors (the scaling criterion's two cluster sizes).
 Modes:
 - ``pipeline``  one-shot batch: full 5-stage extraction, parquet outputs
   (spans_out, quarantine, pages, metadata, toc, sections, metrics); the
-  summary is the rows written per table.  Each table lands under
-  --output as its stage completes (pages, metadata, toc and sections are
-  then read back for the later stages), and the operators' internal
-  stage tables land next to them under ``--output/_*``; a run that
-  fails part-way leaves the earlier stages' tables there, and a re-run
-  overwrites them.
+  summary is the rows written per table.  All seven are stages of one
+  graph (pipeline.stage_graph): each table lands under --output as soon
+  as the stages it reads are written, independent stages run at once,
+  and the operators' internal stage tables land under
+  ``--output/_internal``; a run that fails part-way leaves the tables of
+  the stages that completed there, and a re-run overwrites them.
 - ``resume``    lineage-bucketed batch: per-partition progress recorded
   in a lineage table; re-invoking after a kill processes ONLY pending
   buckets (streaming/lineage.py).
@@ -41,6 +41,7 @@ Modes:
 from __future__ import annotations
 
 import argparse
+from functools import partial
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -89,15 +90,16 @@ def main(argv=None, spark=None) -> dict:
         from pdf_parser_spark import pipeline as P
         from pdf_parser_spark.sources import tables as T
 
-        res = P.run_pipeline(
+        return P.run_pipeline(
             P.read_documents(spark, args.input), args.output,
             normalize_html=args.normalize_html,
-        )
-        for name in ("spans_out", "quarantine", "metrics"):
-            res.counts[name] = T.write_and_read(
-                getattr(res, name), T.sub_ref(args.output, name)
-            )[1]
-        return res.counts
+            sinks={
+                name: partial(
+                    T.write_and_read, ref=T.sub_ref(args.output, name)
+                )
+                for name in ("spans_out", "quarantine", "metrics")
+            },
+        ).counts
 
     if args.mode == "bucketize":
         from pdf_parser_spark import pipeline as P

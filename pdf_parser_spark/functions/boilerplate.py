@@ -60,7 +60,6 @@ from pyspark.sql.types import (
 
 from pdf_parser_spark.config import HTML_KIND
 from pdf_parser_spark.operators import pages as pages_op
-from pdf_parser_spark.sources import tables
 
 BLOCK_TAGS = {
     "p", "div", "section", "article", "aside", "nav", "footer", "header",
@@ -205,37 +204,25 @@ def classify_blocks(scored: DataFrame) -> DataFrame:
     )
 
 
-def normalize_html_flat(
-    flat: DataFrame, stage_ref: str | None = None
-) -> DataFrame:
-    """The HTML normalizer, over the exploded span table
-    (``pages.explode_spans_raw`` output): every ``kind == HTML_KIND`` row
-    is rewritten in place — same (doc_id, seq, media_ref, offset) — to a
-    ``kind='text'`` row holding its DOM-density main content; an html
-    row that strips to pure boilerplate (or holds no markup at all) is
-    dropped, the same way the span-sequence stage drops blank text
-    spans.  Every other row passes through the untouched ``rest``
-    branch.
+def _is_html() -> F.Column:
+    return F.col("kind").eqNullSafe(F.lit(HTML_KIND))
 
-    The added work is proportional to the html rows only: one Arrow
-    tokenizer crossing, then the classifier window and the fold over a
-    single (doc_id, seq) exchange — no join.  With a ``stage_ref`` the
-    (tiny) rewritten-rows table is written once under it
-    (``sources.tables.write_and_read``) so the pipeline's several
-    downstream consumers re-scan ONLY the ``rest`` branch they would
-    scan anyway, never the Python stage; without one it stays a plan
-    (one consumer, as in ``strip_html_spans``).
 
-    The one difference from ingest-time ``strip_html_spans``: a doc
-    whose every span strips to boilerplate vanishes from this table
-    instead of keeping an empty span array (and so an ``empty_spans``
-    quarantine row).
-    """
-    is_html = F.col("kind").eqNullSafe(F.lit(HTML_KIND))
+def html_rewrite_df(flat: DataFrame) -> DataFrame:
+    """The rewritten rows of the html spans in ``flat``
+    (``pages.explode_spans_raw`` output): every ``kind == HTML_KIND``
+    row becomes a ``kind='text'`` row at the same (doc_id, seq,
+    media_ref, offset) holding its DOM-density main content; an html row
+    that strips to pure boilerplate (or holds no markup at all) yields no
+    row, the same way the span-sequence stage drops blank text spans.
+
+    The work is proportional to the html rows only: one Arrow tokenizer
+    crossing, then the classifier window and the fold over a single
+    (doc_id, seq) exchange — no join."""
     blocks = classify_blocks(
-        score_blocks(parse_span_blocks(flat.filter(is_html)))
+        score_blocks(parse_span_blocks(flat.filter(_is_html())))
     )
-    rewritten = (
+    return (
         blocks.filter(F.col("is_content"))
         .groupBy(*SLOT_COLS)
         .agg(
@@ -258,11 +245,30 @@ def normalize_html_flat(
             "offset",
         )
     )
-    if stage_ref is not None:
-        rewritten = tables.write_and_read(
-            rewritten, tables.sub_ref(stage_ref, "_html_rewrite")
-        )[0]
-    return flat.filter(~is_html).unionByName(rewritten)
+
+
+def normalize_html_flat(
+    flat: DataFrame, rewritten: DataFrame | None = None
+) -> DataFrame:
+    """The HTML normalizer, over the exploded span table: ``flat`` with
+    its html rows replaced in place by ``rewritten`` (default:
+    ``html_rewrite_df(flat)``); every other row passes through the
+    untouched ``rest`` branch.
+
+    ``run_pipeline`` writes the (tiny) rewritten rows once as its
+    ``html_rewrite`` stage and passes the table in, so its several
+    downstream consumers re-scan ONLY the ``rest`` branch they would
+    scan anyway, never the Python stage; without one it stays a plan
+    (one consumer, as in ``strip_html_spans``).
+
+    The one difference from ingest-time ``strip_html_spans``: a doc
+    whose every span strips to boilerplate vanishes from this table
+    instead of keeping an empty span array (and so an ``empty_spans``
+    quarantine row).
+    """
+    if rewritten is None:
+        rewritten = html_rewrite_df(flat)
+    return flat.filter(~_is_html()).unionByName(rewritten)
 
 
 def strip_html_spans(docs: DataFrame) -> DataFrame:

@@ -185,7 +185,7 @@ def lsh_candidate_pairs(
     """
     sigs = tables.write_and_read(
         minhash_df(df, id_col, text_col, n_hashes, k),
-        tables.sub_ref(stage_ref, "_signatures"),
+        tables.internal_ref(stage_ref, "signatures"),
     )[0]
     return lsh_band_pairs(sigs, n_bands, n_hashes // n_bands)
 
@@ -397,7 +397,7 @@ def simhash_candidate_pairs(
             F.col(id_col).alias("id"),
             simhash64(F.col(text_col), k).alias("fp"),
         ),
-        tables.sub_ref(stage_ref, "_fingerprints"),
+        tables.internal_ref(stage_ref, "fingerprints"),
     )[0]
     banded = fps.select(
         "id",

@@ -64,21 +64,21 @@ def explode_spans(
     docs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     normalize_html: bool = False,
-    stage_ref: str | None = None,
+    rewritten: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, spans) → flat (doc_id, seq, kind, text, media_ref, offset,
     error_kind).  ``error_kind`` null ⇒ valid span; 'empty_spans' rows mark
     documents whose array is null/empty (posexplode_outer keeps them).
 
     ``normalize_html`` rewrites raw-HTML payload spans to their main
-    content first (boilerplate.normalize_html_flat, which writes its
-    rewritten rows under ``stage_ref``), so validation runs after the
-    rewrite and normalized html never hits unknown_kind."""
+    content first (boilerplate.normalize_html_flat, with ``rewritten``
+    as the already-written rewrite when given), so validation runs after
+    the rewrite and normalized html never hits unknown_kind."""
     flat = explode_spans_raw(docs)
     if normalize_html:
         from pdf_parser_spark.functions import boilerplate
 
-        flat = boilerplate.normalize_html_flat(flat, stage_ref=stage_ref)
+        flat = boilerplate.normalize_html_flat(flat, rewritten)
     return flat.withColumn("error_kind", error_kind_expr(cfg))
 
 

@@ -14,6 +14,10 @@ Dataflow (all shuffles keyed on ``doc_id``):
    state machine as a pandas UDF returning (title, content) pairs).
 5. W5: per-doc final ordering by (page, section_id, pass, intra) —
    ``row_number`` per doc, never a global sort.
+
+Steps 1-4 are ``sections_preorder_df`` and step 5 is ``sections_df``:
+two stages of the pipeline's graph (``sections_preorder`` →
+``sections``), with the pre-order union written in between.
 """
 
 from __future__ import annotations
@@ -33,7 +37,6 @@ from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import headings
 from pdf_parser_spark.operators.exprs import non_blank, py_strip
 from pdf_parser_spark.oracle import refsem
-from pdf_parser_spark.sources import tables
 
 PAGE_BREAK = "\n\n=== PAGE BREAK ===\n\n"
 
@@ -88,19 +91,18 @@ def _toc_ranges(toc: DataFrame) -> DataFrame:
     )
 
 
-def sections_df(
+def sections_preorder_df(
     pages: DataFrame,
     toc: DataFrame,
     metadata: DataFrame,
-    stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     heading_registry=None,
 ) -> DataFrame:
-    """Full section assembly; returns SECTIONS_OUT + ``order`` per doc.
-
-    The page-section pass is written once under ``stage_ref``
-    (``sources.tables.write_and_read``): it is consumed twice (the final
-    union and the J5 anti-join); so is the pre-order union, see below.
+    """Section assembly before the W5 ordering: the union of the TOC,
+    page and content sections (SECTIONS_OUT columns without ``order``,
+    plus ``pass_rank`` and ``intra_order``; the page sections' ``full_path``
+    is NULL until ``sections_df`` derives it).  ``run_pipeline`` writes it
+    as its ``sections_preorder`` stage, which ``sections_df`` orders.
 
     ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
     confidence builders (default: the reference's three strategies) —
@@ -198,10 +200,10 @@ def sections_df(
         & pages["page"].between(intervals["iv_start"], intervals["iv_end"]),
         "left_anti",
     ).filter(non_blank(F.coalesce("content", F.lit(""))))
-    # full_path is derived AFTER the stage-table barrier below:
-    # referencing `title` twice in one projection makes CollapseProject
-    # inline the (regex-heavy) detection expression twice — read back it
-    # is a cheap concat over the materialized column
+    # full_path is derived by sections_df, after the pre-order table's
+    # read-back: referencing `title` twice in one projection makes
+    # CollapseProject inline the (regex-heavy) detection expression
+    # twice — read back it is a cheap concat over the materialized column
     page_sections = (
         uncovered.withColumn(
             "title",
@@ -215,6 +217,7 @@ def sections_df(
             "doc_title",
             F.concat(F.lit("Page-"), F.col("page")).alias("section_id"),
             "title",
+            F.lit(None).cast("string").alias("full_path"),
             "page",
             F.lit(1).alias("level"),
             F.lit(None).cast("string").alias("parent_id"),
@@ -225,21 +228,14 @@ def sections_df(
         )
     )
 
-    page_sections = tables.write_and_read(
-        page_sections, tables.sub_ref(stage_ref, "_page_sections")
-    )[0].withColumn(
-        "full_path",
-        F.concat(
-            F.lit("Page-"), F.col("page"), F.lit(" "), F.col("title")
-        ),
-    )
-
     # ---- J5 + F7/F8: content-based sections on remaining pages ----------
     # toc-section pages == valid TOC entry pages, so read them from the
-    # (written) toc table instead of recomputing the content-assembly join
+    # (written) toc table instead of recomputing the content-assembly
+    # join; page-section pages == the uncovered pages' keys, with no
+    # heading detection
     existing = (
         valid_toc.select("doc_id", "page")
-        .unionByName(page_sections.select("doc_id", "page"))
+        .unionByName(uncovered.select("doc_id", "page"))
         .distinct()
     )
     remaining = pages.join(existing, ["doc_id", "page"], "left_anti").filter(
@@ -277,36 +273,47 @@ def sections_df(
         )
     )
 
-    # ---- U1 + W5: union & per-doc ordering -------------------------------
-    unioned = toc_sections.unionByName(page_sections).unionByName(
+    # ---- U1: union --------------------------------------------------------
+    return toc_sections.unionByName(page_sections).unionByName(
         content_sections
     )
+
+
+def sections_df(preorder: DataFrame) -> DataFrame:
+    """W5: the ``sections_preorder_df`` table in per-doc order; returns
+    SECTIONS_OUT + ``order`` per doc.
+
+    DRAM fix (scaling): the ordering window needs only the sort key, but
+    windowing over the full rows shuffled AND sorted the assembled
+    `content` strings — the 4→16 core scaling pair was DRAM-bandwidth-
+    bound on exactly that sort.  So ``order`` is computed on a skinny
+    projection of the (written) pre-order table and re-attached by the
+    UNIQUE section identity (doc_id, page, section_id, pass_rank,
+    intra_order — toc rows have unique entry_order, page rows unique
+    page, content rows unique (page, intra_order)); the SHUFFLE_HASH
+    hint keeps the big side a hash probe — a sort-merge join would
+    re-sort the strings and give the win straight back.  Both join
+    branches read the table, so the heavy lineage runs once."""
     w_order = Window.partitionBy("doc_id").orderBy(
         "page",
         F.coalesce("section_id", F.lit("")),
         "pass_rank",
         "intra_order",
     )
-    # W5 DRAM fix (scaling): the ordering window needs only the sort
-    # key, but windowing over the full rows shuffled AND sorted the
-    # assembled `content` strings — the 4→16 core scaling pair was
-    # DRAM-bandwidth-bound on exactly that sort.  Materialize the
-    # pre-order union as the stage table, compute `order` on a skinny
-    # projection of it, and re-attach by the UNIQUE section identity
-    # (doc_id, page, section_id, pass_rank, intra_order — toc rows have
-    # unique entry_order, page rows unique page, content rows unique
-    # (page, intra_order)); the SHUFFLE_HASH hint keeps the big side a
-    # hash probe — a sort-merge join would re-sort the strings and give
-    # the win straight back.  Both join branches read the written
-    # table, so the heavy lineage runs once.
-    unioned = tables.write_and_read(
-        unioned, tables.sub_ref(stage_ref, "_sections_preorder")
-    )[0]
     key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
-    skinny = unioned.select(*key).withColumn(
+    skinny = preorder.select(*key).withColumn(
         "order", F.row_number().over(w_order)
     )
+    page_path = F.concat(
+        F.lit("Page-"), F.col("page"), F.lit(" "), F.col("title")
+    )
     out_cols = [
-        c for c in unioned.columns if c not in ("pass_rank", "intra_order")
+        F.when(F.col("pass_rank") == 1, page_path)
+        .otherwise(F.col("full_path"))
+        .alias("full_path")
+        if c == "full_path"
+        else c
+        for c in preorder.columns
+        if c not in ("pass_rank", "intra_order")
     ] + ["order"]
-    return unioned.join(skinny.hint("SHUFFLE_HASH"), key).select(*out_cols)
+    return preorder.join(skinny.hint("SHUFFLE_HASH"), key).select(*out_cols)

@@ -16,6 +16,11 @@ Architecture (one JVM↔Python crossing, the rest native — SURVEY.md §4d):
    window, then the final (page, title-prefix) dedup window (W3) and the
    1..9999 sanity filter (F9) — all native.
 
+Steps 1-2 are ``toc_features_df`` and step 3 is ``toc_entries_df``: two
+stages of the pipeline's graph (``toc_feats`` → ``toc``).  The features
+need only ``pages``, so they run beside the metadata stage; the entries
+read the written features and the metadata (J6 doc titles).
+
 Every shuffle keys on ``doc_id`` (the bucketing key of the input layout),
 so at cluster scale the anti-joins and windows co-locate with the rest of
 the per-doc pipeline and AQE reuses one exchange.
@@ -51,7 +56,6 @@ from pdf_parser_spark.operators.exprs import (
     word_count,
 )
 from pdf_parser_spark.oracle import refsem
-from pdf_parser_spark.sources import tables
 
 # 'table of contents'|'contents' word-bounded, case-insensitive
 # (text_utils.py:27-33).  'contents' subsumes the longer term for line
@@ -209,28 +213,31 @@ def _line_features_df(lines: DataFrame) -> DataFrame:
     )
 
 
+def toc_features_df(
+    pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """The per-line features of every TOC candidate line — the stage's
+    one Arrow crossing, over ``pages`` alone.  The three accept passes
+    and two anti-joins of ``toc_entries_df`` each read it, so
+    ``run_pipeline`` writes it once (its ``toc_feats`` stage): as a plan
+    Catalyst would re-execute the UDF once per consumer (SURVEY.md §4d —
+    "keep pandas-UDF stages few and fused")."""
+    return _line_features_df(toc_candidate_lines(pages, cfg))
+
+
 def toc_entries_df(
-    pages: DataFrame,
+    feats: DataFrame,
     metadata: DataFrame,
-    stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Full three-pass TOC extraction + dedup (toc_parser.py:141-691).
+    """Full three-pass TOC extraction + dedup (toc_parser.py:141-691) over
+    the ``toc_features_df`` lines.
 
     Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
     per doc — consumed by the section stage's lead() boundaries W1).
-
-    The pandas-UDF feature stage and the primary pass are each written
-    once under ``stage_ref`` (``sources.tables.write_and_read``): three
-    accept passes + two anti-joins consume them, and as plans Catalyst
-    would re-execute the Arrow UDF once per consumer (SURVEY.md §4d —
-    "keep pandas-UDF stages few and fused").
+    The primary pass is a filter over ``feats``, re-read by its three
+    consumers (the union and the two enhanced-pass anti-joins).
     """
-    feats = tables.write_and_read(
-        _line_features_df(toc_candidate_lines(pages, cfg)),
-        tables.sub_ref(stage_ref, "_toc_feats"),
-    )[0]
-
     accepted_primary = (
         F.col("prim_matched")
         & (F.col("prim_page") > 0)
@@ -252,9 +259,6 @@ def toc_entries_df(
         F.col("stripped").alias("full_path"),
         F.lit(0).alias("pass_rank"),
     )
-    primary = tables.write_and_read(
-        primary, tables.sub_ref(stage_ref, "_toc_primary")
-    )[0]
 
     # ---- enhanced pass (toc_parser.py:381-470) -------------------------
     enh = feats.filter(

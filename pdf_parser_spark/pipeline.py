@@ -9,13 +9,21 @@ orchestrator (main.py:96-116):
 
 Where the reference re-reads JSONL files between steps
 (main.py:194-202, section_parser.py:94-107 — SURVEY.md §2 S7), this build
-materializes each of pages, metadata, toc and sections once and reuses it
-downstream (SURVEY.md §4 P9).  Every materialization is the same durable
-boundary, ``sources.tables.write_and_read`` under the run's ``stage_ref``:
-each stage table is written once and read back with its schema pinned, so
+runs one explicit graph of named stages (``stage_graph``).  Each stage
+names the stages it reads; one driver-side scheduler (``run_stages``)
+writes each as soon as its inputs exist, submitting every ready stage at
+once, so independent stages overlap:
+
+  html_rewrite → pages → {metadata ∥ toc_feats} → toc
+      → sections_preorder → sections → metrics
+
+with spans_out and quarantine off that path (they read only the
+exploded spans).  Every materialization is the same durable boundary,
+``sources.tables.write_and_read`` under the run's ``stage_ref``: each
+stage table is written once and read back with its schema pinned, so
 later stages plan from file scans instead of from the upstream lineage.
-The operators' internal materializations land next to them under
-``_``-prefixed names (the CLI's ``--output/_*``).
+The operator-internal stages (``html_rewrite``, ``toc_feats``,
+``sections_preorder``) land under ``<stage_ref>/_internal/``.
 
 Scale: the input is read with its on-disk doc_id-range layout
 (fixtures/gen.write_parquet mirrors the production Iceberg bucketing);
@@ -26,9 +34,13 @@ inside pages.span_sequence_df (SURVEY.md §4 P6).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field, fields, replace
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import metadata as metadata_op
@@ -38,6 +50,23 @@ from pdf_parser_spark.operators import sections as sections_op
 from pdf_parser_spark.operators import toc as toc_op
 from pdf_parser_spark.schemas import DOCUMENTS_SPANS
 from pdf_parser_spark.sources import tables
+
+#: writes a stage's frame; returns the frame downstream stages read
+#: (normally the table read back) and the rows written
+Writer = Callable[[DataFrame], tuple[DataFrame, int]]
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One node of the stage graph.  ``plan`` builds the stage's frame
+    from the frames of the stages named in ``inputs``, in that order;
+    ``write`` lands it.  A stage without a writer stays a plan that its
+    consumers inline (a caller gets it back unwritten)."""
+
+    name: str
+    inputs: tuple
+    plan: Callable[..., DataFrame]
+    write: Writer | None = None
 
 
 @dataclass
@@ -61,25 +90,25 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     return tables.read_table(spark, path, schema=DOCUMENTS_SPANS)
 
 
-def run_pipeline(
+def stage_graph(
     docs: DataFrame,
     stage_ref: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     normalize_html: bool = False,
-) -> PipelineResult:
-    """Pages, metadata, toc and sections are each written once under
-    ``stage_ref`` (``sources.tables.write_and_read``) as soon as they are
-    planned, and the result holds the tables read back; ``counts`` holds
-    the rows written.  spans_out, quarantine and metrics come back as
-    plans over those tables: only a caller that wants one writes it.
-    The stage tables must outlive every read of the result."""
-    counts: dict = {}
+) -> list[Stage]:
+    """The pipeline's stages, each listed after the stages it reads.
+    pages, metadata, toc and sections are written under ``stage_ref``,
+    the internal stages under ``<stage_ref>/_internal``; spans_out,
+    quarantine and metrics are plans until a caller gives them a
+    writer (``run_pipeline``'s ``sinks``).  Stages that become ready
+    together are submitted in list order, and Spark's FIFO scheduler
+    gives the earlier job's tasks the free cores first, so the
+    critical path (html_rewrite → pages → toc_feats → toc →
+    sections_preorder → sections → metrics) is listed ahead of the
+    stages beside it."""
 
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        df, counts[name] = tables.write_and_read(
-            df, tables.sub_ref(stage_ref, name)
-        )
-        return df
+    def written(name: str, ref_of=tables.sub_ref) -> Writer:
+        return partial(tables.write_and_read, ref=ref_of(stage_ref, name))
 
     # north rule: with ``normalize_html`` the corpus's raw-HTML payload
     # spans are stripped to text spans in place before validation.  Off
@@ -88,37 +117,127 @@ def run_pipeline(
     # un-normalized corpora, and its extra work + stage table are
     # proportional to the html rows only — ``docs`` for the doc_id-universe
     # consumers (metadata/metrics) stays the raw scan.
-    flat = pages_op.explode_spans(
-        docs, cfg, normalize_html=normalize_html, stage_ref=stage_ref
-    )
-    quarantine = pages_op.quarantine_df(flat)
-    valid = pages_op.valid_spans(flat)
-    # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
-    # cfg.mega_doc_span_threshold take the two-phase chunked path so no
-    # single task sorts a pathological doc alone; output is
-    # bit-identical either way.
-    spans_out = pages_op.span_sequence_skew_df(valid, cfg, docs=docs)
+    graph = []
+    if normalize_html:
+        from pdf_parser_spark.functions import boilerplate
 
-    # steps 2-5 all read pages; one materialization instead of the
-    # reference's three JSONL re-reads (S7)
-    pages = stage("pages", pages_op.pages_df(valid, cfg))
-    metadata = stage("metadata", metadata_op.metadata_df(docs, pages, cfg))
-    toc = stage(
-        "toc", toc_op.toc_entries_df(pages, metadata, stage_ref, cfg)
-    )
-    sections = stage(
-        "sections",
-        sections_op.sections_df(pages, toc, metadata, stage_ref, cfg),
-    )
-    metrics = metrics_op.metrics_df(docs, pages, toc, sections, metadata)
+        graph.append(Stage(
+            "html_rewrite", (),
+            lambda: boilerplate.html_rewrite_df(
+                pages_op.explode_spans_raw(docs)
+            ),
+            written("html_rewrite", tables.internal_ref),
+        ))
+    spans_in = ("html_rewrite",) if normalize_html else ()
 
+    def flat(*rewritten: DataFrame) -> DataFrame:
+        return pages_op.explode_spans(docs, cfg, normalize_html, *rewritten)
+
+    return graph + [
+        # steps 2-5 all read pages; one materialization instead of the
+        # reference's three JSONL re-reads (S7)
+        Stage("pages", spans_in,
+              lambda *r: pages_op.pages_df(
+                  pages_op.valid_spans(flat(*r)), cfg),
+              written("pages")),
+        Stage("toc_feats", ("pages",),
+              lambda pages: toc_op.toc_features_df(pages, cfg),
+              written("toc_feats", tables.internal_ref)),
+        Stage("metadata", ("pages",),
+              lambda pages: metadata_op.metadata_df(docs, pages, cfg),
+              written("metadata")),
+        Stage("toc", ("toc_feats", "metadata"),
+              lambda feats, meta: toc_op.toc_entries_df(feats, meta, cfg),
+              written("toc")),
+        Stage("sections_preorder", ("pages", "toc", "metadata"),
+              lambda pages, toc, meta: sections_op.sections_preorder_df(
+                  pages, toc, meta, cfg),
+              written("sections_preorder", tables.internal_ref)),
+        Stage("sections", ("sections_preorder",), sections_op.sections_df,
+              written("sections")),
+        Stage("metrics", ("pages", "toc", "sections", "metadata"),
+              lambda pages, toc, sections, meta: metrics_op.metrics_df(
+                  docs, pages, toc, sections, meta)),
+        # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
+        # cfg.mega_doc_span_threshold take the two-phase chunked path so
+        # no single task sorts a pathological doc alone; output is
+        # bit-identical either way.
+        Stage("spans_out", spans_in,
+              lambda *r: pages_op.span_sequence_skew_df(
+                  pages_op.valid_spans(flat(*r)), cfg, docs=docs)),
+        Stage("quarantine", spans_in,
+              lambda *r: pages_op.quarantine_df(flat(*r))),
+    ]
+
+
+def run_stages(
+    spark: SparkSession, stages: Sequence[Stage]
+) -> dict[str, tuple[DataFrame, int | None]]:
+    """Run a stage graph; returns each stage's frame and rows written
+    (None for an unwritten stage).
+
+    Every stage whose inputs are done is submitted at once to a thread
+    pool as wide as the graph, so the graph alone fixes the concurrency.
+    Each task runs through ``inheritable_thread_target``: its jobs stay
+    in the caller's job group and carry the stage name as their job
+    description.  If a stage raises, no further stage starts, the
+    running ones finish (their tables stay, as do those of every stage
+    already done), and the exception is re-raised once the pool's
+    threads have ended."""
+    seen: set = set()
+    for st in stages:
+        if st.name in seen or not seen.issuperset(st.inputs):
+            raise ValueError(
+                f"stage {st.name!r} is a duplicate or reads a stage not "
+                f"listed before it: {st.inputs}"
+            )
+        seen.add(st.name)
+
+    def run(st: Stage, frames: list) -> tuple[DataFrame, int | None]:
+        spark.sparkContext.setJobDescription(st.name)
+        df = st.plan(*frames)
+        return (df, None) if st.write is None else st.write(df)
+
+    done: dict = {}
+    waiting = list(stages)
+    running: dict = {}
+    with ThreadPoolExecutor(len(stages), "pipeline-stage") as pool:
+        while waiting or running:
+            for st in [s for s in waiting if done.keys() >= set(s.inputs)]:
+                waiting.remove(st)
+                task = inheritable_thread_target(spark)(run)
+                frames = [done[n][0] for n in st.inputs]
+                running[pool.submit(task, st, frames)] = st
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                done[running.pop(fut).name] = fut.result()
+    return done
+
+
+def run_pipeline(
+    docs: DataFrame,
+    stage_ref: str,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    normalize_html: bool = False,
+    sinks: Mapping[str, Writer] | None = None,
+) -> PipelineResult:
+    """Run ``stage_graph`` through ``run_stages``.  ``sinks`` gives
+    stages (by name) a writer of the caller's, in place of their own or
+    none: the CLI writes spans_out, quarantine and metrics this way, and
+    ``run_resumable`` its bucketed spans_out and sections.  The result
+    holds each stage's frame (written ones read back) and ``counts`` the
+    rows written per table.  The stage tables must outlive every read of
+    the result."""
+    sinks = dict(sinks or {})
+    graph = [
+        replace(st, write=sinks.pop(st.name, st.write))
+        for st in stage_graph(docs, stage_ref, cfg, normalize_html)
+    ]
+    if sinks:
+        raise ValueError(f"no stage named {sorted(sinks)}")
+    done = run_stages(docs.sparkSession, graph)
+    names = [f.name for f in fields(PipelineResult) if f.name != "counts"]
     return PipelineResult(
-        quarantine=quarantine,
-        spans_out=spans_out,
-        pages=pages,
-        metadata=metadata,
-        toc=toc,
-        sections=sections,
-        metrics=metrics,
-        counts=counts,
+        **{n: done[n][0] for n in names},
+        counts={n: done[n][1] for n in names if done[n][1] is not None},
     )

@@ -65,6 +65,32 @@ def sub_ref(ref: str, name: str) -> str:
     return f"{ref.rstrip('/')}/{name}"
 
 
+def internal_ref(ref: str, name: str) -> str:
+    """An operator-internal table under ``ref``: ``<ref>/_internal/<name>``
+    for a path, ``<ref>_internal_<name>`` for an ``iceberg:`` ref.  The
+    hidden parent keeps internals out of the ``ref`` listing, and the
+    plain leaf name keeps Spark's path filter (which skips ``_``-named
+    leaves) from flagging every read."""
+    return sub_ref(sub_ref(ref, "_internal"), name)
+
+
+def drop_tree(spark: SparkSession, ref: str) -> None:
+    """Delete ``ref`` and every table derived from it by ``sub_ref`` /
+    ``internal_ref``: a path is removed recursively (through the Hadoop
+    FS API); for an ``iceberg:`` ref, the tables of its namespace named
+    ``<table>`` or ``<table>_*`` are dropped."""
+    if is_iceberg_ref(ref):
+        name = _require_iceberg(spark, ref)
+        ns, table = name.rsplit(".", 1)
+        for row in spark.sql(f"SHOW TABLES IN {ns}").collect():
+            t = row.tableName
+            if t == table or t.startswith(f"{table}_"):
+                spark.sql(f"DROP TABLE IF EXISTS {ns}.{t}")
+        return
+    p = spark._jvm.org.apache.hadoop.fs.Path(ref)
+    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+
+
 def table_exists(spark: SparkSession, ref: str) -> bool:
     """Catalog lookup for ``iceberg:`` refs; filesystem check (through
     the Hadoop FS API, so any configured scheme works) for paths."""
@@ -134,20 +160,29 @@ def write_table(
     writer.parquet(ref)
 
 
-def write_and_read(df: DataFrame, ref: str) -> tuple[DataFrame, int]:
-    """The one stage boundary: overwrite ``ref`` with ``df`` once and
-    return the table read back with ``df``'s schema pinned (no inference
-    job) plus the rows written, counted by an ``Observation`` on the
-    write itself (no second job).  Downstream plans start from the file
-    scan, not from ``df``'s lineage."""
+def write_counted(
+    df: DataFrame,
+    ref: str,
+    mode: str = "overwrite",
+    partition_by: tuple = (),
+) -> int:
+    """``write_table`` that returns the rows written, counted by an
+    ``Observation`` on the write itself (no second job)."""
     obs = Observation()
     write_table(
         df.observe(obs, F.count(F.lit(1)).alias("rows")), ref,
-        mode="overwrite",
+        mode=mode, partition_by=partition_by,
     )
-    return read_table(df.sparkSession, ref, schema=df.schema), int(
-        obs.get["rows"]
-    )
+    return int(obs.get["rows"])
+
+
+def write_and_read(df: DataFrame, ref: str) -> tuple[DataFrame, int]:
+    """The one stage boundary: overwrite ``ref`` with ``df`` once and
+    return the table read back with ``df``'s schema pinned (no inference
+    job) plus the rows written (``write_counted``).  Downstream plans
+    start from the file scan, not from ``df``'s lineage."""
+    rows = write_counted(df, ref)
+    return read_table(df.sparkSession, ref, schema=df.schema), rows
 
 
 def write_bucketed_table(

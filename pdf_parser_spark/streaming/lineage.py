@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -31,10 +32,12 @@ from pyspark.sql import functions as F
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.pipeline import run_pipeline
 from pdf_parser_spark.sources.tables import (
+    drop_tree,
     read_table,
     sub_ref,
     table_exists,
     write_and_read,
+    write_counted,
     write_table,
 )
 
@@ -108,6 +111,19 @@ def _append_lineage(
     )
 
 
+def _write_bucketed(
+    ref: str, n_buckets: int, df: DataFrame
+) -> tuple[DataFrame, int]:
+    """A resumable output: ``df`` with its ``bucket`` written to ``ref``
+    by dynamic partition overwrite.  Returns ``df`` itself, not the
+    table, which holds every wave's buckets: nothing downstream in a
+    wave is written."""
+    return df, write_counted(
+        with_bucket(df, n_buckets), ref,
+        mode="overwrite_partitions", partition_by=("bucket",),
+    )
+
+
 def run_resumable(
     spark: SparkSession,
     docs: DataFrame,
@@ -125,7 +141,8 @@ def run_resumable(
     raises after k completed waves, exactly as a mid-job kill would.
     """
     bucketed = with_bucket(docs, n_buckets)
-    # each wave's stage tables overwrite the previous wave's
+    # each wave's stage tables overwrite the previous wave's; the last
+    # wave's are dropped once its lineage rows commit
     stage_ref = sub_ref(out_dir, "_stage")
     done = completed_buckets(spark, out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -149,23 +166,21 @@ def run_resumable(
             F.sum(F.size(F.coalesce("spans", F.array()))).alias("spans"),
         )
 
-        result = run_pipeline(
-            wave_docs.drop("bucket"), stage_ref, cfg,
-            normalize_html=normalize_html,
-        )
         # 1) idempotent output write (re-running a bucket overwrites only
         # that bucket's partitions: Iceberg overwritePartitions / parquet
-        # dynamic partition overwrite, via the sources/tables seam).
-        # bucket is a pure function of doc_id, so it is re-derived on
-        # each output row, never joined back from the corpus.
-        for name, df in (("spans_out", result.spans_out),
-                         ("sections", result.sections)):
-            write_table(
-                with_bucket(df, n_buckets),
-                sub_ref(out_dir, name),
-                mode="overwrite_partitions",
-                partition_by=("bucket",),
-            )
+        # dynamic partition overwrite, via the sources/tables seam), as
+        # sink stages of the wave's stage graph.  bucket is a pure
+        # function of doc_id, so it is re-derived on each output row,
+        # never joined back from the corpus.
+        run_pipeline(
+            wave_docs.drop("bucket"), stage_ref, cfg,
+            normalize_html=normalize_html,
+            sinks={
+                name: partial(_write_bucketed, sub_ref(out_dir, name),
+                              n_buckets)
+                for name in ("spans_out", "sections")
+            },
+        )
 
         # 2) lineage append AFTER the output commit
         got = obs.get
@@ -181,6 +196,8 @@ def run_resumable(
         _append_lineage(spark, out_dir, rows)
         processed.extend(wave)
 
+    # the last wave's stage tables are scratch once its lineage commits
+    drop_tree(spark, stage_ref)
     return {
         "run_id": run_id,
         "skipped_buckets": sorted(done),

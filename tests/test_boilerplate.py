@@ -330,14 +330,18 @@ def test_inline_normalize_matches_ingest_strip(spark, tmp_path):
 
 def test_normalize_html_flat_plan_shape(spark, tmp_path):
     """Inline normalization plan: exactly one Arrow stage, and with
-    a stage_ref the rewritten-rows leg reads the (tiny) written table
-    — downstream consumers re-execute only the rest-branch scan."""
+    the rewritten rows written (the pipeline's html_rewrite stage) the
+    rewritten-rows leg reads the (tiny) table — downstream consumers
+    re-execute only the rest-branch scan."""
     from pdf_parser_spark.operators import pages as P
+    from pdf_parser_spark.sources import tables
 
     docs = _interleaved(spark)
-    out = bp.normalize_html_flat(
-        P.explode_spans_raw(docs), stage_ref=str(tmp_path)
-    )
+    flat = P.explode_spans_raw(docs)
+    rewritten = tables.write_and_read(
+        bp.html_rewrite_df(flat), str(tmp_path / "html_rewrite")
+    )[0]
+    out = bp.normalize_html_flat(flat, rewritten)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 0  # Python stage ran once
     assert "FileScan parquet" in plan  # the written rewrite

@@ -88,7 +88,7 @@ def test_refsem_replays_golden_exactly(golden_rows, toc_pages):
 
 
 def test_spark_toc_stage_replays_golden_exactly(
-    spark, golden_rows, toc_pages, tmp_path
+    spark, golden_rows, toc_pages
 ):
     from pdf_parser_spark.operators import toc as T
 
@@ -101,7 +101,7 @@ def test_spark_toc_stage_replays_golden_exactly(
         [("usb_pd", doc_title)], ["doc_id", "doc_title"]
     )
     toc = (
-        T.toc_entries_df(pages_df, meta_df, str(tmp_path))
+        T.toc_entries_df(T.toc_features_df(pages_df), meta_df)
         .orderBy("entry_order")
         .collect()
     )

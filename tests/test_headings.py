@@ -152,7 +152,7 @@ def test_add_strategy_extends_detection(spark):
         reg.add_strategy("bad", "not-a-callable")
 
 
-def test_custom_registry_changes_section_titles(spark, tmp_path):
+def test_custom_registry_changes_section_titles(spark):
     """End-to-end: the registry threads through sections_df and changes
     the titles of uncovered-page sections.  The crafted page starts with
     a line NO default strategy matches, followed by a statute marker only
@@ -174,7 +174,7 @@ def test_custom_registry_changes_section_titles(spark, tmp_path):
 
     def title_with(reg):
         rows = S.sections_df(
-            pages, toc, meta, str(tmp_path), heading_registry=reg
+            S.sections_preorder_df(pages, toc, meta, heading_registry=reg)
         ).collect()
         assert len(rows) == 1
         return rows[0].title

@@ -181,3 +181,23 @@ def test_resume_rows_equal_pipeline_rows_with_duplicate_doc_id(
         exp = getattr(want, name)
         got = spark.read.parquet(f"{out_dir}/{name}").select(*exp.columns)
         assert rows(got) == rows(exp), name
+
+
+def test_resume_leaves_only_outputs_and_lineage(spark, tmp_path):
+    """The last wave's stage tables are dropped once its lineage rows
+    commit: the out dir holds the bucketed outputs and the lineage table
+    only, and a second call over it still skips every bucket."""
+    from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
+
+    docs = to_spark_df(spark, fixture_corpus(4))
+    out_dir = tmp_path / "out"
+    first = L.run_resumable(spark, docs, str(out_dir), n_buckets=4,
+                            wave_size=2)
+    assert first["n_waves"] == 2
+    layout = {"spans_out", "sections", L.LINEAGE_SUBDIR}
+    assert {p.name for p in out_dir.iterdir()} == layout
+    again = L.run_resumable(spark, docs, str(out_dir), n_buckets=4,
+                            wave_size=2)
+    assert again["skipped_buckets"] == [0, 1, 2, 3]
+    assert again["processed_buckets"] == [] and again["n_waves"] == 0
+    assert {p.name for p in out_dir.iterdir()} == layout

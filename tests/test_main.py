@@ -29,7 +29,7 @@ def _rows(df):
 
 def test_main_pipeline_mode_writes_all_outputs(spark):
     """The CLI writes each of the seven tables once, with the operators'
-    internal stage tables beside them under ``_`` names, and what it
+    internal stage tables under one ``_internal`` parent, and what it
     wrote equals a ``run_pipeline`` result staged elsewhere row for row
     — with and without --normalize-html, over malformed (NULL-text),
     whitespace-only, span-less and raw-html docs: the parquet round trip
@@ -54,9 +54,11 @@ def test_main_pipeline_mode_writes_all_outputs(spark):
             assert set(counts) == set(TABLES)
             assert counts["spans_out"] > 0 and counts["metrics"] > 0
             assert {p.name for p in Path(out).iterdir()} == set(TABLES) | {
-                "_toc_feats", "_toc_primary", "_page_sections",
-                "_sections_preorder",
-            } | ({"_html_rewrite"} if normalize_html else set())
+                "_internal"
+            }
+            assert {p.name for p in Path(out, "_internal").iterdir()} == {
+                "toc_feats", "sections_preorder",
+            } | ({"html_rewrite"} if normalize_html else set())
             want = run_pipeline(read_documents(spark, f"{tmp}/in"),
                                 f"{tmp}/want_{normalize_html}",
                                 normalize_html=normalize_html)
@@ -69,6 +71,49 @@ def test_main_pipeline_mode_writes_all_outputs(spark):
                 assert rows == _rows(exp), name
             tags = [r.tags for r in want.sections.collect()]
             assert [] in tags and None not in tags
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_main_pipeline_jobs_stay_in_callers_job_group(spark):
+    """The stage graph runs its stages on pool threads: every job the
+    CLI starts must still land in the caller's job group (perfbench's
+    spark_jobs and task_s_per_kdoc count jobs by group) and carry its
+    stage's name as the job description."""
+    from pdf_parser_spark.pipeline import stage_graph
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return {int(jobs.apply(i).jobId()) for i in range(jobs.size())}
+
+    tmp = tempfile.mkdtemp(prefix="main_jg_", dir=ROOT)
+    group = "test-stage-graph-group"
+    try:
+        docs = to_spark_df(spark, fixture_corpus(n_docs=8))
+        docs.write.parquet(f"{tmp}/in")
+        stages = {st.name
+                  for st in stage_graph(docs, tmp, normalize_html=True)}
+        before = job_ids()
+        sc.setJobGroup(group, "caller")
+        try:
+            main(["--mode", "pipeline", "--input", f"{tmp}/in",
+                  "--output", f"{tmp}/out", "--normalize-html"],
+                 spark=spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        started = job_ids() - before
+        assert started
+        assert started == set(sc.statusTracker().getJobIdsForGroup(group))
+        tags = {}
+        for j in started:
+            desc = store.job(j).description()
+            tags[j] = desc.get() if desc.isDefined() else None
+        assert set(tags.values()) == stages, tags
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

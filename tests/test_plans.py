@@ -72,7 +72,7 @@ def test_toc_has_single_udf_stage(spark):
     spark.catalog.clearCache()
     docs = to_spark_df(spark, fixture_corpus(n_docs=4))
     pages = P.pages_df(P.valid_spans(P.explode_spans(docs)))
-    feats = T._line_features_df(T.toc_candidate_lines(pages))
+    feats = T.toc_features_df(pages)
     plan = _plan(feats)
     assert plan.count("ArrowEvalPython") == 1
 
@@ -108,13 +108,20 @@ def test_w5_ordering_window_is_content_free(spark, docs_df, tmp_path):
     from pdf_parser_spark.operators import sections as S
     from pdf_parser_spark.operators import toc as T
     from pdf_parser_spark.config import DEFAULT_CONFIG as cfg
+    from pdf_parser_spark.sources import tables
 
     flat = P.explode_spans(docs_df)
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid, cfg)
     metadata = MD.metadata_df(docs_df, pages, cfg)
-    toc = T.toc_entries_df(pages, metadata, str(tmp_path), cfg)
-    out = S.sections_df(pages, toc, metadata, str(tmp_path), cfg)
+    toc = T.toc_entries_df(T.toc_features_df(pages, cfg), metadata, cfg)
+    # the pre-order union is a stage table in the pipeline: the plan
+    # under test reads it back
+    preorder = tables.write_and_read(
+        S.sections_preorder_df(pages, toc, metadata, cfg),
+        str(tmp_path / "preorder"),
+    )[0]
+    out = S.sections_df(preorder)
     plan = _plan(out)
     # the re-attach join (keyed by the 5-col section identity — only it
     # references intra_order) must be a hash join, never sort-merge

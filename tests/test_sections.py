@@ -9,13 +9,13 @@ from pdf_parser_spark.operators import sections as S
 from pdf_parser_spark.operators import toc as T
 
 
-def test_sections_parity(docs_df, oracle_results, tmp_path):
+def test_sections_parity(docs_df, oracle_results):
     flat = P.explode_spans(docs_df)
     valid = P.valid_spans(flat)
     pages = P.pages_df(valid)
     meta = M.metadata_df(docs_df, pages)
-    toc = T.toc_entries_df(pages, meta, str(tmp_path))
-    rows = S.sections_df(pages, toc, meta, str(tmp_path)).collect()
+    toc = T.toc_entries_df(T.toc_features_df(pages), meta)
+    rows = S.sections_df(S.sections_preorder_df(pages, toc, meta)).collect()
 
     got = {}
     for r in rows:
@@ -75,8 +75,9 @@ def test_pipeline_unpersist_releases_all_internal_caches(
     long-lived job running many pipeline slices has no executor storage
     to release, and none of its seven tables plans from an in-memory
     relation.  The stage tables and the operators' internal ones (toc
-    feats/primary, page_sections, the W5 pre-order union, plus the html
-    rewrite) are the only things it leaves, all under ``stage_ref``.
+    feats, the W5 pre-order union, plus the html rewrite — under one
+    hidden ``_internal`` parent) are the only things it leaves, all
+    under ``stage_ref``.
 
     The ``-output`` cases drive the CLI's ``--output`` path instead, which
     passes its output as the ``stage_ref`` and writes spans_out,
@@ -114,8 +115,8 @@ def test_pipeline_unpersist_releases_all_internal_caches(
         plan = df._jdf.queryExecution().optimizedPlan()
         assert "InMemoryRelation" not in plan.toString(), name
     assert {p.name for p in stage_ref.iterdir()} == {
-        "pages", "metadata", "toc", "sections", "_toc_feats",
-        "_toc_primary", "_page_sections", "_sections_preorder",
-    } | ({"_html_rewrite"} if normalize_html else set()) | (
-        {"spans_out", "quarantine", "metrics"} if to_output else set()
-    )
+        "pages", "metadata", "toc", "sections", "_internal",
+    } | ({"spans_out", "quarantine", "metrics"} if to_output else set())
+    assert {p.name for p in (stage_ref / "_internal").iterdir()} == {
+        "toc_feats", "sections_preorder",
+    } | ({"html_rewrite"} if normalize_html else set())

@@ -24,11 +24,11 @@ def test_metadata_parity(docs_df, oracle_results):
     assert not mismatches, mismatches[:10]
 
 
-def test_toc_parity(docs_df, oracle_results, tmp_path):
+def test_toc_parity(docs_df, oracle_results):
     pages = _pages(docs_df)
     meta = M.metadata_df(docs_df, pages)
     got = {}
-    for r in T.toc_entries_df(pages, meta, str(tmp_path)).collect():
+    for r in T.toc_entries_df(T.toc_features_df(pages), meta).collect():
         got.setdefault(r.doc_id, []).append(r)
 
     n_entries = 0

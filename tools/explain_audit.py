@@ -21,7 +21,6 @@ sys.path.insert(0, str(REPO))
 
 from pdf_parser_spark import driver_queries as dq  # noqa: E402
 from pdf_parser_spark.session import get_spark  # noqa: E402
-from pdf_parser_spark.sources import tables  # noqa: E402
 
 
 def summarize(name: str, df) -> None:
@@ -88,38 +87,22 @@ def main() -> None:
     ]:
         summarize(name, qs[name](spark, sf_dir))
 
-    # pipeline stages over fixture input
+    # pipeline stages over fixture input: walk the pipeline's own stage
+    # graph (pipeline.stage_graph) in its listed order, summarizing each
+    # stage's plan and then writing it with the stage's writer, so that
+    # downstream plans start from the file scans run_pipeline gives them;
+    # the authoritative per-stage plan assertions live in
+    # tests/test_plans.py
     from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
-    from pdf_parser_spark.operators import metadata as M
-    from pdf_parser_spark.operators import pages as P
-    from pdf_parser_spark.operators import sections as S
-    from pdf_parser_spark.operators import toc as T
+    from pdf_parser_spark.pipeline import stage_graph
 
     docs = to_spark_df(spark, fixture_corpus(n_docs=6))
-    valid = P.valid_spans(P.explode_spans(docs))
-    pages = P.pages_df(valid)
-    meta = M.metadata_df(docs, pages)
-    summarize("stage:span_sequence", P.span_sequence_df(valid))
-    summarize("stage:pages", pages)
-    summarize("stage:metadata", meta)
-    # audit the stages the way the pipeline runs them: each stage
-    # boundary written and read back (sources.tables.write_and_read, as
-    # in run_pipeline), so downstream plans start from file scans instead
-    # of re-inlining the upstream lineage; the authoritative per-stage
-    # plan assertions live in tests/test_plans.py
     with tempfile.TemporaryDirectory(prefix="explain_audit_") as stage_ref:
-        def staged(name, df):
-            return tables.write_and_read(
-                df, tables.sub_ref(stage_ref, name)
-            )[0]
-
-        pages = staged("pages", pages)
-        meta = staged("metadata", meta)
-        toc = T.toc_entries_df(pages, meta, stage_ref)
-        summarize("stage:toc", toc)
-        sec = S.sections_df(pages, staged("toc", toc), meta, stage_ref)
-        summarize("stage:sections", sec)
-
+        frames = {}
+        for st in stage_graph(docs, stage_ref, normalize_html=True):
+            df = st.plan(*[frames[n] for n in st.inputs])
+            summarize(f"stage:{st.name}", df)
+            frames[st.name] = df if st.write is None else st.write(df)[0]
 
 if __name__ == "__main__":
     main()
