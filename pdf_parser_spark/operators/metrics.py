@@ -5,14 +5,19 @@
 
 All native aggregations.  ``bround`` (HALF_EVEN) mirrors Python's banker's
 ``round(x, 2)`` in safe_percentage (coverage_calculator.py:216-222).
-The TOC covered-page count uses an interval-sweep window (running max of
-prior interval ends) instead of exploding ``sequence()`` ranges — constant
-memory per entry at any page range (SURVEY.md A5 "interval arithmetic").
+The per-doc rollup is one ``unionByName`` of tagged partial rows (docs,
+metadata, pages, toc, sections) and one ``groupBy(doc_id)``: one
+exchange, no joins.  The TOC covered-page count (A5) is a per-doc fold
+of the entry pages' min and max, not an interval sweep or exploded
+``sequence()`` ranges — constant memory per doc at any page range
+(SURVEY.md A5 "interval arithmetic").
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.exprs import non_blank
@@ -25,39 +30,6 @@ def _pct(n: F.Column, d: F.Column) -> F.Column:
     )
 
 
-def _covered_pages(toc: DataFrame, totals: DataFrame) -> DataFrame:
-    """A5: cardinality of the union of entry page ranges
-    (coverage_calculator.py:224-258) via interval sweep, no explode."""
-    valid = toc.filter(F.col("page") > 0).join(totals, "doc_id", "left")
-    w_lead = Window.partitionBy("doc_id").orderBy("entry_order")
-    iv = valid.select(
-        "doc_id",
-        F.col("page").alias("start"),
-        F.greatest(
-            F.coalesce(
-                F.lead("page").over(w_lead) - 1,
-                F.coalesce("total_pages", F.lit(0)),
-            ),
-            F.col("page"),
-        ).alias("end"),
-    )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("start", "end")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    swept = iv.withColumn(
-        "eff_start",
-        F.greatest(F.col("start"), F.coalesce(F.max("end").over(w_prev) + 1,
-                                              F.col("start"))),
-    ).withColumn(
-        "contrib", F.greatest(F.col("end") - F.col("eff_start") + 1, F.lit(0))
-    )
-    return swept.groupBy("doc_id").agg(
-        F.sum("contrib").alias("toc_covered_pages")
-    )
-
-
 def metrics_df(
     docs: DataFrame,
     pages: DataFrame,
@@ -65,139 +37,167 @@ def metrics_df(
     sections: DataFrame,
     metadata: DataFrame,
 ) -> DataFrame:
-    """One validation-summary row per doc (schema = refsem.doc_metrics)."""
-    base = docs.select("doc_id")
+    """One validation-summary row per doc (schema = refsem.doc_metrics).
+
+    ``sections`` is the ``sections_preorder`` table (or ``sections``:
+    only doc_id, section_id, page and content are read).  Each source
+    contributes tagged partial rows to one union that is grouped once
+    on doc_id; a source's own columns are NULL on the other sources'
+    rows, so every aggregate only sees its source.  Row multiplicity is
+    that of the ``docs`` × ``metadata`` left join on doc_id: n_docs ×
+    max(n_metadata, 1) rows per id, and one all-default ``Missing`` row
+    per NULL-doc_id row of ``docs``."""
+    keyed = F.col("doc_id").isNotNull()
 
     has_text = non_blank(F.coalesce("text", F.lit("")))
     has_tables = F.col("n_tables") > 0
     has_images = F.col("n_images") > 0
     has_annots = F.col("n_annots") > 0
-    has_layout = F.col("n_layout") > 0
     has_content = has_text | has_tables | has_images | has_annots
     page_content_len = (
         F.when(has_text, F.length("text")).otherwise(0)
         + F.col("table_text_len")
         + F.col("annot_text_len")
     )
-
-    page_agg = pages.groupBy("doc_id").agg(
-        F.count("*").alias("total_pages"),
-        F.sum(has_text.cast("long")).alias("pages_with_text"),
-        F.sum(has_tables.cast("long")).alias("n_pages_tables"),
-        F.sum(has_images.cast("long")).alias("n_pages_images"),
-        F.sum(has_annots.cast("long")).alias("n_pages_annots"),
-        F.sum(has_layout.cast("long")).alias("n_pages_layout"),
-        F.sum(has_content.cast("long")).alias("pages_with_content"),
-        F.sum(F.when(has_content, page_content_len).otherwise(0)).alias(
-            "total_content_length"
-        ),
-        # A4 diversity: distinct content types present anywhere in the doc
-        (
-            F.max(has_text.cast("int"))
-            + F.max(has_tables.cast("int"))
-            + F.max(has_images.cast("int"))
-            + F.max(has_annots.cast("int"))
-        ).alias("content_diversity_score"),
-    )
-
-    toc_agg = toc.groupBy("doc_id").agg(
-        F.count("*").alias("total_toc_entries")
-    )
-
-    sec_content = F.coalesce(F.col("content"), F.lit(""))
-    sec_agg = sections.groupBy("doc_id").agg(
-        F.count("*").alias("sections_parsed"),
-        F.sum(
-            (F.coalesce("section_id", F.lit("")) != "").cast("long")
-        ).alias("toc_sections"),
-        F.sum(
-            (F.coalesce("section_id", F.lit("")) == "").cast("long")
-        ).alias("non_toc_sections"),
-        F.sum(
-            (
-                (sec_content != "")
-                & (
-                    F.lower(sec_content).contains("table")
-                    | sec_content.contains("|")
-                )
-            ).cast("long")
-        ).alias("sections_with_tables"),
-        F.sum(
-            (
-                (sec_content != "")
-                & (
-                    F.lower(sec_content).contains("image")
-                    | F.lower(sec_content).contains("figure")
-                    | F.lower(sec_content).contains("diagram")
-                )
-            ).cast("long")
-        ).alias("sections_with_images"),
-        F.sum(F.length(sec_content)).alias("total_section_content_length"),
-        F.countDistinct("page").alias("section_pages_covered"),
+    page_rows = pages.filter(keyed).select(
+        "doc_id",
+        has_text.alias("p_text"),
+        has_tables.alias("p_tables"),
+        has_images.alias("p_images"),
+        has_annots.alias("p_annots"),
+        (F.col("n_layout") > 0).alias("p_layout"),
+        has_content.alias("p_content"),
+        F.when(has_content, page_content_len).otherwise(0).alias("p_len"),
     )
 
     # A11/F13: required-field validation (metadata_validator.py:20-55);
     # 'falsy' for our string schema means null or empty.
-    req = ["doc_title", "revision", "version", "release_date"]
-    meta_ok = None
-    for f in req:
-        c = F.coalesce(F.col(f), F.lit("")) != ""
-        meta_ok = c if meta_ok is None else (meta_ok & c)
-    meta_status = metadata.select(
+    meta_ok = reduce(
+        lambda a, b: a & b,
+        [
+            F.coalesce(F.col(f), F.lit("")) != ""
+            for f in ("doc_title", "revision", "version", "release_date")
+        ],
+    )
+    meta_rows = metadata.filter(keyed).select(
         "doc_id",
         F.when(meta_ok, F.lit("Valid"))
         .otherwise(F.lit("Invalid/Missing"))
-        .alias("metadata_status"),
+        .alias("m_status"),
     )
 
-    totals = page_agg.select("doc_id", "total_pages")
-    covered = _covered_pages(toc, totals)
-
-    out = (
-        base.join(meta_status, "doc_id", "left")
-        .join(page_agg, "doc_id", "left")
-        .join(toc_agg, "doc_id", "left")
-        .join(sec_agg, "doc_id", "left")
-        .join(covered, "doc_id", "left")
+    # A5 reads only valid (page > 0) entries; t_entry tags every entry
+    toc_rows = toc.filter(keyed).select(
+        "doc_id",
+        F.lit(True).alias("t_entry"),
+        F.when(F.col("page") > 0, F.col("page")).alias("t_page"),
     )
-    out = out.fillna(
-        {
-            "metadata_status": "Missing",
-            "total_pages": 0,
-            "pages_with_text": 0,
-            "n_pages_tables": 0,
-            "n_pages_images": 0,
-            "n_pages_annots": 0,
-            "n_pages_layout": 0,
-            "pages_with_content": 0,
-            "total_content_length": 0,
-            "content_diversity_score": 0,
-            "total_toc_entries": 0,
-            "sections_parsed": 0,
-            "toc_sections": 0,
-            "non_toc_sections": 0,
-            "sections_with_tables": 0,
-            "sections_with_images": 0,
-            "total_section_content_length": 0,
-            "section_pages_covered": 0,
-            "toc_covered_pages": 0,
-        }
+
+    sec_content = F.coalesce(F.col("content"), F.lit(""))
+    sec_lower = F.lower(sec_content)
+    sec_rows = sections.filter(keyed).select(
+        "doc_id",
+        (F.coalesce("section_id", F.lit("")) != "").alias("s_toc"),
+        (
+            (sec_content != "")
+            & (sec_lower.contains("table") | sec_content.contains("|"))
+        ).alias("s_tables"),
+        (
+            (sec_content != "")
+            & (
+                sec_lower.contains("image")
+                | sec_lower.contains("figure")
+                | sec_lower.contains("diagram")
+            )
+        ).alias("s_images"),
+        F.length(sec_content).alias("s_len"),
+        F.col("page").alias("s_page"),
+    )
+
+    parts = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            docs.select("doc_id", F.lit(True).alias("d_doc")),
+            meta_rows,
+            page_rows,
+            toc_rows,
+            sec_rows,
+        ],
+    )
+
+    def total(c: str) -> F.Column:
+        return F.coalesce(F.sum(c), F.lit(0))
+
+    def flag_max(c: str) -> F.Column:
+        return F.coalesce(F.max(F.col(c).cast("int")), F.lit(0))
+
+    agg = parts.groupBy("doc_id").agg(
+        F.count("d_doc").cast("int").alias("n_docs"),
+        F.collect_list("m_status").alias("statuses"),
+        F.count("p_text").alias("total_pages"),
+        F.count_if("p_text").alias("pages_with_text"),
+        F.count_if("p_tables").alias("n_pages_tables"),
+        F.count_if("p_images").alias("n_pages_images"),
+        F.count_if("p_annots").alias("n_pages_annots"),
+        F.count_if("p_layout").alias("n_pages_layout"),
+        F.count_if("p_content").alias("pages_with_content"),
+        total("p_len").alias("total_content_length"),
+        # A4 diversity: distinct content types present anywhere in the doc
+        (
+            flag_max("p_text") + flag_max("p_tables")
+            + flag_max("p_images") + flag_max("p_annots")
+        ).alias("content_diversity_score"),
+        F.count("t_entry").alias("total_toc_entries"),
+        F.min("t_page").alias("first_entry_page"),
+        F.max("t_page").alias("last_entry_page"),
+        F.count("s_toc").alias("sections_parsed"),
+        F.count_if("s_toc").alias("toc_sections"),
+        F.count_if(~F.col("s_toc")).alias("non_toc_sections"),
+        F.count_if("s_tables").alias("sections_with_tables"),
+        F.count_if("s_images").alias("sections_with_images"),
+        total("s_len").alias("total_section_content_length"),
+        F.size(F.collect_set("s_page")).cast("long").alias(
+            "section_pages_covered"
+        ),
     )
 
     tp = F.col("total_pages")
+    # A5 (coverage_calculator.py:224-258): in page order (the toc's
+    # entry_order is page order), the W1 ranges [p_i, max(p_{i+1} - 1,
+    # p_i)] and the last one, [p_n, max(total_pages, p_n)], tile one run
+    # from the first entry page to max(total_pages, last entry page)
+    covered = F.coalesce(
+        F.greatest(tp, F.col("last_entry_page").cast("long"))
+        - F.col("first_entry_page")
+        + 1,
+        F.lit(0).cast("long"),
+    )
+    # one row per (docs row, metadata row) of the doc, as the left join
+    # docs ⋈ metadata gives; a doc without metadata is 'Missing'
+    status = F.explode(
+        F.flatten(
+            F.transform(
+                F.when(F.size("statuses") > 0, F.col("statuses")).otherwise(
+                    F.array(F.lit("Missing"))
+                ),
+                lambda s: F.array_repeat(s, F.col("n_docs")),
+            )
+        )
+    )
+
     text_cov = _pct(F.col("pages_with_text"), tp)
     table_cov = _pct(F.col("n_pages_tables"), tp)
     image_cov = _pct(F.col("n_pages_images"), tp)
     annot_cov = _pct(F.col("n_pages_annots"), tp)
     layout_cov = _pct(F.col("n_pages_layout"), tp)
 
-    return out.select(
+    return agg.select(
         "doc_id",
-        "metadata_status",
+        status.alias("metadata_status"),
         "total_toc_entries",
         "sections_parsed",
         "pages_with_text",
-        "toc_covered_pages",
+        covered.alias("toc_covered_pages"),
         _pct(F.col("pages_with_text"), tp).alias("page_coverage_pct"),
         text_cov.alias("text_coverage"),
         table_cov.alias("table_coverage"),

@@ -4,8 +4,11 @@ X21-X25).
 
 Dataflow (all shuffles keyed on ``doc_id``):
 
-1. W1: TOC entry page ranges via ``lead(page)`` per doc.
-2. J2: range join entries×pages (``page BETWEEN start AND end``) → per-entry
+1. W1: TOC entry page ranges via ``lead(page)`` per doc; the last entry's
+   range is open-ended (NULL end), because every ``pages`` row already
+   lies within 1..total_pages (``pages_df``'s page skeleton).
+2. J2: range join entries×pages (``page >= start AND (end IS NULL OR
+   page <= end)``) → per-entry
    content assembled with the PAGE BREAK sentinel, in page order, via
    ``array_sort(collect_list(...))`` — no per-doc global sort.
 3. J3: interval anti-join → uncovered pages → per-page sections (heading
@@ -81,14 +84,9 @@ def _page_section_tags(content: F.Column) -> F.Column:
     return F.filter(arr, lambda x: x.isNotNull())
 
 
-def _toc_ranges(toc: DataFrame) -> DataFrame:
-    """W1: entry i covers [page_i, page_{i+1}-1], last → total_pages
-    (toc_processor.py:59-75; section_parser.py:163-167)."""
-    w = Window.partitionBy("doc_id").orderBy("entry_order")
-    return toc.withColumn(
-        "end_page",
-        F.coalesce(F.lead("page").over(w) - 1, F.col("total_pages")),
-    )
+def _in_range(page: F.Column, start: F.Column, end: F.Column) -> F.Column:
+    """``page`` within [start, end]; a NULL ``end`` is open-ended."""
+    return (page >= start) & (end.isNull() | (page <= end))
 
 
 def sections_preorder_df(
@@ -109,23 +107,26 @@ def sections_preorder_df(
     the pluggable heading-detection extension point, mirroring
     HeadingDetector.add_strategy (heading_strategies.py:211-217) but
     fully JVM-side."""
-    totals = pages.groupBy("doc_id").agg(
-        F.max("total_pages").alias("total_pages")
+    # ---- W1: entry i covers [page_i, page_{i+1}-1] ---------------------
+    # (toc_processor.py:59-75; section_parser.py:163-167).  The last
+    # entry runs to total_pages; every pages row lies within it, so its
+    # end stays NULL (open) and no per-doc page total is joined in
+    valid_toc = toc.filter(F.col("page") > 0)
+    ranges = valid_toc.withColumn(
+        "end_page",
+        F.lead("page").over(
+            Window.partitionBy("doc_id").orderBy("entry_order")
+        ) - 1,
     )
-    valid_toc = (
-        toc.filter(F.col("page") > 0)
-        .join(totals, "doc_id", "left")
-        .withColumn("total_pages", F.coalesce("total_pages", F.lit(0)))
-    )
-    ranges = _toc_ranges(valid_toc)
 
     # ---- J2: TOC sections with range-joined content --------------------
-    # comprehensive_content_range clamps end to total (page_manager.py:53-67)
+    # comprehensive_content_range clamps end to total (page_manager.py:53-67):
+    # no pages row lies past total_pages, so the join itself clamps
     rng = ranges.select(
         "doc_id",
         "entry_order",
         F.col("page").alias("start_p"),
-        F.least("end_page", "total_pages").alias("end_p"),
+        "end_page",
     )
     pg = pages.select(
         F.col("doc_id").alias("pg_doc"), "page", "content"
@@ -133,7 +134,7 @@ def sections_preorder_df(
     joined = rng.join(
         pg,
         (rng["doc_id"] == pg["pg_doc"])
-        & pg["page"].between(rng["start_p"], rng["end_p"]),
+        & _in_range(pg["page"], rng["start_p"], rng["end_page"]),
         "left",
     )
     entry_content = joined.groupBy("doc_id", "entry_order").agg(
@@ -187,17 +188,21 @@ def sections_preorder_df(
     )
 
     # ---- J3: uncovered pages → per-page sections ------------------------
-    # covered intervals use end = max(end, start) (toc_processor.py:74)
+    # covered intervals use end = max(end, start) (toc_processor.py:74);
+    # the last stays open-ended
     intervals = ranges.select(
         F.col("doc_id").alias("iv_doc"),
         F.col("page").alias("iv_start"),
-        F.greatest("end_page", "page").alias("iv_end"),
+        F.when(
+            F.col("end_page").isNotNull(), F.greatest("end_page", "page")
+        ).alias("iv_end"),
     )
-    doc_title_map = metadata.select("doc_id", "doc_title")
     uncovered = pages.join(
         intervals,
         (pages["doc_id"] == intervals["iv_doc"])
-        & pages["page"].between(intervals["iv_start"], intervals["iv_end"]),
+        & _in_range(
+            pages["page"], intervals["iv_start"], intervals["iv_end"]
+        ),
         "left_anti",
     ).filter(non_blank(F.coalesce("content", F.lit(""))))
     # full_path is derived by sections_df, after the pre-order table's
@@ -211,10 +216,8 @@ def sections_preorder_df(
                 F.col("content"), F.col("page"), heading_registry
             ),
         )
-        .join(doc_title_map, "doc_id", "left")
         .select(
             "doc_id",
-            "doc_title",
             F.concat(F.lit("Page-"), F.col("page")).alias("section_id"),
             "title",
             F.lit(None).cast("string").alias("full_path"),
@@ -253,10 +256,8 @@ def sections_preorder_df(
                 "intra_order", "pair"
             ),
         )
-        .join(doc_title_map, "doc_id", "left")
         .select(
             "doc_id",
-            "doc_title",
             F.concat(F.lit("Page-"), F.col("page")).alias("section_id"),
             F.col("pair.title").alias("title"),
             F.concat(
@@ -273,10 +274,11 @@ def sections_preorder_df(
         )
     )
 
-    # ---- U1: union --------------------------------------------------------
-    return toc_sections.unionByName(page_sections).unionByName(
-        content_sections
+    # ---- U1: union; J6 doc_title joined once for both page passes ------
+    page_passes = page_sections.unionByName(content_sections).join(
+        metadata.select("doc_id", "doc_title"), "doc_id", "left"
     )
+    return toc_sections.unionByName(page_passes)
 
 
 def sections_df(preorder: DataFrame) -> DataFrame:

@@ -15,13 +15,15 @@ writes each as soon as its inputs exist, submitting every ready stage at
 once, so independent stages overlap:
 
   html_rewrite → pages → {metadata ∥ toc_feats} → toc
-      → sections_preorder → sections → metrics
+      → sections_preorder → {sections ∥ metrics}
 
 with spans_out and quarantine off that path (they read only the
-exploded spans).  Every materialization is the same durable boundary,
-``sources.tables.write_and_read`` under the run's ``stage_ref``: each
-stage table is written once and read back with its schema pinned, so
-later stages plan from file scans instead of from the upstream lineage.
+exploded spans).  metrics reads the pre-order sections, not the W5
+ordering, so it runs beside sections: 6 levels.  Every materialization
+is the same durable boundary, ``sources.tables.write_and_read`` under
+the run's ``stage_ref``: each stage table is written once and read back
+with its schema pinned, so later stages plan from file scans instead of
+from the upstream lineage.
 The operator-internal stages (``html_rewrite``, ``toc_feats``,
 ``sections_preorder``) land under ``<stage_ref>/_internal/``.
 
@@ -104,7 +106,7 @@ def stage_graph(
     together are submitted in list order, and Spark's FIFO scheduler
     gives the earlier job's tasks the free cores first, so the
     critical path (html_rewrite → pages → toc_feats → toc →
-    sections_preorder → sections → metrics) is listed ahead of the
+    sections_preorder → {sections ∥ metrics}) is listed ahead of the
     stages beside it."""
 
     def written(name: str, ref_of=tables.sub_ref) -> Writer:
@@ -155,9 +157,9 @@ def stage_graph(
               written("sections_preorder", tables.internal_ref)),
         Stage("sections", ("sections_preorder",), sections_op.sections_df,
               written("sections")),
-        Stage("metrics", ("pages", "toc", "sections", "metadata"),
-              lambda pages, toc, sections, meta: metrics_op.metrics_df(
-                  docs, pages, toc, sections, meta)),
+        Stage("metrics", ("pages", "toc", "sections_preorder", "metadata"),
+              lambda pages, toc, preorder, meta: metrics_op.metrics_df(
+                  docs, pages, toc, preorder, meta)),
         # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
         # cfg.mega_doc_span_threshold take the two-phase chunked path so
         # no single task sorts a pathological doc alone; output is

@@ -50,3 +50,58 @@ def test_metrics_parity(docs_df, oracle_results, tmp_path):
             if not ok:
                 mismatches.append((doc_id, f, g, w))
     assert not mismatches, mismatches[:15]
+
+
+def test_metrics_edge_doc_ids(spark, tmp_path):
+    """Row multiplicity of the one-groupBy rollup on a nullable-doc_id
+    corpus: each NULL-doc_id docs row keeps its own all-default
+    ``Missing`` row, and a doc_id that appears twice keeps the
+    docs × metadata rows (2 × 2) it always had.
+
+    Metrics reads the pre-order sections, so the duplicated id's
+    section counts are those of its pre-order rows (48).  ``sections``
+    holds more rows for it: W5's re-attach join on the section key
+    squares a key that the two copies share (duplicate doc_ids are a
+    known open edge)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pdf_parser_spark.fixtures.gen import fixture_corpus, to_rows
+    from pdf_parser_spark.schemas import DOCUMENTS_SPANS
+    from pdf_parser_spark.sources import tables
+
+    corpus = fixture_corpus(4, mega_spans=200)
+    dup = corpus[0]["doc_id"]
+    docs = spark.createDataFrame(
+        list(to_rows(corpus + [
+            corpus[0],
+            dict(corpus[1], doc_id=None),
+            dict(corpus[2], doc_id=None),
+        ])),
+        StructType([
+            StructField("doc_id", StringType(), True),
+            DOCUMENTS_SPANS["spans"],
+        ]),
+    )
+    result = run_pipeline(docs, str(tmp_path))
+    rows = result.metrics.collect()
+
+    nulls = [r.asDict() for r in rows if r.doc_id is None]
+    assert len(nulls) == 2
+    for r in nulls:
+        assert r.pop("metadata_status") == "Missing"
+        assert not any(v for k, v in r.items() if k != "doc_id"), r
+
+    dups = [r for r in rows if r.doc_id == dup]
+    assert len(dups) == 4
+    preorder = tables.read_table(
+        spark, tables.internal_ref(str(tmp_path), "sections_preorder")
+    )
+    assert preorder.filter(preorder.doc_id == dup).count() == 48
+    assert {
+        (r.metadata_status, r.total_toc_entries, r.total_pages,
+         r.toc_covered_pages, r.sections_parsed, r.toc_sections,
+         r.non_toc_sections, r.sections_with_tables,
+         r.sections_with_images, r.total_section_content_length,
+         r.section_pages_covered)
+        for r in dups
+    } == {("Valid", 36, 13, 914, 48, 38, 10, 6, 4, 22214, 21)}

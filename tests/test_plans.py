@@ -241,3 +241,39 @@ def test_ivf_partitioned_scan_prunes_partitions(spark, tmp_path):
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
     assert "list_id" in pf and "IN" in pf.upper()
     assert len(sim.query_probe_lists(q, cents, 2)) == 2
+
+
+@pytest.fixture(scope="module")
+def written_pipeline(docs_df, tmp_path_factory):
+    """One pipeline run: its frames read the written stage tables."""
+    from pdf_parser_spark.pipeline import run_pipeline
+
+    return run_pipeline(docs_df, str(tmp_path_factory.mktemp("stages")))
+
+
+def test_metrics_is_one_groupby_without_joins(docs_df, written_pipeline):
+    """The per-doc rollup (A1-A11) is one union of tagged partial rows
+    and one doc_id aggregate: one shuffle exchange, no join (so no
+    broadcast side jobs), no window.  It reads the pre-order sections,
+    so the graph runs it beside W5's sections stage."""
+    from pdf_parser_spark.pipeline import stage_graph
+
+    plan = _plan(written_pipeline.metrics)
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(doc_id" in plan
+    assert "Join" not in plan
+    assert "Window" not in plan
+    graph = {st.name: st for st in stage_graph(docs_df, "unused")}
+    assert graph["metrics"].inputs == (
+        "pages", "toc", "sections_preorder", "metadata"
+    )
+
+
+def test_sections_preorder_needs_no_page_totals(written_pipeline):
+    """W1's last TOC range is open-ended: sections_preorder neither
+    aggregates nor reads pages.total_pages."""
+    from pdf_parser_spark.operators import sections as S
+
+    res = written_pipeline
+    plan = _plan(S.sections_preorder_df(res.pages, res.toc, res.metadata))
+    assert "total_pages" not in plan

@@ -264,3 +264,67 @@ def test_normalize_html_flat_invariants(spark, docs):
     kept = by_doc(got.values())
     ingest = by_doc(P.explode_spans_raw(strip_html_spans(df)).collect())
     assert {d: ingest[d] for d in kept} == kept
+
+
+# one doc: (total_pages, TOC entry pages in entry order — unsorted,
+# duplicated, <= 0 and past total_pages all allowed)
+toc_docs = st.tuples(
+    st.integers(0, 8), st.lists(st.integers(-2, 12), max_size=6)
+)
+_NO_PAGE = {
+    "text": "", "tables": [], "images": [], "annotations": [],
+    "layout_lines": [],
+}
+
+
+@settings(max_examples=12, **SETTINGS)
+@given(st.lists(toc_docs, min_size=1, max_size=6))
+@example([(0, [3, 1, 3]), (5, []), (4, [7, 2, 2, -1, 0]), (0, [])])
+def test_toc_covered_pages_fold_matches_oracle(spark, docs):
+    """A5: the per-doc fold of metrics_df counts exactly refsem's union
+    of W1 page ranges, on entries in any order, TOC docs without pages
+    and paged docs without TOC."""
+    from pdf_parser_spark.operators import metrics as M
+
+    ids = [f"d{i}" for i in range(len(docs))]
+    frame = spark.createDataFrame
+    pages = frame(
+        [
+            (d, p, tp, "", 0, 0, 0, 0, 0, 0)
+            for d, (tp, _) in zip(ids, docs)
+            for p in range(1, tp + 1)
+        ],
+        "doc_id STRING, page INT, total_pages INT, text STRING, "
+        "n_tables LONG, n_images LONG, n_layout LONG, n_annots LONG, "
+        "table_text_len LONG, annot_text_len LONG",
+    )
+    toc = frame(
+        [
+            (d, p, i + 1)
+            for d, (_, entries) in zip(ids, docs)
+            for i, p in enumerate(entries)
+        ],
+        "doc_id STRING, page INT, entry_order INT",
+    )
+    sections = frame(
+        [], "doc_id STRING, section_id STRING, page INT, content STRING"
+    )
+    metadata = frame(
+        [], "doc_id STRING, doc_title STRING, revision STRING, "
+        "version STRING, release_date STRING",
+    )
+    out = M.metrics_df(
+        frame([(d,) for d in ids], "doc_id STRING"),
+        pages, toc, sections, metadata,
+    )
+    got = {r.doc_id: r.toc_covered_pages for r in out.collect()}
+    want = {
+        d: refsem.doc_metrics({
+            "pages": [_NO_PAGE] * tp,
+            "toc": [{"page": p} for p in entries],
+            "sections": [],
+            "metadata": {},
+        })["toc_covered_pages"]
+        for d, (tp, entries) in zip(ids, docs)
+    }
+    assert got == want
