@@ -6,9 +6,9 @@ fields are pulled out, defaulting to ``"Unknown"``
 regex literals are compiled once per task by Catalyst, replacing the
 reference's FIFO pattern cache (text_utils.py:45-57; SURVEY.md §4 P4).
 
-Scale notes: the page→doc aggregation groups on ``doc_id`` (same key as
-every other per-doc stage, so AQE reuses the exchange); the filter
-``page <= 5`` prunes before the shuffle (SURVEY.md §4 P2).
+Scale notes: the docs ids and the pages are one tagged union grouped
+once on ``doc_id`` — one exchange, no join, so no broadcast side job;
+the filter ``page <= 5`` prunes before the shuffle (SURVEY.md §4 P2).
 """
 
 from __future__ import annotations
@@ -52,20 +52,33 @@ def metadata_df(
     """(doc_id) × pages → one row per doc: doc_title/revision/version/
     release_date, 'Unknown' defaults.  ``docs`` supplies the full doc_id
     universe (a doc whose spans were all quarantined still gets a row —
-    the reference returns all-Unknown for an unreadable PDF)."""
-    relevant = pages.filter(F.col("page") <= cfg.metadata_max_page)
-    combined = relevant.groupBy("doc_id").agg(
+    the reference returns all-Unknown for an unreadable PDF).
+
+    One ``unionByName`` of the docs ids and the pages <= 5, grouped
+    once on doc_id: one exchange, no join.  Each row of ``docs`` keeps
+    its own output row (a doc_id listed n times gives n rows, each NULL
+    doc_id row one all-'Unknown' row), and pages of an id ``docs`` does
+    not list give none."""
+    relevant = pages.filter(
+        F.col("doc_id").isNotNull() & (F.col("page") <= cfg.metadata_max_page)
+    ).select("doc_id", F.struct("page", "text").alias("_page"))
+    parts = docs.select("doc_id", F.lit(True).alias("_doc")).unionByName(
+        relevant, allowMissingColumns=True
+    )
+    combined = parts.groupBy("doc_id").agg(
+        F.count("_doc").cast("int").alias("_n_docs"),
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("page", "text"))),
+                F.array_sort(F.collect_list("_page")),
                 lambda s: F.coalesce(s["text"], F.lit("")),
             ),
             "\n",
-        ).alias("combined")
+        ).alias("combined"),
     )
-    base = docs.select("doc_id").join(combined, "doc_id", "left")
-    base = base.withColumn("combined", F.coalesce("combined", F.lit("")))
-    out = base
+    out = combined.select(
+        "doc_id",
+        F.explode(F.array_repeat("combined", "_n_docs")).alias("combined"),
+    )
     for field, pattern in _FIELD_PATTERNS.items():
         out = out.withColumn(field, _field(F.col("combined"), pattern))
     return out.select(

@@ -1,14 +1,16 @@
 """Span explosion, quarantine, page derivation, and W2 reassembly.
 
 All native Column expressions — zero Python UDFs.  The reassembly path
-shuffles exactly ONCE, on ``doc_id``; every window (page derivation,
-per-page ids, final page-major ordering) chains over that one exchange
-with per-partition sorts (spill-backed).  Per-doc sequencing is
-inherently sequential — page numbers are a prefix sum over the doc — so
-a single doc-partitioned sort pipeline is the minimal plan; mega-doc
-skew is a straggler-task concern bounded by per-doc span counts, with
-ingest-time salting (operators/skew.py, cfg.mega_doc_span_threshold) as
-the mitigation for pathological documents.
+(``span_sequence_df``) and the page records (``pages_df``) each shuffle
+exactly ONCE, on ``doc_id``; every window (page derivation, page
+totals, per-page ids, final page-major ordering) and the (doc_id, page)
+aggregate chain over that one exchange with per-partition sorts
+(spill-backed), with no join.  Per-doc sequencing is inherently
+sequential — page numbers are a prefix sum over the doc — so a single
+doc-partitioned sort pipeline is the minimal plan.  Mega-doc skew in
+the reassembly goes through ``span_sequence_skew_df``'s two-phase
+offset-chunked path past cfg.mega_doc_span_threshold; ``pages_df``'s
+windows still sort a mega doc in one task.
 
 Reference semantics pinned (oracle: refsem.derive_pages/span_sequence):
 - page_manager.py:69-148 fixed assembly order TEXT→TABLES→IMAGES→LAYOUT→
@@ -477,24 +479,51 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
 
     Includes EMPTY pages (a page delimited by two adjacent breaks still
     exists: reference total_pages = len(pages_data)).  Returns columns:
-    doc_id, page, total_pages, text, content.
-    """
-    spans = _with_ids(with_page(valid))
-    content_spans = spans.filter(F.col("kind") != PAGE_BREAK_KIND)
+    doc_id, page, total_pages, text, content, plus the per-page family
+    counts and lengths the metrics read.
 
-    is_textish = F.col("kind").isin(*TEXT_KINDS)
-    is_table = F.col("kind") == TABLE_KIND
-    is_image = F.col("kind").isin(*IMAGE_KINDS)
-    is_layout = F.col("kind") == LAYOUT_KIND
-    is_annot = F.col("kind") == ANNOTATION_KIND
+    One pass over ``valid``: every window and the (doc_id, page)
+    aggregate chain over one doc_id exchange, with no join.  A break
+    row opens its page, so pages 2..total_pages each hold a row; it
+    also stands in for the page it closes, so page 1 exists when the doc
+    starts with a break.  ``total_pages`` is the doc's break count + 1,
+    summed over the same window as the page numbers.  The spans of a
+    NULL doc_id belong to no document and carry no content: together
+    they still number empty pages 1..total_pages."""
+    is_break = F.col("kind") == PAGE_BREAK_KIND
+    w_all = (
+        Window.partitionBy("doc_id")
+        .orderBy("offset", "seq")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    spans = _with_ids(
+        with_page(valid).withColumn(
+            "total_pages",
+            (F.sum(is_break.cast("int")).over(w_all) + 1).cast("int"),
+        )
+    ).withColumn(
+        "page",
+        F.explode(
+            F.when(is_break, F.array(F.col("page") - 1, F.col("page")))
+            .otherwise(F.array("page"))
+        ),
+    )
+
+    keyed = F.col("doc_id").isNotNull()
+    is_textish = keyed & F.col("kind").isin(*TEXT_KINDS)
+    is_table = keyed & (F.col("kind") == TABLE_KIND)
+    is_image = keyed & F.col("kind").isin(*IMAGE_KINDS)
+    is_layout = keyed & (F.col("kind") == LAYOUT_KIND)
+    is_annot = keyed & (F.col("kind") == ANNOTATION_KIND)
     txt = F.coalesce(F.col("text"), F.lit(""))
 
     # Per-family formatted string, computed ROW-SIDE (whole-stage
-    # codegen) — NULL for rows outside the family, so collect_list in
+    # codegen) — NULL for rows outside the family (break rows and the
+    # rows of a NULL doc_id are in none), so collect_list in
     # _joined_family drops them.  See _joined_family for why formatting
     # must not live inside the post-agg transform.
-    pre = content_spans.select(
-        "doc_id", "page", "offset", "seq", "kind",
+    pre = spans.select(
+        "doc_id", "page", "total_pages", "offset", "seq",
         # text blob: text/heading span texts joined in (offset, seq)
         # order; null text → "" (reference joins raw .text values)
         F.when(is_textish, txt).alias("f_text"),
@@ -524,7 +553,8 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
         F.when(is_annot, F.length(txt)).otherwise(0).alias("w_annot_len"),
     )
 
-    grouped = pre.groupBy("doc_id", "page").agg(
+    pg = pre.groupBy("doc_id", "page").agg(
+        F.max("total_pages").alias("total_pages"),
         _joined_family("f_text").alias("text"),
         _joined_family("f_table").alias("table_content"),
         F.sum("w_is_table").alias("n_tables"),
@@ -536,34 +566,6 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
         F.sum("w_is_annot").alias("n_annots"),
         F.sum("w_table_len").alias("table_text_len"),
         F.sum("w_annot_len").alias("annot_text_len"),
-    )
-
-    # page skeleton 1..total_pages per doc (empty pages exist)
-    totals = valid.groupBy("doc_id").agg(
-        (
-            F.sum(F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)) + 1
-        ).cast("int").alias("total_pages")
-    )
-    skeleton = totals.select(
-        "doc_id",
-        "total_pages",
-        F.explode(F.sequence(F.lit(1), F.col("total_pages"))).alias("page"),
-    )
-
-    pg = skeleton.join(grouped, ["doc_id", "page"], "left").fillna(
-        {
-            "text": "",
-            "table_content": "",
-            "image_content": "",
-            "layout_content": "",
-            "annot_content": "",
-            "n_tables": 0,
-            "n_images": 0,
-            "n_layout": 0,
-            "n_annots": 0,
-            "table_text_len": 0,
-            "annot_text_len": 0,
-        }
     )
 
     parts = F.array(

@@ -2,19 +2,20 @@
 ``parsers/section/*`` (SURVEY.md §2 J2/J3/J5, W1/W5, F7/F8/F11, A10,
 X21-X25).
 
-Dataflow (all shuffles keyed on ``doc_id``):
+Dataflow (all shuffles keyed on ``doc_id``, no join before W5):
 
-1. W1: TOC entry page ranges via ``lead(page)`` per doc; the last entry's
-   range is open-ended (NULL end), because every ``pages`` row already
-   lies within 1..total_pages (``pages_df``'s page skeleton).
-2. J2: range join entries×pages (``page >= start AND (end IS NULL OR
-   page <= end)``) → per-entry
-   content assembled with the PAGE BREAK sentinel, in page order, via
+1. W1/J2/J3/J5: one doc_id window over pages ∪ valid TOC entries ∪
+   metadata rows, ordered by page, gives each page its owning entry (the
+   W1 ranges of the page-ordered entries tile [p₁, ∞)), whether it is
+   uncovered, and whether it is an existing section page.
+2. J2: one ``groupBy(doc_id, owner)`` assembles each entry's content
+   with the PAGE BREAK sentinel, in page order, via
    ``array_sort(collect_list(...))`` — no per-doc global sort.
-3. J3: interval anti-join → uncovered pages → per-page sections (heading
-   detection = native strategy-registry Column exprs, operators/headings).
-4. J5: anti-join remaining pages → content-based sections (natural-heading
-   state machine as a pandas UDF returning (title, content) pairs).
+3. J3: uncovered pages → per-page sections (heading detection = native
+   strategy-registry Column exprs, operators/headings).
+4. J5: remaining substantial pages → content-based sections
+   (natural-heading state machine as a pandas UDF returning (title,
+   content) pairs), in the same ``explode`` as the per-page sections.
 5. W5: per-doc final ordering by (page, section_id, pass, intra) —
    ``row_number`` per doc, never a global sort.
 
@@ -38,7 +39,12 @@ from pyspark.sql.types import (
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import headings
-from pdf_parser_spark.operators.exprs import non_blank, py_strip
+from pdf_parser_spark.operators.exprs import (
+    non_blank,
+    py_strip,
+    section_level,
+    section_parent,
+)
 from pdf_parser_spark.oracle import refsem
 
 PAGE_BREAK = "\n\n=== PAGE BREAK ===\n\n"
@@ -59,7 +65,7 @@ def _content_sections_udf(text: pd.Series, page: pd.Series) -> pd.Series:
     (section_parser.py:256-369) → (title, content) pairs."""
     return pd.Series(
         [
-            refsem.content_section_pairs(t or "", int(p))
+            [] if t is None else refsem.content_section_pairs(t, int(p))
             for t, p in zip(text, page)
         ]
     )
@@ -84,11 +90,6 @@ def _page_section_tags(content: F.Column) -> F.Column:
     return F.filter(arr, lambda x: x.isNotNull())
 
 
-def _in_range(page: F.Column, start: F.Column, end: F.Column) -> F.Column:
-    """``page`` within [start, end]; a NULL ``end`` is open-ended."""
-    return (page >= start) & (end.isNull() | (page <= end))
-
-
 def sections_preorder_df(
     pages: DataFrame,
     toc: DataFrame,
@@ -98,187 +99,254 @@ def sections_preorder_df(
 ) -> DataFrame:
     """Section assembly before the W5 ordering: the union of the TOC,
     page and content sections (SECTIONS_OUT columns without ``order``,
-    plus ``pass_rank`` and ``intra_order``; the page sections' ``full_path``
-    is NULL until ``sections_df`` derives it).  ``run_pipeline`` writes it
-    as its ``sections_preorder`` stage, which ``sections_df`` orders.
+    plus ``pass_rank``, ``intra_order`` and ``copy_no``, which numbers
+    the copies of a duplicated doc_id's section; the page sections'
+    ``full_path`` is NULL until ``sections_df`` derives it).
+    ``run_pipeline`` writes it as its ``sections_preorder`` stage, which
+    ``sections_df`` orders.
+
+    No join: the pages, the valid TOC entries and the keyed metadata
+    rows are shuffled on doc_id into one window ordered by page
+    (``_assign_pages``), once for the TOC sections and once for the
+    page and content sections.  The toc's ``entry_order`` is page order
+    (``toc_entries_df`` numbers entries by page first), which the W1
+    ranges below rely on.
 
     ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
     confidence builders (default: the reference's three strategies) —
     the pluggable heading-detection extension point, mirroring
     HeadingDetector.add_strategy (heading_strategies.py:211-217) but
     fully JVM-side."""
-    # ---- W1: entry i covers [page_i, page_{i+1}-1] ---------------------
-    # (toc_processor.py:59-75; section_parser.py:163-167).  The last
-    # entry runs to total_pages; every pages row lies within it, so its
-    # end stays NULL (open) and no per-doc page total is joined in
-    valid_toc = toc.filter(F.col("page") > 0)
-    ranges = valid_toc.withColumn(
-        "end_page",
-        F.lead("page").over(
-            Window.partitionBy("doc_id").orderBy("entry_order")
-        ) - 1,
+    rows = _assign_pages(pages, toc, metadata, cfg)
+    return _toc_sections(rows).unionByName(
+        _page_sections(rows, heading_registry)
     )
 
-    # ---- J2: TOC sections with range-joined content --------------------
-    # comprehensive_content_range clamps end to total (page_manager.py:53-67):
-    # no pages row lies past total_pages, so the join itself clamps
-    rng = ranges.select(
+
+def _assign_pages(
+    pages: DataFrame,
+    toc: DataFrame,
+    metadata: DataFrame,
+    cfg: PipelineConfig,
+) -> DataFrame:
+    """Pages ∪ valid TOC entries ∪ keyed metadata rows, with each page's
+    owning entry and pass flags.
+
+    W1 (toc_processor.py:59-75; section_parser.py:163-167): entry i
+    covers [page_i, page_{i+1} - 1] and the last entry runs to
+    total_pages.  In page order these ranges tile [p_1, ∞), so
+    - J2: a page's owner is the last entry, in entry_order, whose page
+      is <= the page (a running max); an entry that owns no page (the
+      next entry shares its page, or it lies past the last page) gets
+      empty content;
+    - J3: the uncovered pages are those before the doc's first valid
+      entry page (no owner);
+    - J5: the "existing" pages are the entry pages plus the uncovered
+      pages with content.
+    Rows of a NULL doc_id belong to no document (a NULL key matches
+    nothing): their pages are uncovered, none is existing, and their
+    entries get empty content."""
+    keyed = F.col("doc_id").isNotNull()
+    entries = toc.filter(F.col("page") > 0).select(
         "doc_id",
-        "entry_order",
-        F.col("page").alias("start_p"),
-        "end_page",
+        "page",
+        F.col("entry_order").alias("_entry"),
+        F.struct(
+            "doc_title", "section_id", "title", "page", "tags", "entry_order"
+        ).alias("_e"),
     )
-    pg = pages.select(
-        F.col("doc_id").alias("pg_doc"), "page", "content"
+    rows = (
+        entries.unionByName(
+            pages.select("doc_id", "page", "text", "content"),
+            allowMissingColumns=True,
+        )
+        .unionByName(
+            metadata.filter(keyed).select(
+                "doc_id", F.struct("doc_title").alias("_meta")
+            ),
+            allowMissingColumns=True,
+        )
     )
-    joined = rng.join(
-        pg,
-        (rng["doc_id"] == pg["pg_doc"])
-        & _in_range(pg["page"], rng["start_p"], rng["end_page"]),
-        "left",
+    is_entry = F.col("_entry").isNotNull()
+    # metadata rows (page NULL) sort first; entries before the pages of
+    # their own page
+    upto = (
+        Window.partitionBy("doc_id")
+        .orderBy("page", ~is_entry, "_entry")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    entry_content = joined.groupBy("doc_id", "entry_order").agg(
+    rows = rows.select(
+        "*",
+        F.max("_entry").over(upto).alias("_owner"),
+        F.max(F.when(is_entry, F.col("page"))).over(upto).alias("_entry_p"),
+        F.collect_list("_meta").over(Window.partitionBy("doc_id"))
+        .alias("_metas"),
+    ).filter(F.col("_meta").isNull())
+    is_page = ~is_entry
+    owner = F.when(keyed, F.col("_owner"))
+    content = F.coalesce("content", F.lit(""))
+    page_section = is_page & owner.isNull() & non_blank(content)
+    is_entry_page = F.col("_entry_p").eqNullSafe(F.col("page"))
+    existing = keyed & (is_entry_page | page_section)
+    return rows.select(
+        "doc_id",
+        "page",
+        "content",
+        "_e",
+        "_metas",
+        # J2 group: an entry's own order, or a covered page's owner
+        F.when(is_entry, F.col("_entry")).otherwise(owner).alias("_group"),
+        page_section.alias("_page_section"),
+        (
+            is_page
+            & ~existing
+            & (F.col("page") > 0)
+            & (
+                F.length(py_strip(F.coalesce("text", F.lit(""))))
+                > cfg.substantial_content_len
+            )
+        ).alias("_content_candidate"),
+        "text",
+    )
+
+
+def _toc_sections(rows: DataFrame) -> DataFrame:
+    """J2: each entry's content is its owned pages in page order, joined
+    with the PAGE BREAK sentinel (comprehensive_content_range,
+    page_manager.py:53-67).  One ``groupBy(doc_id, owner)`` over the
+    rows ``_assign_pages`` tags.
+
+    Each copy of an entry (a duplicated doc_id lists the same entry
+    twice) has a W1 range of its own; the copies share their page, so
+    all but the last cover no page.  Every range that covers no page
+    adds one empty part to the content."""
+    keyed = F.col("doc_id").isNotNull()
+    page_part = F.struct(F.col("page"), F.col("content"))
+    empty_part = F.struct(
+        F.lit(None).cast("int").alias("page"),
+        F.lit(None).cast("string").alias("content"),
+    )
+    grouped = (
+        rows.filter(F.col("_group").isNotNull())
+        .groupBy("doc_id", "_group")
+        .agg(
+            F.collect_list("_e").alias("_copies"),
+            F.collect_list(F.when(F.col("_e").isNull(), page_part))
+            .alias("_parts"),
+        )
+    )
+    n_empty = F.size("_copies") - F.when(
+        F.size("_parts") > 0, F.lit(1)
+    ).otherwise(F.lit(0))
+    parts = F.array_sort(
+        F.concat(F.array_repeat(empty_part, n_empty), F.col("_parts"))
+    )
+    entry_content = F.when(
+        keyed,
         py_strip(
             F.array_join(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("page", "content"))
-                    ),
-                    lambda s: F.coalesce(s["content"], F.lit("")),
+                    parts, lambda s: F.coalesce(s["content"], F.lit(""))
                 ),
                 PAGE_BREAK,
             )
-        ).alias("content")
-    )
-    sid = F.coalesce(F.col("section_id"), F.lit(""))
-    toc_sections = (
-        ranges.join(entry_content, ["doc_id", "entry_order"], "left")
-        .select(
-            "doc_id",
-            F.col("doc_title").alias("doc_title"),
-            sid.alias("section_id"),
-            F.coalesce("title", F.lit("")).alias("title"),
-            # full_path = f"{sid} {title}".strip() (section_builder.py:77)
-            py_strip(
-                F.concat(sid, F.lit(" "), F.coalesce("title", F.lit("")))
-            ).alias("full_path"),
-            "page",
-            # level/parent RE-derived from the final section_id string
-            # (section_builder.py:127-146)
-            F.when(sid == "", F.lit(1))
-            .otherwise(F.size(F.split(sid, r"\.", -1)))
-            .cast("int")
-            .alias("level"),
-            F.when(
-                sid.contains("."),
-                F.array_join(
-                    F.slice(
-                        F.split(sid, r"\.", -1),
-                        F.lit(1),
-                        F.size(F.split(sid, r"\.", -1)) - 1,
-                    ),
-                    ".",
-                ),
-            ).alias("parent_id"),
-            F.coalesce("content", F.lit("")).alias("content"),
-            F.coalesce("tags", F.array().cast("array<string>")).alias("tags"),
-            F.lit(0).alias("pass_rank"),
-            F.col("entry_order").alias("intra_order"),
-        )
-    )
-
-    # ---- J3: uncovered pages → per-page sections ------------------------
-    # covered intervals use end = max(end, start) (toc_processor.py:74);
-    # the last stays open-ended
-    intervals = ranges.select(
-        F.col("doc_id").alias("iv_doc"),
-        F.col("page").alias("iv_start"),
-        F.when(
-            F.col("end_page").isNotNull(), F.greatest("end_page", "page")
-        ).alias("iv_end"),
-    )
-    uncovered = pages.join(
-        intervals,
-        (pages["doc_id"] == intervals["iv_doc"])
-        & _in_range(
-            pages["page"], intervals["iv_start"], intervals["iv_end"]
         ),
-        "left_anti",
-    ).filter(non_blank(F.coalesce("content", F.lit(""))))
-    # full_path is derived by sections_df, after the pre-order table's
-    # read-back: referencing `title` twice in one projection makes
-    # CollapseProject inline the (regex-heavy) detection expression
-    # twice — read back it is a cheap concat over the materialized column
-    page_sections = (
-        uncovered.withColumn(
-            "title",
-            headings.detect_enhanced_heading_expr(
-                F.col("content"), F.col("page"), heading_registry
-            ),
-        )
-        .select(
-            "doc_id",
-            F.concat(F.lit("Page-"), F.col("page")).alias("section_id"),
-            "title",
-            F.lit(None).cast("string").alias("full_path"),
-            "page",
-            F.lit(1).alias("level"),
-            F.lit(None).cast("string").alias("parent_id"),
-            F.coalesce("content", F.lit("")).alias("content"),
-            _page_section_tags(F.col("content")).alias("tags"),
-            F.lit(1).alias("pass_rank"),
-            F.lit(0).alias("intra_order"),
-        )
+    ).otherwise(F.lit(""))
+    e = grouped.select(
+        "doc_id",
+        entry_content.alias("content"),
+        F.posexplode("_copies").alias("copy_no", "e"),
+    ).select("doc_id", "content", "copy_no", "e.*")
+    sid = F.coalesce(F.col("section_id"), F.lit(""))
+    return e.select(
+        "doc_id",
+        "doc_title",
+        sid.alias("section_id"),
+        F.coalesce("title", F.lit("")).alias("title"),
+        # full_path = f"{sid} {title}".strip() (section_builder.py:77)
+        py_strip(
+            F.concat(sid, F.lit(" "), F.coalesce("title", F.lit("")))
+        ).alias("full_path"),
+        "page",
+        # level/parent RE-derived from the final section_id string
+        # (section_builder.py:127-146)
+        section_level(F.nullif(sid, F.lit(""))).alias("level"),
+        section_parent(sid).alias("parent_id"),
+        "content",
+        F.coalesce("tags", F.array().cast("array<string>")).alias("tags"),
+        F.lit(0).alias("pass_rank"),
+        F.col("entry_order").alias("intra_order"),
+        "copy_no",
     )
 
-    # ---- J5 + F7/F8: content-based sections on remaining pages ----------
-    # toc-section pages == valid TOC entry pages, so read them from the
-    # (written) toc table instead of recomputing the content-assembly
-    # join; page-section pages == the uncovered pages' keys, with no
-    # heading detection
-    existing = (
-        valid_toc.select("doc_id", "page")
-        .unionByName(uncovered.select("doc_id", "page"))
-        .distinct()
+
+def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
+    """J3 per-page sections (heading detection = native strategy-registry
+    Column exprs, operators/headings) and J5 content-based sections
+    (natural-heading state machine as a pandas UDF returning (title,
+    content) pairs; only the content candidates' text crosses into it),
+    one ``explode`` over both, then J6: one row per metadata row of the
+    doc, as a left join on doc_id gives."""
+    pairs = _content_sections_udf(
+        F.when(F.col("_content_candidate"), F.col("text")), F.col("page")
     )
-    remaining = pages.join(existing, ["doc_id", "page"], "left_anti").filter(
-        (F.col("page") > 0)
-        & (
-            F.length(py_strip(F.coalesce("text", F.lit(""))))
-            > cfg.substantial_content_len
-        )
+    content = F.coalesce("content", F.lit(""))
+    page_section = F.struct(
+        headings.detect_enhanced_heading_expr(
+            F.col("content"), F.col("page"), heading_registry
+        ).alias("title"),
+        content.alias("content"),
+        F.lit(1).alias("pass_rank"),
+        F.lit(0).alias("intra_order"),
     )
-    content_sections = (
-        remaining.select(
-            "doc_id",
-            "page",
-            F.posexplode(_content_sections_udf("text", "page")).alias(
-                "intra_order", "pair"
+    items = F.concat(
+        F.when(F.col("_page_section"), F.array(page_section)).otherwise(
+            F.array()
+        ),
+        F.transform(
+            pairs,
+            lambda p, i: F.struct(
+                p["title"].alias("title"),
+                p["content"].alias("content"),
+                F.lit(2).alias("pass_rank"),
+                i.alias("intra_order"),
             ),
-        )
+        ),
+    )
+    items = (
+        rows.filter(F.col("_page_section") | F.col("_content_candidate"))
+        .select("doc_id", "page", "_metas", F.explode(items).alias("s"))
         .select(
             "doc_id",
-            F.concat(F.lit("Page-"), F.col("page")).alias("section_id"),
-            F.col("pair.title").alias("title"),
-            F.concat(
-                F.lit("Page-"), F.col("page"), F.lit(" "),
-                F.col("pair.title"),
-            ).alias("full_path"),
             "page",
-            F.lit(1).alias("level"),
-            F.lit(None).cast("string").alias("parent_id"),
-            F.col("pair.content").alias("content"),
-            _page_section_tags(F.col("pair.content")).alias("tags"),
-            F.lit(2).alias("pass_rank"),
-            "intra_order",
+            "s.*",
+            F.posexplode_outer("_metas").alias("copy_no", "m"),
         )
     )
-
-    # ---- U1: union; J6 doc_title joined once for both page passes ------
-    page_passes = page_sections.unionByName(content_sections).join(
-        metadata.select("doc_id", "doc_title"), "doc_id", "left"
+    section_id = F.concat(F.lit("Page-"), F.col("page"))
+    # the page sections' full_path is derived by sections_df, after the
+    # pre-order table's read-back: referencing `title` twice in one
+    # projection makes CollapseProject inline the (regex-heavy)
+    # detection expression twice — read back it is a cheap concat over
+    # the materialized column
+    return items.select(
+        "doc_id",
+        F.col("m.doc_title").alias("doc_title"),
+        section_id.alias("section_id"),
+        "title",
+        F.when(
+            F.col("pass_rank") == 2,
+            F.concat(section_id, F.lit(" "), F.col("title")),
+        ).alias("full_path"),
+        "page",
+        F.lit(1).alias("level"),
+        F.lit(None).cast("string").alias("parent_id"),
+        "content",
+        _page_section_tags(F.col("content")).alias("tags"),
+        "pass_rank",
+        "intra_order",
+        F.coalesce("copy_no", F.lit(0)).alias("copy_no"),
     )
-    return toc_sections.unionByName(page_passes)
 
 
 def sections_df(preorder: DataFrame) -> DataFrame:
@@ -291,8 +359,10 @@ def sections_df(preorder: DataFrame) -> DataFrame:
     bound on exactly that sort.  So ``order`` is computed on a skinny
     projection of the (written) pre-order table and re-attached by the
     UNIQUE section identity (doc_id, page, section_id, pass_rank,
-    intra_order — toc rows have unique entry_order, page rows unique
-    page, content rows unique (page, intra_order)); the SHUFFLE_HASH
+    intra_order, copy_no — toc rows have unique entry_order, page rows
+    unique page, content rows unique (page, intra_order), and the copies
+    of a duplicated doc_id's section unique copy_no), so each pre-order
+    row gets exactly one ``order``; the SHUFFLE_HASH
     hint keeps the big side a hash probe — a sort-merge join would
     re-sort the strings and give the win straight back.  Both join
     branches read the table, so the heavy lineage runs once."""
@@ -301,8 +371,11 @@ def sections_df(preorder: DataFrame) -> DataFrame:
         F.coalesce("section_id", F.lit("")),
         "pass_rank",
         "intra_order",
+        "copy_no",
     )
-    key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
+    key = [
+        "doc_id", "page", "section_id", "pass_rank", "intra_order", "copy_no"
+    ]
     skinny = preorder.select(*key).withColumn(
         "order", F.row_number().over(w_order)
     )
@@ -316,6 +389,6 @@ def sections_df(preorder: DataFrame) -> DataFrame:
         if c == "full_path"
         else c
         for c in preorder.columns
-        if c not in ("pass_rank", "intra_order")
+        if c not in ("pass_rank", "intra_order", "copy_no")
     ] + ["order"]
     return preorder.join(skinny.hint("SHUFFLE_HASH"), key).select(*out_cols)

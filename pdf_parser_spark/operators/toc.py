@@ -11,19 +11,20 @@ Architecture (one JVM↔Python crossing, the rest native — SURVEY.md §4d):
    UDF over line batches" plan of SURVEY.md §2.10.  The hot full-corpus
    path (pattern matching) is vectorized; per-row Python touches only the
    matched-candidate minority.
-3. Three accept passes (primary / enhanced / fallback) as native filters,
-   anti-joins (J4: containment + lower(title) dedup) and a first-wins
-   window, then the final (page, title-prefix) dedup window (W3) and the
-   1..9999 sanity filter (F9) — all native.
+3. Three accept passes (primary / enhanced / fallback) as native
+   predicates over each line, the J4 guards (containment + lower(title)
+   dedup) as array predicates over the doc's primary paths and titles,
+   and a first-wins window, then the final (page, title-prefix) dedup
+   window (W3) and the 1..9999 sanity filter (F9) — all native.
 
 Steps 1-2 are ``toc_features_df`` and step 3 is ``toc_entries_df``: two
 stages of the pipeline's graph (``toc_feats`` → ``toc``).  The features
 need only ``pages``, so they run beside the metadata stage; the entries
 read the written features and the metadata (J6 doc titles).
 
-Every shuffle keys on ``doc_id`` (the bucketing key of the input layout),
-so at cluster scale the anti-joins and windows co-locate with the rest of
-the per-doc pipeline and AQE reuses one exchange.
+``toc_entries_df`` shuffles once, on ``doc_id`` (the bucketing key of
+the input layout), and plans no join: every window chains over that one
+exchange, and the J6 doc titles ride along as tagged metadata rows.
 """
 
 from __future__ import annotations
@@ -234,10 +235,18 @@ def toc_entries_df(
     the ``toc_features_df`` lines.
 
     Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
-    per doc — consumed by the section stage's lead() boundaries W1).
-    The primary pass is a filter over ``feats``, re-read by its three
-    consumers (the union and the two enhanced-pass anti-joins).
-    """
+    per doc — consumed by the section stage's W1 ranges).
+
+    One pass, no join: the feature lines some battery matched and the
+    keyed metadata rows are shuffled once on doc_id, and every window
+    below chains over that exchange.  The first, unordered doc_id window collects each doc's
+    primary full paths and lowercased titles (J4) and its metadata
+    titles (J6); each line then yields its accepted candidates of the
+    three passes through one ``explode``.  ``accepted_primary`` is
+    evaluated once per line.  A NULL doc_id matches nothing, as a join
+    key would: its enhanced lines are never dropped by J4 and its
+    entries get a NULL doc_title."""
+    keyed = F.col("doc_id").isNotNull()
     accepted_primary = (
         F.col("prim_matched")
         & (F.col("prim_page") > 0)
@@ -248,20 +257,31 @@ def toc_entries_df(
             refsem.TECHNICAL_PATTERNS,
         )
     )
-
-    primary = feats.filter(accepted_primary).select(
-        "doc_id",
-        "src_page",
-        "line_no",
-        F.col("prim_sid").alias("section_id"),
-        F.col("prim_title").alias("title"),
-        F.col("prim_page").cast("int").alias("page"),
-        F.col("stripped").alias("full_path"),
-        F.lit(0).alias("pass_rank"),
+    meta_rows = metadata.filter(keyed).select(
+        "doc_id", F.struct("doc_title").alias("_meta")
+    )
+    w_doc = Window.partitionBy("doc_id")
+    prim = F.col("_prim")
+    # a line none of the three batteries matched yields no entry and
+    # shadows none, so it stays out of the shuffle
+    matched = F.col("prim_matched") | F.col("enh_matched") | F.col("pot_ok")
+    lines = (
+        feats.filter(matched)
+        .withColumn("_prim", accepted_primary)
+        .unionByName(meta_rows, allowMissingColumns=True)
+        .select(
+            "*",
+            F.collect_list(F.when(prim & keyed, F.col("stripped")))
+            .over(w_doc).alias("_prim_paths"),
+            F.collect_set(F.when(prim & keyed, F.lower("prim_title")))
+            .over(w_doc).alias("_prim_titles"),
+            F.collect_list("_meta").over(w_doc).alias("_metas"),
+        )
+        .filter(F.col("_meta").isNull())
     )
 
     # ---- enhanced pass (toc_parser.py:381-470) -------------------------
-    enh = feats.filter(
+    enh_candidate = (
         F.col("enh_matched")
         & F.col("enh_page").between(1, cfg.max_valid_page)
         & (F.length(py_strip(F.col("enh_title"))) >= 5)
@@ -271,54 +291,30 @@ def toc_entries_df(
             F.col("enh_title"), refsem.TOC_GENUINE_KEYWORDS
         )
     )
-    # J4a: skip lines already contained in any primary full_path
-    prim_paths = primary.select(
-        F.col("doc_id").alias("p_doc"), F.col("full_path").alias("p_path")
-    )
-    enh = enh.join(
-        prim_paths,
-        (enh["doc_id"] == prim_paths["p_doc"])
-        & F.contains(prim_paths["p_path"], enh["stripped"]),
-        "left_anti",
-    )
+    # J4a: skip lines already contained in any primary full_path;
     # J4b: titles already present among primary entries (lowercased)
-    prim_titles = primary.select(
-        F.col("doc_id").alias("t_doc"), F.lower("title").alias("t_title")
-    ).distinct()
-    enh = enh.join(
-        prim_titles,
-        (enh["doc_id"] == prim_titles["t_doc"])
-        & (F.lower(enh["enh_title"]) == prim_titles["t_title"]),
-        "left_anti",
+    shadowed = F.exists(
+        "_prim_paths", lambda p: p.contains(F.col("stripped"))
+    ) | F.array_contains("_prim_titles", F.lower("enh_title"))
+    lines = lines.withColumn(
+        "_enh_key",
+        F.when(
+            enh_candidate & ~F.coalesce(shadowed, F.lit(False)),
+            F.lower("enh_title"),
+        ),
     )
     # first-wins among surviving enhanced candidates, in line order
-    w_first = Window.partitionBy("doc_id", F.lower("enh_title")).orderBy(
+    w_first = Window.partitionBy("doc_id", "_enh_key").orderBy(
         "src_page", "line_no"
     )
-    enhanced = (
-        enh.withColumn("rn", F.row_number().over(w_first))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "src_page",
-            "line_no",
-            # dict.get default only fires when the group is ABSENT from the
-            # pattern, not when None (toc_parser.py:451-454 quirk).
-            F.when(F.col("enh_has_sid"), F.col("enh_sid"))
-            .otherwise(F.concat(F.lit("Section-"), F.col("enh_page")))
-            .alias("section_id"),
-            F.col("enh_title").alias("title"),
-            F.col("enh_page").cast("int").alias("page"),
-            F.col("stripped").alias("full_path"),
-            F.lit(1).alias("pass_rank"),
-            # level/parent derive from the RAW group (may be null)
-            F.col("enh_sid").alias("_raw_sid"),
-        )
+    lines = lines.withColumn(
+        "_enh_first",
+        F.col("_enh_key").isNotNull() & (F.row_number().over(w_first) == 1),
     )
 
     # ---- fallback pass (toc_parser.py:620-659) -------------------------
-    fallback = feats.filter(
-        ~accepted_primary
+    fallback = (
+        ~prim
         & F.col("pot_ok")
         & (F.col("pot_conf") >= cfg.fallback_confidence)
         & ~is_technical_data(F.col("pot_title"), refsem.TECHNICAL_PATTERNS)
@@ -328,22 +324,48 @@ def toc_entries_df(
         & ~F.lower(F.col("pot_title")).rlike(
             r"^(error|data object|byte|bit)"
         )
-    ).select(
+    )
+
+    # ---- each line's accepted candidates, in pass order ----------------
+    # level/parent derive from the RAW section-id group (_raw_sid)
+    def candidate(pass_rank, section_id, title, page, raw_sid):
+        return F.struct(
+            section_id.alias("section_id"),
+            title.alias("title"),
+            page.cast("int").alias("page"),
+            F.lit(pass_rank).alias("pass_rank"),
+            raw_sid.alias("_raw_sid"),
+        )
+
+    no_sid = F.lit(None).cast("string")
+    candidates = F.array(
+        F.when(prim, candidate(
+            0, F.col("prim_sid"), F.col("prim_title"), F.col("prim_page"),
+            F.col("prim_sid"),
+        )),
+        F.when(F.col("_enh_first"), candidate(
+            1,
+            # dict.get default only fires when the group is ABSENT from the
+            # pattern, not when None (toc_parser.py:451-454 quirk).
+            F.when(F.col("enh_has_sid"), F.col("enh_sid")).otherwise(
+                F.concat(F.lit("Section-"), F.col("enh_page"))
+            ),
+            F.col("enh_title"), F.col("enh_page"), F.col("enh_sid"),
+        )),
+        F.when(fallback, candidate(
+            2, no_sid, F.col("pot_title"), F.col("pot_page"), no_sid,
+        )),
+    )
+    allp = lines.select(
         "doc_id",
         "src_page",
         "line_no",
-        F.lit(None).cast("string").alias("section_id"),
-        F.col("pot_title").alias("title"),
-        F.col("pot_page").cast("int").alias("page"),
         F.col("stripped").alias("full_path"),
-        F.lit(2).alias("pass_rank"),
-    )
+        "_metas",
+        F.explode(F.filter(candidates, lambda c: c.isNotNull())).alias("c"),
+    ).select("*", "c.*").drop("c")
 
-    # ---- union, derive level/parent/tags, dedup (W3), sanity (F9) ------
-    primary = primary.withColumn("_raw_sid", F.col("section_id"))
-    fallback = fallback.withColumn("_raw_sid", F.col("section_id"))
-    allp = primary.unionByName(enhanced).unionByName(fallback)
-
+    # ---- derive level/parent/tags, dedup (W3), sanity (F9) -------------
     allp = (
         allp.withColumn("level", section_level(F.col("_raw_sid")))
         .withColumn("parent_id", section_parent(F.col("_raw_sid")))
@@ -372,15 +394,14 @@ def toc_entries_df(
     w_order = Window.partitionBy("doc_id").orderBy(
         "page", "title", "pass_rank", "src_page", "line_no"
     )
-    entries = deduped.withColumn(
-        "entry_order", F.row_number().over(w_order)
-    ).drop("src_page", "line_no", "pass_rank")
-
-    # J6: doc_title propagation from the metadata step (main.py:204-210)
-    meta = metadata.select("doc_id", "doc_title")
-    return entries.join(meta, "doc_id", "left").select(
+    # J6: doc_title propagation from the metadata step (main.py:204-210),
+    # one entry row per metadata row of the doc, as a left join gives
+    entries = deduped.withColumn("entry_order", F.row_number().over(w_order))
+    return entries.select(
+        "*", F.explode_outer("_metas").alias("_m")
+    ).select(
         "doc_id",
-        "doc_title",
+        F.col("_m.doc_title").alias("doc_title"),
         "section_id",
         "title",
         "page",

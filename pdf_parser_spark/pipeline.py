@@ -28,10 +28,12 @@ The operator-internal stages (``html_rewrite``, ``toc_feats``,
 ``sections_preorder``) land under ``<stage_ref>/_internal/``.
 
 Scale: the input is read with its on-disk doc_id-range layout
-(fixtures/gen.write_parquet mirrors the production Iceberg bucketing);
-every per-doc stage shuffles on doc_id only, so AQE coalesces them onto
-one exchange, and mega-doc skew is spread by the (doc_id, page) windows
-inside pages.span_sequence_df (SURVEY.md §4 P6).
+(fixtures/gen.write_parquet mirrors the production Iceberg bucketing).
+Every per-doc stage shuffles on doc_id only and plans no join, so none
+runs a broadcast side job: pages, metadata, toc, sections_preorder and
+metrics are one Spark job each.  Mega-doc skew in spans_out goes
+through pages.span_sequence_skew_df's two-phase chunked path (SURVEY.md
+§4 P6).
 """
 
 from __future__ import annotations

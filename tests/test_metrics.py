@@ -60,9 +60,8 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
 
     Metrics reads the pre-order sections, so the duplicated id's
     section counts are those of its pre-order rows (48).  ``sections``
-    holds more rows for it: W5's re-attach join on the section key
-    squares a key that the two copies share (duplicate doc_ids are a
-    known open edge)."""
+    holds exactly those rows: W5 re-attaches each copy of a section by
+    its ``copy_no``, so the two copies do not match each other."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from pdf_parser_spark.fixtures.gen import fixture_corpus, to_rows
@@ -97,6 +96,7 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
         spark, tables.internal_ref(str(tmp_path), "sections_preorder")
     )
     assert preorder.filter(preorder.doc_id == dup).count() == 48
+    assert result.sections.filter(result.sections.doc_id == dup).count() == 48
     assert {
         (r.metadata_status, r.total_toc_entries, r.total_pages,
          r.toc_covered_pages, r.sections_parsed, r.toc_sections,

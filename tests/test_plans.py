@@ -244,11 +244,16 @@ def test_ivf_partitioned_scan_prunes_partitions(spark, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def written_pipeline(docs_df, tmp_path_factory):
+def stage_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("stages"))
+
+
+@pytest.fixture(scope="module")
+def written_pipeline(docs_df, stage_dir):
     """One pipeline run: its frames read the written stage tables."""
     from pdf_parser_spark.pipeline import run_pipeline
 
-    return run_pipeline(docs_df, str(tmp_path_factory.mktemp("stages")))
+    return run_pipeline(docs_df, stage_dir)
 
 
 def test_metrics_is_one_groupby_without_joins(docs_df, written_pipeline):
@@ -277,3 +282,50 @@ def test_sections_preorder_needs_no_page_totals(written_pipeline):
     res = written_pipeline
     plan = _plan(S.sections_preorder_df(res.pages, res.toc, res.metadata))
     assert "total_pages" not in plan
+
+
+@pytest.mark.parametrize("aqe", [False, True])
+def test_per_doc_stages_plan_without_broadcast(
+    spark, docs_df, stage_dir, written_pipeline, aqe
+):
+    """pages, metadata, toc and sections_preorder each run as one job:
+    their plans (over the written stage tables, as the graph plans them)
+    hold no join, so no broadcast exchange — with AQE off each broadcast
+    is a side job of its own.  pages, metadata and toc shuffle once, and
+    pages explodes the span array once."""
+    from pdf_parser_spark.pipeline import stage_graph
+    from pdf_parser_spark.sources import tables
+
+    res = written_pipeline
+    frames = {
+        "pages": res.pages,
+        "metadata": res.metadata,
+        "toc": res.toc,
+        "toc_feats": tables.read_table(
+            spark, tables.internal_ref(stage_dir, "toc_feats")
+        ),
+    }
+    graph = {st.name: st for st in stage_graph(docs_df, stage_dir)}
+    stages = ("pages", "metadata", "toc", "sections_preorder")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(aqe).lower())
+    try:
+        plans = {
+            name: _plan(graph[name].plan(
+                *[frames[n] for n in graph[name].inputs]
+            ))
+            for name in stages
+        }
+    finally:
+        spark.conf.set(key, prev)
+    for name, plan in plans.items():
+        for node in ("BroadcastExchange", "BroadcastHashJoin",
+                     "BroadcastNestedLoopJoin", "Join"):
+            assert node not in plan, (name, node)
+    for name in ("pages", "metadata", "toc"):
+        assert plans[name].count("Exchange") == 1, name
+    import re
+
+    span_generates = re.findall(r"Generate \w+\(spans#", plans["pages"])
+    assert len(span_generates) == 1

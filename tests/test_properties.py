@@ -328,3 +328,182 @@ def test_toc_covered_pages_fold_matches_oracle(spark, docs):
         for d, (tp, entries) in zip(ids, docs)
     }
     assert got == want
+
+
+# one doc: (page texts, page 1 first — its length is total_pages; TOC
+# entry pages in TOC order — unsorted, duplicated, <= 0 and past
+# total_pages all allowed)
+_PAGE_TEXTS = {
+    "blank": "",
+    "short": "p{} short line",
+    "long": "p{} " + "body text of a substantial page " * 4,
+}
+section_docs = st.tuples(
+    st.lists(st.sampled_from(sorted(_PAGE_TEXTS)), max_size=6),
+    st.lists(st.integers(-2, 9), max_size=5),
+)
+
+
+@settings(max_examples=12, **SETTINGS)
+@given(st.lists(section_docs, min_size=1, max_size=5))
+@example([
+    (["long", "blank", "short", "long"], [3, 1, 3]),
+    ([], [2, 5]),
+    (["long", "long", "short"], []),
+    (["short", "long", "long", "blank"], [7, 2, 2, -1, 0]),
+])
+def test_sections_page_assignment_matches_oracle(spark, docs):
+    """J2/J3/J5: the one-window page assignment of sections_preorder_df
+    gives refsem.parse_sections' sections, in W5 order — each entry's
+    content pages, the per-page sections of the uncovered pages and the
+    content sections of the remaining substantial pages — on entries in
+    any order, TOC docs without pages and paged docs without TOC."""
+    from pdf_parser_spark.operators import sections as S
+
+    ids = [f"d{i}" for i in range(len(docs))]
+    pages_by_doc = {
+        d: [
+            {
+                "page": n, "text": _PAGE_TEXTS[kind].format(n),
+                "tables": [], "images": [], "annotations": [],
+                "layout_lines": [],
+            }
+            for n, kind in enumerate(kinds, 1)
+        ]
+        for d, (kinds, _) in zip(ids, docs)
+    }
+    # entry_order is page order, as toc_entries_df numbers entries
+    entries_by_doc = {
+        d: [
+            {"doc_title": "T", "section_id": f"{i + 1}",
+             "title": f"Entry {i}", "page": p, "tags": []}
+            for i, p in enumerate(entry_pages)
+        ]
+        for d, (_, entry_pages) in zip(ids, docs)
+    }
+    frame = spark.createDataFrame
+    pages = frame(
+        [
+            (d, pg["page"], len(pgs), pg["text"],
+             refsem.comprehensive_page_content(pg))
+            for d, pgs in pages_by_doc.items()
+            for pg in pgs
+        ],
+        "doc_id STRING, page INT, total_pages INT, text STRING, "
+        "content STRING",
+    )
+    toc = frame(
+        [
+            (d, e["doc_title"], e["section_id"], e["title"], e["page"], 1,
+             None, e["title"], e["tags"], rank + 1)
+            for d, entries in entries_by_doc.items()
+            for rank, e in enumerate(
+                sorted(entries, key=lambda e: e["page"])
+            )
+        ],
+        "doc_id STRING, doc_title STRING, section_id STRING, "
+        "title STRING, page INT, level INT, parent_id STRING, "
+        "full_path STRING, tags ARRAY<STRING>, entry_order INT",
+    )
+    meta = frame([(d, "T") for d in ids], "doc_id STRING, doc_title STRING")
+
+    fields = ("doc_title", "section_id", "title", "full_path", "page",
+              "level", "parent_id", "content", "tags")
+    got: dict = {}
+    rows = S.sections_df(S.sections_preorder_df(pages, toc, meta)).collect()
+    for r in sorted(rows, key=lambda r: r.order):
+        got.setdefault(r.doc_id, []).append(
+            tuple(tuple(r[f]) if f == "tags" else r[f] for f in fields)
+        )
+    for d in ids:
+        want = [
+            tuple(tuple(s[f]) if f == "tags" else s[f] for f in fields)
+            for s in refsem.parse_sections(
+                pages_by_doc[d], entries_by_doc[d], "T"
+            )
+        ]
+        assert got.get(d, []) == want, d
+
+
+# TOC titles that pass every enhanced-pass and primary-pass filter
+_J4_TITLES = [
+    "Power Delivery Overview",
+    "Cable Interface Requirements",
+    "Message Protocol Section",
+    "USB Connector Appendix",
+]
+_J4_CASES = [str, str.lower, str.upper]
+# one feature line: (doc_id, primary?, title, title case, full path as
+# a list of titles)
+j4_lines = st.tuples(
+    st.sampled_from(["a", "b", None]),
+    st.booleans(),
+    st.integers(0, len(_J4_TITLES) - 1),
+    st.integers(0, len(_J4_CASES) - 1),
+    st.lists(st.integers(0, len(_J4_TITLES) - 1), min_size=1, max_size=2),
+)
+
+
+@settings(max_examples=12, **SETTINGS)
+@given(st.lists(j4_lines, max_size=10))
+@example([
+    ("a", True, 0, 0, [0, 1]),   # primary whose full_path holds title 1
+    ("a", False, 1, 0, [1]),     # contained in it: dropped (J4a)
+    ("a", False, 0, 2, [2]),     # primary title, upper-cased: dropped (J4b)
+    ("b", False, 1, 0, [1]),     # another doc's primary: kept
+    (None, True, 2, 0, [2, 3]),  # a NULL doc_id's primary ...
+    (None, False, 3, 0, [3]),    # ... drops nothing
+    ("b", False, 1, 1, [3]),     # same title as an earlier line: first wins
+])
+def test_toc_j4_drops_exactly_shadowed_enhanced_lines(spark, lines):
+    """J4: an enhanced-pass line is dropped exactly when a primary entry
+    of the same doc has a full_path containing the line (J4a) or a
+    title equal to its title, lowercased (J4b); a NULL doc_id matches no
+    doc, so it never drops a line.  The survivors then keep the first
+    line per lowercased title."""
+    from pdf_parser_spark.operators import toc as T
+
+    def path(parts):
+        return " ".join(_J4_TITLES[i] for i in parts)
+
+    rows = []
+    for ln, (doc, primary, t, case, parts) in enumerate(lines):
+        title = _J4_CASES[case](_J4_TITLES[t])
+        rows.append(
+            (doc, 1, ln, path(parts), primary, 0, "1", title, 1 + ln,
+             not primary, False, None, title, 100 + ln, False)
+        )
+    feats = spark.createDataFrame(
+        rows,
+        "doc_id STRING, src_page INT, line_no INT, stripped STRING, "
+        "prim_matched BOOLEAN, prim_idx INT, prim_sid STRING, "
+        "prim_title STRING, prim_page INT, enh_matched BOOLEAN, "
+        "enh_has_sid BOOLEAN, enh_sid STRING, enh_title STRING, "
+        "enh_page INT, pot_ok BOOLEAN",
+    ).select(
+        "*",
+        F.lit(None).cast("string").alias("pot_title"),
+        F.lit(None).cast("int").alias("pot_page"),
+        F.lit(None).cast("double").alias("pot_conf"),
+    )
+    meta = spark.createDataFrame([], "doc_id STRING, doc_title STRING")
+    got = {
+        (r.doc_id, r.title, r.page)
+        for r in T.toc_entries_df(feats, meta).collect()
+        if r.page >= 100
+    }
+
+    prim = [(doc, path(parts), _J4_TITLES[t].lower())
+            for doc, primary, t, _, parts in lines if primary]
+    want, seen = set(), set()
+    for ln, (doc, primary, t, case, parts) in enumerate(lines):
+        title = _J4_CASES[case](_J4_TITLES[t])
+        shadowed = doc is not None and any(
+            pd_ == doc and (path(parts) in p_path or title.lower() == p_t)
+            for pd_, p_path, p_t in prim
+        )
+        if primary or shadowed or (doc, title.lower()) in seen:
+            continue
+        seen.add((doc, title.lower()))
+        want.add((doc, title, 100 + ln))
+    assert got == want

@@ -2,7 +2,8 @@
 operators and grep the properties that matter at 100 TB:
 
 - PushedFilters / ReadSchema on parquet scans (pushdown + pruning)
-- BroadcastHashJoin where a side is a small dim
+- BroadcastHashJoin where a side is a small dim, and the BroadcastExchange
+  count (`bcast`: each is a side job of its own when AQE is off)
 - Exchange count (shuffles) per pipeline stage
 - WholeStageCodegen spans vs ArrowEvalPython / FlatMapGroupsInPandas
 
@@ -48,12 +49,15 @@ def summarize(name: str, df) -> None:
     bhj = nodes(r"BroadcastHashJoin")
     smj = nodes(r"SortMergeJoin")
     bnl = nodes(r"BroadcastNestedLoopJoin")
+    # with AQE off each broadcast exchange runs as a Spark job of its own
+    bcast = nodes(r"BroadcastExchange")
     codegen = len(re.findall(r"WholeStageCodegen", plan))
     arrow = nodes(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     pushed = [p for p in pushed if p.strip()]
     print(
         f"{name:28s} exch={exchanges:2d} bhj={bhj} smj={smj} bnl={bnl} "
+        f"bcast={bcast} "
         f"codegen={codegen:2d} pyStages={arrow} "
         f"pushed={'Y' if pushed else '-'}"
     )
