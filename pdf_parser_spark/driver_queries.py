@@ -1361,12 +1361,13 @@ def w2_mega_salted(spark, sf_dir):
     """W2 over a SKEWED corpus — every 250th doc's text repeated 200×
     (~25× the span count of its siblings) — through the two-phase
     mega-doc path (pages.span_sequence_skew_df; threshold lowered so
-    the fat docs cross it, 8 offset-quantile chunks).
+    the fat docs cross it, 8 offset-quantile chunks cut at exact offset
+    ranks by the mega-id probe).
 
     The oracle replays the plain UNSALTED single-window W2 semantics:
     a green value hash proves the salting (offset-quantile chunked
-    prefix sums + broadcast carry joins) is a pure physical
-    optimization — SURVEY §4 P6's build obligation."""
+    prefix sums + per-chunk carries joined back by a shuffle-hash join)
+    is a pure physical optimization — SURVEY §4 P6's build obligation."""
     from dataclasses import replace as _cfg_replace
 
     from pdf_parser_spark.config import DEFAULT_CONFIG
@@ -1395,8 +1396,8 @@ def w2_mega_salted(spark, sf_dir):
 
 # Breakless mega docs: the canonical pathological case for per-(doc,
 # page) windows — every span shares one page, so the two-phase path's
-# chunked image-id decomposition (pages._with_ids_two_phase) is the ONLY
-# thing bounding task sizes.  Kinds: image every 31st span (i%31==17,
+# chunked image-id decomposition (pages._span_sequence_two_phase) is the
+# ONLY thing bounding task sizes.  Kinds: image every 31st span (i%31==17,
 # so per-page image ids count past 100 in the fat docs), heading every
 # 7th, NO page_break anywhere.  The oracle replays the plain
 # single-window W2 semantics (page ≡ 1).
@@ -1500,7 +1501,7 @@ def _synth_breakless_spans(docs: DataFrame) -> DataFrame:
 def w2_mega_breakless(spark, sf_dir):
     """W2 over a skewed corpus whose mega docs have NO page breaks —
     one giant page, so the whole-doc straggler bound rests on the
-    two-phase chunked image-id windows (pages._with_ids_two_phase,
+    two-phase chunked image-id windows (pages._span_sequence_two_phase,
     round-4 ADVICE).  The oracle replays the plain single-window
     semantics: a green hash proves the chunked decomposition is a pure
     physical optimization on its own pathological case."""

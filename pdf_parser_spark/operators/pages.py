@@ -9,8 +9,11 @@ aggregate chain over that one exchange with per-partition sorts
 sequential — page numbers are a prefix sum over the doc — so a single
 doc-partitioned sort pipeline is the minimal plan.  Mega-doc skew in
 the reassembly goes through ``span_sequence_skew_df``'s two-phase
-offset-chunked path past cfg.mega_doc_span_threshold; ``pages_df``'s
-windows still sort a mega doc in one task.
+offset-chunked path past cfg.mega_doc_span_threshold: its mega-id probe
+returns each mega doc's exact offset cut points, and the chunk carries
+are joined back with a shuffle-hash join, so the path adds no job and
+broadcasts nothing.  ``pages_df``'s windows still sort a mega doc in one
+task.
 
 Reference semantics pinned (oracle: refsem.derive_pages/span_sequence):
 - page_manager.py:69-148 fixed assembly order TEXT→TABLES→IMAGES→LAYOUT→
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from pdf_parser_spark.config import (
     ANNOTATION_KIND,
@@ -133,13 +137,26 @@ def valid_spans(flat: DataFrame) -> DataFrame:
     return flat.filter(F.col("error_kind").isNull()).drop("error_kind")
 
 
+def _is_break() -> F.Column:
+    return F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)
+
+
+def _is_image() -> F.Column:
+    return F.when(F.col("kind").isin(*IMAGE_KINDS), 1).otherwise(0)
+
+
+def _is_table() -> F.Column:
+    return F.when(F.col("kind") == TABLE_KIND, 1).otherwise(0)
+
+
 def with_page(valid: DataFrame) -> DataFrame:
     """Assign page = 1 + #page_breaks strictly before, in (offset, seq)
     order (oracle derive_pages).  Inclusive running sum works because
     non-break rows contribute 0."""
     w = Window.partitionBy("doc_id").orderBy("offset", "seq")
-    is_break = F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)
-    return valid.withColumn("page", (F.sum(is_break).over(w) + 1).cast("int"))
+    return valid.withColumn(
+        "page", (F.sum(_is_break()).over(w) + 1).cast("int")
+    )
 
 
 def _with_ids(spans: DataFrame) -> DataFrame:
@@ -151,14 +168,12 @@ def _with_ids(spans: DataFrame) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return spans.withColumn(
-        "image_id",
-        F.sum(
-            F.when(F.col("kind").isin(*IMAGE_KINDS), 1).otherwise(0)
-        ).over(wp),
-    ).withColumn(
-        "table_id",
-        F.sum(F.when(F.col("kind") == TABLE_KIND, 1).otherwise(0)).over(wp),
-    )
+        "image_id", F.sum(_is_image()).over(wp)
+    ).withColumn("table_id", F.sum(_is_table()).over(wp))
+
+
+#: kind_rank values 0..N_KIND_RANKS-1
+N_KIND_RANKS = 5
 
 
 def _kind_rank() -> F.Column:
@@ -211,7 +226,7 @@ def span_sequence_df(valid: DataFrame) -> DataFrame:
     cfg.mega_doc_span_threshold salting at INGEST (operators/skew.py),
     not a reassembly-time join.
     """
-    kept = _kept_with_out_text(_with_ids(with_page(valid)))
+    kept = _kept(_with_ids(with_page(valid)))
     w_doc = Window.partitionBy("doc_id").orderBy(
         "page", "kind_rank", "offset", "seq"
     )
@@ -220,165 +235,249 @@ def span_sequence_df(valid: DataFrame) -> DataFrame:
         "seq",
         "page",
         "kind",
-        F.col("out_text").alias("text"),
+        _out_text().alias("text"),
         "media_ref",
         F.row_number().over(w_doc).cast("int").alias("order"),
     )
 
 
-def _kept_with_out_text(spans: DataFrame) -> DataFrame:
-    """Shared W2 row selection + formatting: drop page breaks and blank
-    text spans, format image/annotation summaries, attach kind_rank."""
-    content = spans.filter(F.col("kind") != PAGE_BREAK_KIND)
-    keep = F.col("kind").isin(*IMAGE_KINDS) | ~is_blank(F.col("text"))
-    kept = content.filter(keep)
-    out_text = (
+def _is_kept() -> F.Column:
+    """W2 row selection: every span but page breaks and blank text."""
+    return (F.col("kind") != PAGE_BREAK_KIND) & (
+        F.col("kind").isin(*IMAGE_KINDS) | ~is_blank(F.col("text"))
+    )
+
+
+def _kept(spans: DataFrame) -> DataFrame:
+    """The W2 rows, with their kind_rank."""
+    return spans.filter(_is_kept()).withColumn("kind_rank", _kind_rank())
+
+
+def _out_text() -> F.Column:
+    """W2 output text: image and annotation summaries, else the text."""
+    return (
         F.when(F.col("kind").isin(*IMAGE_KINDS), _image_summary())
         .when(F.col("kind") == ANNOTATION_KIND, _annotation_summary())
         .otherwise(F.col("text"))
     )
-    return kept.withColumn("out_text", out_text).withColumn(
-        "kind_rank", _kind_rank()
+
+
+def _offset_cuts(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, spans) → (doc_id, _cuts): each doc's n - 1 exact offset
+    cut points, the offsets at ranks ⌊i·m/n⌋ (i = 1..n-1) of its m
+    non-NULL offsets in ascending order.  With distinct offsets, the
+    chunks these cuts make hold at most ⌈m/n⌉ spans each.  The sorted
+    array is a projection of its own, so each doc is sorted once, not
+    once per cut."""
+    offsets = F.filter(
+        F.transform("spans", lambda s: s["offset"]), lambda o: o.isNotNull()
+    )
+    m = F.size("_sorted").cast("long")
+    return docs.select(
+        "doc_id", F.array_sort(offsets).alias("_sorted")
+    ).select(
+        "doc_id",
+        F.array(*[
+            F.element_at("_sorted", F.floor(m * i / n).cast("int") + 1)
+            for i in range(1, n)
+        ]).alias("_cuts"),
     )
 
 
-def _with_obucket(spans: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Attach ``_obucket``: the span's offset-quantile chunk (0..N-1,
-    N = cfg.salt_buckets), computed from per-doc approximate offset
-    percentiles and broadcast back.
+def _cuts_lookup(probe: list, key_type) -> F.Column:
+    """The cut points of the row's doc, from the probe's
+    (doc_id, _h, _cuts) rows as literals.  An id lookup scans its list,
+    so the ids are spread over lists of about 16 by their xxhash64
+    ``_h``.  A duplicated id keeps its first copy's cuts.  Array
+    literals compare by value (map literals do not), so every read of
+    the mega rows plans the same expression and Spark can reuse their
+    exchange."""
+    n_lists = -(-len(probe) // 16)
+    ids: list = [[] for _ in range(n_lists)]
+    cuts: list = [[] for _ in range(n_lists)]
+    for r in probe:
+        i = r._h % n_lists
+        if r.doc_id not in ids[i]:
+            ids[i].append(r.doc_id)
+            cuts[i].append(r._cuts)
 
-    The bucketing is ORDER-ALIGNED with the (offset, seq) sort — equal
-    offsets always share a bucket (``b <= offset``), and the bucket id
-    is nondecreasing in offset — which is the only property the
-    two-phase prefix sums need for EXACT results: quantile estimation
-    error shifts work between tasks, never changes the output."""
-    n = cfg.salt_buckets
-    probs = [i / n for i in range(1, n)]
-    bounds = spans.groupBy("doc_id").agg(
-        F.percentile_approx("offset", probs, 1000).alias("_bounds")
+    def literal(rows: list, element_type):
+        return F.array(*[F.array(*map(F.lit, row)) for row in rows]).cast(
+            ArrayType(ArrayType(element_type))
+        )
+
+    which = (F.pmod(F.xxhash64("doc_id"), F.lit(n_lists)) + 1).cast("int")
+    at = F.array_position(
+        F.element_at(literal(ids, key_type), which), F.col("doc_id")
+    ).cast("int")
+    return F.element_at(
+        F.element_at(literal(cuts, ArrayType(LongType())), which), at
     )
+
+
+def _with_obucket(spans: DataFrame, cuts: F.Column) -> DataFrame:
+    """Attach ``_obucket``: the span's offset chunk, the number of its
+    doc's cut points (``cuts``, from ``_offset_cuts``) at or below its
+    offset.
+
+    The chunking is ORDER-ALIGNED with the (offset, seq) sort — equal
+    offsets always share a chunk, and the chunk id is nondecreasing in
+    offset — which is the only property the two-phase prefix sums need
+    for EXACT results: cuts that fit the rows badly (taken before html
+    rewrites and quarantine) shift work between tasks, never change the
+    output."""
+    return spans.withColumn(
+        "_obucket",
+        F.size(F.filter(cuts, lambda c: c <= F.col("offset"))),
+    )
+
+
+def _chunk_local(valid_mega: DataFrame, cuts: F.Column) -> DataFrame:
+    """The mega rows with their chunk (``_with_obucket``) and their
+    running counts within it, in (offset, seq) order: page breaks
+    (``_lp``, the local page; over the default RANGE frame, as
+    ``with_page`` numbers pages), images (``_ri``) and tables (``_rt``).
+
+    text and media_ref cross the chunk exchange as one array column:
+    the carry aggregate reads text only, and with the two columns apart
+    it would prune media_ref from its copy of the exchange, so Spark
+    could not reuse the detail rows' exchange for it."""
+    w = Window.partitionBy("doc_id", "_obucket").orderBy("offset", "seq")
+    w_rows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
-        spans.join(F.broadcast(bounds), "doc_id")
-        .withColumn(
-            "_obucket",
-            F.size(
-                F.filter("_bounds", lambda b: b <= F.col("offset"))
-            ),
-        )
-        .drop("_bounds")
+        _with_obucket(valid_mega, cuts)
+        .select("doc_id", "seq", "kind", "offset", "_obucket",
+                F.array("text", "media_ref").alias("_tm"))
+        .withColumn("_lp", F.sum(_is_break()).over(w))
+        .withColumn("_ri", F.sum(_is_image()).over(w_rows))
+        .withColumn("_rt", F.sum(_is_table()).over(w_rows))
+        .withColumn("text", F.col("_tm")[0])
+        .withColumn("media_ref", F.col("_tm")[1])
     )
 
 
-def _with_page_two_phase(spans: DataFrame) -> DataFrame:
-    """Distributed page derivation for mega docs: the per-doc prefix sum
-    of page breaks splits into a per-(doc, _obucket) local running sum
-    (each task bounded by ~1/N of the doc) plus a per-chunk break-total
-    carry, computed by a separate aggregate and folded back with a
-    broadcast join.  Exact for any order-aligned chunking."""
-    is_break = F.when(F.col("kind") == PAGE_BREAK_KIND, 1).otherwise(0)
-    w_local = Window.partitionBy("doc_id", "_obucket").orderBy(
-        "offset", "seq"
-    )
-    local = spans.withColumn("_lb", F.sum(is_break).over(w_local))
-    totals = spans.groupBy("doc_id", "_obucket").agg(
-        F.sum(is_break).alias("_cb")
-    )
-    w_prior = (
-        Window.partitionBy("doc_id")
-        .orderBy("_obucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior = totals.withColumn(
-        "_prior", F.coalesce(F.sum("_cb").over(w_prior), F.lit(0))
-    ).select("doc_id", "_obucket", "_prior")
-    return (
-        local.join(F.broadcast(prior), ["doc_id", "_obucket"])
-        .withColumn(
-            "page", (F.col("_prior") + F.col("_lb") + 1).cast("int")
-        )
-        .drop("_lb", "_prior")
-    )
+def _chunk_carries(local: DataFrame) -> DataFrame:
+    """One row per (doc_id, _obucket) chunk: ``_carry``, one entry per
+    local page from ``_lp0`` on, holding the page and what the page's
+    running image, table and rank counts need added (see
+    ``_span_sequence_two_phase``).
 
-
-def _with_ids_two_phase(spans: DataFrame) -> DataFrame:
-    """Chunked ``_with_ids`` for the mega-doc path: the per-page running
-    image/table ids decompose into a local running sum per
-    (doc_id, page, _obucket) chunk plus a broadcast per-chunk carry —
-    the same decomposition as ``_with_page_two_phase`` — so per-task row
-    counts stay bounded by the offset-quantile chunking EVEN when a mega
-    doc has few or no page breaks (the canonical pathological case: one
-    giant page would otherwise funnel every span into one window task).
-    Exact because ``_obucket`` is order-aligned with (offset, seq)."""
-    is_img = F.when(F.col("kind").isin(*IMAGE_KINDS), 1).otherwise(0)
-    is_tbl = F.when(F.col("kind") == TABLE_KIND, 1).otherwise(0)
-    ck = ["doc_id", "page", "_obucket"]
-    w_local = Window.partitionBy(*ck).orderBy("offset", "seq")
-    local = spans.withColumn(
-        "_li", F.sum(is_img).over(w_local)
-    ).withColumn("_lt", F.sum(is_tbl).over(w_local))
-    totals = spans.groupBy(*ck).agg(
-        F.sum(is_img).alias("_ci"), F.sum(is_tbl).alias("_ct")
+    All of it comes from ONE aggregate of chunk-local counts keyed by
+    (doc_id, _obucket, _lp) — a few rows per page — and doc_id windows
+    over those rows: sums over the groups before the chunk (``_b``),
+    before the page (``_lt``) and up to the page (``_le``)."""
+    ranks = [f"_k{r}" for r in range(N_KIND_RANKS)]
+    kept_rank = F.when(_is_kept(), _kind_rank())
+    groups = local.groupBy("doc_id", "_obucket", "_lp").agg(
+        F.sum(_is_break()).alias("_nb"),
+        F.sum(_is_image()).alias("_ci"),
+        F.sum(_is_table()).alias("_ct"),
+        *[F.count(F.when(kept_rank == r, 1)).alias(k)
+          for r, k in enumerate(ranks)],
     )
-    w_prior = (
-        Window.partitionBy("doc_id", "page")
-        .orderBy("_obucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w_doc = Window.partitionBy("doc_id")
+    groups = groups.withColumn(
+        "page",
+        (F.sum("_nb").over(w_doc.orderBy("_obucket", "_lp")) + 1)
+        .cast("int"),
     )
-    prior = (
-        totals.withColumn(
-            "_pi", F.coalesce(F.sum("_ci").over(w_prior), F.lit(0))
+    start = Window.unboundedPreceding
+    frames = {
+        "_b": w_doc.orderBy("_obucket").rangeBetween(start, -1),
+        "_lt": w_doc.orderBy("page").rangeBetween(start, -1),
+        "_le": w_doc.orderBy("page").rangeBetween(start, 0),
+    }
+    groups = groups.select(
+        "doc_id", "_obucket", "_lp", "_nb", "page",
+        *[
+            F.coalesce(F.sum(c).over(w), F.lit(0)).alias(c + f)
+            for c in ("_ci", "_ct", *ranks)
+            for f, w in frames.items()
+        ],
+    )
+    # a kept span of rank r: its running rank-r count + rank-r rows
+    # before the chunk + rows of every rank above r before the page +
+    # rows of every rank below r up to the page
+    order = [
+        sum(
+            [F.col(f"{q}_le") for q in ranks[:r]]
+            + [F.col(f"{q}_lt") for q in ranks[r + 1:]],
+            F.col(f"{k}_b"),
         )
-        .withColumn(
-            "_pt", F.coalesce(F.sum("_ct").over(w_prior), F.lit(0))
-        )
-        .select(*ck, "_pi", "_pt")
+        for r, k in enumerate(ranks)
+    ]
+    entry = F.struct(
+        "page",
+        (F.col("_ci_b") - F.col("_ci_lt")).alias("image"),
+        (F.col("_ct_b") - F.col("_ct_lt")).alias("table"),
+        F.array(*order).alias("order"),
     )
-    return (
-        local.join(F.broadcast(prior), ck)
-        .withColumn("image_id", F.col("_pi") + F.col("_li"))
-        .withColumn("table_id", F.col("_pt") + F.col("_lt"))
-        .drop("_li", "_lt", "_pi", "_pt")
+    # _lp steps by _nb > 1 where page breaks tie on (offset, seq): such a
+    # group's entry fills the skipped slots too, so local page _lp's
+    # entry is element _lp - _lp0 + 1
+    width = F.greatest(F.col("_nb"), F.lit(1)).cast("int")
+    by_lp = F.array_sort(F.collect_list(
+        F.struct("_lp", width.alias("w"), entry.alias("e"))
+    ))
+    return groups.groupBy("doc_id", "_obucket").agg(
+        F.min(F.col("_lp") - width + 1).alias("_lp0"),
+        F.flatten(
+            F.transform(by_lp, lambda g: F.array_repeat(g["e"], g["w"]))
+        ).alias("_carry"),
     )
 
 
 def _span_sequence_two_phase(
-    valid_mega: DataFrame, cfg: PipelineConfig
+    valid_mega: DataFrame, cuts: F.Column
 ) -> DataFrame:
-    """W2 for mega docs: page derivation, per-page ids, and the final
-    ordering all run with per-task row counts bounded by the offset-
-    quantile chunking instead of whole-doc windows.
+    """W2 for mega docs: every window runs per offset chunk
+    (``_with_obucket``), so per-task row counts are bounded by the
+    chunking instead of by the doc.  Bit-identical to the single-window
+    path.
 
-    The final ``order`` decomposes over the lexicographic sort key
-    (page, kind_rank, offset, seq): a local row_number per
-    (doc, page, kind_rank, _obucket) chunk plus the cumulative count of
-    all earlier chunks (tiny per-doc window over chunk summaries,
-    broadcast back).  Bit-identical to the single-window path."""
-    spans = _with_ids_two_phase(
-        _with_page_two_phase(_with_obucket(valid_mega, cfg))
+    A span's chunk-local running counts (``_chunk_local``, plus the
+    running count of its kind_rank among the chunk's kept spans) become
+    doc-level values by adding carries:
+    - page = 1 + breaks before the chunk + ``_lp``;
+    - image_id = running image count + images before the chunk −
+      images before the page (table_id likewise);
+    - order, of a kept span of rank r on page p = running rank-r count
+      + rank-r rows before the chunk + rows ranked above r on pages
+      before p + rows ranked below r on pages up to p.
+
+    The carries (``_chunk_carries``) are one row per chunk, joined back
+    on (doc_id, _obucket) with a shuffle-hash join: the detail rows keep
+    their chunk partitioning and nothing is broadcast.  The carry
+    aggregate reads the detail rows' chunk exchange, which Spark reuses,
+    so the mega rows are scanned and exploded once."""
+    local = _chunk_local(valid_mega, cuts)
+    w_rank = Window.partitionBy("doc_id", "_obucket", "kind_rank").orderBy(
+        "offset", "seq"
     )
-    kept = _kept_with_out_text(spans)
-    ck = ["doc_id", "page", "kind_rank", "_obucket"]
-    w_local = Window.partitionBy(*ck).orderBy("offset", "seq")
-    kept = kept.withColumn("_rn", F.row_number().over(w_local))
-    counts = kept.groupBy(*ck).agg(F.count("*").alias("_c"))
-    w_prior = (
-        Window.partitionBy("doc_id")
-        .orderBy("page", "kind_rank", "_obucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    kept = _kept(local).withColumn("_rn", F.row_number().over(w_rank))
+    entry = F.element_at(
+        "_carry", (F.col("_lp") - F.col("_lp0") + 1).cast("int")
     )
-    prior = counts.withColumn(
-        "_base", F.coalesce(F.sum("_c").over(w_prior), F.lit(0))
-    ).select(*ck, "_base")
     return (
-        kept.join(F.broadcast(prior), ck)
+        kept.join(
+            _chunk_carries(local).hint("shuffle_hash"),
+            ["doc_id", "_obucket"],
+        )
+        .withColumn("_e", entry)
+        .withColumn("page", F.col("_e.page"))
+        .withColumn("image_id", F.col("_ri") + F.col("_e.image"))
+        .withColumn("table_id", F.col("_rt") + F.col("_e.table"))
         .select(
             "doc_id",
             "seq",
             "page",
             "kind",
-            F.col("out_text").alias("text"),
+            _out_text().alias("text"),
             "media_ref",
-            (F.col("_base") + F.col("_rn")).cast("int").alias("order"),
+            (
+                F.col("_rn")
+                + F.element_at("_e.order", F.col("kind_rank") + 1)
+            ).cast("int").alias("order"),
         )
     )
 
@@ -398,34 +497,43 @@ def span_sequence_skew_df(
     Mega detection is a map-only ``size(spans) > threshold`` filter on
     the PRE-explode ``docs`` table (ZERO shuffle), probed eagerly at
     plan-construction time in one job that returns at most
-    ``MAX_LITERAL_MEGA_IDS + 1`` ids — driver memory stays bounded
-    however many mega docs the corpus holds.  ``size(spans)`` counts
-    quarantined spans too, so it can only over-route a borderline doc
-    to the two-phase path — routing is physical only, the output is
-    bit-identical either way.
+    ``MAX_LITERAL_MEGA_IDS + 1`` ids with their exact offset cut points
+    (``_offset_cuts``) — driver memory stays bounded however many mega
+    docs the corpus holds.  ``size(spans)`` counts quarantined spans
+    too, so it can only over-route a borderline doc to the two-phase
+    path — routing is physical only, the output is bit-identical either
+    way.
 
     With no mega docs the single-window plan is returned UNCHANGED — no
     tag join, no empty union branch re-scanning the corpus per
     downstream consumer.  With mega docs, the split is a codegen'd isin
-    filter on the literal id list, or a broadcast tag join past
-    ``MAX_LITERAL_MEGA_IDS`` ids."""
+    filter on the literal id list and the cut points are literals, so
+    spans_out runs the probe and its write and nothing else.  Past
+    ``MAX_LITERAL_MEGA_IDS`` ids the split is a broadcast tag join whose
+    tag table carries the cut points."""
     if cfg.salt_buckets <= 1:
-        # one chunk = the single-window plan; _with_obucket's percentile
-        # list would be empty (analysis error), so degrade explicitly.
+        # one chunk = the single-window plan
         return span_sequence_df(valid)
-    mega_src = docs.filter(
-        F.size("spans") > cfg.mega_doc_span_threshold
-    ).select("doc_id")
+    mega_src = _offset_cuts(
+        docs.filter(
+            (F.size("spans") > cfg.mega_doc_span_threshold)
+            & F.col("doc_id").isNotNull()
+        ),
+        cfg.salt_buckets,
+    )
     # one job: collect_list over the limit; a bare limit().collect()
     # runs the limit incrementally over several jobs
-    ids = (
+    probe = (
         mega_src.limit(MAX_LITERAL_MEGA_IDS + 1)
-        .agg(F.collect_list("doc_id"))
+        .agg(F.collect_list(F.struct(
+            "doc_id", F.xxhash64("doc_id").alias("_h"), "_cuts"
+        )))
         .collect()[0][0]
     )
-    if not ids:
+    if not probe:
         return span_sequence_df(valid)
-    if len(ids) <= MAX_LITERAL_MEGA_IDS:
+    if len(probe) <= MAX_LITERAL_MEGA_IDS:
+        ids = [r.doc_id for r in probe]
         # NULL doc_id must stay in the normal branch: ~isin(NULL) is
         # NULL (three-valued logic), which filter() drops — test isNull
         # explicitly so the bit-identical contract holds on that edge.
@@ -433,15 +541,19 @@ def span_sequence_skew_df(
             F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids)
         )
         mega = valid.filter(F.col("doc_id").isin(ids))
+        cuts = _cuts_lookup(probe, valid.schema["doc_id"].dataType)
     else:  # adversarial corpus: too many megas for a literal filter
-        tag = F.broadcast(mega_src.withColumn("_mega", F.lit(True)))
-        tagged = valid.join(tag, "doc_id", "left")
+        # _mega: the doc's cut points, NULL unless it is a mega doc; one
+        # tag row per id, so a duplicated id is not multiplied
+        tag = mega_src.dropDuplicates(["doc_id"]).withColumnRenamed(
+            "_cuts", "_mega"
+        )
+        tagged = valid.join(F.broadcast(tag), "doc_id", "left")
         normal = tagged.filter(F.col("_mega").isNull()).drop("_mega")
-        mega = tagged.filter(
-            F.col("_mega") == True  # noqa: E712
-        ).drop("_mega")
+        mega = tagged.filter(F.col("_mega").isNotNull())
+        cuts = F.col("_mega")
     return span_sequence_df(normal).unionByName(
-        _span_sequence_two_phase(mega, cfg)
+        _span_sequence_two_phase(mega, cuts)
     )
 
 
@@ -488,8 +600,8 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
     also stands in for the page it closes, so page 1 exists when the doc
     starts with a break.  ``total_pages`` is the doc's break count + 1,
     summed over the same window as the page numbers.  The spans of a
-    NULL doc_id belong to no document and carry no content: together
-    they still number empty pages 1..total_pages."""
+    NULL doc_id belong to no document and give no pages (the window
+    would gather every NULL-id doc into one)."""
     is_break = F.col("kind") == PAGE_BREAK_KIND
     w_all = (
         Window.partitionBy("doc_id")
@@ -497,7 +609,7 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     spans = _with_ids(
-        with_page(valid).withColumn(
+        with_page(valid.filter(F.col("doc_id").isNotNull())).withColumn(
             "total_pages",
             (F.sum(is_break.cast("int")).over(w_all) + 1).cast("int"),
         )
@@ -509,17 +621,16 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
         ),
     )
 
-    keyed = F.col("doc_id").isNotNull()
-    is_textish = keyed & F.col("kind").isin(*TEXT_KINDS)
-    is_table = keyed & (F.col("kind") == TABLE_KIND)
-    is_image = keyed & F.col("kind").isin(*IMAGE_KINDS)
-    is_layout = keyed & (F.col("kind") == LAYOUT_KIND)
-    is_annot = keyed & (F.col("kind") == ANNOTATION_KIND)
+    is_textish = F.col("kind").isin(*TEXT_KINDS)
+    is_table = F.col("kind") == TABLE_KIND
+    is_image = F.col("kind").isin(*IMAGE_KINDS)
+    is_layout = F.col("kind") == LAYOUT_KIND
+    is_annot = F.col("kind") == ANNOTATION_KIND
     txt = F.coalesce(F.col("text"), F.lit(""))
 
     # Per-family formatted string, computed ROW-SIDE (whole-stage
-    # codegen) — NULL for rows outside the family (break rows and the
-    # rows of a NULL doc_id are in none), so collect_list in
+    # codegen) — NULL for rows outside the family (break rows are in
+    # none), so collect_list in
     # _joined_family drops them.  See _joined_family for why formatting
     # must not live inside the post-agg transform.
     pre = spans.select(

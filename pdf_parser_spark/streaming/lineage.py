@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.pipeline import run_pipeline
+from pdf_parser_spark.schemas import LINEAGE
 from pdf_parser_spark.sources.tables import (
     drop_tree,
     read_table,
@@ -63,12 +64,13 @@ def completed_buckets(
     spark: SparkSession, out_dir: str, subdir: str = LINEAGE_SUBDIR
 ) -> set:
     """Read the lineage table (``iceberg:`` ref or parquet dir — the
-    sources/tables seam) and return the done bucket ids."""
+    sources/tables seam) with ``schemas.LINEAGE`` pinned (no inference
+    job) and return the done bucket ids."""
     ref = sub_ref(out_dir, subdir)
     if not table_exists(spark, ref):
         return set()
     rows = (
-        read_table(spark, ref)
+        read_table(spark, ref, schema=LINEAGE)
         .filter(F.col("status") == "done")
         .select("partition_id")
         .distinct()
@@ -103,8 +105,6 @@ def _append_lineage(
     rows: list,
     subdir: str = LINEAGE_SUBDIR,
 ) -> None:
-    from pdf_parser_spark.schemas import LINEAGE
-
     df = spark.createDataFrame(rows, LINEAGE)
     write_table(
         df.coalesce(1), sub_ref(out_dir, subdir), mode="append"

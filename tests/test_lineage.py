@@ -201,3 +201,29 @@ def test_resume_leaves_only_outputs_and_lineage(spark, tmp_path):
     assert again["skipped_buckets"] == [0, 1, 2, 3]
     assert again["processed_buckets"] == [] and again["n_waves"] == 0
     assert {p.name for p in out_dir.iterdir()} == layout
+
+
+def test_completed_buckets_reads_lineage_in_one_job(spark, tmp_path):
+    """The lineage read pins ``schemas.LINEAGE``: reading the done
+    buckets is one job (the collect), with no parquet schema-inference
+    job before it.  AQE is off, as perfbench runs it: with AQE on, each
+    query stage is a job of its own."""
+    import time
+
+    now = time.time()
+    L._append_lineage(
+        spark, str(tmp_path), [L._lineage_row("r", 3, 1, 1, now, now, {})]
+    )
+    sc = spark.sparkContext
+    group = "test-lineage-read"
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    sc.setJobGroup(group, "lineage read")
+    try:
+        assert L.completed_buckets(spark, str(tmp_path)) == {3}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

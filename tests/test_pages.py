@@ -66,3 +66,34 @@ def test_pages_parity(docs_df, oracle_results):
         spark_pages = {p for (d, p) in got if d == doc_id}
         assert spark_pages == {pg["page"] for pg in res["pages"]}
     assert n_pages > 50
+
+
+def test_pages_skip_null_doc_ids(spark):
+    """The spans of a NULL doc_id give no pages rows: a doc_id window
+    would gather every NULL-id doc into one doc of empty pages.  Every
+    other row is the row the corpus without those docs gives (the
+    ``test_metrics_edge_doc_ids`` corpus: two NULL ids and a duplicated
+    id)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pdf_parser_spark.fixtures.gen import fixture_corpus, to_rows
+    from pdf_parser_spark.schemas import DOCUMENTS_SPANS
+
+    corpus = fixture_corpus(4, mega_spans=200)
+    schema = StructType([
+        StructField("doc_id", StringType(), True),
+        DOCUMENTS_SPANS["spans"],
+    ])
+    keyed = corpus + [corpus[0]]
+    nulls = [dict(corpus[1], doc_id=None), dict(corpus[2], doc_id=None)]
+
+    def pages(docs):
+        df = spark.createDataFrame(list(to_rows(docs)), schema)
+        return sorted(
+            map(tuple, P.pages_df(P.valid_spans(_flat(df))).collect()),
+            key=repr,
+        )
+
+    got = pages(keyed + nulls)
+    assert not [r for r in got if r[0] is None]
+    assert got == pages(keyed)

@@ -329,3 +329,96 @@ def test_per_doc_stages_plan_without_broadcast(
 
     span_generates = re.findall(r"Generate \w+\(spans#", plans["pages"])
     assert len(span_generates) == 1
+
+
+@pytest.fixture(scope="module")
+def mega_pipeline(spark, tmp_path_factory):
+    """One pipeline run over a parquet corpus with one mega doc past a
+    lowered threshold, html normalization on, and spans_out written
+    through a sink as the CLI writes it.  AQE is off, as perfbench runs
+    it: with AQE on, every query stage is a job of its own.  Returns the
+    stage dir, the corpus, the config, the mega doc's id and the
+    descriptions of the run's jobs."""
+    from dataclasses import replace
+
+    from pdf_parser_spark.config import DEFAULT_CONFIG
+    from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
+    from pdf_parser_spark.pipeline import run_pipeline
+    from pdf_parser_spark.sources import tables
+
+    base = tmp_path_factory.mktemp("mega")
+    corpus = fixture_corpus(n_docs=8, mega_spans=600)
+    to_spark_df(spark, corpus).write.parquet(str(base / "in"))
+    docs = spark.read.parquet(str(base / "in"))
+    cfg = replace(DEFAULT_CONFIG, mega_doc_span_threshold=500)
+    stage_dir = str(base / "stages")
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    group = "test-mega-spans-out"
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    sc.setJobGroup(group, "mega pipeline")
+    try:
+        run_pipeline(
+            docs, stage_dir, cfg, normalize_html=True,
+            sinks={"spans_out": lambda df: tables.write_and_read(
+                df, f"{stage_dir}/spans_out")},
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    descriptions = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(j).description()
+        descriptions.append(desc.get() if desc.isDefined() else None)
+    mega_id = next(d["doc_id"] for d in corpus if d["doc_id"].endswith("mega"))
+    return stage_dir, docs, cfg, mega_id, descriptions
+
+
+def test_mega_spans_out_is_two_jobs(mega_pipeline):
+    """With a mega doc routed to the two-phase path, spans_out runs the
+    bounded mega-id probe and its write, and no broadcast side job."""
+    descriptions = mega_pipeline[-1]
+    assert descriptions.count("spans_out") == 2, descriptions
+
+
+@pytest.mark.parametrize("aqe", [False, True])
+def test_mega_spans_out_plan_scans_once_without_broadcast(
+    spark, mega_pipeline, aqe
+):
+    """spans_out's plan with a mega doc routed: no broadcast, and the
+    two-phase branch scans the mega rows once — one FileScan of the
+    corpus and one of the html rewrite — because the carry aggregate
+    reads the detail rows' chunk exchange, which Spark reuses (AQE
+    reuses it as it runs, so its final plan is read)."""
+    from pdf_parser_spark.pipeline import stage_graph
+    from pdf_parser_spark.sources import tables
+
+    stage_dir, docs, cfg, mega_id, _ = mega_pipeline
+    graph = {
+        st.name: st
+        for st in stage_graph(docs, stage_dir, cfg, normalize_html=True)
+    }
+    rewritten = tables.read_table(
+        spark, tables.internal_ref(stage_dir, "html_rewrite")
+    )
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(aqe).lower())
+    try:
+        df = graph["spans_out"].plan(rewritten)
+        df.collect()
+        plan = _plan(df).split("== Initial Plan ==")[0]
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastExchange" not in plan
+    assert "_obucket" in plan
+    mega_scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and f"EqualTo(doc_id,{mega_id})" in ln
+        and "Not(EqualTo" not in ln
+    ]
+    assert len(mega_scans) == 2, mega_scans

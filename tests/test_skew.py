@@ -3,6 +3,7 @@ with the hot key spread across tasks."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import skew as K
@@ -134,26 +135,61 @@ def test_mega_doc_w2_bit_identical(spark):
     assert re.search(r"doc_id#\d+ IN \(mega\)", plan)
 
 
-def test_mega_doc_w2_bounds_task_sizes(spark):
-    """Straggler bound: with N offset-quantile chunks, no single
-    (doc, chunk) group — the unit of per-task window work in the
-    two-phase path — holds more than ~2/N of the mega doc's spans
-    (2× slack for quantile estimation error)."""
+def _chunked(valid, buckets):
+    """The rows of ``valid`` with the chunk span_sequence_skew_df gives
+    them: cut points from the pre-explode table, as its probe takes
+    them."""
     from pdf_parser_spark.operators import pages as P
 
-    cfg = _low_threshold_cfg(threshold=500, buckets=8)
-    valid = _skewed_spans(spark, mega_spans=3000).filter(
-        F.col("doc_id") == "mega"
-    )
-    chunked = P._with_obucket(valid, cfg)
-    sizes = [
+    cuts = P._offset_cuts(_docs(valid), buckets)
+    return P._with_obucket(valid.join(cuts, "doc_id"), F.col("_cuts"))
+
+
+def _chunk_sizes(chunked):
+    return [
         r.n
-        for r in chunked.groupBy("_obucket")
+        for r in chunked.groupBy("doc_id", "_obucket")
         .agg(F.count("*").alias("n"))
         .collect()
     ]
+
+
+def test_mega_doc_w2_bounds_task_sizes(spark):
+    """Straggler bound: with N offset chunks, no single (doc, chunk)
+    group — the unit of per-task window work in the two-phase path —
+    holds more than ~2/N of the mega doc's spans."""
+    valid = _skewed_spans(spark, mega_spans=3000).filter(
+        F.col("doc_id") == "mega"
+    )
+    sizes = _chunk_sizes(_chunked(valid, 8))
     assert len(sizes) == 8
     assert max(sizes) <= 2 * 3000 / 8
+
+
+def test_exact_cuts_give_chunks_of_at_most_ceil_n_over_n(spark):
+    """The probe's cut points are exact offset ranks: with distinct
+    offsets, in any array order, every chunk holds at most ⌈n/N⌉ spans;
+    with an offset repeated n/N times, the chunks stay within 2n/N."""
+    import math
+    import random
+
+    n, buckets = 2999, 8
+    offsets = random.Random(7).sample(range(10 * n), n)
+    distinct = spark.createDataFrame(
+        [("mega", s, "text", f"span {s}", None, o)
+         for s, o in enumerate(offsets)],
+        "doc_id string, seq int, kind string, text string,"
+        " media_ref string, offset int",
+    )
+    sizes = _chunk_sizes(_chunked(distinct, buckets))
+    assert len(sizes) == buckets
+    assert max(sizes) <= math.ceil(n / buckets)
+    repeated = distinct.withColumn(
+        "offset",
+        F.when(F.col("seq") < n // buckets, F.lit(5 * n))
+        .otherwise(F.col("offset")),
+    )
+    assert max(_chunk_sizes(_chunked(repeated, buckets))) <= 2 * n / buckets
 
 
 def _breakless_mega_spans(spark, mega_spans=3000):
@@ -176,9 +212,9 @@ def _breakless_mega_spans(spark, mega_spans=3000):
 def test_breakless_mega_doc_bit_identical_and_chunk_bounded(spark):
     """A mega doc with NO page breaks must (a) reproduce the
     single-window output exactly — image/table ids included — and
-    (b) keep every (doc, page, chunk) group, the per-task unit of the
-    two-phase image/table-id windows, bounded by ~2/N of the doc
-    (regression guard: _with_ids used to fall back to a whole
+    (b) keep every (doc, chunk) group, the per-task unit of every
+    two-phase window (image/table ids included), bounded by ~2/N of the
+    doc (regression guard: _with_ids used to fall back to a whole
     (doc_id, page) window, refunneling the breakless doc into one
     task)."""
     from pdf_parser_spark.operators import pages as P
@@ -193,16 +229,7 @@ def test_breakless_mega_doc_bit_identical_and_chunk_bounded(spark):
         )
     )
     assert plain == salted
-    chunked = P._with_obucket(
-        valid.filter(F.col("doc_id") == "mega"), cfg
-    )
-    sizes = [
-        r.n
-        for r in P._with_page_two_phase(chunked)
-        .groupBy("doc_id", "page", "_obucket")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
+    sizes = _chunk_sizes(_chunked(valid.filter(F.col("doc_id") == "mega"), 8))
     assert max(sizes) <= 2 * 3000 / 8
 
 
@@ -238,8 +265,7 @@ def test_skew_path_keeps_null_doc_id_rows(spark):
 
 def test_salt_buckets_one_degrades_to_single_window(spark):
     """cfg.salt_buckets=1 is a legal config: one chunk IS the single
-    window, so the skew path must short-circuit instead of crashing on
-    percentile_approx([])."""
+    window, so the skew path short-circuits to it."""
     from pdf_parser_spark.operators import pages as P
 
     cfg = _low_threshold_cfg(threshold=500, buckets=1)
@@ -324,3 +350,38 @@ def test_mega_split_past_literal_limit_uses_tag_join(spark):
     plan = _plan(skew)
     assert "_mega" in plan
     assert not re.search(r"doc_id#\d+ IN \(", plan)
+
+
+@pytest.mark.parametrize("n_mega, n_spans", [(40, 60), (1001, 12)])
+def test_mega_ids_with_a_duplicated_one_match_single_window(
+    spark, n_mega, n_spans
+):
+    """Many mega docs, one of them listed twice in the pre-explode table,
+    so its spans, page breaks included, come twice and tie on
+    (offset, seq).  40 ids spread their cut points over several literal
+    id lists; past MAX_LITERAL_MEGA_IDS the broadcast tag table must
+    still hold the id once.  The output equals the single-window plan's
+    (as multisets: tied copies are interchangeable)."""
+    from pdf_parser_spark.operators import pages as P
+
+    rows = [
+        (f"m{d:04d}", s, "page_break" if s % 9 == 8 else "text",
+         None if s % 9 == 8 else f"mega {d} span {s}", None, 2 * s)
+        for d in range(n_mega)
+        for s in range(n_spans)
+    ] + [("small", 0, "text", "one span", None, 0)]
+    valid = spark.createDataFrame(
+        rows,
+        "doc_id string, seq int, kind string, text string,"
+        " media_ref string, offset int",
+    )
+    docs = _docs(valid)
+    twice = F.col("doc_id") == "m0007"
+    valid = valid.unionByName(valid.filter(twice))
+    docs = docs.unionByName(docs.filter(twice))
+    cfg = _low_threshold_cfg(threshold=n_spans - 2, buckets=4)
+    plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
+    skew = P.span_sequence_skew_df(valid, cfg, docs=docs)
+    assert plain == sorted(map(tuple, skew.collect()))
+    literal = re.search(r"doc_id#\d+ IN \(", _plan(skew))
+    assert bool(literal) == (n_mega <= P.MAX_LITERAL_MEGA_IDS)

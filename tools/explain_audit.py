@@ -88,6 +88,9 @@ def main() -> None:
         "text_token_counts",
         "pipeline_span_sequence",
         "pipeline_inline_html",
+        # the mega-doc two-phase path (probe + literal cut points)
+        "w2_mega_salted",
+        "w2_mega_breakless",
     ]:
         summarize(name, qs[name](spark, sf_dir))
 
