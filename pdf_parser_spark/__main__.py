@@ -60,7 +60,10 @@ def build_parser() -> argparse.ArgumentParser:
                    help="bucketize mode: external storage location for "
                         "the bucketed table (default: warehouse dir)")
     p.add_argument("--checkpoint",
-                   help="checkpoint/lineage dir (resume/ingest/assembly)")
+                   help="streaming checkpoint dir (ingest/assembly; "
+                        "default <output>/_checkpoint); resume mode "
+                        "ignores it and keeps its lineage under "
+                        "<output>/_lineage")
     p.add_argument("--run-id", default="run-0", help="resume-mode run id")
     p.add_argument("--normalize-html", action="store_true",
                    help="pipeline/resume/ingest/bucketize modes: strip raw-HTML "

@@ -108,8 +108,11 @@ def table_exists(spark: SparkSession, ref: str) -> bool:
 
 def read_table(spark: SparkSession, ref: str, schema=None) -> DataFrame:
     """``iceberg:<catalog.db.table>`` → catalog read (snapshot-isolated,
-    partition pruning from the Iceberg metadata tree); otherwise parquet
-    with the pinned schema (no inference pass)."""
+    partition pruning from the Iceberg metadata tree); ``table:<name>``
+    → session-catalog read, the only read of a bucketed table whose scan
+    reports the ``HashPartitioning`` that makes the reassembly
+    shuffle-free; otherwise parquet with the pinned schema (no inference
+    pass)."""
     if is_iceberg_ref(ref):
         return spark.table(_require_iceberg(spark, ref))
     if is_table_ref(ref):
@@ -281,16 +284,3 @@ def register_bucketed_table(
         f"INTO {n_buckets} BUCKETS "
         f"LOCATION '{path}'"
     )
-
-
-def read_bucketed_table(spark: SparkSession, ref: str) -> DataFrame:
-    """Catalog read of a bucketed table.  Must go through
-    ``spark.table`` (NOT ``spark.read.parquet`` on the storage path):
-    the bucket spec lives in catalog metadata, and only the catalog
-    read lets the scan report the ``HashPartitioning`` that makes the
-    downstream reassembly shuffle-free."""
-    if is_iceberg_ref(ref):
-        return spark.table(_require_iceberg(spark, ref))
-    if is_table_ref(ref):
-        ref = ref[len(TABLE_PREFIX):]
-    return spark.table(ref)

@@ -53,6 +53,7 @@ from pyspark.sql.types import (
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import pages as pages_op
+from pdf_parser_spark.streaming.ingest import write_batch
 
 # One span fragment per row; total_spans declared on every fragment.
 FRAGMENT_SCHEMA = StructType(
@@ -243,7 +244,7 @@ def run_fragment_assembly(
 ):
     """End-to-end streaming job: fragments → stateful assembly → the
     batch W2 operators per micro-batch → idempotent partitioned sink
-    (same replay-safe ``_batch_id`` overwrite device as ingest.py).
+    (ingest.py's replay-safe ``write_batch``, for both outputs).
 
     Drain semantics (``availableNow``): incomplete documents stay in
     checkpointed state and finish on a later invocation once their
@@ -266,23 +267,11 @@ def run_fragment_assembly(
             "error_kind", pages_op.error_kind_expr(cfg)
         )
         out = pages_op.span_sequence_df(pages_op.valid_spans(flat))
-        (
-            out.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        write_batch(out, batch_id, out_path)
         partial = batch_df.filter(
             F.col("assembly_status") == "timeout_partial"
         )
-        (
-            partial.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(quarantine_path)
-        )
+        write_batch(partial, batch_id, quarantine_path)
 
     query = (
         assembled.writeStream.foreachBatch(process_batch)

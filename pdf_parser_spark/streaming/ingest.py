@@ -16,10 +16,12 @@ with watermarked late-data handling lives in ``arrival.py``.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pdf_parser_spark.operators import pages as pages_op
 from pdf_parser_spark.schemas import DOCUMENTS_SPANS
+from pdf_parser_spark.sources.tables import write_table
 
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -51,17 +53,12 @@ def spans_out_stream(docs: DataFrame,
 
 def write_batch(out: DataFrame, batch_id: int, out_path: str) -> None:
     """Idempotent per-batch sink: partition by ``_batch_id`` + dynamic
-    partition overwrite, so replaying a batch (crash between write and
-    checkpoint commit) REPLACES its own partition instead of appending a
-    duplicate copy."""
-    from pyspark.sql import functions as F
-
-    (
-        out.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(out_path)
+    partition overwrite (``write_table``'s ``overwrite_partitions``), so
+    replaying a batch (crash between write and checkpoint commit)
+    REPLACES its own partition instead of appending a duplicate copy."""
+    write_table(
+        out.withColumn("_batch_id", F.lit(batch_id)), out_path,
+        mode="overwrite_partitions", partition_by=("_batch_id",),
     )
 
 

@@ -18,6 +18,15 @@ Model (SURVEY.md §2.9):
 At 1000 executors the wave is the unit of checkpoint granularity and each
 wave is one fully-parallel job — the driver loop is O(n_buckets /
 wave_size) metadata operations, never per-document work.
+
+Two runners, one scheduler (``pipeline.run_stages``): ``run_resumable``
+runs each wave's ``pipeline.stage_graph`` with its bucketed outputs as
+sinks and commits one row per bucket after the wave;
+``run_resumable_dedup`` runs a two-stage graph, signatures → pairs,
+whose writers commit one row per stage or, for a stage already
+committed, read its table back.  Neither takes a fault-injection
+argument: tests make a stage's plan, ``run_pipeline`` or
+``_append_lineage`` raise.
 """
 
 from __future__ import annotations
@@ -30,7 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
-from pdf_parser_spark.pipeline import run_pipeline
+from pdf_parser_spark.pipeline import Stage, Writer, run_pipeline, run_stages
 from pdf_parser_spark.schemas import LINEAGE
 from pdf_parser_spark.sources.tables import (
     drop_tree,
@@ -132,14 +141,9 @@ def run_resumable(
     n_buckets: int = 16,
     wave_size: int = 8,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    fail_after_waves: int | None = None,
     normalize_html: bool = False,
 ) -> dict:
-    """Process all pending buckets; return a summary.
-
-    ``fail_after_waves`` is a fault-injection hook for the resume test —
-    raises after k completed waves, exactly as a mid-job kill would.
-    """
+    """Process all pending buckets; return a summary."""
     bucketed = with_bucket(docs, n_buckets)
     # each wave's stage tables overwrite the previous wave's; the last
     # wave's are dropped once its lineage rows commit
@@ -153,10 +157,6 @@ def run_resumable(
 
     processed = []
     for wi, wave in enumerate(waves):
-        if fail_after_waves is not None and wi >= fail_after_waves:
-            raise RuntimeError(
-                f"injected failure before wave {wi} (buckets {wave})"
-            )
         started = time.time()
         wave_docs = bucketed.filter(F.col("bucket").isin(wave))
         obs = Observation(f"wave-{wi}")
@@ -216,18 +216,20 @@ def run_resumable_dedup(
     n_hashes: int = 64,
     k: int = 3,
     n_bands: int = 4,
-    fail_after_stages: int | None = None,
 ) -> dict:
     """Resumable MinHash-LSH near-dup job: the expensive signatures
-    fold and the band-bucket pair join are separate DURABLE stages —
-    each writes its stage table (``sources.tables.write_and_read``) and
-    then appends a lineage row (partition_id = stage ordinal, the rows
-    written), so a job killed between the two resumes WITHOUT
-    recomputing the ceil(n_hashes/4)-md5-per-shingle signature pass.
+    fold and the band-bucket pair join are the two DURABLE stages of a
+    ``run_stages`` graph.  An uncommitted stage writes its table
+    (``sources.tables.write_and_read``) and then appends a lineage row
+    (partition_id = stage ordinal, the rows written), so a job killed
+    between the two resumes WITHOUT recomputing the
+    ceil(n_hashes/4)-md5-per-shingle signature pass.  A committed
+    stage's table is read back with its plan's schema pinned: the plan
+    is analysed on the driver, never run, and no inference job starts.
 
-    ``fail_after_stages`` injects a crash after k committed stages,
-    exactly as a mid-job kill would.  Returns a summary dict; the
-    candidate pairs land in ``<out_dir>/pairs``.
+    Returns a summary dict; the candidate pairs land in
+    ``<out_dir>/pairs``.  Each stage's jobs carry its name as their job
+    description.
 
     Resume reads only ``DEDUP_LINEAGE_SUBDIR``: stage rows that older
     runs wrote under ``LINEAGE_SUBDIR`` are ignored, so such a job
@@ -235,48 +237,34 @@ def run_resumable_dedup(
     """
     from pdf_parser_spark.functions import dedup as dd
 
-    sig_ref = sub_ref(out_dir, "signatures")
     done = completed_buckets(spark, out_dir, DEDUP_LINEAGE_SUBDIR)
 
-    def _stage_row(stage: int, n_rows: int, t0: float) -> tuple:
-        return _lineage_row(run_id, stage, n_rows, 0, t0, time.time(),
-                            {"stage": float(stage)})
+    def writer(ordinal: int, name: str) -> Writer:
+        ref = sub_ref(out_dir, name)
+        if ordinal in done:
+            return lambda df: (read_table(spark, ref, schema=df.schema), 0)
 
-    skipped = []
-    # --- stage 0: signatures (the md5 fold — never recompute) --------
-    if 0 in done:
-        sigs = read_table(spark, sig_ref)
-        skipped.append(0)
-    else:
-        if fail_after_stages is not None and fail_after_stages < 1:
-            raise RuntimeError("injected failure before stage 0")
-        t0 = time.time()
-        sigs, n_sigs = write_and_read(
-            dd.minhash_df(docs, id_col, text_col, n_hashes, k), sig_ref
-        )
-        _append_lineage(
-            spark, out_dir, [_stage_row(0, n_sigs, t0)],
-            DEDUP_LINEAGE_SUBDIR,
-        )
+        def commit(df: DataFrame) -> tuple[DataFrame, int]:
+            t0 = time.time()
+            table, n_rows = write_and_read(df, ref)
+            row = _lineage_row(run_id, ordinal, n_rows, 0, t0, time.time(),
+                               {"stage": float(ordinal)})
+            _append_lineage(spark, out_dir, [row], DEDUP_LINEAGE_SUBDIR)
+            return table, n_rows
 
-    # --- stage 1: band-bucket candidate pairs -------------------------
-    if 1 in done:
-        skipped.append(1)
-    else:
-        if fail_after_stages is not None and fail_after_stages < 2:
-            raise RuntimeError("injected failure before stage 1")
-        t0 = time.time()
-        _, n_pairs = write_and_read(
-            dd.lsh_band_pairs(sigs, n_bands, n_hashes // n_bands),
-            sub_ref(out_dir, "pairs"),
-        )
-        _append_lineage(
-            spark, out_dir, [_stage_row(1, n_pairs, t0)],
-            DEDUP_LINEAGE_SUBDIR,
-        )
+        return commit
 
+    run_stages(spark, [
+        Stage("signatures", (),
+              lambda: dd.minhash_df(docs, id_col, text_col, n_hashes, k),
+              writer(0, "signatures")),
+        Stage("pairs", ("signatures",),
+              lambda sigs: dd.lsh_band_pairs(sigs, n_bands,
+                                             n_hashes // n_bands),
+              writer(1, "pairs")),
+    ])
     return {
         "run_id": run_id,
-        "skipped_stages": skipped,
+        "skipped_stages": sorted(done & {0, 1}),
         "pairs_ref": sub_ref(out_dir, "pairs"),
     }

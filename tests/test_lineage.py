@@ -2,6 +2,7 @@
 buckets are skipped and the final output is complete with no duplicates
 (SURVEY.md §5 resume test)."""
 
+import os
 import shutil
 import tempfile
 
@@ -10,15 +11,59 @@ import pytest
 from pdf_parser_spark.streaming import lineage as L
 
 
-def test_resume_after_failure(spark, docs_df, oracle_results):
+def _jobs_by_description(spark, group: str, run):
+    """Run ``run()`` in job group ``group`` with AQE off, as perfbench
+    runs it (with AQE on, each query stage is a job of its own); return
+    its result and the number of jobs per job description.  Jobs the
+    caller's thread starts carry the group's description, ``group``."""
+    sc = spark.sparkContext
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    sc.setJobGroup(group, group)
+    try:
+        result = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        spark.conf.set(key, prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs: dict = {}
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(job_id).description()
+        name = desc.get() if desc.isDefined() else None
+        jobs[name] = jobs.get(name, 0) + 1
+    return result, jobs
+
+
+def _mtimes(table_dir: str) -> dict:
+    return {
+        f: os.path.getmtime(os.path.join(table_dir, f))
+        for f in os.listdir(table_dir)
+    }
+
+
+def test_resume_after_failure(spark, docs_df, oracle_results, monkeypatch):
     out_dir = tempfile.mkdtemp(prefix="lineage_", dir="/root/repo")
+    real_run_pipeline = L.run_pipeline
+    waves = []
+
+    def dies_in_second_wave(*args, **kwargs):
+        waves.append(None)
+        if len(waves) > 1:
+            raise RuntimeError("injected failure in wave 1")
+        return real_run_pipeline(*args, **kwargs)
+
     try:
         # first run dies after 1 of 2 waves (8 of 16 buckets done)
+        monkeypatch.setattr(L, "run_pipeline", dies_in_second_wave)
         with pytest.raises(RuntimeError, match="injected failure"):
             L.run_resumable(
                 spark, docs_df, out_dir, run_id="r1",
-                n_buckets=16, wave_size=8, fail_after_waves=1,
+                n_buckets=16, wave_size=8,
             )
+        monkeypatch.undo()
         done_after_kill = L.completed_buckets(spark, out_dir)
         assert 0 < len(done_after_kill) <= 8
 
@@ -48,35 +93,56 @@ def test_resume_after_failure(spark, docs_df, oracle_results):
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def test_resumable_dedup_skips_signature_recompute(spark):
+def _dedup_docs(spark):
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(f"d{i}", f"{base} suffix{i // 2}") for i in range(10)]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _unkilled_pairs(docs, out_dir: str) -> set:
+    from pdf_parser_spark.functions import dedup as dd
+
+    return {
+        (r.id_a, r.id_b)
+        for r in dd.lsh_candidate_pairs(
+            docs, f"{out_dir}/unkilled", n_hashes=8, k=3, n_bands=2
+        ).select("id_a", "id_b").collect()
+    }
+
+
+def _written_pairs(spark, out_dir: str) -> set:
+    return {
+        (r.id_a, r.id_b)
+        for r in spark.read.parquet(f"{out_dir}/pairs").collect()
+    }
+
+
+def _boom(*args, **kwargs):
+    raise RuntimeError("injected failure")
+
+
+def test_resumable_dedup_skips_signature_recompute(spark, monkeypatch):
     """Kill the dedup job between the signatures stage and the pair
     join; the resume must (a) NOT rewrite the signatures stage table —
     the md5 fold is the expensive pass — and (b) produce candidate
     pairs identical to an unkilled in-memory run (oracle-equal)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from pdf_parser_spark.functions import dedup as dd
 
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(f"d{i}", f"{base} suffix{i // 2}") for i in range(10)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = _dedup_docs(spark)
     out_dir = tempfile.mkdtemp(prefix="lineage_dedup_", dir="/root/repo")
     try:
+        monkeypatch.setattr(dd, "lsh_band_pairs", _boom)
         with pytest.raises(RuntimeError, match="injected failure"):
             L.run_resumable_dedup(
                 spark, docs, out_dir, run_id="k1",
-                n_hashes=8, k=3, n_bands=2, fail_after_stages=1,
+                n_hashes=8, k=3, n_bands=2,
             )
+        monkeypatch.undo()
         assert L.completed_buckets(
             spark, out_dir, L.DEDUP_LINEAGE_SUBDIR
         ) == {0}
         sig_dir = f"{out_dir}/signatures"
-        mtimes = {
-            f: os.path.getmtime(os.path.join(sig_dir, f))
-            for f in os.listdir(sig_dir)
-        }
+        mtimes = _mtimes(sig_dir)
 
         summary = L.run_resumable_dedup(
             spark, docs, out_dir, run_id="k2",
@@ -84,21 +150,10 @@ def test_resumable_dedup_skips_signature_recompute(spark):
         )
         assert summary["skipped_stages"] == [0]
         # signatures stage table untouched by the resume
-        assert mtimes == {
-            f: os.path.getmtime(os.path.join(sig_dir, f))
-            for f in os.listdir(sig_dir)
-        }
+        assert mtimes == _mtimes(sig_dir)
 
-        got = {
-            (r.id_a, r.id_b)
-            for r in spark.read.parquet(f"{out_dir}/pairs").collect()
-        }
-        want = {
-            (r.id_a, r.id_b)
-            for r in dd.lsh_candidate_pairs(
-                docs, f"{out_dir}/unkilled", n_hashes=8, k=3, n_bands=2
-            ).select("id_a", "id_b").collect()
-        }
+        got = _written_pairs(spark, out_dir)
+        want = _unkilled_pairs(docs, out_dir)
         assert got == want and len(want) > 0
 
         # a THIRD run over the finished state is a pure no-op
@@ -109,6 +164,56 @@ def test_resumable_dedup_skips_signature_recompute(spark):
         assert summary3["skipped_stages"] == [0, 1]
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "kill, committed",
+    [
+        # the signatures plan raises: nothing is written
+        ("minhash_df", set()),
+        # the signatures table is written, its lineage row is not
+        ("_append_lineage", set()),
+        # signatures is committed, the pairs plan raises
+        ("lsh_band_pairs", {0}),
+    ],
+    ids=["minhash_df", "_append_lineage", "lsh_band_pairs"],
+)
+def test_dedup_resume_after_kill_at_each_stage_boundary(
+    spark, tmp_path, monkeypatch, kill, committed
+):
+    """A kill at each boundary of the dedup graph (signatures → pairs):
+    the resume skips exactly the committed stages, never rewrites their
+    tables, reads a committed table back without starting a job (the
+    only job outside the stages is the lineage read), tags every stage
+    job with its stage name, and writes the pairs an unkilled run
+    finds."""
+    from pdf_parser_spark.functions import dedup as dd
+
+    docs = _dedup_docs(spark)
+    out_dir = str(tmp_path / "out")
+    monkeypatch.setattr(L if kill == "_append_lineage" else dd, kill, _boom)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        L.run_resumable_dedup(spark, docs, out_dir, run_id="kill",
+                              n_hashes=8, k=3, n_bands=2)
+    monkeypatch.undo()
+    assert L.completed_buckets(
+        spark, out_dir, L.DEDUP_LINEAGE_SUBDIR
+    ) == committed
+    names = [("signatures", "pairs")[i] for i in sorted(committed)]
+    before = {n: _mtimes(f"{out_dir}/{n}") for n in names}
+
+    group = f"dedup-resume-{kill}"
+    summary, jobs = _jobs_by_description(
+        spark, group,
+        lambda: L.run_resumable_dedup(spark, docs, out_dir, run_id="resume",
+                                      n_hashes=8, k=3, n_bands=2),
+    )
+    assert summary["skipped_stages"] == sorted(committed)
+    assert before == {n: _mtimes(f"{out_dir}/{n}") for n in names}
+    ran = {"signatures", "pairs"} - set(names)
+    assert {d for d in jobs if d != group} == ran
+    assert jobs.get(group, 0) == (1 if committed else 0)
+    assert _written_pairs(spark, out_dir) == _unkilled_pairs(docs, out_dir)
 
 
 def test_dedup_lineage_namespaced_from_pipeline_lineage(spark, docs_df):
@@ -214,16 +319,9 @@ def test_completed_buckets_reads_lineage_in_one_job(spark, tmp_path):
     L._append_lineage(
         spark, str(tmp_path), [L._lineage_row("r", 3, 1, 1, now, now, {})]
     )
-    sc = spark.sparkContext
-    group = "test-lineage-read"
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    sc.setJobGroup(group, "lineage read")
-    try:
-        assert L.completed_buckets(spark, str(tmp_path)) == {3}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set(key, prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    done, jobs = _jobs_by_description(
+        spark, "test-lineage-read",
+        lambda: L.completed_buckets(spark, str(tmp_path)),
+    )
+    assert done == {3}
+    assert sum(jobs.values()) == 1

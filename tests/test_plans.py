@@ -152,7 +152,7 @@ def test_bucketed_docs_reassembly_is_shuffle_free(spark, docs_df, tmp_path):
         sort_cols=("doc_id",), path=str(tmp_path / "docs_bucketed"),
     )
     try:
-        bucketed = tbl.read_bucketed_table(spark, name)
+        bucketed = tbl.read_table(spark, f"table:{name}")
         out = P.span_sequence_df(P.valid_spans(P.explode_spans(bucketed)))
         plan = _plan(out)
         assert "Exchange" not in plan

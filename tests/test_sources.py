@@ -159,7 +159,7 @@ def test_register_bucketed_table_reclaims_shuffle_free(spark, docs_df,
 
     T.register_bucketed_table(spark, "reg_bucketed_r", path, 4, ddl)
     try:
-        df = T.read_bucketed_table(spark, "table:reg_bucketed_r")
+        df = T.read_table(spark, "table:reg_bucketed_r")
         out = P.span_sequence_df(P.valid_spans(P.explode_spans(df)))
         assert "Exchange" not in plan(out)
         assert sorted(map(tuple, out.collect())) == sorted(
@@ -190,8 +190,8 @@ def test_cobucketed_join_is_shuffle_and_sort_free(spark, docs_df,
     T.write_bucketed_table(right, "cob_right", n_buckets=4,
                            path=str(tmp_path / "cob_right"))
     try:
-        lt = T.read_bucketed_table(spark, "table:cob_left")
-        rt = T.read_bucketed_table(spark, "table:cob_right")
+        lt = T.read_table(spark, "table:cob_left")
+        rt = T.read_table(spark, "table:cob_right")
         joined = lt.hint("merge").join(rt, "doc_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
