@@ -9,6 +9,11 @@ reference's FIFO pattern cache (text_utils.py:45-57; SURVEY.md §4 P4).
 Scale notes: the docs ids and the pages are one tagged union grouped
 once on ``doc_id`` — one exchange, no join, so no broadcast side job;
 the filter ``page <= 5`` prunes before the shuffle (SURVEY.md §4 P2).
+
+Identity: a doc_id is one document, so it gets one metadata row however
+often ``docs`` lists it; NULL ids never get here (``stage_graph`` hands
+in the non-NULL ``docs``, and ``pages.error_kind_expr`` quarantines
+their spans).
 """
 
 from __future__ import annotations
@@ -55,18 +60,17 @@ def metadata_df(
     the reference returns all-Unknown for an unreadable PDF).
 
     One ``unionByName`` of the docs ids and the pages <= 5, grouped
-    once on doc_id: one exchange, no join.  Each row of ``docs`` keeps
-    its own output row (a doc_id listed n times gives n rows, each NULL
-    doc_id row one all-'Unknown' row), and pages of an id ``docs`` does
-    not list give none."""
-    relevant = pages.filter(
-        F.col("doc_id").isNotNull() & (F.col("page") <= cfg.metadata_max_page)
-    ).select("doc_id", F.struct("page", "text").alias("_page"))
+    once on doc_id: one exchange, no join.  Each distinct doc_id of
+    ``docs`` gets one row, and pages of an id ``docs`` does not list
+    give none."""
+    relevant = pages.filter(F.col("page") <= cfg.metadata_max_page).select(
+        "doc_id", F.struct("page", "text").alias("_page")
+    )
     parts = docs.select("doc_id", F.lit(True).alias("_doc")).unionByName(
         relevant, allowMissingColumns=True
     )
-    combined = parts.groupBy("doc_id").agg(
-        F.count("_doc").cast("int").alias("_n_docs"),
+    out = parts.groupBy("doc_id").agg(
+        F.max("_doc").alias("_doc"),
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list("_page")),
@@ -74,11 +78,7 @@ def metadata_df(
             ),
             "\n",
         ).alias("combined"),
-    )
-    out = combined.select(
-        "doc_id",
-        F.explode(F.array_repeat("combined", "_n_docs")).alias("combined"),
-    )
+    ).filter(F.col("_doc"))
     for field, pattern in _FIELD_PATTERNS.items():
         out = out.withColumn(field, _field(F.col("combined"), pattern))
     return out.select(

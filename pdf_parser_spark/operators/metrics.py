@@ -11,6 +11,10 @@ exchange, no joins.  The TOC covered-page count (A5) is a per-doc fold
 of the entry pages' min and max, not an interval sweep or exploded
 ``sequence()`` ranges — constant memory per doc at any page range
 (SURVEY.md A5 "interval arithmetic").
+
+Identity: one row per distinct doc_id of ``docs``, which holds no NULL
+id (``stage_graph`` filters it; ``pages.error_kind_expr`` quarantines
+such a doc's spans); every input has one document per doc_id.
 """
 
 from __future__ import annotations
@@ -43,12 +47,9 @@ def metrics_df(
     only doc_id, section_id, page and content are read).  Each source
     contributes tagged partial rows to one union that is grouped once
     on doc_id; a source's own columns are NULL on the other sources'
-    rows, so every aggregate only sees its source.  Row multiplicity is
-    that of the ``docs`` × ``metadata`` left join on doc_id: n_docs ×
-    max(n_metadata, 1) rows per id, and one all-default ``Missing`` row
-    per NULL-doc_id row of ``docs``."""
-    keyed = F.col("doc_id").isNotNull()
-
+    rows, so every aggregate only sees its source.  A doc_id of ``docs``
+    gets one row, ``Missing`` as its status if ``metadata`` has no row
+    for it; ids ``docs`` does not list get none."""
     has_text = non_blank(F.coalesce("text", F.lit("")))
     has_tables = F.col("n_tables") > 0
     has_images = F.col("n_images") > 0
@@ -59,7 +60,7 @@ def metrics_df(
         + F.col("table_text_len")
         + F.col("annot_text_len")
     )
-    page_rows = pages.filter(keyed).select(
+    page_rows = pages.select(
         "doc_id",
         has_text.alias("p_text"),
         has_tables.alias("p_tables"),
@@ -79,7 +80,7 @@ def metrics_df(
             for f in ("doc_title", "revision", "version", "release_date")
         ],
     )
-    meta_rows = metadata.filter(keyed).select(
+    meta_rows = metadata.select(
         "doc_id",
         F.when(meta_ok, F.lit("Valid"))
         .otherwise(F.lit("Invalid/Missing"))
@@ -87,7 +88,7 @@ def metrics_df(
     )
 
     # A5 reads only valid (page > 0) entries; t_entry tags every entry
-    toc_rows = toc.filter(keyed).select(
+    toc_rows = toc.select(
         "doc_id",
         F.lit(True).alias("t_entry"),
         F.when(F.col("page") > 0, F.col("page")).alias("t_page"),
@@ -95,7 +96,7 @@ def metrics_df(
 
     sec_content = F.coalesce(F.col("content"), F.lit(""))
     sec_lower = F.lower(sec_content)
-    sec_rows = sections.filter(keyed).select(
+    sec_rows = sections.select(
         "doc_id",
         (F.coalesce("section_id", F.lit("")) != "").alias("s_toc"),
         (
@@ -132,8 +133,10 @@ def metrics_df(
         return F.coalesce(F.max(F.col(c).cast("int")), F.lit(0))
 
     agg = parts.groupBy("doc_id").agg(
-        F.count("d_doc").cast("int").alias("n_docs"),
-        F.collect_list("m_status").alias("statuses"),
+        F.max("d_doc").alias("d_doc"),
+        F.coalesce(F.max("m_status"), F.lit("Missing")).alias(
+            "metadata_status"
+        ),
         F.count("p_text").alias("total_pages"),
         F.count_if("p_text").alias("pages_with_text"),
         F.count_if("p_tables").alias("n_pages_tables"),
@@ -172,18 +175,6 @@ def metrics_df(
         + 1,
         F.lit(0).cast("long"),
     )
-    # one row per (docs row, metadata row) of the doc, as the left join
-    # docs ⋈ metadata gives; a doc without metadata is 'Missing'
-    status = F.explode(
-        F.flatten(
-            F.transform(
-                F.when(F.size("statuses") > 0, F.col("statuses")).otherwise(
-                    F.array(F.lit("Missing"))
-                ),
-                lambda s: F.array_repeat(s, F.col("n_docs")),
-            )
-        )
-    )
 
     text_cov = _pct(F.col("pages_with_text"), tp)
     table_cov = _pct(F.col("n_pages_tables"), tp)
@@ -191,9 +182,9 @@ def metrics_df(
     annot_cov = _pct(F.col("n_pages_annots"), tp)
     layout_cov = _pct(F.col("n_pages_layout"), tp)
 
-    return agg.select(
+    return agg.filter(F.col("d_doc")).select(
         "doc_id",
-        status.alias("metadata_status"),
+        "metadata_status",
         "total_toc_entries",
         "sections_parsed",
         "pages_with_text",

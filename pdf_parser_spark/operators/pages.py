@@ -19,6 +19,10 @@ Reference semantics pinned (oracle: refsem.derive_pages/span_sequence):
 - page_manager.py:69-148 fixed assembly order TEXT→TABLES→IMAGES→LAYOUT→
   ANNOTATIONS per page;
 - helpers.py:29,93-95 poison-line guard → quarantine rows, not skips.
+
+Identity is checked once, in ``error_kind_expr``: a NULL doc_id's spans
+are quarantined as ``null_doc_id``, and a doc_id listed twice is one
+document, whose spans every doc_id window merges.
 """
 
 from __future__ import annotations
@@ -74,7 +78,8 @@ def explode_spans(
 ) -> DataFrame:
     """(doc_id, spans) → flat (doc_id, seq, kind, text, media_ref, offset,
     error_kind).  ``error_kind`` null ⇒ valid span; 'empty_spans' rows mark
-    documents whose array is null/empty (posexplode_outer keeps them).
+    documents whose array is null/empty (posexplode_outer keeps them), and
+    every row of a NULL doc_id is 'null_doc_id'.
 
     ``normalize_html`` rewrites raw-HTML payload spans to their main
     content first (boilerplate.normalize_html_flat, with ``rewritten``
@@ -93,7 +98,8 @@ def error_kind_expr(cfg: PipelineConfig = DEFAULT_CONFIG) -> F.Column:
     the batch explode path above and the streaming fragment-assembly
     path (streaming/assembly.py), so both quarantine identically."""
     return (
-        F.when(F.col("seq").isNull(), F.lit("empty_spans"))
+        F.when(F.col("doc_id").isNull(), F.lit("null_doc_id"))
+        .when(F.col("seq").isNull(), F.lit("empty_spans"))
         # NULL kind must not slip through three-valued logic: NOT(NULL
         # isin ...) is NULL, which when() treats as false — test isNull
         # explicitly (found by tests/test_properties.py's minimal
@@ -120,8 +126,10 @@ def quarantine_df(flat: DataFrame) -> DataFrame:
         "doc_id",
         F.col("seq").alias("span_seq"),
         "error_kind",
-        F.when(F.col("error_kind") == "empty_spans",
-               F.lit("document has no spans"))
+        F.when(F.col("error_kind") == "null_doc_id",
+               F.lit("doc_id is NULL"))
+        .when(F.col("error_kind") == "empty_spans",
+              F.lit("document has no spans"))
         .when(F.col("error_kind") == "unknown_kind",
               F.concat(F.lit("kind="), F.coalesce(F.col("kind"), F.lit("None"))))
         .when(F.col("error_kind") == "bad_offset",
@@ -515,10 +523,7 @@ def span_sequence_skew_df(
         # one chunk = the single-window plan
         return span_sequence_df(valid)
     mega_src = _offset_cuts(
-        docs.filter(
-            (F.size("spans") > cfg.mega_doc_span_threshold)
-            & F.col("doc_id").isNotNull()
-        ),
+        docs.filter(F.size("spans") > cfg.mega_doc_span_threshold),
         cfg.salt_buckets,
     )
     # one job: collect_list over the limit; a bare limit().collect()
@@ -534,12 +539,7 @@ def span_sequence_skew_df(
         return span_sequence_df(valid)
     if len(probe) <= MAX_LITERAL_MEGA_IDS:
         ids = [r.doc_id for r in probe]
-        # NULL doc_id must stay in the normal branch: ~isin(NULL) is
-        # NULL (three-valued logic), which filter() drops — test isNull
-        # explicitly so the bit-identical contract holds on that edge.
-        normal = valid.filter(
-            F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids)
-        )
+        normal = valid.filter(~F.col("doc_id").isin(ids))
         mega = valid.filter(F.col("doc_id").isin(ids))
         cuts = _cuts_lookup(probe, valid.schema["doc_id"].dataType)
     else:  # adversarial corpus: too many megas for a literal filter
@@ -599,9 +599,9 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
     row opens its page, so pages 2..total_pages each hold a row; it
     also stands in for the page it closes, so page 1 exists when the doc
     starts with a break.  ``total_pages`` is the doc's break count + 1,
-    summed over the same window as the page numbers.  The spans of a
-    NULL doc_id belong to no document and give no pages (the window
-    would gather every NULL-id doc into one)."""
+    summed over the same window as the page numbers.  ``valid`` holds
+    no NULL doc_id (``error_kind_expr``), and the spans of a doc_id
+    listed twice are one document's pages."""
     is_break = F.col("kind") == PAGE_BREAK_KIND
     w_all = (
         Window.partitionBy("doc_id")
@@ -609,7 +609,7 @@ def pages_df(valid: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFram
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     spans = _with_ids(
-        with_page(valid.filter(F.col("doc_id").isNotNull())).withColumn(
+        with_page(valid).withColumn(
             "total_pages",
             (F.sum(is_break.cast("int")).over(w_all) + 1).cast("int"),
         )

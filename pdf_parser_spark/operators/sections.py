@@ -22,6 +22,10 @@ Dataflow (all shuffles keyed on ``doc_id``, no join before W5):
 Steps 1-4 are ``sections_preorder_df`` and step 5 is ``sections_df``:
 two stages of the pipeline's graph (``sections_preorder`` →
 ``sections``), with the pre-order union written in between.
+
+Identity: no input row carries a NULL doc_id (``pages.error_kind_expr``
+quarantines those spans), and a doc_id is one document — one metadata
+row, unique ``entry_order`` — so each section is emitted once.
 """
 
 from __future__ import annotations
@@ -99,14 +103,13 @@ def sections_preorder_df(
 ) -> DataFrame:
     """Section assembly before the W5 ordering: the union of the TOC,
     page and content sections (SECTIONS_OUT columns without ``order``,
-    plus ``pass_rank``, ``intra_order`` and ``copy_no``, which numbers
-    the copies of a duplicated doc_id's section; the page sections'
+    plus ``pass_rank`` and ``intra_order``; the page sections'
     ``full_path`` is NULL until ``sections_df`` derives it).
     ``run_pipeline`` writes it as its ``sections_preorder`` stage, which
     ``sections_df`` orders.
 
-    No join: the pages, the valid TOC entries and the keyed metadata
-    rows are shuffled on doc_id into one window ordered by page
+    No join: the pages, the valid TOC entries and the metadata rows
+    are shuffled on doc_id into one window ordered by page
     (``_assign_pages``), once for the TOC sections and once for the
     page and content sections.  The toc's ``entry_order`` is page order
     (``toc_entries_df`` numbers entries by page first), which the W1
@@ -129,8 +132,9 @@ def _assign_pages(
     metadata: DataFrame,
     cfg: PipelineConfig,
 ) -> DataFrame:
-    """Pages ∪ valid TOC entries ∪ keyed metadata rows, with each page's
-    owning entry and pass flags.
+    """Pages ∪ valid TOC entries ∪ metadata rows, with each page's
+    owning entry, pass flags and the doc's title (J6, from its one
+    metadata row; NULL without one).
 
     W1 (toc_processor.py:59-75; section_parser.py:163-167): entry i
     covers [page_i, page_{i+1} - 1] and the last entry runs to
@@ -142,11 +146,7 @@ def _assign_pages(
     - J3: the uncovered pages are those before the doc's first valid
       entry page (no owner);
     - J5: the "existing" pages are the entry pages plus the uncovered
-      pages with content.
-    Rows of a NULL doc_id belong to no document (a NULL key matches
-    nothing): their pages are uncovered, none is existing, and their
-    entries get empty content."""
-    keyed = F.col("doc_id").isNotNull()
+      pages with content."""
     entries = toc.filter(F.col("page") > 0).select(
         "doc_id",
         "page",
@@ -161,7 +161,7 @@ def _assign_pages(
             allowMissingColumns=True,
         )
         .unionByName(
-            metadata.filter(keyed).select(
+            metadata.select(
                 "doc_id", F.struct("doc_title").alias("_meta")
             ),
             allowMissingColumns=True,
@@ -179,23 +179,23 @@ def _assign_pages(
         "*",
         F.max("_entry").over(upto).alias("_owner"),
         F.max(F.when(is_entry, F.col("page"))).over(upto).alias("_entry_p"),
-        F.collect_list("_meta").over(Window.partitionBy("doc_id"))
-        .alias("_metas"),
+        F.max("_meta.doc_title").over(Window.partitionBy("doc_id"))
+        .alias("doc_title"),
     ).filter(F.col("_meta").isNull())
     is_page = ~is_entry
-    owner = F.when(keyed, F.col("_owner"))
     content = F.coalesce("content", F.lit(""))
-    page_section = is_page & owner.isNull() & non_blank(content)
+    page_section = is_page & F.col("_owner").isNull() & non_blank(content)
     is_entry_page = F.col("_entry_p").eqNullSafe(F.col("page"))
-    existing = keyed & (is_entry_page | page_section)
+    existing = is_entry_page | page_section
     return rows.select(
         "doc_id",
         "page",
         "content",
         "_e",
-        "_metas",
+        "doc_title",
         # J2 group: an entry's own order, or a covered page's owner
-        F.when(is_entry, F.col("_entry")).otherwise(owner).alias("_group"),
+        F.when(is_entry, F.col("_entry")).otherwise(F.col("_owner"))
+        .alias("_group"),
         page_section.alias("_page_section"),
         (
             is_page
@@ -214,49 +214,29 @@ def _toc_sections(rows: DataFrame) -> DataFrame:
     """J2: each entry's content is its owned pages in page order, joined
     with the PAGE BREAK sentinel (comprehensive_content_range,
     page_manager.py:53-67).  One ``groupBy(doc_id, owner)`` over the
-    rows ``_assign_pages`` tags.
-
-    Each copy of an entry (a duplicated doc_id lists the same entry
-    twice) has a W1 range of its own; the copies share their page, so
-    all but the last cover no page.  Every range that covers no page
-    adds one empty part to the content."""
-    keyed = F.col("doc_id").isNotNull()
+    rows ``_assign_pages`` tags: each group holds one entry row (its
+    ``entry_order`` is unique in the doc) and the pages it owns, none
+    if it owns no page (empty content)."""
     page_part = F.struct(F.col("page"), F.col("content"))
-    empty_part = F.struct(
-        F.lit(None).cast("int").alias("page"),
-        F.lit(None).cast("string").alias("content"),
-    )
     grouped = (
         rows.filter(F.col("_group").isNotNull())
         .groupBy("doc_id", "_group")
         .agg(
-            F.collect_list("_e").alias("_copies"),
-            F.collect_list(F.when(F.col("_e").isNull(), page_part))
-            .alias("_parts"),
+            F.first("_e", ignorenulls=True).alias("e"),
+            F.array_sort(F.collect_list(
+                F.when(F.col("_e").isNull(), page_part)
+            )).alias("_parts"),
         )
     )
-    n_empty = F.size("_copies") - F.when(
-        F.size("_parts") > 0, F.lit(1)
-    ).otherwise(F.lit(0))
-    parts = F.array_sort(
-        F.concat(F.array_repeat(empty_part, n_empty), F.col("_parts"))
+    entry_content = py_strip(
+        F.array_join(
+            F.transform(
+                "_parts", lambda s: F.coalesce(s["content"], F.lit(""))
+            ),
+            PAGE_BREAK,
+        )
     )
-    entry_content = F.when(
-        keyed,
-        py_strip(
-            F.array_join(
-                F.transform(
-                    parts, lambda s: F.coalesce(s["content"], F.lit(""))
-                ),
-                PAGE_BREAK,
-            )
-        ),
-    ).otherwise(F.lit(""))
-    e = grouped.select(
-        "doc_id",
-        entry_content.alias("content"),
-        F.posexplode("_copies").alias("copy_no", "e"),
-    ).select("doc_id", "content", "copy_no", "e.*")
+    e = grouped.select("doc_id", entry_content.alias("content"), "e.*")
     sid = F.coalesce(F.col("section_id"), F.lit(""))
     return e.select(
         "doc_id",
@@ -276,7 +256,6 @@ def _toc_sections(rows: DataFrame) -> DataFrame:
         F.coalesce("tags", F.array().cast("array<string>")).alias("tags"),
         F.lit(0).alias("pass_rank"),
         F.col("entry_order").alias("intra_order"),
-        "copy_no",
     )
 
 
@@ -285,8 +264,7 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
     Column exprs, operators/headings) and J5 content-based sections
     (natural-heading state machine as a pandas UDF returning (title,
     content) pairs; only the content candidates' text crosses into it),
-    one ``explode`` over both, then J6: one row per metadata row of the
-    doc, as a left join on doc_id gives."""
+    one ``explode`` over both, each carrying the doc's title (J6)."""
     pairs = _content_sections_udf(
         F.when(F.col("_content_candidate"), F.col("text")), F.col("page")
     )
@@ -315,13 +293,8 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
     )
     items = (
         rows.filter(F.col("_page_section") | F.col("_content_candidate"))
-        .select("doc_id", "page", "_metas", F.explode(items).alias("s"))
-        .select(
-            "doc_id",
-            "page",
-            "s.*",
-            F.posexplode_outer("_metas").alias("copy_no", "m"),
-        )
+        .select("doc_id", "doc_title", "page", F.explode(items).alias("s"))
+        .select("doc_id", "doc_title", "page", "s.*")
     )
     section_id = F.concat(F.lit("Page-"), F.col("page"))
     # the page sections' full_path is derived by sections_df, after the
@@ -331,7 +304,7 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
     # the materialized column
     return items.select(
         "doc_id",
-        F.col("m.doc_title").alias("doc_title"),
+        "doc_title",
         section_id.alias("section_id"),
         "title",
         F.when(
@@ -345,7 +318,6 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
         _page_section_tags(F.col("content")).alias("tags"),
         "pass_rank",
         "intra_order",
-        F.coalesce("copy_no", F.lit(0)).alias("copy_no"),
     )
 
 
@@ -359,9 +331,8 @@ def sections_df(preorder: DataFrame) -> DataFrame:
     bound on exactly that sort.  So ``order`` is computed on a skinny
     projection of the (written) pre-order table and re-attached by the
     UNIQUE section identity (doc_id, page, section_id, pass_rank,
-    intra_order, copy_no — toc rows have unique entry_order, page rows
-    unique page, content rows unique (page, intra_order), and the copies
-    of a duplicated doc_id's section unique copy_no), so each pre-order
+    intra_order — toc rows have unique entry_order, page rows unique
+    page, content rows unique (page, intra_order)), so each pre-order
     row gets exactly one ``order``; the SHUFFLE_HASH
     hint keeps the big side a hash probe — a sort-merge join would
     re-sort the strings and give the win straight back.  Both join
@@ -371,11 +342,8 @@ def sections_df(preorder: DataFrame) -> DataFrame:
         F.coalesce("section_id", F.lit("")),
         "pass_rank",
         "intra_order",
-        "copy_no",
     )
-    key = [
-        "doc_id", "page", "section_id", "pass_rank", "intra_order", "copy_no"
-    ]
+    key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
     skinny = preorder.select(*key).withColumn(
         "order", F.row_number().over(w_order)
     )
@@ -389,6 +357,6 @@ def sections_df(preorder: DataFrame) -> DataFrame:
         if c == "full_path"
         else c
         for c in preorder.columns
-        if c not in ("pass_rank", "intra_order", "copy_no")
+        if c not in ("pass_rank", "intra_order")
     ] + ["order"]
     return preorder.join(skinny.hint("SHUFFLE_HASH"), key).select(*out_cols)

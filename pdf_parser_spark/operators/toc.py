@@ -25,6 +25,10 @@ read the written features and the metadata (J6 doc titles).
 ``toc_entries_df`` shuffles once, on ``doc_id`` (the bucketing key of
 the input layout), and plans no join: every window chains over that one
 exchange, and the J6 doc titles ride along as tagged metadata rows.
+
+Identity: no feature line or metadata row carries a NULL doc_id
+(``pages.error_kind_expr`` quarantines those spans), and a doc_id is
+one document with one metadata row, so each entry is emitted once.
 """
 
 from __future__ import annotations
@@ -238,15 +242,13 @@ def toc_entries_df(
     per doc — consumed by the section stage's W1 ranges).
 
     One pass, no join: the feature lines some battery matched and the
-    keyed metadata rows are shuffled once on doc_id, and every window
-    below chains over that exchange.  The first, unordered doc_id window collects each doc's
-    primary full paths and lowercased titles (J4) and its metadata
-    titles (J6); each line then yields its accepted candidates of the
-    three passes through one ``explode``.  ``accepted_primary`` is
-    evaluated once per line.  A NULL doc_id matches nothing, as a join
-    key would: its enhanced lines are never dropped by J4 and its
-    entries get a NULL doc_title."""
-    keyed = F.col("doc_id").isNotNull()
+    metadata rows are shuffled once on doc_id, and every window below
+    chains over that exchange.  The first, unordered doc_id window
+    collects each doc's primary full paths and lowercased titles (J4)
+    and takes the title of its one metadata row (J6; NULL without
+    one); each line then yields its accepted candidates of the three
+    passes through one ``explode``.  ``accepted_primary`` is evaluated
+    once per line."""
     accepted_primary = (
         F.col("prim_matched")
         & (F.col("prim_page") > 0)
@@ -257,7 +259,7 @@ def toc_entries_df(
             refsem.TECHNICAL_PATTERNS,
         )
     )
-    meta_rows = metadata.filter(keyed).select(
+    meta_rows = metadata.select(
         "doc_id", F.struct("doc_title").alias("_meta")
     )
     w_doc = Window.partitionBy("doc_id")
@@ -271,11 +273,11 @@ def toc_entries_df(
         .unionByName(meta_rows, allowMissingColumns=True)
         .select(
             "*",
-            F.collect_list(F.when(prim & keyed, F.col("stripped")))
+            F.collect_list(F.when(prim, F.col("stripped")))
             .over(w_doc).alias("_prim_paths"),
-            F.collect_set(F.when(prim & keyed, F.lower("prim_title")))
+            F.collect_set(F.when(prim, F.lower("prim_title")))
             .over(w_doc).alias("_prim_titles"),
-            F.collect_list("_meta").over(w_doc).alias("_metas"),
+            F.max("_meta.doc_title").over(w_doc).alias("doc_title"),
         )
         .filter(F.col("_meta").isNull())
     )
@@ -361,7 +363,7 @@ def toc_entries_df(
         "src_page",
         "line_no",
         F.col("stripped").alias("full_path"),
-        "_metas",
+        "doc_title",
         F.explode(F.filter(candidates, lambda c: c.isNotNull())).alias("c"),
     ).select("*", "c.*").drop("c")
 
@@ -394,14 +396,11 @@ def toc_entries_df(
     w_order = Window.partitionBy("doc_id").orderBy(
         "page", "title", "pass_rank", "src_page", "line_no"
     )
-    # J6: doc_title propagation from the metadata step (main.py:204-210),
-    # one entry row per metadata row of the doc, as a left join gives
+    # J6: doc_title propagation from the metadata step (main.py:204-210)
     entries = deduped.withColumn("entry_order", F.row_number().over(w_order))
     return entries.select(
-        "*", F.explode_outer("_metas").alias("_m")
-    ).select(
         "doc_id",
-        F.col("_m.doc_title").alias("doc_title"),
+        "doc_title",
         "section_id",
         "title",
         "page",

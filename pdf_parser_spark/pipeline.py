@@ -44,6 +44,7 @@ from dataclasses import dataclass, field, fields, replace
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -122,6 +123,10 @@ def stage_graph(
     # proportional to the html rows only — ``docs`` for the doc_id-universe
     # consumers (metadata/metrics) stays the raw scan.
     graph = []
+    # the doc_id universe of metadata, metrics and the mega probe: a NULL
+    # doc_id is no document (its spans are quarantined as null_doc_id),
+    # and this filter is pushed into the scan
+    keyed_docs = docs.filter(F.col("doc_id").isNotNull())
     if normalize_html:
         from pdf_parser_spark.functions import boilerplate
 
@@ -148,7 +153,7 @@ def stage_graph(
               lambda pages: toc_op.toc_features_df(pages, cfg),
               written("toc_feats", tables.internal_ref)),
         Stage("metadata", ("pages",),
-              lambda pages: metadata_op.metadata_df(docs, pages, cfg),
+              lambda pages: metadata_op.metadata_df(keyed_docs, pages, cfg),
               written("metadata")),
         Stage("toc", ("toc_feats", "metadata"),
               lambda feats, meta: toc_op.toc_entries_df(feats, meta, cfg),
@@ -161,14 +166,14 @@ def stage_graph(
               written("sections")),
         Stage("metrics", ("pages", "toc", "sections_preorder", "metadata"),
               lambda pages, toc, preorder, meta: metrics_op.metrics_df(
-                  docs, pages, toc, preorder, meta)),
+                  keyed_docs, pages, toc, preorder, meta)),
         # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
         # cfg.mega_doc_span_threshold take the two-phase chunked path so
         # no single task sorts a pathological doc alone; output is
         # bit-identical either way.
         Stage("spans_out", spans_in,
               lambda *r: pages_op.span_sequence_skew_df(
-                  pages_op.valid_spans(flat(*r)), cfg, docs=docs)),
+                  pages_op.valid_spans(flat(*r)), cfg, docs=keyed_docs)),
         Stage("quarantine", spans_in,
               lambda *r: pages_op.quarantine_df(flat(*r))),
     ]

@@ -107,7 +107,9 @@ SECTIONS_OUT = StructType(
 )
 
 # Malformed-document quarantine (structured error columns, north rule;
-# replaces the reference's silent skips helpers.py:93-95).
+# replaces the reference's silent skips helpers.py:93-95).  error_kind,
+# first match wins (pages.error_kind_expr): null_doc_id, empty_spans,
+# unknown_kind, bad_offset, oversize_text.
 QUARANTINE = StructType(
     [
         StructField("doc_id", StringType()),

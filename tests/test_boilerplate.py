@@ -356,8 +356,9 @@ def test_normalize_html_flat_plan_shape(spark, tmp_path):
 def test_null_doc_id_html_doc_keeps_its_id(spark, tmp_path):
     """A NULL doc_id html doc keeps its NULL id and its stripped html
     content on both entry points: strip_html_spans re-collects it into
-    ONE NULL doc (no phantom 'None' doc), and the inline pipeline emits
-    its html content under the NULL id."""
+    ONE NULL doc (no phantom 'None' doc), and the inline pipeline
+    quarantines its stripped spans under the NULL id as ``null_doc_id``
+    and emits none of them."""
     from pyspark.sql import Row
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -388,8 +389,9 @@ def test_null_doc_id_html_doc_keeps_its_id(spark, tmp_path):
     assert [(s.kind, s.text, s.offset) for s in null_doc.spans] == [
         ("text", "intro", 0), ("text", LONG, 1)
     ]
-    spans_out = run_pipeline(docs, str(tmp_path),
-                             normalize_html=True).spans_out
+    result = run_pipeline(docs, str(tmp_path), normalize_html=True)
     assert sorted(
-        r.text for r in spans_out.collect() if r.doc_id is None
-    ) == sorted(["intro", LONG])
+        (r.span_seq, r.error_kind, r.raw)
+        for r in result.quarantine.collect() if r.doc_id is None
+    ) == [(0, "null_doc_id", "intro"), (1, "null_doc_id", LONG)]
+    assert [r.doc_id for r in result.spans_out.collect()] == ["d1"]

@@ -54,14 +54,13 @@ def test_metrics_parity(docs_df, oracle_results, tmp_path):
 
 def test_metrics_edge_doc_ids(spark, tmp_path):
     """Row multiplicity of the one-groupBy rollup on a nullable-doc_id
-    corpus: each NULL-doc_id docs row keeps its own all-default
-    ``Missing`` row, and a doc_id that appears twice keeps the
-    docs × metadata rows (2 × 2) it always had.
+    corpus: a NULL doc_id is no document and gets no metrics row, and a
+    doc_id that appears twice is one document with one row.
 
     Metrics reads the pre-order sections, so the duplicated id's
-    section counts are those of its pre-order rows (48).  ``sections``
-    holds exactly those rows: W5 re-attaches each copy of a section by
-    its ``copy_no``, so the two copies do not match each other."""
+    section counts are those of its pre-order rows (24), which
+    ``sections`` holds once each; its 18 toc entries are emitted once
+    each."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from pdf_parser_spark.fixtures.gen import fixture_corpus, to_rows
@@ -84,19 +83,17 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
     result = run_pipeline(docs, str(tmp_path))
     rows = result.metrics.collect()
 
-    nulls = [r.asDict() for r in rows if r.doc_id is None]
-    assert len(nulls) == 2
-    for r in nulls:
-        assert r.pop("metadata_status") == "Missing"
-        assert not any(v for k, v in r.items() if k != "doc_id"), r
+    assert not [r for r in rows if r.doc_id is None]
 
     dups = [r for r in rows if r.doc_id == dup]
-    assert len(dups) == 4
+    assert len(dups) == 1
     preorder = tables.read_table(
         spark, tables.internal_ref(str(tmp_path), "sections_preorder")
     )
-    assert preorder.filter(preorder.doc_id == dup).count() == 48
-    assert result.sections.filter(result.sections.doc_id == dup).count() == 48
+    assert preorder.filter(preorder.doc_id == dup).count() == 24
+    assert result.sections.filter(result.sections.doc_id == dup).count() == 24
+    toc = result.toc.filter(result.toc.doc_id == dup)
+    assert toc.count() == toc.select("entry_order").distinct().count() == 18
     assert {
         (r.metadata_status, r.total_toc_entries, r.total_pages,
          r.toc_covered_pages, r.sections_parsed, r.toc_sections,
@@ -104,4 +101,4 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
          r.sections_with_images, r.total_section_content_length,
          r.section_pages_covered)
         for r in dups
-    } == {("Valid", 36, 13, 914, 48, 38, 10, 6, 4, 22214, 21)}
+    } == {("Valid", 18, 13, 914, 24, 19, 5, 3, 2, 10777, 21)}

@@ -69,9 +69,9 @@ def test_pages_parity(docs_df, oracle_results):
 
 
 def test_pages_skip_null_doc_ids(spark):
-    """The spans of a NULL doc_id give no pages rows: a doc_id window
-    would gather every NULL-id doc into one doc of empty pages.  Every
-    other row is the row the corpus without those docs gives (the
+    """The spans of a NULL doc_id are ``null_doc_id`` quarantine rows,
+    one per span, so they give no pages rows.  Every other row is the
+    row the corpus without those docs gives (the
     ``test_metrics_edge_doc_ids`` corpus: two NULL ids and a duplicated
     id)."""
     from pyspark.sql.types import StringType, StructField, StructType
@@ -87,13 +87,21 @@ def test_pages_skip_null_doc_ids(spark):
     keyed = corpus + [corpus[0]]
     nulls = [dict(corpus[1], doc_id=None), dict(corpus[2], doc_id=None)]
 
+    def frame(docs):
+        return spark.createDataFrame(list(to_rows(docs)), schema)
+
     def pages(docs):
-        df = spark.createDataFrame(list(to_rows(docs)), schema)
+        df = frame(docs)
         return sorted(
             map(tuple, P.pages_df(P.valid_spans(_flat(df))).collect()),
             key=repr,
         )
 
+    quarantined = P.quarantine_df(_flat(frame(nulls))).collect()
+    assert len(quarantined) == sum(len(d["spans"]) for d in nulls)
+    assert {(r.doc_id, r.error_kind) for r in quarantined} == {
+        (None, "null_doc_id")
+    }
     got = pages(keyed + nulls)
     assert not [r for r in got if r[0] is None]
     assert got == pages(keyed)

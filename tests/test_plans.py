@@ -331,6 +331,42 @@ def test_per_doc_stages_plan_without_broadcast(
     assert len(span_generates) == 1
 
 
+def test_per_doc_stages_make_no_row_copies(
+    spark, docs_df, stage_dir, written_pipeline
+):
+    """A doc_id is one document, so no per-doc stage rebuilds a left
+    join's row copies with an explode: metadata and metrics plan no
+    Generate, and toc and sections_preorder only the one that yields a
+    line's candidates and a page's sections."""
+    import re
+
+    from pdf_parser_spark.pipeline import stage_graph
+    from pdf_parser_spark.sources import tables
+
+    res = written_pipeline
+    frames = {
+        "pages": res.pages,
+        "metadata": res.metadata,
+        "toc": res.toc,
+        **{
+            name: tables.read_table(
+                spark, tables.internal_ref(stage_dir, name)
+            )
+            for name in ("toc_feats", "sections_preorder")
+        },
+    }
+    graph = {st.name: st for st in stage_graph(docs_df, stage_dir)}
+    generates = {
+        name: len(re.findall(r"\bGenerate ", _plan(graph[name].plan(
+            *[frames[n] for n in graph[name].inputs]
+        ))))
+        for name in ("metadata", "toc", "sections_preorder", "metrics")
+    }
+    assert generates == {
+        "metadata": 0, "toc": 1, "sections_preorder": 1, "metrics": 0
+    }
+
+
 @pytest.fixture(scope="module")
 def mega_pipeline(spark, tmp_path_factory):
     """One pipeline run over a parquet corpus with one mega doc past a

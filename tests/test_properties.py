@@ -436,7 +436,7 @@ _J4_CASES = [str, str.lower, str.upper]
 # one feature line: (doc_id, primary?, title, title case, full path as
 # a list of titles)
 j4_lines = st.tuples(
-    st.sampled_from(["a", "b", None]),
+    st.sampled_from(["a", "b"]),
     st.booleans(),
     st.integers(0, len(_J4_TITLES) - 1),
     st.integers(0, len(_J4_CASES) - 1),
@@ -451,16 +451,13 @@ j4_lines = st.tuples(
     ("a", False, 1, 0, [1]),     # contained in it: dropped (J4a)
     ("a", False, 0, 2, [2]),     # primary title, upper-cased: dropped (J4b)
     ("b", False, 1, 0, [1]),     # another doc's primary: kept
-    (None, True, 2, 0, [2, 3]),  # a NULL doc_id's primary ...
-    (None, False, 3, 0, [3]),    # ... drops nothing
     ("b", False, 1, 1, [3]),     # same title as an earlier line: first wins
 ])
 def test_toc_j4_drops_exactly_shadowed_enhanced_lines(spark, lines):
     """J4: an enhanced-pass line is dropped exactly when a primary entry
     of the same doc has a full_path containing the line (J4a) or a
-    title equal to its title, lowercased (J4b); a NULL doc_id matches no
-    doc, so it never drops a line.  The survivors then keep the first
-    line per lowercased title."""
+    title equal to its title, lowercased (J4b).  The survivors then keep
+    the first line per lowercased title."""
     from pdf_parser_spark.operators import toc as T
 
     def path(parts):
@@ -498,7 +495,7 @@ def test_toc_j4_drops_exactly_shadowed_enhanced_lines(spark, lines):
     want, seen = set(), set()
     for ln, (doc, primary, t, case, parts) in enumerate(lines):
         title = _J4_CASES[case](_J4_TITLES[t])
-        shadowed = doc is not None and any(
+        shadowed = any(
             pd_ == doc and (path(parts) in p_path or title.lower() == p_t)
             for pd_, p_path, p_t in prim
         )

@@ -233,36 +233,6 @@ def test_breakless_mega_doc_bit_identical_and_chunk_bounded(spark):
     assert max(sizes) <= 2 * 3000 / 8
 
 
-def test_skew_path_keeps_null_doc_id_rows(spark):
-    """NULL doc_id survives valid_spans (only seq/kind/offset/text are
-    quarantined), so the mega split must not silently drop it:
-    ~isin(NULL) is NULL under three-valued logic, which filter()
-    treats as false in BOTH branches."""
-    from pdf_parser_spark.operators import pages as P
-
-    cfg = _low_threshold_cfg()
-    valid = _skewed_spans(spark).unionByName(
-        spark.createDataFrame(
-            [(None, 0, "text", "orphan span", None, 0)],
-            "doc_id string, seq int, kind string, text string,"
-            " media_ref string, offset int",
-        )
-    )
-    plain = sorted(
-        map(tuple, P.span_sequence_df(valid).collect()),
-        key=lambda t: (t[0] or "", t[1]),
-    )
-    salted = sorted(
-        map(
-            tuple,
-            P.span_sequence_skew_df(valid, cfg, docs=_docs(valid)).collect(),
-        ),
-        key=lambda t: (t[0] or "", t[1]),
-    )
-    assert plain == salted
-    assert any(t[0] is None for t in salted)
-
-
 def test_salt_buckets_one_degrades_to_single_window(spark):
     """cfg.salt_buckets=1 is a legal config: one chunk IS the single
     window, so the skew path short-circuits to it."""

@@ -5,6 +5,7 @@ operators and grep the properties that matter at 100 TB:
 - BroadcastHashJoin where a side is a small dim, and the BroadcastExchange
   count (`bcast`: each is a side job of its own when AQE is off)
 - Exchange count (shuffles) per pipeline stage
+- Generate count (`gen`: explode / posexplode nodes)
 - WholeStageCodegen spans vs ArrowEvalPython / FlatMapGroupsInPandas
 
 Usage: python tools/explain_audit.py [sf_dir]
@@ -51,13 +52,14 @@ def summarize(name: str, df) -> None:
     bnl = nodes(r"BroadcastNestedLoopJoin")
     # with AQE off each broadcast exchange runs as a Spark job of its own
     bcast = nodes(r"BroadcastExchange")
+    gen = nodes(r"Generate")
     codegen = len(re.findall(r"WholeStageCodegen", plan))
     arrow = nodes(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     pushed = [p for p in pushed if p.strip()]
     print(
         f"{name:28s} exch={exchanges:2d} bhj={bhj} smj={smj} bnl={bnl} "
-        f"bcast={bcast} "
+        f"bcast={bcast} gen={gen} "
         f"codegen={codegen:2d} pyStages={arrow} "
         f"pushed={'Y' if pushed else '-'}"
     )
