@@ -10,9 +10,13 @@ vectorized pandas/Arrow UDFs only where regex semantics demand exact parity.
 
 Design notes (scale-first):
 - input is bucketable by ``doc_id``; every per-document operator partitions
-  by ``doc_id`` so the whole pipeline needs a single shuffle of the exploded
-  spans (or zero when the source is bucketed/sorted by doc_id).
-- small per-doc side tables (TOC entries) are broadcast.
+  by ``doc_id``, so each stage's exchanges are keyed on it (the span
+  sequence needs none when the source is bucketed/sorted by doc_id).
+  Stages meet at written stage tables, and each plans its own exchanges:
+  at most 1 per stage, except ``sections_preorder`` (2) and ``sections``
+  (3); ``tools/explain_audit.py`` prints them.
+- no stage broadcasts: per-doc side tables (TOC entries, metadata rows)
+  are unioned into the stage's one ``doc_id`` window, not joined.
 - skew (mega-docs) handled via two-phase salted reassembly, see
   operators/pages.py.
 """

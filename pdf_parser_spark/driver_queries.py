@@ -2574,9 +2574,8 @@ def sim_ivf_topk(spark, sf_dir):
     -2·dot(v,c) + dot(c,c), 3-list probe.  The oracle recomputes
     centroids, per-row argmin assignment (row_number tie-broken on list
     id, matching array_position's first-minimum), the probe list, and
-    the pruned cosine top-k.  Lloyd-trained centroids ride the same
-    operators (similarity.train_centroids; unit-tested) — the seeded
-    family is used here so the oracle stays closed-form."""
+    the pruned cosine top-k.  Seeded centroids keep the oracle
+    closed-form; Lloyd refinement is not ported."""
     emb, qvec = _emb_and_query(spark, sf_dir)
     cents = sim.seed_centroids(64, 8)
     return sim.ivf_topk(emb, qvec, cents, k=10, n_probe=3)

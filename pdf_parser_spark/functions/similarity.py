@@ -6,8 +6,9 @@
   derived deterministically from md5 (portable, seedable), bucket join
   instead of all-pairs scan.
 - IVF ANN                 — the other classic scale path: nearest-centroid
-  inverted lists (seeded deterministic centroids + distributed Lloyd
-  refinement), physically partitioned by list id, probe-pruned reads.
+  inverted lists (seeded deterministic centroids; no Lloyd refinement,
+  which no key needs), physically partitioned by list id, probe-pruned
+  reads.
 
 At 100 TB the brute-force path is a full scan per query — fine for batch
 re-ranking, wrong for online lookup; the LSH variant prunes to one bucket
@@ -205,8 +206,7 @@ def ann_topk_bucketed(
 # hyperplane LSH: partition the space by nearest-centroid lists, store
 # vectors physically by list, probe only the query's nearest lists.
 # Centroid seeding is md5-derived (portable to the SQL oracle, same
-# device as _plane); Lloyd refinement is a distributed avg per
-# (list, dimension) — a handful of tiny driver-coordinated iterations.
+# device as _plane); the seeded centroids are used as they are.
 # ---------------------------------------------------------------------------
 
 
@@ -260,37 +260,6 @@ def query_probe_lists(
         key=lambda j: (_py_dist(query_vec, centroids[j]), j),
     )
     return sorted(order[:n_probe])
-
-
-def train_centroids(
-    embeddings: DataFrame,
-    dim: int,
-    n_lists: int,
-    n_iters: int = 3,
-    vec_col: str = "embedding",
-) -> list:
-    """Distributed Lloyd refinement of the seeded centroids: per
-    iteration, one assignment pass (native argmin projection) and one
-    ``(list_id, dimension)`` avg aggregation — the only shuffle — then
-    the ``n_lists × dim`` means (tiny) collect to the driver as the next
-    round's literals.  Empty lists keep their previous centroid.
-    Deterministic: seeded init + fixed iteration count, no RNG."""
-    cents = seed_centroids(dim, n_lists)
-    for _ in range(n_iters):
-        assigned = embeddings.select(
-            ivf_assign(F.col(vec_col), cents).alias("list_id"),
-            F.posexplode(vec_col).alias("d", "x"),
-        )
-        means = (
-            assigned.groupBy("list_id", "d")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        for r in means:
-            new[r.list_id][r.d] = float(r.m)
-        cents = new
-    return cents
 
 
 def ivf_topk(

@@ -8,7 +8,7 @@ md5 (engine-portable → DuckDB oracle parity).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.exprs import let_bound
@@ -124,17 +124,3 @@ def fingerprint(text: Column, n_words: int = 8) -> Column:
     t = F.lower(F.trim(F.coalesce(text, F.lit(""))))
     head = F.array_join(F.slice(F.split(t, "\\s+"), 1, n_words), " ")
     return F.md5(head)
-
-
-def text_stats_df(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per doc: token counts, lang guess, quality, fingerprint."""
-    t = F.col(text_col)
-    return documents.select(
-        "doc_id",
-        whitespace_token_count(t).alias("ws_tokens"),
-        bpe_token_count(t).alias("bpe_tokens"),
-        lang_id(t).alias("lang_guess"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fingerprint"),
-        F.length(F.coalesce(t, F.lit(""))).cast("long").alias("n_chars"),
-    )

@@ -1,16 +1,17 @@
-"""Heading-detection strategy registry — the Spark-first mirror of the
-reference's pluggable ``HeadingDetector`` (heading_strategies.py:198-266,
-``add_strategy`` :211-217).
+"""Heading detection — the Spark-first port of the reference's
+``HeadingDetector`` (heading_strategies.py:198-266).
 
-Where the reference registers Python objects implementing
-``HeadingStrategyInterface.get_confidence(line) -> float``, this registry
-holds named **Column-expression builders**: ``builder(clean: Column) ->
-Column[double]``.  The detector composes them into ONE native expression
-(argmax with the reference's strict-``>`` first-wins tie rule), so a
-third-party strategy runs inside whole-stage codegen — no Python in the
-loop, unlike the pandas-UDF path it replaces.
+Where the reference holds Python objects implementing
+``HeadingStrategyInterface.get_confidence(line) -> float``, this module
+holds three **Column-expression builders**, ``builder(clean: Column) ->
+Column[double]``, in the module tuple ``STRATEGIES``.  The detector
+composes them into ONE native expression (argmax with the reference's
+strict-``>`` first-wins tie rule), so detection runs inside whole-stage
+codegen — no Python in the loop, unlike the pandas-UDF path it replaces.
+The reference's pluggable-strategy extension point (:211-217) is not
+ported: no caller registers a strategy of its own.
 
-Default strategies pin the reference confidences bit-for-bit
+The strategies pin the reference confidences bit-for-bit
 (numbered heading_strategies.py:64-87, all-caps :89-137, mixed-cap
 :140-193); parity is enforced by the oracle suite (refsem.detect_heading)
 and the golden replay.
@@ -18,22 +19,10 @@ and the golden replay.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable, List
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.exprs import let_bound, py_strip
-
-Builder = Callable[[Column], Column]
-
-
-@dataclass(frozen=True)
-class HeadingStrategy:
-    name: str
-    builder: Builder
-
 
 def _numbered(clean: Column) -> Column:
     """'1.2.3 Title' → min(1.0, 0.6 + 0.2 * #dots)
@@ -90,40 +79,14 @@ def _mixedcap(clean: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def default_strategies() -> List[HeadingStrategy]:
-    """The reference's default strategy order — order matters: ties break
-    to the EARLIEST strategy (strict '>' in the argmax)."""
-    return [
-        HeadingStrategy("numbered", _numbered),
-        HeadingStrategy("all_caps", _allcaps),
-        HeadingStrategy("mixed_cap", _mixedcap),
-    ]
+# The reference's default strategy order — order matters: ties break to
+# the EARLIEST strategy (strict '>' in the argmax).
+STRATEGIES = (_numbered, _allcaps, _mixedcap)
 
 
-@dataclass
-class HeadingRegistry:
-    """Mutable, ordered registry — ``add_strategy`` mirrors the reference
-    extension point (heading_strategies.py:211-217)."""
-
-    strategies: List[HeadingStrategy] = field(
-        default_factory=default_strategies
-    )
-
-    def add_strategy(self, name: str, builder: Builder) -> None:
-        if not callable(builder):
-            raise TypeError("builder must be a Column-expr callable")
-        self.strategies.append(HeadingStrategy(name, builder))
-
-
-DEFAULT_REGISTRY = HeadingRegistry()
-
-
-def detect_heading_expr(
-    line: Column, registry: HeadingRegistry | None = None
-) -> Column:
+def detect_heading_expr(line: Column) -> Column:
     """HeadingDetector.detect_heading (heading_strategies.py:219-255):
     stripped line when any strategy's confidence > 0, else NULL."""
-    registry = registry or DEFAULT_REGISTRY
 
     def detect(clean: Column) -> Column:
         # greatest() evaluates each builder ONCE.  The previous chained
@@ -134,64 +97,14 @@ def detect_heading_expr(
         # expression runs inside the per-line fold of first_heading, so
         # the blowup was per line.  let_bound pins `clean` to one eval.
         best = F.greatest(
-            *[s.builder(clean) for s in registry.strategies], F.lit(0.0)
+            *[builder(clean) for builder in STRATEGIES], F.lit(0.0)
         )
         return F.when(best > 0, clean)
 
     return let_bound(py_strip(F.coalesce(line, F.lit(""))), detect)
 
 
-def strategy_stats_df(
-    lines: DataFrame,
-    line_col: str = "line",
-    registry: HeadingRegistry | None = None,
-) -> DataFrame:
-    """Per-strategy (matches_found, total_checks) over a lines DataFrame
-    — HeadingDetector.get_strategy_stats (heading_strategies.py:232-243).
-
-    Reference semantics: every strategy's ``get_confidence`` routes
-    through ``matches()`` (heading_strategies.py:46-52), so EACH strategy
-    counts EVERY line it matches independently — 'OVERVIEW HEADING'
-    increments both all_caps and mixed_cap — and ``total_checks`` is the
-    full line count for every strategy.  (An earlier revision counted
-    only the argmax winner; that is detection attribution, not the
-    reference's stat.)
-
-    One map-side partial agg to a single row (no per-line shuffle), then
-    a constant-width explode to (strategy, matches_found, total_checks)
-    rows."""
-    registry = registry or DEFAULT_REGISTRY
-    clean = py_strip(F.coalesce(F.col(line_col), F.lit("")))
-    row = lines.agg(
-        *[
-            F.sum((s.builder(clean) > 0).cast("long")).alias(s.name)
-            for s in registry.strategies
-        ],
-        F.count("*").alias("_total"),
-    )
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(s.name).alias("strategy"),
-                    F.coalesce(F.col(s.name), F.lit(0)).alias(
-                        "matches_found"
-                    ),
-                )
-                for s in registry.strategies
-            ]
-        )
-    )
-    return row.select(
-        pairs.alias("p"), F.col("_total").alias("total_checks")
-    ).select("p.strategy", "p.matches_found", "total_checks")
-
-
-def detect_enhanced_heading_expr(
-    content: Column,
-    page: Column,
-    registry: HeadingRegistry | None = None,
-) -> Column:
+def detect_enhanced_heading_expr(content: Column, page: Column) -> Column:
     """detect_enhanced_heading (section_parser.py:395-426) as one native
     expression: strategy argmax over the first 10 lines, then the
     first-5-lines shape fallback, then 'Content from Page N'.
@@ -216,7 +129,7 @@ def detect_enhanced_heading_expr(
     detected = F.aggregate(
         F.slice(lines, 1, 10),
         F.lit(None).cast("string"),
-        lambda acc, l: F.coalesce(acc, detect_heading_expr(l, registry)),
+        lambda acc, l: F.coalesce(acc, detect_heading_expr(l)),
     )
 
     def _fallback(l: Column) -> Column:

@@ -11,8 +11,8 @@ Dataflow (all shuffles keyed on ``doc_id``, no join before W5):
 2. J2: one ``groupBy(doc_id, owner)`` assembles each entry's content
    with the PAGE BREAK sentinel, in page order, via
    ``array_sort(collect_list(...))`` — no per-doc global sort.
-3. J3: uncovered pages → per-page sections (heading detection = native
-   strategy-registry Column exprs, operators/headings).
+3. J3: uncovered pages → per-page sections (heading detection = the
+   native strategy Column exprs of operators/headings).
 4. J5: remaining substantial pages → content-based sections
    (natural-heading state machine as a pandas UDF returning (title,
    content) pairs), in the same ``explode`` as the per-page sections.
@@ -99,12 +99,12 @@ def sections_preorder_df(
     toc: DataFrame,
     metadata: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    heading_registry=None,
 ) -> DataFrame:
     """Section assembly before the W5 ordering: the union of the TOC,
-    page and content sections (SECTIONS_OUT columns without ``order``,
-    plus ``pass_rank`` and ``intra_order``; the page sections'
-    ``full_path`` is NULL until ``sections_df`` derives it).
+    page and content sections (the reference section's columns,
+    section/section_data.py:13-29, plus ``pass_rank`` and
+    ``intra_order``; the page sections' ``full_path`` is NULL until
+    ``sections_df`` derives it).
     ``run_pipeline`` writes it as its ``sections_preorder`` stage, which
     ``sections_df`` orders.
 
@@ -113,16 +113,10 @@ def sections_preorder_df(
     (``_assign_pages``), once for the TOC sections and once for the
     page and content sections.  The toc's ``entry_order`` is page order
     (``toc_entries_df`` numbers entries by page first), which the W1
-    ranges below rely on.
-
-    ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
-    confidence builders (default: the reference's three strategies) —
-    the pluggable heading-detection extension point, mirroring
-    HeadingDetector.add_strategy (heading_strategies.py:211-217) but
-    fully JVM-side."""
+    ranges below rely on."""
     rows = _assign_pages(pages, toc, metadata, cfg)
     return _toc_sections(rows).unionByName(
-        _page_sections(rows, heading_registry)
+        _page_sections(rows)
     )
 
 
@@ -259,9 +253,9 @@ def _toc_sections(rows: DataFrame) -> DataFrame:
     )
 
 
-def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
-    """J3 per-page sections (heading detection = native strategy-registry
-    Column exprs, operators/headings) and J5 content-based sections
+def _page_sections(rows: DataFrame) -> DataFrame:
+    """J3 per-page sections (heading detection = the native strategy
+    Column exprs of operators/headings) and J5 content-based sections
     (natural-heading state machine as a pandas UDF returning (title,
     content) pairs; only the content candidates' text crosses into it),
     one ``explode`` over both, each carrying the doc's title (J6)."""
@@ -271,7 +265,7 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
     content = F.coalesce("content", F.lit(""))
     page_section = F.struct(
         headings.detect_enhanced_heading_expr(
-            F.col("content"), F.col("page"), heading_registry
+            F.col("content"), F.col("page")
         ).alias("title"),
         content.alias("content"),
         F.lit(1).alias("pass_rank"),
@@ -323,7 +317,7 @@ def _page_sections(rows: DataFrame, heading_registry) -> DataFrame:
 
 def sections_df(preorder: DataFrame) -> DataFrame:
     """W5: the ``sections_preorder_df`` table in per-doc order; returns
-    SECTIONS_OUT + ``order`` per doc.
+    its section columns + ``order`` per doc.
 
     DRAM fix (scaling): the ordering window needs only the sort key, but
     windowing over the full rows shuffled AND sorted the assembled

@@ -238,8 +238,9 @@ def toc_entries_df(
     """Full three-pass TOC extraction + dedup (toc_parser.py:141-691) over
     the ``toc_features_df`` lines.
 
-    Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
-    per doc — consumed by the section stage's W1 ranges).
+    Returns the reference TOC entry's columns (toc_parser.py:211-226)
+    plus ``entry_order`` (the final sorted position per doc — consumed
+    by the section stage's W1 ranges).
 
     One pass, no join: the feature lines some battery matched and the
     metadata rows are shuffled once on doc_id, and every window below

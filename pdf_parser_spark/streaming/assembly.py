@@ -13,7 +13,7 @@ in one output batch — only when every declared fragment has arrived.
 In drain (``availableNow``) runs, documents still incomplete at the end
 of input remain in checkpointed state and complete on the next
 invocation; in continuously-running queries a processing-time timeout
-flushes stragglers as structured ``timeout_partial`` rows (quarantine
+flushes stragglers as ``timeout_partial`` quarantine rows (quarantine
 philosophy, helpers.py:29's guard-not-skip stance) — never lost
 silently either way.
 
@@ -27,11 +27,11 @@ state size tracks in-flight documents only, not the corpus.
 Fragment rows carry ``total_spans`` (the fragment count the producer
 declares for the document — the streaming analog of a content-length
 header).  Downstream, completed documents re-enter the SAME batch
-operators (error annotation via ``pages.error_kind_expr``, quarantine,
-W2 ``span_sequence_df``) inside ``foreachBatch`` — the stateful operator
-only re-establishes doc-atomicity; it never re-implements assembly
-semantics, so streaming and batch outputs are equal by construction
-(asserted end-to-end in tests/test_assembly.py).
+operators (error annotation via ``pages.error_kind_expr``,
+``quarantine_df``, W2 ``span_sequence_df``) inside ``foreachBatch`` —
+the stateful operator only re-establishes doc-atomicity; it never
+re-implements assembly semantics, so streaming and batch outputs are
+equal by construction (asserted end-to-end in tests/test_assembly.py).
 """
 
 from __future__ import annotations
@@ -232,6 +232,38 @@ def read_fragment_stream(
     )
 
 
+def batch_outputs(
+    batch_df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
+) -> tuple[DataFrame, DataFrame]:
+    """One micro-batch of ``ASSEMBLED_SCHEMA`` rows → (spans_out,
+    quarantine).  Completed documents go through the batch operators:
+    their valid spans to ``span_sequence_df``, their flagged spans to
+    ``quarantine_df``.  A timed-out partial document's spans become
+    quarantine rows in the same five columns, with ``error_kind``
+    ``timeout_partial`` and the received-vs-declared counts as detail."""
+    complete = batch_df.filter(
+        F.col("assembly_status") == "complete"
+    ).drop("n_received", "total_spans", "assembly_status")
+    flat = complete.withColumn("error_kind", pages_op.error_kind_expr(cfg))
+    partial = batch_df.filter(
+        F.col("assembly_status") == "timeout_partial"
+    ).select(
+        "doc_id",
+        F.col("seq").alias("span_seq"),
+        F.lit("timeout_partial").alias("error_kind"),
+        F.format_string(
+            "received %d of %s spans", F.col("n_received"),
+            F.coalesce(F.col("total_spans").cast("string"), F.lit("None")),
+        ).alias("error_detail"),
+        F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 100)
+        .alias("raw"),
+    )
+    return (
+        pages_op.span_sequence_df(pages_op.valid_spans(flat)),
+        pages_op.quarantine_df(flat).unionByName(partial),
+    )
+
+
 def run_fragment_assembly(
     spark: SparkSession,
     in_path: str,
@@ -250,9 +282,10 @@ def run_fragment_assembly(
     checkpointed state and finish on a later invocation once their
     remaining fragments land — leave ``timeout_ms=None`` here (see
     ``assembled_stream`` for why a timeout must not be armed in
-    available-now mode).  Timed-out partial documents (continuous mode
-    only) go to ``quarantine_path`` with their received-vs-declared
-    counts — never into the main output.
+    available-now mode).  ``quarantine_path`` gets ``batch_outputs``'
+    quarantine rows: the flagged spans of completed documents and the
+    timed-out partial documents (continuous mode only), never the main
+    output.
     """
     assembled = assembled_stream(
         read_fragment_stream(spark, in_path, max_files_per_trigger),
@@ -260,18 +293,9 @@ def run_fragment_assembly(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        complete = batch_df.filter(
-            F.col("assembly_status") == "complete"
-        ).drop("n_received", "total_spans", "assembly_status")
-        flat = complete.withColumn(
-            "error_kind", pages_op.error_kind_expr(cfg)
-        )
-        out = pages_op.span_sequence_df(pages_op.valid_spans(flat))
+        out, quarantine = batch_outputs(batch_df, cfg)
         write_batch(out, batch_id, out_path)
-        partial = batch_df.filter(
-            F.col("assembly_status") == "timeout_partial"
-        )
-        write_batch(partial, batch_id, quarantine_path)
+        write_batch(quarantine, batch_id, quarantine_path)
 
     query = (
         assembled.writeStream.foreachBatch(process_batch)

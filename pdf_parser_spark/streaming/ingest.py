@@ -7,10 +7,9 @@ exactly-once incremental processing over a growing table directory: each
 invocation processes only files not yet recorded in the checkpoint — the
 streaming twin of the lineage/anti-join resume in ``lineage.py``.
 
-This module itself needs no event-time semantics (the reference has
-none — SURVEY.md §2.9: watermarks/windows N/A; the stream is a
-file-discovery incremental batch).  Event-time windowed aggregation
-with watermarked late-data handling lives in ``arrival.py``.
+No event-time semantics: the reference has none (SURVEY.md §2.9:
+watermarks/windows N/A), and the input table has no arrival-time column,
+so the stream is a file-discovery incremental batch.
 """
 
 from __future__ import annotations

@@ -19,14 +19,10 @@ At 1000 executors the wave is the unit of checkpoint granularity and each
 wave is one fully-parallel job — the driver loop is O(n_buckets /
 wave_size) metadata operations, never per-document work.
 
-Two runners, one scheduler (``pipeline.run_stages``): ``run_resumable``
-runs each wave's ``pipeline.stage_graph`` with its bucketed outputs as
-sinks and commits one row per bucket after the wave;
-``run_resumable_dedup`` runs a two-stage graph, signatures → pairs,
-whose writers commit one row per stage or, for a stage already
-committed, read its table back.  Neither takes a fault-injection
-argument: tests make a stage's plan, ``run_pipeline`` or
-``_append_lineage`` raise.
+``run_resumable`` runs each wave's ``pipeline.stage_graph`` (through
+``run_pipeline``) with its bucketed outputs as sinks and commits one row
+per bucket after the wave.  It takes no fault-injection argument: tests
+make ``run_pipeline`` or ``_append_lineage`` raise.
 """
 
 from __future__ import annotations
@@ -39,25 +35,18 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
-from pdf_parser_spark.pipeline import Stage, Writer, run_pipeline, run_stages
+from pdf_parser_spark.pipeline import run_pipeline
 from pdf_parser_spark.schemas import LINEAGE
 from pdf_parser_spark.sources.tables import (
     drop_tree,
     read_table,
     sub_ref,
     table_exists,
-    write_and_read,
     write_counted,
     write_table,
 )
 
 LINEAGE_SUBDIR = "_lineage"
-# The dedup runner records STAGE ordinals, not bucket ids, as
-# partition_id; its lineage lives in its own namespace so pointing both
-# runners at one out_dir can never alias stage rows with bucket rows.
-# Dedup stage rows that older runs appended under LINEAGE_SUBDIR are not
-# read back: such a job does not resume, it recomputes every stage.
-DEDUP_LINEAGE_SUBDIR = "_lineage_dedup"
 
 
 def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -69,13 +58,11 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
     return docs.withColumn("bucket", b.cast("int"))
 
 
-def completed_buckets(
-    spark: SparkSession, out_dir: str, subdir: str = LINEAGE_SUBDIR
-) -> set:
+def completed_buckets(spark: SparkSession, out_dir: str) -> set:
     """Read the lineage table (``iceberg:`` ref or parquet dir — the
     sources/tables seam) with ``schemas.LINEAGE`` pinned (no inference
     job) and return the done bucket ids."""
-    ref = sub_ref(out_dir, subdir)
+    ref = sub_ref(out_dir, LINEAGE_SUBDIR)
     if not table_exists(spark, ref):
         return set()
     rows = (
@@ -108,15 +95,10 @@ def _lineage_row(
             _utc(started), _utc(finished), metrics)
 
 
-def _append_lineage(
-    spark: SparkSession,
-    out_dir: str,
-    rows: list,
-    subdir: str = LINEAGE_SUBDIR,
-) -> None:
+def _append_lineage(spark: SparkSession, out_dir: str, rows: list) -> None:
     df = spark.createDataFrame(rows, LINEAGE)
     write_table(
-        df.coalesce(1), sub_ref(out_dir, subdir), mode="append"
+        df.coalesce(1), sub_ref(out_dir, LINEAGE_SUBDIR), mode="append"
     )
 
 
@@ -203,68 +185,4 @@ def run_resumable(
         "skipped_buckets": sorted(done),
         "processed_buckets": processed,
         "n_waves": len(waves),
-    }
-
-
-def run_resumable_dedup(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    run_id: str = "dedup-0",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 64,
-    k: int = 3,
-    n_bands: int = 4,
-) -> dict:
-    """Resumable MinHash-LSH near-dup job: the expensive signatures
-    fold and the band-bucket pair join are the two DURABLE stages of a
-    ``run_stages`` graph.  An uncommitted stage writes its table
-    (``sources.tables.write_and_read``) and then appends a lineage row
-    (partition_id = stage ordinal, the rows written), so a job killed
-    between the two resumes WITHOUT recomputing the
-    ceil(n_hashes/4)-md5-per-shingle signature pass.  A committed
-    stage's table is read back with its plan's schema pinned: the plan
-    is analysed on the driver, never run, and no inference job starts.
-
-    Returns a summary dict; the candidate pairs land in
-    ``<out_dir>/pairs``.  Each stage's jobs carry its name as their job
-    description.
-
-    Resume reads only ``DEDUP_LINEAGE_SUBDIR``: stage rows that older
-    runs wrote under ``LINEAGE_SUBDIR`` are ignored, so such a job
-    recomputes both stages once.
-    """
-    from pdf_parser_spark.functions import dedup as dd
-
-    done = completed_buckets(spark, out_dir, DEDUP_LINEAGE_SUBDIR)
-
-    def writer(ordinal: int, name: str) -> Writer:
-        ref = sub_ref(out_dir, name)
-        if ordinal in done:
-            return lambda df: (read_table(spark, ref, schema=df.schema), 0)
-
-        def commit(df: DataFrame) -> tuple[DataFrame, int]:
-            t0 = time.time()
-            table, n_rows = write_and_read(df, ref)
-            row = _lineage_row(run_id, ordinal, n_rows, 0, t0, time.time(),
-                               {"stage": float(ordinal)})
-            _append_lineage(spark, out_dir, [row], DEDUP_LINEAGE_SUBDIR)
-            return table, n_rows
-
-        return commit
-
-    run_stages(spark, [
-        Stage("signatures", (),
-              lambda: dd.minhash_df(docs, id_col, text_col, n_hashes, k),
-              writer(0, "signatures")),
-        Stage("pairs", ("signatures",),
-              lambda sigs: dd.lsh_band_pairs(sigs, n_bands,
-                                             n_hashes // n_bands),
-              writer(1, "pairs")),
-    ])
-    return {
-        "run_id": run_id,
-        "skipped_stages": sorted(done & {0, 1}),
-        "pairs_ref": sub_ref(out_dir, "pairs"),
     }

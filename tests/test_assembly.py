@@ -9,7 +9,8 @@ import tempfile
 import pandas as pd
 import pytest
 
-from pdf_parser_spark.fixtures.gen import fixture_corpus
+from pdf_parser_spark.fixtures.gen import fixture_corpus, to_spark_df
+from pdf_parser_spark.operators import pages as P
 from pdf_parser_spark.oracle import refsem
 from pdf_parser_spark.streaming import assembly as A
 
@@ -103,6 +104,25 @@ def test_assemble_timeout_flushes_partial():
     assert not state.exists
 
 
+def test_batch_outputs_quarantine_flagged_and_timed_out_spans(spark):
+    """One micro-batch: a completed doc's flagged span and a timed-out
+    partial doc's spans are quarantine rows in the five quarantine
+    columns; only the completed doc's valid span reaches spans_out."""
+    rows = [
+        ("p", 0, "text", "first", None, 0, 2, 5, "timeout_partial"),
+        ("p", 3, "text", None, None, 3, 2, 5, "timeout_partial"),
+        ("c", 0, "text", "fine", None, 0, 2, 2, "complete"),
+        ("c", 1, "blob", "odd", None, 1, 2, 2, "complete"),
+    ]
+    out, q = A.batch_outputs(spark.createDataFrame(rows, A.ASSEMBLED_SCHEMA))
+    assert sorted(tuple(r) for r in q.collect()) == [
+        ("c", 1, "unknown_kind", "kind=blob", "odd"),
+        ("p", 0, "timeout_partial", "received 2 of 5 spans", "first"),
+        ("p", 3, "timeout_partial", "received 2 of 5 spans", ""),
+    ]
+    assert [(r.doc_id, r.text) for r in out.collect()] == [("c", "fine")]
+
+
 def _fragment_rows(corpus):
     rows = []
     for d in corpus:
@@ -126,7 +146,8 @@ def test_fragment_assembly_cross_batch_equals_batch(spark):
     """Fragments round-robined into 3 files (every doc straddles all
     three), streamed one file per trigger: state must carry partial docs
     across micro-batches, and the final output must equal the reference
-    oracle per document — the same invariant the batch path is held to."""
+    oracle per document — the same invariant the batch path is held to
+    — and the quarantine rows must equal the batch path's."""
     tmp = tempfile.mkdtemp(prefix="assembly_", dir="/root/repo")
     try:
         corpus = [d for d in fixture_corpus(n_docs=10) if d["spans"]]
@@ -162,12 +183,14 @@ def test_fragment_assembly_cross_batch_equals_batch(spark):
             assert have == want, f"assembly mismatch for {d['doc_id']}"
             n_checked += 1
         assert n_checked == len(corpus) > 0
-        # nothing timed out in a complete stream
-        try:
-            q = spark.read.parquet(f"{tmp}/quarantine")
-            assert q.count() == 0
-        except Exception:
-            pass  # quarantine dir may not exist when nothing was written
+        # the flagged spans of completed docs are the batch path's
+        # quarantine rows; nothing timed out in a complete stream
+        cols = ["doc_id", "span_seq", "error_kind", "error_detail", "raw"]
+        q = spark.read.parquet(f"{tmp}/quarantine").select(*cols)
+        want = P.quarantine_df(P.explode_spans(to_spark_df(spark, corpus)))
+        want_rows = sorted(tuple(r) for r in want.collect())
+        assert sorted(tuple(r) for r in q.collect()) == want_rows
+        assert {"bad_offset", "unknown_kind"} <= {r[2] for r in want_rows}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

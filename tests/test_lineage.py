@@ -2,7 +2,6 @@
 buckets are skipped and the final output is complete with no duplicates
 (SURVEY.md §5 resume test)."""
 
-import os
 import shutil
 import tempfile
 
@@ -35,13 +34,6 @@ def _jobs_by_description(spark, group: str, run):
         name = desc.get() if desc.isDefined() else None
         jobs[name] = jobs.get(name, 0) + 1
     return result, jobs
-
-
-def _mtimes(table_dir: str) -> dict:
-    return {
-        f: os.path.getmtime(os.path.join(table_dir, f))
-        for f in os.listdir(table_dir)
-    }
 
 
 def test_resume_after_failure(spark, docs_df, oracle_results, monkeypatch):
@@ -89,171 +81,6 @@ def test_resume_after_failure(spark, docs_df, oracle_results, monkeypatch):
             ]
             have = sorted(got.get(doc_id, []), key=lambda t: t[3])
             assert have == want, f"resume output mismatch for {doc_id}"
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def _dedup_docs(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(f"d{i}", f"{base} suffix{i // 2}") for i in range(10)]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def _unkilled_pairs(docs, out_dir: str) -> set:
-    from pdf_parser_spark.functions import dedup as dd
-
-    return {
-        (r.id_a, r.id_b)
-        for r in dd.lsh_candidate_pairs(
-            docs, f"{out_dir}/unkilled", n_hashes=8, k=3, n_bands=2
-        ).select("id_a", "id_b").collect()
-    }
-
-
-def _written_pairs(spark, out_dir: str) -> set:
-    return {
-        (r.id_a, r.id_b)
-        for r in spark.read.parquet(f"{out_dir}/pairs").collect()
-    }
-
-
-def _boom(*args, **kwargs):
-    raise RuntimeError("injected failure")
-
-
-def test_resumable_dedup_skips_signature_recompute(spark, monkeypatch):
-    """Kill the dedup job between the signatures stage and the pair
-    join; the resume must (a) NOT rewrite the signatures stage table —
-    the md5 fold is the expensive pass — and (b) produce candidate
-    pairs identical to an unkilled in-memory run (oracle-equal)."""
-    from pdf_parser_spark.functions import dedup as dd
-
-    docs = _dedup_docs(spark)
-    out_dir = tempfile.mkdtemp(prefix="lineage_dedup_", dir="/root/repo")
-    try:
-        monkeypatch.setattr(dd, "lsh_band_pairs", _boom)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            L.run_resumable_dedup(
-                spark, docs, out_dir, run_id="k1",
-                n_hashes=8, k=3, n_bands=2,
-            )
-        monkeypatch.undo()
-        assert L.completed_buckets(
-            spark, out_dir, L.DEDUP_LINEAGE_SUBDIR
-        ) == {0}
-        sig_dir = f"{out_dir}/signatures"
-        mtimes = _mtimes(sig_dir)
-
-        summary = L.run_resumable_dedup(
-            spark, docs, out_dir, run_id="k2",
-            n_hashes=8, k=3, n_bands=2,
-        )
-        assert summary["skipped_stages"] == [0]
-        # signatures stage table untouched by the resume
-        assert mtimes == _mtimes(sig_dir)
-
-        got = _written_pairs(spark, out_dir)
-        want = _unkilled_pairs(docs, out_dir)
-        assert got == want and len(want) > 0
-
-        # a THIRD run over the finished state is a pure no-op
-        summary3 = L.run_resumable_dedup(
-            spark, docs, out_dir, run_id="k3",
-            n_hashes=8, k=3, n_bands=2,
-        )
-        assert summary3["skipped_stages"] == [0, 1]
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-@pytest.mark.parametrize(
-    "kill, committed",
-    [
-        # the signatures plan raises: nothing is written
-        ("minhash_df", set()),
-        # the signatures table is written, its lineage row is not
-        ("_append_lineage", set()),
-        # signatures is committed, the pairs plan raises
-        ("lsh_band_pairs", {0}),
-    ],
-    ids=["minhash_df", "_append_lineage", "lsh_band_pairs"],
-)
-def test_dedup_resume_after_kill_at_each_stage_boundary(
-    spark, tmp_path, monkeypatch, kill, committed
-):
-    """A kill at each boundary of the dedup graph (signatures → pairs):
-    the resume skips exactly the committed stages, never rewrites their
-    tables, reads a committed table back without starting a job (the
-    only job outside the stages is the lineage read), tags every stage
-    job with its stage name, and writes the pairs an unkilled run
-    finds."""
-    from pdf_parser_spark.functions import dedup as dd
-
-    docs = _dedup_docs(spark)
-    out_dir = str(tmp_path / "out")
-    monkeypatch.setattr(L if kill == "_append_lineage" else dd, kill, _boom)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        L.run_resumable_dedup(spark, docs, out_dir, run_id="kill",
-                              n_hashes=8, k=3, n_bands=2)
-    monkeypatch.undo()
-    assert L.completed_buckets(
-        spark, out_dir, L.DEDUP_LINEAGE_SUBDIR
-    ) == committed
-    names = [("signatures", "pairs")[i] for i in sorted(committed)]
-    before = {n: _mtimes(f"{out_dir}/{n}") for n in names}
-
-    group = f"dedup-resume-{kill}"
-    summary, jobs = _jobs_by_description(
-        spark, group,
-        lambda: L.run_resumable_dedup(spark, docs, out_dir, run_id="resume",
-                                      n_hashes=8, k=3, n_bands=2),
-    )
-    assert summary["skipped_stages"] == sorted(committed)
-    assert before == {n: _mtimes(f"{out_dir}/{n}") for n in names}
-    ran = {"signatures", "pairs"} - set(names)
-    assert {d for d in jobs if d != group} == ran
-    assert jobs.get(group, 0) == (1 if committed else 0)
-    assert _written_pairs(spark, out_dir) == _unkilled_pairs(docs, out_dir)
-
-
-def test_dedup_lineage_namespaced_from_pipeline_lineage(spark, docs_df):
-    """Both runners pointed at ONE out_dir must not alias lineage rows:
-    the pipeline runner records bucket ids 0..N-1 and the dedup runner
-    records stage ordinals 0/1 under the same partition_id column — a
-    shared table would make finished pipeline buckets silently mark
-    dedup stages as done (and vice versa)."""
-    from pyspark.sql import functions as F
-
-    out_dir = tempfile.mkdtemp(prefix="lineage_shared_", dir="/root/repo")
-    try:
-        L.run_resumable(
-            spark, docs_df, out_dir, run_id="p1",
-            n_buckets=4, wave_size=4,
-        )
-        # pipeline buckets 0..3 are done — the dedup runner must still
-        # see ZERO completed stages (no aliasing via partition_id 0/1)
-        assert L.completed_buckets(spark, out_dir) == {0, 1, 2, 3}
-        assert (
-            L.completed_buckets(spark, out_dir, L.DEDUP_LINEAGE_SUBDIR)
-            == set()
-        )
-
-        texts = docs_df.select(
-            "doc_id",
-            F.array_join(
-                F.transform(
-                    "spans", lambda s: F.coalesce(s["text"], F.lit(""))
-                ),
-                " ",
-            ).alias("text"),
-        )
-        summary = L.run_resumable_dedup(
-            spark, texts, out_dir, run_id="d1",
-            n_hashes=8, k=3, n_bands=2,
-        )
-        assert summary["skipped_stages"] == []  # nothing falsely done
-        # and the dedup run did not contaminate the pipeline lineage
-        assert L.completed_buckets(spark, out_dir) == {0, 1, 2, 3}
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -1,78 +1,7 @@
-"""JSONL source/sink round trip + corrupt-line quarantine (S3/S4/S5/S6)."""
+"""The table seam (S1/S2/S7): parquet and Iceberg refs, partition
+overwrite and the bucketed physical layout."""
 
-import json
-import shutil
-import tempfile
 from pathlib import Path
-
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from pdf_parser_spark.sources import jsonl as J
-
-SCHEMA = StructType(
-    [
-        StructField("doc_title", StringType()),
-        StructField("page", IntegerType()),
-    ]
-)
-
-
-def test_read_jsonl_quarantines_bad_lines(spark):
-    tmp = tempfile.mkdtemp(prefix="jsonl_", dir="/root/repo")
-    try:
-        p = Path(tmp) / "in.jsonl"
-        lines = [
-            json.dumps({"doc_title": "Überblick", "page": 1},
-                       ensure_ascii=False),
-            "",  # blank → dropped silently (reference behavior)
-            "{not valid json",
-            json.dumps({"doc_title": "x" * 1_000_100, "page": 2}),
-            json.dumps({"doc_title": "ok", "page": 3}),
-        ]
-        p.write_text("\n".join(lines), encoding="utf-8")
-        good, quarantine = J.read_jsonl(spark, str(p), SCHEMA)
-        titles = {r.doc_title for r in good.collect()}
-        assert titles == {"Überblick", "ok"}
-        kinds = sorted(r.error_kind for r in quarantine.collect())
-        assert kinds == ["oversize_line", "parse_error"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_write_jsonl_roundtrip_unicode(spark):
-    tmp = tempfile.mkdtemp(prefix="jsonl_", dir="/root/repo")
-    try:
-        df = spark.createDataFrame(
-            [("電力供給", 1), ("énergie", 2)], SCHEMA
-        )
-        n = J.write_jsonl(df, f"{tmp}/out")
-        assert n == 2
-        raw = ""
-        for f in Path(f"{tmp}/out").glob("part-*"):
-            raw += f.read_text(encoding="utf-8")
-        assert "電力供給" in raw  # ensure_ascii=False parity
-        good, quarantine = J.read_jsonl(spark, f"{tmp}/out", SCHEMA)
-        assert good.count() == 2 and quarantine.count() == 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_write_report(spark):
-    tmp = tempfile.mkdtemp(prefix="report_", dir="/root/repo")
-    try:
-        df = spark.createDataFrame(
-            [("Valid", 10, 99.5)],
-            ["metadata_status", "total_toc_entries", "coverage"],
-        )
-        out = J.write_report(df, f"{tmp}/validation_report.xlsx")
-        assert Path(out).exists()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_table_ref_parquet_roundtrip(spark, tmp_path):
