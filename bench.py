@@ -249,31 +249,39 @@ def main() -> None:
     }
 
     # --- round-over-round regression tracking ----------------------------
-    # BENCH/baseline_times.json pins the round-1 per-query seconds; a
-    # query is flagged when it exceeds max(2x baseline, baseline + 1s)
-    # (the +1s floor de-noises sub-second queries whose wall time is JIT
-    # jitter).  Comparison only applies at the baseline's (sf, docs, cpus)
-    # so local sf0.01 iteration isn't compared against sf0.1 numbers.
+    # BENCH/baseline_times.json holds one record of per-query seconds
+    # per core count; a query is flagged when it exceeds max(2x baseline,
+    # baseline + 1s) (the +1s floor de-noises sub-second queries whose
+    # wall time is JIT jitter).  Comparison only applies at the record's
+    # (sf, docs) for this run's cpus, so local sf0.01 iteration isn't
+    # compared against sf0.1 numbers; otherwise ``reason`` says why not.
     # SPARK_GRAFT_BENCH_STRICT=1 exits non-zero on regression.
     baseline_path = REPO / "BENCH" / "baseline_times.json"
     if baseline_path.exists():
-        base = json.loads(baseline_path.read_text())
-        comparable = (
-            base.get("sf") == sf
-            and base.get("docs") == total_docs
-            and base.get("cpus") == cpus
-        )
+        base = json.loads(baseline_path.read_text()).get(str(cpus))
+        if base is None:
+            reason = f"no baseline for {cpus} cpus"
+        elif (base.get("sf"), base.get("docs")) != (sf, total_docs):
+            reason = (
+                f"the {cpus}-cpu baseline is sf {base.get('sf')}, "
+                f"{base.get('docs')} docs; this run is sf {sf}, "
+                f"{total_docs} docs"
+            )
+        else:
+            reason = None
         regressions = {}
-        if comparable:
+        if reason is None:
             for name, b in base.get("queries", {}).items():
                 t = times.get(name)
                 if t is not None and t > max(2 * b, b + 1.0):
                     regressions[name] = {"baseline_s": b, "now_s": t}
         result["baseline"] = {
             "ref": "BENCH/baseline_times.json",
-            "comparable": comparable,
+            "comparable": reason is None,
             "regressions": regressions,
         }
+        if reason is not None:
+            result["baseline"]["reason"] = reason
         if regressions and os.environ.get("SPARK_GRAFT_BENCH_STRICT"):
             print(json.dumps(result))
             sys.exit(1)

@@ -13,8 +13,9 @@ Design notes (scale-first):
   by ``doc_id``, so each stage's exchanges are keyed on it (the span
   sequence needs none when the source is bucketed/sorted by doc_id).
   Stages meet at written stage tables, and each plans its own exchanges:
-  at most 1 per stage, except ``sections_preorder`` (2) and ``sections``
-  (3); ``tools/explain_audit.py`` prints them.
+  at most 1 per stage, except ``toc`` (2: the content-start cut and the
+  entries' pass) and ``sections`` (3: the two pre-order branches and
+  W5); ``tools/explain_audit.py`` prints them.
 - no stage broadcasts: per-doc side tables (TOC entries, metadata rows)
   are unioned into the stage's one ``doc_id`` window, not joined.
 - skew (mega-docs) handled via two-phase salted reassembly, see

@@ -20,8 +20,8 @@ Modes:
   summary is the rows written per table.  All seven are stages of one
   graph (pipeline.stage_graph): each table lands under --output as soon
   as the stages it reads are written, independent stages run at once,
-  and the operators' internal stage tables land under
-  ``--output/_internal``; a run that fails part-way leaves the tables of
+  and with --normalize-html the html rewrite, the one internal stage
+  table, lands under ``--output/_internal``; a run that fails part-way leaves the tables of
   the stages that completed there, and a re-run overwrites them.
 - ``resume``    lineage-bucketed batch: per-partition progress recorded
   in a lineage table; re-invoking after a kill processes ONLY pending

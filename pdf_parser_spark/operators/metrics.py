@@ -43,8 +43,8 @@ def metrics_df(
 ) -> DataFrame:
     """One validation-summary row per doc (schema = refsem.doc_metrics).
 
-    ``sections`` is the ``sections_preorder`` table (or ``sections``:
-    only doc_id, section_id, page and content are read).  Each source
+    ``sections`` is the sections table (only doc_id, section_id, page
+    and content are read).  Each source
     contributes tagged partial rows to one union that is grouped once
     on doc_id; a source's own columns are NULL on the other sources'
     rows, so every aggregate only sees its source.  A doc_id of ``docs``

@@ -504,10 +504,11 @@ def span_sequence_skew_df(
 
     Mega detection is a map-only ``size(spans) > threshold`` filter on
     the PRE-explode ``docs`` table (ZERO shuffle), probed eagerly at
-    plan-construction time in one job that returns at most
-    ``MAX_LITERAL_MEGA_IDS + 1`` ids with their exact offset cut points
-    (``_offset_cuts``) — driver memory stays bounded however many mega
-    docs the corpus holds.  ``size(spans)`` counts quarantined spans
+    plan-construction time in one job.  Driver bound: its collect
+    returns one row holding at most ``MAX_LITERAL_MEGA_IDS + 1`` ids,
+    each with its ``cfg.salt_buckets - 1`` exact offset cut points
+    (``_offset_cuts``) — config-sized however many mega docs the corpus
+    holds.  ``size(spans)`` counts quarantined spans
     too, so it can only over-route a borderline doc to the two-phase
     path — routing is physical only, the output is bit-identical either
     way.

@@ -2,7 +2,7 @@
 ``parsers/section/*`` (SURVEY.md §2 J2/J3/J5, W1/W5, F7/F8/F11, A10,
 X21-X25).
 
-Dataflow (all shuffles keyed on ``doc_id``, no join before W5):
+Dataflow (all shuffles keyed on ``doc_id``, no join):
 
 1. W1/J2/J3/J5: one doc_id window over pages ∪ valid TOC entries ∪
    metadata rows, ordered by page, gives each page its owning entry (the
@@ -19,9 +19,12 @@ Dataflow (all shuffles keyed on ``doc_id``, no join before W5):
 5. W5: per-doc final ordering by (page, section_id, pass, intra) —
    ``row_number`` per doc, never a global sort.
 
-Steps 1-4 are ``sections_preorder_df`` and step 5 is ``sections_df``:
-two stages of the pipeline's graph (``sections_preorder`` →
-``sections``), with the pre-order union written in between.
+Steps 1-4 are ``sections_preorder_df`` and step 5 is ``sections_df``;
+the pipeline's ``sections`` stage plans them as one job, so the
+pre-order union is never written.  The job shuffles three times, each
+on doc_id: once per pre-order branch into step 1's window, and once
+into W5's window (the J5 UDF's Arrow node drops the branches' doc_id
+partitioning), which moves each section's content once.
 
 Identity: no input row carries a NULL doc_id (``pages.error_kind_expr``
 quarantines those spans), and a doc_id is one document — one metadata
@@ -104,9 +107,7 @@ def sections_preorder_df(
     page and content sections (the reference section's columns,
     section/section_data.py:13-29, plus ``pass_rank`` and
     ``intra_order``; the page sections' ``full_path`` is NULL until
-    ``sections_df`` derives it).
-    ``run_pipeline`` writes it as its ``sections_preorder`` stage, which
-    ``sections_df`` orders.
+    ``sections_df`` derives it), which ``sections_df`` orders.
 
     No join: the pages, the valid TOC entries and the metadata rows
     are shuffled on doc_id into one window ordered by page
@@ -291,11 +292,10 @@ def _page_sections(rows: DataFrame) -> DataFrame:
         .select("doc_id", "doc_title", "page", "s.*")
     )
     section_id = F.concat(F.lit("Page-"), F.col("page"))
-    # the page sections' full_path is derived by sections_df, after the
-    # pre-order table's read-back: referencing `title` twice in one
-    # projection makes CollapseProject inline the (regex-heavy)
-    # detection expression twice — read back it is a cheap concat over
-    # the materialized column
+    # the page sections' full_path is derived by sections_df, above
+    # W5's window: referencing `title` twice in one projection makes
+    # CollapseProject inline the (regex-heavy) detection expression
+    # twice — above the window it is a cheap concat over its output
     return items.select(
         "doc_id",
         "doc_title",
@@ -316,41 +316,32 @@ def _page_sections(rows: DataFrame) -> DataFrame:
 
 
 def sections_df(preorder: DataFrame) -> DataFrame:
-    """W5: the ``sections_preorder_df`` table in per-doc order; returns
-    its section columns + ``order`` per doc.
+    """W5: the ``sections_preorder_df`` rows in per-doc order; returns
+    their section columns + ``order`` per doc.
 
-    DRAM fix (scaling): the ordering window needs only the sort key, but
-    windowing over the full rows shuffled AND sorted the assembled
-    `content` strings — the 4→16 core scaling pair was DRAM-bandwidth-
-    bound on exactly that sort.  So ``order`` is computed on a skinny
-    projection of the (written) pre-order table and re-attached by the
-    UNIQUE section identity (doc_id, page, section_id, pass_rank,
-    intra_order — toc rows have unique entry_order, page rows unique
-    page, content rows unique (page, intra_order)), so each pre-order
-    row gets exactly one ``order``; the SHUFFLE_HASH
-    hint keeps the big side a hash probe — a sort-merge join would
-    re-sort the strings and give the win straight back.  Both join
-    branches read the table, so the heavy lineage runs once."""
+    One ``row_number`` window directly over the pre-order union: one
+    doc_id exchange and a local sort move each section's content once.
+    A skinny key window joined back would shuffle the content too, and
+    over the unwritten union would run the J5 UDF twice.  The (page,
+    section_id, pass_rank, intra_order) key is unique per doc (toc rows
+    have unique entry_order, page rows unique page, content rows unique
+    (page, intra_order)), so ``order`` is deterministic."""
     w_order = Window.partitionBy("doc_id").orderBy(
         "page",
         F.coalesce("section_id", F.lit("")),
         "pass_rank",
         "intra_order",
     )
-    key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
-    skinny = preorder.select(*key).withColumn(
-        "order", F.row_number().over(w_order)
-    )
     page_path = F.concat(
         F.lit("Page-"), F.col("page"), F.lit(" "), F.col("title")
     )
-    out_cols = [
+    ordered = preorder.withColumn("order", F.row_number().over(w_order))
+    return ordered.select(*[
         F.when(F.col("pass_rank") == 1, page_path)
         .otherwise(F.col("full_path"))
         .alias("full_path")
         if c == "full_path"
         else c
-        for c in preorder.columns
+        for c in ordered.columns
         if c not in ("pass_rank", "intra_order")
-    ] + ["order"]
-    return preorder.join(skinny.hint("SHUFFLE_HASH"), key).select(*out_cols)
+    ])

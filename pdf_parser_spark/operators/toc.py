@@ -17,14 +17,16 @@ Architecture (one JVM↔Python crossing, the rest native — SURVEY.md §4d):
    and a first-wins window, then the final (page, title-prefix) dedup
    window (W3) and the 1..9999 sanity filter (F9) — all native.
 
-Steps 1-2 are ``toc_features_df`` and step 3 is ``toc_entries_df``: two
-stages of the pipeline's graph (``toc_feats`` → ``toc``).  The features
-need only ``pages``, so they run beside the metadata stage; the entries
-read the written features and the metadata (J6 doc titles).
+Steps 1-2 are ``toc_features_df`` and step 3 is ``toc_entries_df``; the
+pipeline's ``toc`` stage plans them as one job over the written
+``pages`` and ``metadata`` tables (J6 doc titles), so the features are
+never written.
 
-``toc_entries_df`` shuffles once, on ``doc_id`` (the bucketing key of
-the input layout), and plans no join: every window chains over that one
-exchange, and the J6 doc titles ride along as tagged metadata rows.
+The job shuffles twice, both on ``doc_id`` (the bucketing key of the
+input layout): the content-start cut's window over the candidate lines,
+and the entries' pass, which plans no join: every window chains over
+that one exchange, and the J6 doc titles ride along as tagged metadata
+rows.
 
 Identity: no feature line or metadata row carries a NULL doc_id
 (``pages.error_kind_expr`` quarantines those spans), and a doc_id is
@@ -181,6 +183,13 @@ def toc_line_features(lines: pd.Series) -> pd.DataFrame:
     return df
 
 
+# nondeterministic = a pushdown barrier: ``toc_entries_df``'s ``matched``
+# filter would otherwise be pushed below ``_line_features_df``'s
+# projection onto the UDF's own output, and ExtractPythonUDFs would plan
+# a second Arrow crossing to evaluate it there
+toc_line_features = toc_line_features.asNondeterministic()
+
+
 def toc_candidate_lines(
     pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
@@ -222,10 +231,8 @@ def toc_features_df(
     pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """The per-line features of every TOC candidate line — the stage's
-    one Arrow crossing, over ``pages`` alone.  The three accept passes
-    and two anti-joins of ``toc_entries_df`` each read it, so
-    ``run_pipeline`` writes it once (its ``toc_feats`` stage): as a plan
-    Catalyst would re-execute the UDF once per consumer (SURVEY.md §4d —
+    one Arrow crossing, over ``pages`` alone.  ``toc_entries_df`` reads
+    it once, so it stays a plan inside the ``toc`` job (SURVEY.md §4d —
     "keep pandas-UDF stages few and fused")."""
     return _line_features_df(toc_candidate_lines(pages, cfg))
 

@@ -14,26 +14,25 @@ names the stages it reads; one driver-side scheduler (``run_stages``)
 writes each as soon as its inputs exist, submitting every ready stage at
 once, so independent stages overlap:
 
-  html_rewrite → pages → {metadata ∥ toc_feats} → toc
-      → sections_preorder → {sections ∥ metrics}
+  html_rewrite → pages → metadata → toc → sections → metrics
 
 with spans_out and quarantine off that path (they read only the
-exploded spans).  metrics reads the pre-order sections, not the W5
-ordering, so it runs beside sections: 6 levels.  Every materialization
-is the same durable boundary, ``sources.tables.write_and_read`` under
-the run's ``stage_ref``: each stage table is written once and read back
-with its schema pinned, so later stages plan from file scans instead of
-from the upstream lineage.
-The operator-internal stages (``html_rewrite``, ``toc_feats``,
-``sections_preorder``) land under ``<stage_ref>/_internal/``.
+exploded spans): 6 levels.  Every materialization is the same durable
+boundary, ``sources.tables.write_and_read`` under the run's
+``stage_ref``: each stage table is written once and read back with its
+schema pinned, so later stages plan from file scans instead of from the
+upstream lineage.  A stage table exists only where a later stage or a
+caller reads it: the TOC line features run inside the ``toc`` job and
+the pre-order section union inside the ``sections`` job.  The one
+operator-internal stage, ``html_rewrite``, lands under
+``<stage_ref>/_internal/``.
 
 Scale: the input is read with its on-disk doc_id-range layout
 (fixtures/gen.write_parquet mirrors the production Iceberg bucketing).
 Every per-doc stage shuffles on doc_id only and plans no join, so none
-runs a broadcast side job: pages, metadata, toc, sections_preorder and
-metrics are one Spark job each.  Mega-doc skew in spans_out goes
-through pages.span_sequence_skew_df's two-phase chunked path (SURVEY.md
-§4 P6).
+runs a broadcast side job: pages, metadata, toc, sections and metrics
+are one Spark job each.  Mega-doc skew in spans_out goes through
+pages.span_sequence_skew_df's two-phase chunked path (SURVEY.md §4 P6).
 """
 
 from __future__ import annotations
@@ -103,14 +102,13 @@ def stage_graph(
 ) -> list[Stage]:
     """The pipeline's stages, each listed after the stages it reads.
     pages, metadata, toc and sections are written under ``stage_ref``,
-    the internal stages under ``<stage_ref>/_internal``; spans_out,
+    html_rewrite under ``<stage_ref>/_internal``; spans_out,
     quarantine and metrics are plans until a caller gives them a
     writer (``run_pipeline``'s ``sinks``).  Stages that become ready
     together are submitted in list order, and Spark's FIFO scheduler
     gives the earlier job's tasks the free cores first, so the
-    critical path (html_rewrite → pages → toc_feats → toc →
-    sections_preorder → {sections ∥ metrics}) is listed ahead of the
-    stages beside it."""
+    critical path (html_rewrite → pages → metadata → toc → sections →
+    metrics) is listed ahead of the stages beside it."""
 
     def written(name: str, ref_of=tables.sub_ref) -> Writer:
         return partial(tables.write_and_read, ref=ref_of(stage_ref, name))
@@ -149,24 +147,22 @@ def stage_graph(
               lambda *r: pages_op.pages_df(
                   pages_op.valid_spans(flat(*r)), cfg),
               written("pages")),
-        Stage("toc_feats", ("pages",),
-              lambda pages: toc_op.toc_features_df(pages, cfg),
-              written("toc_feats", tables.internal_ref)),
         Stage("metadata", ("pages",),
               lambda pages: metadata_op.metadata_df(keyed_docs, pages, cfg),
               written("metadata")),
-        Stage("toc", ("toc_feats", "metadata"),
-              lambda feats, meta: toc_op.toc_entries_df(feats, meta, cfg),
+        # the line features have one consumer: they run in the toc job
+        Stage("toc", ("pages", "metadata"),
+              lambda pages, meta: toc_op.toc_entries_df(
+                  toc_op.toc_features_df(pages, cfg), meta, cfg),
               written("toc")),
-        Stage("sections_preorder", ("pages", "toc", "metadata"),
-              lambda pages, toc, meta: sections_op.sections_preorder_df(
-                  pages, toc, meta, cfg),
-              written("sections_preorder", tables.internal_ref)),
-        Stage("sections", ("sections_preorder",), sections_op.sections_df,
+        # W5 numbers the pre-order union in the job that builds it
+        Stage("sections", ("pages", "toc", "metadata"),
+              lambda pages, toc, meta: sections_op.sections_df(
+                  sections_op.sections_preorder_df(pages, toc, meta, cfg)),
               written("sections")),
-        Stage("metrics", ("pages", "toc", "sections_preorder", "metadata"),
-              lambda pages, toc, preorder, meta: metrics_op.metrics_df(
-                  keyed_docs, pages, toc, preorder, meta)),
+        Stage("metrics", ("pages", "toc", "sections", "metadata"),
+              lambda pages, toc, sections, meta: metrics_op.metrics_df(
+                  keyed_docs, pages, toc, sections, meta)),
         # W2 reassembly with mega-doc salting (SURVEY §4 P6): docs past
         # cfg.mega_doc_span_threshold take the two-phase chunked path so
         # no single task sorts a pathological doc alone; output is

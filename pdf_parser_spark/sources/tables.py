@@ -78,7 +78,9 @@ def drop_tree(spark: SparkSession, ref: str) -> None:
     """Delete ``ref`` and every table derived from it by ``sub_ref`` /
     ``internal_ref``: a path is removed recursively (through the Hadoop
     FS API); for an ``iceberg:`` ref, the tables of its namespace named
-    ``<table>`` or ``<table>_*`` are dropped."""
+    ``<table>`` or ``<table>_*`` are dropped.  Driver bound: ``SHOW
+    TABLES`` collects one row per table of that namespace, a catalog
+    size that no corpus row adds to."""
     if is_iceberg_ref(ref):
         name = _require_iceberg(spark, ref)
         ns, table = name.rsplit(".", 1)

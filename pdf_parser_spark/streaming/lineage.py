@@ -61,7 +61,9 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
 def completed_buckets(spark: SparkSession, out_dir: str) -> set:
     """Read the lineage table (``iceberg:`` ref or parquet dir — the
     sources/tables seam) with ``schemas.LINEAGE`` pinned (no inference
-    job) and return the done bucket ids."""
+    job) and return the done bucket ids.  Driver bound: the collect
+    returns one row per distinct done ``partition_id``, at most the
+    run's ``n_buckets``, whatever the corpus size."""
     ref = sub_ref(out_dir, LINEAGE_SUBDIR)
     if not table_exists(spark, ref):
         return set()

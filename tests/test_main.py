@@ -28,8 +28,9 @@ def _rows(df):
 
 
 def test_main_pipeline_mode_writes_all_outputs(spark):
-    """The CLI writes each of the seven tables once, with the operators'
-    internal stage tables under one ``_internal`` parent, and what it
+    """The CLI writes each of the seven tables once, with the html
+    rewrite (the one internal stage table, only with --normalize-html)
+    under an ``_internal`` parent, and what it
     wrote equals a ``run_pipeline`` result staged elsewhere row for row
     — with and without --normalize-html, over malformed (NULL-text),
     whitespace-only, span-less and raw-html docs: the parquet round trip
@@ -53,12 +54,12 @@ def test_main_pipeline_mode_writes_all_outputs(spark):
             )
             assert set(counts) == set(TABLES)
             assert counts["spans_out"] > 0 and counts["metrics"] > 0
-            assert {p.name for p in Path(out).iterdir()} == set(TABLES) | {
-                "_internal"
-            }
-            assert {p.name for p in Path(out, "_internal").iterdir()} == {
-                "toc_feats", "sections_preorder",
-            } | ({"html_rewrite"} if normalize_html else set())
+            assert {p.name for p in Path(out).iterdir()} == set(TABLES) | (
+                {"_internal"} if normalize_html else set()
+            )
+            if normalize_html:
+                assert {p.name for p in Path(out, "_internal").iterdir()} \
+                    == {"html_rewrite"}
             want = run_pipeline(read_documents(spark, f"{tmp}/in"),
                                 f"{tmp}/want_{normalize_html}",
                                 normalize_html=normalize_html)
@@ -97,6 +98,10 @@ def test_main_pipeline_jobs_stay_in_callers_job_group(spark):
         docs.write.parquet(f"{tmp}/in")
         stages = {st.name
                   for st in stage_graph(docs, tmp, normalize_html=True)}
+        assert stages == {
+            "html_rewrite", "pages", "metadata", "toc", "sections",
+            "metrics", "spans_out", "quarantine",
+        }
         before = job_ids()
         sc.setJobGroup(group, "caller")
         try:

@@ -57,15 +57,13 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
     corpus: a NULL doc_id is no document and gets no metrics row, and a
     doc_id that appears twice is one document with one row.
 
-    Metrics reads the pre-order sections, so the duplicated id's
-    section counts are those of its pre-order rows (24), which
-    ``sections`` holds once each; its 18 toc entries are emitted once
-    each."""
+    Metrics reads the sections table, which holds each of the
+    duplicated id's 24 pre-order rows once; its 18 toc entries are
+    emitted once each."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from pdf_parser_spark.fixtures.gen import fixture_corpus, to_rows
     from pdf_parser_spark.schemas import DOCUMENTS_SPANS
-    from pdf_parser_spark.sources import tables
 
     corpus = fixture_corpus(4, mega_spans=200)
     dup = corpus[0]["doc_id"]
@@ -87,10 +85,6 @@ def test_metrics_edge_doc_ids(spark, tmp_path):
 
     dups = [r for r in rows if r.doc_id == dup]
     assert len(dups) == 1
-    preorder = tables.read_table(
-        spark, tables.internal_ref(str(tmp_path), "sections_preorder")
-    )
-    assert preorder.filter(preorder.doc_id == dup).count() == 24
     assert result.sections.filter(result.sections.doc_id == dup).count() == 24
     toc = result.toc.filter(result.toc.doc_id == dup)
     assert toc.count() == toc.select("entry_order").distinct().count() == 18

@@ -97,46 +97,6 @@ def test_span_sequence_single_exchange_no_python(spark, docs_df):
     assert ", broadcast" not in optimized
 
 
-def test_w5_ordering_window_is_content_free(spark, docs_df, tmp_path):
-    """The final sections ordering (W5) must window over a SKINNY
-    projection — the assembled `content` strings stay out of the
-    row_number exchange/sort (they made the core-scaling pair DRAM-
-    bound) and re-attach through a hash join, never a sort-merge join
-    (which would re-sort the strings and give the win back)."""
-    from pdf_parser_spark.operators import metadata as MD
-    from pdf_parser_spark.operators import pages as P
-    from pdf_parser_spark.operators import sections as S
-    from pdf_parser_spark.operators import toc as T
-    from pdf_parser_spark.config import DEFAULT_CONFIG as cfg
-    from pdf_parser_spark.sources import tables
-
-    flat = P.explode_spans(docs_df)
-    valid = P.valid_spans(flat)
-    pages = P.pages_df(valid, cfg)
-    metadata = MD.metadata_df(docs_df, pages, cfg)
-    toc = T.toc_entries_df(T.toc_features_df(pages, cfg), metadata, cfg)
-    # the pre-order union is a stage table in the pipeline: the plan
-    # under test reads it back
-    preorder = tables.write_and_read(
-        S.sections_preorder_df(pages, toc, metadata, cfg),
-        str(tmp_path / "preorder"),
-    )[0]
-    out = S.sections_df(preorder)
-    plan = _plan(out)
-    # the re-attach join (keyed by the 5-col section identity — only it
-    # references intra_order) must be a hash join, never sort-merge
-    import re
-
-    for m in re.finditer(r"(\w*Join) \[[^\]]*intra_order[^\]]*\]", plan):
-        assert m.group(1) == "ShuffledHashJoin", m.group(0)
-    assert "ShuffledHashJoin" in plan
-    # every Window node's input projection excludes `content`
-    for m in re.finditer(r"Window \[[^\]]*\]", plan):
-        assert "content" not in m.group(0)
-    # the skinny ordering window is present (row_number over doc_id)
-    assert "row_number()" in plan
-
-
 def test_bucketed_docs_reassembly_is_shuffle_free(spark, docs_df, tmp_path):
     """North rule: "doc_id-range bucketing for shuffle-free reassembly".
     Reading the corpus from a doc_id-bucketed table, the scan itself
@@ -256,11 +216,47 @@ def written_pipeline(docs_df, stage_dir):
     return run_pipeline(docs_df, stage_dir)
 
 
+def _graph_plans(spark, docs_df, stage_dir, res, names, aqe=None):
+    """The physical plans of the graph's ``names`` stages, each planned
+    as the graph plans it: over the written stage tables it reads.
+    ``aqe`` sets adaptive execution for the planning (None: the
+    session's setting).  Returns the JVM plans by stage name."""
+    from pdf_parser_spark.pipeline import stage_graph
+
+    frames = {n: getattr(res, n)
+              for n in ("pages", "metadata", "toc", "sections")}
+    graph = {st.name: st for st in stage_graph(docs_df, stage_dir)}
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    if aqe is not None:
+        spark.conf.set(key, str(aqe).lower())
+    try:
+        return {
+            name: graph[name].plan(
+                *[frames[n] for n in graph[name].inputs]
+            )._jdf.queryExecution().executedPlan()
+            for name in names
+        }
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _walk(node, above=()):
+    """Each physical node of a JVM plan with the nodes above it (an
+    unexecuted adaptive plan is walked through its current plan)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node, above
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i), above + (node,))
+
+
 def test_metrics_is_one_groupby_without_joins(docs_df, written_pipeline):
     """The per-doc rollup (A1-A11) is one union of tagged partial rows
     and one doc_id aggregate: one shuffle exchange, no join (so no
-    broadcast side jobs), no window.  It reads the pre-order sections,
-    so the graph runs it beside W5's sections stage."""
+    broadcast side jobs), no window.  It reads the written sections
+    table, the last stage on the graph's critical path."""
     from pdf_parser_spark.pipeline import stage_graph
 
     plan = _plan(written_pipeline.metrics)
@@ -270,12 +266,12 @@ def test_metrics_is_one_groupby_without_joins(docs_df, written_pipeline):
     assert "Window" not in plan
     graph = {st.name: st for st in stage_graph(docs_df, "unused")}
     assert graph["metrics"].inputs == (
-        "pages", "toc", "sections_preorder", "metadata"
+        "pages", "toc", "sections", "metadata"
     )
 
 
 def test_sections_preorder_needs_no_page_totals(written_pipeline):
-    """W1's last TOC range is open-ended: sections_preorder neither
+    """W1's last TOC range is open-ended: sections_preorder_df neither
     aggregates nor reads pages.total_pages."""
     from pdf_parser_spark.operators import sections as S
 
@@ -288,42 +284,23 @@ def test_sections_preorder_needs_no_page_totals(written_pipeline):
 def test_per_doc_stages_plan_without_broadcast(
     spark, docs_df, stage_dir, written_pipeline, aqe
 ):
-    """pages, metadata, toc and sections_preorder each run as one job:
-    their plans (over the written stage tables, as the graph plans them)
-    hold no join, so no broadcast exchange — with AQE off each broadcast
-    is a side job of its own.  pages, metadata and toc shuffle once, and
-    pages explodes the span array once."""
-    from pdf_parser_spark.pipeline import stage_graph
-    from pdf_parser_spark.sources import tables
-
-    res = written_pipeline
-    frames = {
-        "pages": res.pages,
-        "metadata": res.metadata,
-        "toc": res.toc,
-        "toc_feats": tables.read_table(
-            spark, tables.internal_ref(stage_dir, "toc_feats")
-        ),
+    """pages, metadata, toc and sections each run as one job: their
+    plans (over the written stage tables, as the graph plans them) hold
+    no join, so no broadcast exchange — with AQE off each broadcast is
+    a side job of its own.  pages and metadata shuffle once, and pages
+    explodes the span array once."""
+    plans = {
+        name: plan.toString()
+        for name, plan in _graph_plans(
+            spark, docs_df, stage_dir, written_pipeline,
+            ("pages", "metadata", "toc", "sections"), aqe,
+        ).items()
     }
-    graph = {st.name: st for st in stage_graph(docs_df, stage_dir)}
-    stages = ("pages", "metadata", "toc", "sections_preorder")
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(aqe).lower())
-    try:
-        plans = {
-            name: _plan(graph[name].plan(
-                *[frames[n] for n in graph[name].inputs]
-            ))
-            for name in stages
-        }
-    finally:
-        spark.conf.set(key, prev)
     for name, plan in plans.items():
         for node in ("BroadcastExchange", "BroadcastHashJoin",
                      "BroadcastNestedLoopJoin", "Join"):
             assert node not in plan, (name, node)
-    for name in ("pages", "metadata", "toc"):
+    for name in ("pages", "metadata"):
         assert plans[name].count("Exchange") == 1, name
     import re
 
@@ -331,39 +308,91 @@ def test_per_doc_stages_plan_without_broadcast(
     assert len(span_generates) == 1
 
 
+@pytest.mark.parametrize("aqe", [False, True])
+def test_toc_and_sections_cross_into_python_once(
+    spark, docs_df, stage_dir, written_pipeline, aqe
+):
+    """The toc job evaluates the TOC line features and the sections job
+    the J5 content split, each in one Arrow crossing: the features' one
+    consumer filters on the UDF's output, and only the UDF's pushdown
+    barrier keeps the optimizer from evaluating it a second time below
+    that filter.  Neither plan joins or broadcasts; toc shuffles at
+    most twice (the content-start cut, the entries' pass) and sections
+    at most three times (two pre-order branches, W5)."""
+    plans = {
+        name: plan.toString()
+        for name, plan in _graph_plans(
+            spark, docs_df, stage_dir, written_pipeline,
+            ("toc", "sections"), aqe,
+        ).items()
+    }
+    for name, plan in plans.items():
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
+        assert "Join" not in plan, name
+        assert "BroadcastExchange" not in plan, name
+    assert plans["toc"].count("Exchange") <= 2, plans["toc"]
+    assert plans["sections"].count("Exchange") <= 3, plans["sections"]
+
+
+def test_w5_section_content_crosses_one_exchange(
+    spark, docs_df, stage_dir, written_pipeline
+):
+    """The sections job builds each section's content (the J2 content
+    aggregate, the J5 UDF) and numbers the sections (W5) with no table
+    in between: every file it scans is one of its input stage tables,
+    and the content crosses exactly one exchange on its way to the W5
+    window — the one that window requires, with AQE off and on."""
+    for aqe in (False, True):
+        plan = _graph_plans(
+            spark, docs_df, stage_dir, written_pipeline, ("sections",), aqe
+        )["sections"]
+        nodes = list(_walk(plan))
+        scans = [n.toString() for n, _ in nodes
+                 if n.nodeName().startswith("Scan parquet")]
+        assert scans and all(
+            any(f"{stage_dir}/{t}]" in s for t in ("pages", "toc", "metadata"))
+            for s in scans
+        ), scans
+        builders = [
+            above for n, above in nodes
+            if n.nodeName() == "ArrowEvalPython"
+            or (n.nodeName() == "ObjectHashAggregate"
+                and "collect_list" in n.toString())
+        ]
+        assert len(builders) >= 2, aqe
+        for above in builders:
+            crossings = [a for a in above if a.nodeName() == "Exchange"]
+            assert len(crossings) == 1, (aqe, [a.toString() for a in above])
+            (ex,) = crossings
+            out = ex.output()
+            assert "content" in {out.apply(i).name()
+                                 for i in range(out.size())}
+            ordered = above[:above.index(ex)]
+            assert any(a.nodeName() == "Window"
+                       and "row_number()" in a.toString()
+                       for a in ordered), aqe
+
+
 def test_per_doc_stages_make_no_row_copies(
     spark, docs_df, stage_dir, written_pipeline
 ):
     """A doc_id is one document, so no per-doc stage rebuilds a left
     join's row copies with an explode: metadata and metrics plan no
-    Generate, and toc and sections_preorder only the one that yields a
-    line's candidates and a page's sections."""
+    Generate, toc only the two that yield a page's candidate lines and
+    a line's candidates, and sections only the one that yields a page's
+    sections."""
     import re
 
-    from pdf_parser_spark.pipeline import stage_graph
-    from pdf_parser_spark.sources import tables
-
     res = written_pipeline
-    frames = {
-        "pages": res.pages,
-        "metadata": res.metadata,
-        "toc": res.toc,
-        **{
-            name: tables.read_table(
-                spark, tables.internal_ref(stage_dir, name)
-            )
-            for name in ("toc_feats", "sections_preorder")
-        },
-    }
-    graph = {st.name: st for st in stage_graph(docs_df, stage_dir)}
     generates = {
-        name: len(re.findall(r"\bGenerate ", _plan(graph[name].plan(
-            *[frames[n] for n in graph[name].inputs]
-        ))))
-        for name in ("metadata", "toc", "sections_preorder", "metrics")
+        name: len(re.findall(r"\bGenerate ", plan.toString()))
+        for name, plan in _graph_plans(
+            spark, docs_df, stage_dir, res,
+            ("metadata", "toc", "sections", "metrics"),
+        ).items()
     }
     assert generates == {
-        "metadata": 0, "toc": 1, "sections_preorder": 1, "metrics": 0
+        "metadata": 0, "toc": 2, "sections": 1, "metrics": 0
     }
 
 

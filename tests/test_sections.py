@@ -74,10 +74,9 @@ def test_pipeline_unpersist_releases_all_internal_caches(
     (sources.tables.write_and_read): it persists nothing, so a
     long-lived job running many pipeline slices has no executor storage
     to release, and none of its seven tables plans from an in-memory
-    relation.  The stage tables and the operators' internal ones (toc
-    feats, the W5 pre-order union, plus the html rewrite — under one
-    hidden ``_internal`` parent) are the only things it leaves, all
-    under ``stage_ref``.
+    relation.  The stage tables (and, with html normalization, the html
+    rewrite under a hidden ``_internal`` parent) are the only things it
+    leaves, all under ``stage_ref``.
 
     The ``-output`` cases drive the CLI's ``--output`` path instead, which
     passes its output as the ``stage_ref`` and writes spans_out,
@@ -115,8 +114,11 @@ def test_pipeline_unpersist_releases_all_internal_caches(
         plan = df._jdf.queryExecution().optimizedPlan()
         assert "InMemoryRelation" not in plan.toString(), name
     assert {p.name for p in stage_ref.iterdir()} == {
-        "pages", "metadata", "toc", "sections", "_internal",
-    } | ({"spans_out", "quarantine", "metrics"} if to_output else set())
-    assert {p.name for p in (stage_ref / "_internal").iterdir()} == {
-        "toc_feats", "sections_preorder",
-    } | ({"html_rewrite"} if normalize_html else set())
+        "pages", "metadata", "toc", "sections",
+    } | ({"spans_out", "quarantine", "metrics"} if to_output else set()) | (
+        {"_internal"} if normalize_html else set()
+    )
+    if normalize_html:
+        assert {p.name for p in (stage_ref / "_internal").iterdir()} == {
+            "html_rewrite"
+        }

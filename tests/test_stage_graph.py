@@ -39,11 +39,6 @@ def test_failing_stage_reraises_and_keeps_completed_tables(
     with pytest.raises(Boom, match="toc stage failed"):
         PL.run_pipeline(docs_df, str(stage_ref))
     assert not _stage_threads()
-    assert {p.name for p in stage_ref.iterdir()} == {
-        "pages", "metadata", "_internal"
-    }
-    assert {p.name for p in (stage_ref / "_internal").iterdir()} == {
-        "toc_feats"
-    }
+    assert {p.name for p in stage_ref.iterdir()} == {"pages", "metadata"}
     pages = spark.read.parquet(str(stage_ref / "pages"))
     assert pages.count() > 0
